@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Port of the distinct join-planning shapes in the reference's
   * `sql/src/test/quidem/org.apache.druid.sql.calcite.
   * DecoupledPlanningCalciteJoinQueryTest/` tree (290 .iq = 50 distinct
@@ -214,7 +212,6 @@ object CalciteJoinShapes {
   private def runSpark(s: SparkSession, dir: String, sqlText: String)
       : DataFrame = {
     Tables.registerAll(s, dir)
-    DruidFunctions.register(s)
     graft.api.SqlApi.runSql(s, sqlText)
   }
 

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Wholesale port of the reference's Drill window `aggregates/` corpus —
   * `sql/src/test/resources/drill/window/queries/aggregates/` (390 .q files
   * in six shape classes), run by the reference through
@@ -362,10 +360,8 @@ object DrillAggregates {
     gate("q_drill_nestedagg_twolevel", nestedTwoLevelBody,
       needsWnulls = true, needsFewRows = true))
 
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    DruidFunctions.register(s)
+  private def runSpark(s: SparkSession, sqlText: String): DataFrame =
     s.sql(sqlText)
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     gates.map { case (name, sparkSql, _) =>

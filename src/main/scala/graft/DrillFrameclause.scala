@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Wholesale port of the reference's Drill window frame-clause corpus —
   * `sql/src/test/resources/drill/window/queries/frameclause/` (548 files,
   * six directories), which the reference runs through its own SQL layer.
@@ -315,10 +313,8 @@ object DrillFrameclause {
         s"WITH $sparkTAll ${body(false)}", s"WITH $duckTAll ${body(true)}")
     })
 
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    DruidFunctions.register(s)
+  private def runSpark(s: SparkSession, sqlText: String): DataFrame =
     s.sql(sqlText)
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     gates.map { case (name, sparkSql, _) =>

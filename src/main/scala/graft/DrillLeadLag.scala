@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Wholesale port of the reference's five remaining Drill window-function
   * corpus directories —
   * `sql/src/test/resources/drill/window/queries/{lead_func (106 .q),
@@ -330,7 +328,6 @@ object DrillLeadLag {
     })
 
   private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    DruidFunctions.register(s)
     // the corpus's FETCH FIRST n ROWS ONLY is Calcite spelling → LIMIT
     s.sql(graft.api.SqlApi.rewriteFetch(sqlText))
   }

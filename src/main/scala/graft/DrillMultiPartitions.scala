@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Wholesale port of the reference's Drill `multiple_partitions` corpus
   * (`sql/src/test/resources/drill/window/queries/multiple_partitions/` —
   * 69 .q over tables j1..j7 / t1 / t2), the largest remaining un-mined
@@ -358,10 +356,8 @@ object DrillMultiPartitions {
       }))
   }
 
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    DruidFunctions.register(s)
+  private def runSpark(s: SparkSession, sqlText: String): DataFrame =
     graft.api.SqlApi.runSql(s, sqlText)
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     gates.map { case (name, sparkSql, _) =>

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Port of the residual of the reference's Drill `nestedAggs` corpus
   * (`sql/src/test/resources/drill/window/queries/nestedAggs/` — 125 .q).
   * DrillAggregates already carries the wPbOb / woutOby / emtyOvrCls /
@@ -194,7 +192,6 @@ object DrillNestedAggs {
   }
 
   private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    DruidFunctions.register(s)
     if (sqlText.contains("vw_nstd_on_atu")) {
       // view lifecycle: CREATE OR REPLACE VIEW → query → (auto-dropped
       // with the session; DROP here would race the lazy DataFrame)

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Port of the five small residual Drill window directories
   * (`sql/src/test/resources/drill/window/queries/`): `order_by` (37 .sql
   * — each ranking function over an ORDER-BY-only window in asc / desc /
@@ -185,10 +183,8 @@ object DrillWindowMisc {
       }))
   }
 
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    DruidFunctions.register(s)
+  private def runSpark(s: SparkSession, sqlText: String): DataFrame =
     graft.api.SqlApi.runSql(s, sqlText)
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     gates.map { case (name, sparkSql, _) =>

@@ -1,47 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.functions.{Ipv6Match, JaroWinklerSimilarity}
+import graft.functions.JaroWinklerSimilarity
 import graft.functions.sketches.{BloomFilterAgg, BloomMightContain, HllEstimateWithBounds, HllSketchAgg, HllToString, HllUnion, KllDistQuery, KllQuery, KllSketchAgg, KllSummary, KmvEstimate, KmvEstimateWithBounds, KmvSetEstimate, KmvSetSketch, KmvSketchAgg, TDigestQuery, TDigestSketchAgg, TupleEstimate, TupleMetricSum, TupleMetricsSumEstimate, TupleSetSketch, TupleSketchAgg}
 
-/** Engine-level Catalyst extensions (registered with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or the
-  * `spark.sql.extensions` conf):
-  *
-  *  - sketch functions (HLL / KMV theta-style) exposed to SQL text;
-  *  - [[ApproxCountDistinctRewrite]], the reference's SQL-layer default of
-  *    answering COUNT(DISTINCT x) with an HLL estimate
-  *    (`useApproximateCountDistinct`, see
-  *    `sql/.../BuiltinApproxCountDistinctSqlAggregator.java:62`), as an
-  *    opt-in optimizer rule gated on a runtime conf.
+/** The engine's Catalyst-level SQL function surface — sketch aggregates and
+  * post-aggregators, EARLIEST/LATEST, the reference's APPROX_* names — plus
+  * [[ApproxCountDistinctRewrite]], the reference's SQL-layer default of
+  * answering COUNT(DISTINCT x) with an HLL estimate
+  * (`useApproximateCountDistinct`, see
+  * `sql/.../BuiltinApproxCountDistinctSqlAggregator.java:62`), as an
+  * opt-in optimizer rule gated on a runtime conf. Both are armed on a
+  * session by [[GraftSession.attach]], the one place that registers
+  * functions, rules and strategies.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, info, builder) =>
-      e.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-    e.injectOptimizerRule(_ => ApproxCountDistinctRewrite)
-    e.injectOptimizerRule(_ => graft.plans.ReverseLookupRule)
-    e.injectOptimizerRule(_ => graft.plans.AggregatePullUpLookupRule)
-    e.injectOptimizerRule(_ => graft.plans.RejectInvertedFrames)
-    e.injectOptimizerRule(_ => graft.plans.SortDistinctArrayAgg)
-    e.injectOptimizerRule(_ => graft.plans.DeterministicWindowOrder)
-    // pre-CBO (runs ONCE, after operator optimization): inside the
-    // operator-optimization fixed point PushPredicateThroughNonJoin would
-    // push the filter back through the inserted Repartition and the two
-    // rules would ping-pong
-    e.injectPreCBORule(_ => graft.plans.SpreadExpensiveFilter)
-    e.injectPreCBORule(_ => graft.plans.HybridDecimalSumRule)
-    e.injectPlannerStrategy(_ => graft.plans.ApproxTopNStrategy)
-  }
-}
-
 object GraftExtensions {
   import org.apache.spark.sql.catalyst.expressions.Expression
 
@@ -111,9 +87,6 @@ object GraftExtensions {
       "tuple sketch metric-column sum (sketch, idx)"),
       (args: Seq[Expression]) =>
         TupleMetricSum(args(0), args(1).eval().toString.toInt)),
-    ("ipv6_match", info("ipv6_match", "IPv6 subnet containment (ip, 'net/bits')"),
-      (args: Seq[Expression]) =>
-        Ipv6Match(args(0), args(1).eval().toString)),
     ("kll_sketch_agg", info("kll_sketch_agg", "KLL quantiles binary sketch"),
       (args: Seq[Expression]) =>
         KllSketchAgg(args.head).toAggregateExpression()),
@@ -209,25 +182,6 @@ object GraftExtensions {
     ("tdigest_cdf", info("tdigest_cdf",
       "rank in [0,1] of a value in a t-digest (sketch, v)"),
       (args: Seq[Expression]) => TDigestQuery(args(0), args(1), "cdf")),
-    // variadic/overloaded scalar fns shared with DruidFunctions.register
-    // (STRING_FORMAT pattern+args, PARSE_LONG optional radix)
-    ("string_format", info("string_format", "printf-style format (pattern, args…)"),
-      graft.functions.DruidFunctions.catalystBuilders.toMap.apply("string_format")),
-    ("parse_long", info("parse_long", "string → long, null on garbage (s[, radix])"),
-      graft.functions.DruidFunctions.catalystBuilders.toMap.apply("parse_long")),
-    ("regexp_extract", info("regexp_extract",
-      "reference semantics: group 0 default, NULL on no match (s, p[, idx])"),
-      graft.functions.DruidFunctions.catalystBuilders.toMap.apply("regexp_extract")),
-    ("div", info("div", "integer division truncating toward zero (x, y)"),
-      graft.functions.DruidFunctions.catalystBuilders.toMap.apply("div")),
-    ("ipv6_match", info("ipv6_match", "CIDR containment (ip, 'subnet/prefix')"),
-      graft.functions.DruidFunctions.catalystBuilders.toMap.apply("ipv6_match")),
-    ("case_searched", info("case_searched", "native-expr CASE WHEN (cond, v, …[, else])"),
-      graft.functions.DruidFunctions.catalystBuilders.toMap.apply("case_searched")),
-    ("case_simple", info("case_simple", "native-expr simple CASE (expr, m, v, …[, else])"),
-      graft.functions.DruidFunctions.catalystBuilders.toMap.apply("case_simple")),
-    ("notnull", info("notnull", "native-expr IS NOT NULL (expr)"),
-      graft.functions.DruidFunctions.catalystBuilders.toMap.apply("notnull")),
     ("earliest_by", info("earliest_by", "value at min of ordering (expr, orderExpr)"),
       (args: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.aggregate.MinBy(args(0), args(1))
@@ -325,30 +279,6 @@ object GraftExtensions {
           args(4).eval().toString.toDouble,
           if (args.length > 5) args(5).eval().toString.toLowerCase else "ignore")
           .toAggregateExpression()
-      }),
-    ("array_concat_agg", info("array_concat_agg",
-      "concatenate array values across rows (ARRAY_CONCAT_AGG)"),
-      (args: Seq[Expression]) => {
-        // all-NULL group (CollectList skips nulls → empty buffer) is SQL
-        // NULL like the reference, not [] (ops_funcs_agg_funcs A1_B29)
-        import org.apache.spark.sql.catalyst.expressions.{EqualTo, Flatten, If, Literal, Size}
-        // the optional second arg is the reference's maxSizeBytes — a
-        // NUMERIC literal or a validation error
-        // (testArrayConcatAggWithStringMaxBytes)
-        require(args.size == 1 || args.size == 2,
-          s"array_concat_agg takes 1 or 2 arguments, got ${args.size}")
-        args.lift(1).foreach {
-          case Literal(v: Number, _)
-            if v.longValue >= 10 && v.longValue <= Int.MaxValue => ()
-          case other => throw new IllegalArgumentException(
-            "array_concat_agg maxBytes must be a numeric literal, " +
-              s"got $other")
-        }
-        val cl = new org.apache.spark.sql.catalyst.expressions.aggregate
-          .CollectList(args.head).toAggregateExpression()
-        If(EqualTo(Size(cl), Literal(0)),
-          Literal.create(null, org.apache.spark.sql.types.NullType),
-          Flatten(cl))
       }))
 
   /** Strip the reference's optional LEADING literal parameters (lgK /
@@ -369,38 +299,6 @@ object GraftExtensions {
     if (args.length > 1 && args.last.foldable &&
         Seq(IntegerType, LongType).exists(_ == args.last.dataType)) args.init
     else args
-  }
-
-  /** Register the same functions on a plain session (no extensions needed) —
-    * used by tests and by sessions the driver constructs for us.
-    */
-  def register(spark: SparkSession): Unit = {
-    functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    // Skip rules the session already carries from
-    // withExtensions(GraftExtensions) — a second copy in extraOptimizations
-    // would run each rule twice per fixed-point iteration.
-    def addOnce(rule: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-      val alreadyInjected = spark.sessionState.optimizer.batches
-        .exists(_.rules.exists(_ eq rule))
-      if (!alreadyInjected &&
-          !spark.experimental.extraOptimizations.contains(rule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ rule
-    }
-    addOnce(graft.plans.ReverseLookupRule)
-    addOnce(graft.plans.AggregatePullUpLookupRule)
-    addOnce(graft.plans.RejectInvertedFrames)
-    addOnce(graft.plans.SortDistinctArrayAgg)
-    addOnce(graft.plans.DeterministicWindowOrder)
-    // safe in the extraOptimizations fixed point: no pushdown rules run
-    // there, and the rule is idempotent (fires only on a bare scan child)
-    addOnce(graft.plans.SpreadExpensiveFilter)
-    addOnce(graft.plans.HybridDecimalSumRule)
-    graft.plans.ApproxTopN.ensureStrategy(spark)
   }
 }
 

@@ -1,16 +1,38 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.functions.{DruidFunctions, LookupRegistry, TypedAggregators}
+import graft.plans.{AggregatePullUpLookupRule, ApproxTopNStrategy, DeterministicWindowOrder, HybridDecimalSumRule, RejectInvertedFrames, ReverseLookupRule, SortDistinctArrayAgg, SpreadExpensiveFilter}
 
-/** One-call session factory: a SparkSession wired with everything the engine
-  * registers — Catalyst extensions (sketch functions + the approximate-
-  * count-distinct rule), reference-named SQL functions, typed UDAFs, and the
-  * lookup SQL surface. The entry point a user migrating from the reference
-  * starts from.
+/** Session factory and the one place a session is armed with the engine:
+  * reference-named SQL functions, the sketch/Catalyst function surface
+  * ([[GraftExtensions.functions]]), typed UDAFs, the `LOOKUP` function, the
+  * optimizer rules and the approximate-topN planner strategy. The entry
+  * point a user migrating from the reference starts from.
   */
 object GraftSession {
+
+  /** Set on a session once [[attach]] has armed it. */
+  private val AttachedFlag = "spark.graft.internal.attached"
+
+  /** The engine's optimizer rules, in the order they run. All of them run
+    * in Spark's "User Provided Optimizers" fixed-point batch — the one batch
+    * reachable on a session the engine did not build. No pushdown rule
+    * runs there, so [[SpreadExpensiveFilter]]'s inserted exchange is not
+    * pushed back through, and every rule is idempotent.
+    */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(
+    ApproxCountDistinctRewrite,
+    ReverseLookupRule,
+    AggregatePullUpLookupRule,
+    RejectInvertedFrames,
+    SortDistinctArrayAgg,
+    DeterministicWindowOrder,
+    SpreadExpensiveFilter,
+    HybridDecimalSumRule)
 
   def create(master: String = "local[*]",
              shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
@@ -23,20 +45,31 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     attach(spark)
     spark
   }
 
-  /** Register the engine's function surface on an existing session (used
-    * when the driver constructs the session — extensions can't be injected
-    * post-hoc, but every function can).
+  /** Arm `spark` with every function, rule and strategy of the engine.
+    * Idempotent: a repeat call costs one conf read, so every public entry
+    * point that is handed a session calls it. Clones of an armed session
+    * (`cloneSession`) inherit the flag, the functions and the rules.
     */
-  def attach(spark: SparkSession): Unit = {
-    DruidFunctions.register(spark)
-    TypedAggregators.register(spark)
-    LookupRegistry.registerSql(spark)
-    GraftExtensions.register(spark)
-  }
+  def attach(spark: SparkSession): Unit =
+    if (!spark.conf.getOption(AttachedFlag).contains("true")) spark.synchronized {
+      DruidFunctions.register(spark)
+      TypedAggregators.register(spark)
+      LookupRegistry.registerSql(spark)
+      GraftExtensions.functions.foreach { case (name, _, builder) =>
+        spark.sessionState.functionRegistry
+          .createOrReplaceTempFunction(name, builder, "built-in")
+      }
+      // replace rather than append: a session whose conf was RESET keeps
+      // its rules, and must not get a second copy
+      val x = spark.experimental
+      x.extraOptimizations = x.extraOptimizations.filterNot(rules.contains) ++ rules
+      x.extraStrategies =
+        x.extraStrategies.filterNot(_ == ApproxTopNStrategy) :+ ApproxTopNStrategy
+      spark.conf.set(AttachedFlag, "true")
+    }
 }

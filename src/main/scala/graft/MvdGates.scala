@@ -50,8 +50,6 @@ object MvdGates {
       .withColumn("j", col("j").as("j", ajMeta))
       .orderBy("k").coalesce(1)
       .createOrReplaceTempView("autojson_gate")
-    graft.functions.DruidFunctions.register(s)
-    GraftExtensions.register(s)
   }
 
   private def run(s: SparkSession, sql: String): DataFrame = {

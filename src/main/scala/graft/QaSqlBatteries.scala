@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Port of the reference's `qaSql` quidem batteries
   * (`quidem-ut/src/test/quidem/org.apache.druid.quidem.QTest/qaSql/` —
   * scalar_numeric/scalar_datetime/scalar_string ×50 TESTCASEs each,
@@ -297,11 +295,6 @@ object QaSqlBatteries {
   private def runSpark(s: SparkSession, dir: String, sqlText: String)
       : DataFrame = {
     Tables.registerAll(s, dir)
-    DruidFunctions.register(s)
-    // the generated tautology batteries evaluate 20+ JSON/MV walks per row
-    // over a single-task scan — arm the plan-level spread (deterministic
-    // here, not dependent on whether an earlier gate registered extensions)
-    graft.plans.SpreadExpensiveFilter.ensureRegistered(s)
     graft.api.SqlApi.runSql(s, sqlText)
   }
 

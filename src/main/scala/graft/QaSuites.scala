@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Oracle gates mined from the reference's big quidem QA suites —
   * `quidem-ut/src/test/quidem/org.apache.druid.quidem.QTest/{qaArray,
   * qaUnnest, qaAggFuncs}` (185 / 221 / 78 `.iq` files) over the inline
@@ -65,7 +63,7 @@ object QaSuites {
   /** qaArray/ops_funcs `test_array`: 4 rows (2 distinct × 2), boolean arrays
     * ingested as LONG arrays like the reference's `auto` dimension handling.
     */
-  private[graft] val sparkTestArray: String = {
+  private val sparkTestArray: String = {
     def row(t: String, b: String, i: String, f: String, s: String, m: String,
         nested: String) =
       s"""(TIMESTAMP'$t', $b, $i, $f, $s,
@@ -102,7 +100,7 @@ object QaSuites {
   }
 
   /** qaUnnest/array `test_unnest`: 3 rows, s_int = 1, 2, NULL. */
-  private[graft] val sparkTestUnnest: String = {
+  private val sparkTestUnnest: String = {
     def row(t: String, si: String, b: String, i: String, f: String, s: String,
         m: String, nested: String) =
       s"""(TIMESTAMP'$t', $si, $b, $i, $f, $s,
@@ -177,7 +175,7 @@ object QaSuites {
       c_mv_num_with_null_and_empty_row, c_mv_all_null_and_empty_val)"""
       .replaceAll("\\s+", " ")
 
-  private[graft] val sparkTestMv: String = {
+  private val sparkTestMv: String = {
     def arr(elems: String) =
       if (elems.isEmpty) "CAST(array() AS ARRAY<STRING>)"
       else s"array(${elems.replace("NULL", "CAST(NULL AS STRING)")})"
@@ -210,7 +208,7 @@ object QaSuites {
     } yield s"(${tsLit(ts)}, $l, $s, $f, $d)").mkString(", ")
   }
 
-  private[graft] val sparkTestAggFuncs: String =
+  private val sparkTestAggFuncs: String =
     s"""test_agg_funcs AS (SELECT * FROM VALUES
         ${aggRows(t => s"TIMESTAMP'$t'", "CAST(NULL AS BIGINT)",
           "CAST(NULL AS STRING)", "CAST(NULL AS DOUBLE)")}
@@ -2966,12 +2964,6 @@ object QaSuites {
   // ------------------------------------------------------------ plumbing ----
 
   private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    DruidFunctions.register(s)
-    // EARLIEST/LATEST and the sketch surface live in the extensions
-    // registry — register here too so a gate can run standalone (the full
-    // board previously registered them through an earlier gate, an
-    // order-dependence SPARK_GRAFT_ONLY exposed)
-    graft.GraftExtensions.register(s)
     // the SAME rewrite pipeline as SqlApi.sql — one shared chain (masking
     // included), so gates and the facade can never diverge on
     // FETCH/FLOOR-TO/negative-frame handling.

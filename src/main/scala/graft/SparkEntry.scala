@@ -336,7 +336,6 @@ object SparkEntry {
     winRound4.map { case (name, body) =>
       name -> ((s: SparkSession, dir: String) => {
         Tables.registerAll(s, dir)
-        DruidFunctions.register(s)
         s.sql(s"WITH w AS ($winSparkBase) $body")
       })
     }.toMap
@@ -1654,7 +1653,18 @@ object SparkEntry {
     parts.mkString("", "\nUNION ALL\n", "\nORDER BY qid, d")
   }
 
+  /** Every gate, armed: each builder first runs `GraftSession.attach`, so
+    * a gate answers the same whichever gates ran before it on the session.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map { case (name, build) =>
+      name -> ((s: SparkSession, dir: String) => {
+        GraftSession.attach(s)
+        build(s, dir)
+      })
+    }
+
+  private def gates: Map[String, (SparkSession, String) => DataFrame] =
     Map[String, (SparkSession, String) => DataFrame](
 
     // ----------------------------------------------------- scan (§2.1/§2.7)
@@ -1924,7 +1934,6 @@ object SparkEntry {
       // origin-anchored fixed buckets, timezone wall-clock calendar floors
       // (zone-local midnight across the DST line), arbitrary fixed periods
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT event_id,
                TIME_FLOOR(ts, 'PT15M', '1970-01-01T00:07:00') AS f_origin,
@@ -1955,7 +1964,6 @@ object SparkEntry {
       // DruidOperatorTable.java:229: TRUNC aliases numeric TRUNCATE (digits
       // default 0) — Spark's own trunc is DATE truncation and would shadow
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT trunc(3.77D * 10) / 10 AS t1,
                TRUNCATE(-2.99D, 1) AS t2,
@@ -1969,7 +1977,6 @@ object SparkEntry {
       // start/end, start/PERIOD, PERIOD/end — as half-open [start, end),
       // with calendar (P6M) and fixed (PT36H) period endpoints
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(count(*) FILTER (WHERE TIME_IN_INTERVAL(
                  CAST(o_orderdate AS TIMESTAMP), '1995-01-01/1996-01-01')) AS BIGINT) AS c_se,
@@ -1987,7 +1994,6 @@ object SparkEntry {
       // are calendar buckets aligned on 1970-01; TIME_CEIL at an exact
       // boundary stays on the boundary
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(TIME_FLOOR(CAST(o_orderdate AS TIMESTAMP), 'P6M') AS STRING) AS h1,
                CAST(TIME_FLOOR(CAST(o_orderdate AS TIMESTAMP), 'P2Y') AS STRING) AS y2,
@@ -2001,7 +2007,6 @@ object SparkEntry {
       // epoch-anchored (1970-01-01, a Thursday) — unlike single P1W, which
       // is the Monday calendar week
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(TIME_FLOOR(ts, 'P2W') AS STRING) AS wk2,
                CAST(count(*) AS BIGINT) AS cnt
@@ -2016,7 +2021,6 @@ object SparkEntry {
       // and NULLs, while '0x-f' parses (sign allowed after the strip) and
       // a leading '+' is a Long.parseLong-legal sign
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT parse_long('123') AS p10,
                parse_long('-45') AS pneg,
@@ -2037,7 +2041,6 @@ object SparkEntry {
       // clamps to ±Double.MaxValue, HALF_UP away from zero on .5 both
       // signs, negative scale; repeat with count < 1 is NULL (not '')
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT round(CAST('NaN' AS DOUBLE), 2) AS r_nan,
                round(CAST('Infinity' AS DOUBLE)) AS r_pinf,
@@ -2058,7 +2061,6 @@ object SparkEntry {
       // < 1 divides instead of nulling out; x/0.0 → Infinity → Long.Max.
       // The LONG path stays integer division truncating toward zero.
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT r_regionkey,
                DIV(10.0D, 2.5D) AS d_frac,
@@ -2078,7 +2080,6 @@ object SparkEntry {
       // character — none of which Spark's split() reproduces (it keeps
       // trailing empties even at limit 0), hence the StaticInvoke builder.
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT MV_TO_STRING(STRING_TO_MV('a,b,,', ','), '|') AS trail,
                MV_LENGTH(STRING_TO_MV('a,b,,', ',')) AS trail_len,
@@ -2097,7 +2098,6 @@ object SparkEntry {
       // (:3646) — Spark's bare array_join silently SKIPS null elements, so
       // the builder transforms through CAST + coalesce('null') first.
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT MV_TO_STRING(array('a', CAST(NULL AS STRING), 'b'), '|') AS j_null,
                ARRAY_TO_STRING(array(1, 0, CAST(NULL AS INT)), '|') AS j_num,
@@ -2117,7 +2117,6 @@ object SparkEntry {
       // decode_base64_utf8 (BuiltInExprMacros:149) and the native
       // unix_timestamp's ISO parse in epoch seconds (Function.java:3245)
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT istrue(1 > 0) AS t_bool,
                istrue(-1) AS t_neg,
@@ -2146,7 +2145,6 @@ object SparkEntry {
       // per argument; %-conversions that don't fit the arg type degrade the
       // same way; Locale.ENGLISH formatting otherwise
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT STRING_FORMAT('%q', 5) AS f_bad,
                STRING_FORMAT('%d apples; %s', 3, 'red') AS f_ok,
@@ -2165,7 +2163,6 @@ object SparkEntry {
       // the null-propagating bivariate max/min (Max:1852/Min:1879 — note
       // max(1, NULL) is NULL, unlike SQL GREATEST)
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(getexponent(10.0D) AS BIGINT) AS ge_10,
                CAST(getexponent(0.5D) AS BIGINT) AS ge_half,
@@ -2189,7 +2186,6 @@ object SparkEntry {
       // toward zero, NaN → 0 (never round, never reject) — and the
       // IEEE-754 reinterpretation pair (BitwiseConvert*:944,976)
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT bitwiseAnd(3.9D, 7.2D) AS and_trunc,
                bitwiseAnd(-3.9D, -1L) AS and_negtrunc,
@@ -2211,7 +2207,6 @@ object SparkEntry {
       // empty pad leaves the base untouched, truncation below base length,
       // multi-char pad cycling, 2-arg space default, null propagation
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT lpad('abc', 0, 'x') AS l0, rpad('abc', 0, 'x') AS r0,
                lpad('abc', -2, 'x') AS lneg,
@@ -2230,7 +2225,6 @@ object SparkEntry {
       // and be wrong the first days of January; 'ZZ' is the offset WITH a
       // colon; 'DDD' is padded day-of-year; Joda patterns also drive parse
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT TIME_FORMAT(TIME_PARSE('2021-01-01 00:00:00'), 'YYYY-MM-dd') AS yoe,
                TIME_FORMAT(TIME_PARSE('2021-06-15 12:34:56'),
@@ -2245,7 +2239,6 @@ object SparkEntry {
       // (incl. a half-hour-offset zone) plus the 1-arg ISO default format
       // and the lenient 1-arg parse round-trip
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT event_id,
                TIME_EXTRACT(ts, 'HOUR', 'America/New_York') AS h_ny,
@@ -2744,8 +2737,6 @@ object SparkEntry {
       // explosion multiplies rows but the (value, key) pairs keep the
       // aggregate deterministic (event_id is unique per source row)
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
-      graft.GraftExtensions.register(s)
       s.sql(graft.api.SqlApi.rewriteUnnest("""
         SELECT w AS word, CAST(count(*) AS BIGINT) AS cnt,
                earliest(event_id, event_id) AS first_id,
@@ -3014,7 +3005,6 @@ object SparkEntry {
       // (TPC-H Q17: sum(double) / 7.0 must resolve inside the
       // RuntimeReplaceable)
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       // l_quantity is integer-valued, so the double sum is exact and the
       // division result is partition-order and engine independent
       graft.api.SqlApi.runSql(s, """
@@ -3031,7 +3021,6 @@ object SparkEntry {
       // truncate to millis, quarter/week are the calendar floors — Spark's
       // builtin silently NULLs the extended units, hence the shadow builder
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(graft.api.SqlApi.rewriteFloorCeilTo(graft.api.SqlApi.rewriteExtractUnits("""
         SELECT CAST(DATE_TRUNC('decade', TIMESTAMP'1987-06-15 10:00:00') AS STRING) AS dec_u,
                CAST(DATE_TRUNC('century', TIMESTAMP'1987-06-15 10:00:00') AS STRING) AS cen_u,
@@ -3055,7 +3044,6 @@ object SparkEntry {
       // MAX of the time_floor key shifted by INTERVAL '1' YEAR, and HAVING
       // on the GROUP key itself with a BETWEEN timestamp range
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(TIME_FLOOR(ts, 'PT1H') AS STRING) AS t,
                CAST(count(*) + 1 AS BIGINT) AS c1,
@@ -3407,7 +3395,6 @@ object SparkEntry {
     "q_qa_json_query_array" -> ((s, dir) => {
       // qaJsonCols JSON_QUERY_ARRAY: array-of-scalars extraction with
       // missing-path NULL, '|'-joined for the hash compare
-      DruidFunctions.register(s)
       s.sql("""
         SELECT array_join(JSON_QUERY_ARRAY('{"a":[1,2,3]}', '$.a'), '|') AS arr_i,
                array_join(JSON_QUERY_ARRAY('{"a":["x","y"]}', '$.a'), '|') AS arr_s,
@@ -3426,7 +3413,6 @@ object SparkEntry {
       // NestedFieldVirtualColumn planning nulls them (func_json_value.02
       // A077-A079); both share the walker grammar (quoted fields, typed
       // third arg)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT json_value_native('{"a":[1,2,3]}', '$.a[-1]') AS nv_neg,
                JSON_VALUE('{"a":[1,2,3]}', '$.a[-1]') AS sql_neg,
@@ -3438,7 +3424,6 @@ object SparkEntry {
       // scalar_string fn surface: druid names (STRPOS/TEXTCAT/PARSE_LONG/
       // STRING_FORMAT) beside the shared regex/pad/trim builtins; the
       // oracle derives each value independently in DuckDB
-      DruidFunctions.register(s)
       s.sql("""
         SELECT STRPOS('graft-engine', 'engine') AS sp,
                TEXTCAT('gr', 'aft') AS tc,
@@ -3484,7 +3469,6 @@ object SparkEntry {
     "q_qa_mv_filter_fns" -> ((s, dir) => {
       // mv_filter corpus: MV_FILTER_REGEX / MV_FILTER_PREFIX over
       // STRING_TO_MV literals
-      DruidFunctions.register(s)
       s.sql("""
         SELECT MV_TO_STRING(MV_FILTER_REGEX(
                  STRING_TO_MV('abc,def,abd', ','), '^ab'), '|') AS r,
@@ -3559,7 +3543,6 @@ object SparkEntry {
       // SAFE_DIVIDE-by-zero and bitwise-and-vs-mod equivalence, as a
       // must-hold-per-row battery
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(count(*) AS BIGINT) AS cnt,
                CAST(count(CASE WHEN BITWISE_AND(user_id, 255) = user_id % 256
@@ -3583,7 +3566,6 @@ object SparkEntry {
     // the printed precision — no cross-engine rounding ties)
     "q_qa_scalar_misc_fns" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT o_orderkey,
                SAFE_DIVIDE(o_orderkey, o_orderkey % 3) AS sd_long,
@@ -3720,7 +3702,6 @@ object SparkEntry {
       // IS NULL branch) under a DISJUNCTION of bin ranges — the generated
       // sunburst segment-click query shape
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(FLOOR(CAST(value AS DOUBLE) / 0.5) * 0.5 AS DOUBLE) AS bin,
                CAST(count(*) AS BIGINT) AS n
@@ -3794,7 +3775,6 @@ object SparkEntry {
     // engine's pinned-UTC sessions)
     "q_qa_kttm_spotmatrix" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT JSON_VALUE(props, '$.k') AS k,
                TIME_FLOOR(ts, 'PT1H') AS t,
@@ -3941,7 +3921,6 @@ object SparkEntry {
     // json extraction composed on top of the aggregated json column
     "q_qa_aggr_battery_json" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         SELECT date_trunc('hour', ts) AS t,
                '1' || JSON_VALUE(min(props), '$$.k') AS c,
@@ -3981,7 +3960,6 @@ object SparkEntry {
     // SqlApiSpec — Spark rejects the same shapes at analysis.)
     "q_qa_win_rows_ub_prec" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -3997,7 +3975,6 @@ object SparkEntry {
       // empty frames at both partition edges must yield NULL, 0 PRECEDING/
       // 0 FOLLOWING must parse as CURRENT ROW
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4017,7 +3994,6 @@ object SparkEntry {
       // strictly-ahead frame (2 FOLLOWING AND 3 FOLLOWING): sum over an
       // empty frame is NULL while count is 0
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4035,7 +4011,6 @@ object SparkEntry {
       // tie-heavy single ORDER BY key: RANGE frames are peer-group frames,
       // so every row of a tz tie class gets the whole class's sum/count
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4054,7 +4029,6 @@ object SparkEntry {
       // basics_window_func_in_func A1_W1_G1: scalar function wrapping a
       // window aggregate whose argument is itself a function call
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4071,7 +4045,6 @@ object SparkEntry {
     // classes and value gaps behave differently from ROWS
     "q_qa_win_range_numeric_offset" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4091,7 +4064,6 @@ object SparkEntry {
     // one bucket, a 1-day offset two)
     "q_qa_win_range_interval" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4108,7 +4080,6 @@ object SparkEntry {
     // starts at the class head
     "q_qa_win_range_first_last_peers" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4127,7 +4098,6 @@ object SparkEntry {
     // spreads remainders into the FIRST buckets
     "q_qa_win_ntile_edges" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4144,7 +4114,6 @@ object SparkEntry {
     // Spark spells it `f(x) IGNORE NULLS OVER`, DuckDB `f(x IGNORE NULLS)`.
     "q_qa_win_ignore_nulls_frames" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12, v,
@@ -4165,7 +4134,6 @@ object SparkEntry {
     // frame decides WHICH rows are numbered, so nth over a slide moves
     "q_qa_win_nth_value" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4182,7 +4150,6 @@ object SparkEntry {
     // IS the unnested value — candidate rows multiply before windowing
     "q_qa_win_over_unnest" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT word, p_partkey,
                CAST(count(*) OVER (PARTITION BY word) AS BIGINT) AS word_cnt,
@@ -4198,7 +4165,6 @@ object SparkEntry {
     // sql_union_all family: windows straddling a UNION ALL of two sources
     "q_qa_win_over_union" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         WITH u AS (
           SELECT 'c' AS src, CAST(c_nationkey AS BIGINT) AS k, c_custkey AS id
@@ -4217,7 +4183,6 @@ object SparkEntry {
     // modes, and an empty OVER () in one projection
     "q_qa_win_multi_windows" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4236,7 +4201,6 @@ object SparkEntry {
     // cumulative sums must reflect the full input, not the page
     "q_qa_win_limit_offset" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT cli, srv, tz, t12,
@@ -4250,7 +4214,6 @@ object SparkEntry {
     // collapses each partition to one row
     "q_qa_win_distinct" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT DISTINCT cli,
@@ -4263,7 +4226,6 @@ object SparkEntry {
     // and numeric arguments in one projection
     "q_qa_win_datatypes" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4280,7 +4242,6 @@ object SparkEntry {
     // differ — Spark asc=nulls-first, DuckDB asc=nulls-last)
     "q_qa_win_nulls_order" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12, v,
@@ -4298,7 +4259,6 @@ object SparkEntry {
     // a subquery (rank pages, percent_rank/cume_dist round-pinned)
     "q_qa_win_rank_subq_filter" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT * FROM (
@@ -4314,7 +4274,6 @@ object SparkEntry {
     // numeric key — "preceding" walks toward larger values
     "q_qa_win_desc_range" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4330,7 +4289,6 @@ object SparkEntry {
     // expressions (arithmetic, CASE, function calls) — not bare columns
     "q_qa_win_expr_args" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4346,7 +4304,6 @@ object SparkEntry {
     // with BETWEEN in the outer query
     "q_qa_win_pagination" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT * FROM (
@@ -4360,7 +4317,6 @@ object SparkEntry {
     // row, timestamp argument)
     "q_qa_win_lead_lag_typed" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4377,7 +4333,6 @@ object SparkEntry {
     // (rank of running sums)
     "q_qa_win_stacked" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase),
         inner_w AS (
@@ -4396,7 +4351,6 @@ object SparkEntry {
     // partition can be one tie class
     "q_qa_win_tie_fractions" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4409,7 +4363,6 @@ object SparkEntry {
     // basics_group_by: a window ranking GROUP BY aggregates, under HAVING
     "q_qa_win_group_by_having" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT cli, CAST(sum(n) AS BIGINT) AS tot,
@@ -4425,7 +4378,6 @@ object SparkEntry {
     // values replicate, not recompute, across the join fanout
     "q_qa_win_join_self" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase),
         win AS (
@@ -4449,7 +4401,6 @@ object SparkEntry {
     // count(tz) numbers group rows, not raw rows
     "q_qa_win_groupby_running" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT user_id % 3 AS srv, event_type AS cli,
                CAST(user_id % 5 AS STRING) AS tz,
@@ -4473,7 +4424,6 @@ object SparkEntry {
     // single-source shape while any count(*) aggregate doubles
     "q_qa_win_union_groupby" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT user_id % 3 AS srv, event_type AS cli,
                CAST(count(*) AS BIGINT) AS n,
@@ -4492,7 +4442,6 @@ object SparkEntry {
     // several functions (row_number / sum / first_value all OVER w)
     "q_qa_win_named_window" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4512,7 +4461,6 @@ object SparkEntry {
     // states the same peer-class definition through dense_rank)
     "q_qa_win_mixed_frames" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4535,7 +4483,6 @@ object SparkEntry {
     // EXCLUDES it on 25 h days — a fixed-24 h mental model gets both wrong
     "q_qa_win_range_interval_dst" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       val daily = t(s, dir)("orders")
         .groupBy(graft.operators.Windows
           .timeFloorZone(col("o_orderdate").cast("timestamp"), "P1D",
@@ -4556,7 +4503,6 @@ object SparkEntry {
     // counts the whole peer class, NTILE(2) on a 1-row partition is 1
     "q_qa_win_percent_edges" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4574,7 +4520,6 @@ object SparkEntry {
     // corpus's 0_preceding/0_following suites pin exactly this boundary
     "q_qa_win_empty_frames" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4595,7 +4540,6 @@ object SparkEntry {
     // not perturb the ordering or the frame contents
     "q_qa_win_multi_sortkey_expr" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4619,7 +4563,6 @@ object SparkEntry {
     // and arithmetic combining two window aggregates in one expression
     "q_qa_win_scalar_chain" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4642,7 +4585,6 @@ object SparkEntry {
     // ordered by its alias)
     "q_drill_window_star_orderby" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT *, CAST(sum(n) OVER w AS BIGINT) AS s,
                CAST(count(n) OVER w AS BIGINT) AS c,
@@ -4661,7 +4603,6 @@ object SparkEntry {
     // OVER () variant collects across the entire input
     "q_drill_window_list_agg" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT grp, cli, n,
                array_join(array_sort(collect_list(cli) OVER
@@ -4679,7 +4620,6 @@ object SparkEntry {
     // even when the outer query keeps none of the window's input columns
     "q_qa_win_agg_over_window" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT CAST(count(*) AS BIGINT) AS c,
@@ -4700,7 +4640,6 @@ object SparkEntry {
     // frame — the null placement of EACH key independently shapes frames
     "q_qa_win_mixed_null_dirs" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12, v,
@@ -4721,7 +4660,6 @@ object SparkEntry {
     // (rounded identically on both sides)
     "q_drill_window_var_sliding" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4740,7 +4678,6 @@ object SparkEntry {
     // output of an exploded array (qaUnnest × window composition)
     "q_qa_unnest_group_window" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT word, n,
                CAST(row_number() OVER (ORDER BY n DESC, word) AS BIGINT) AS rk,
@@ -4760,7 +4697,6 @@ object SparkEntry {
     // distance, not row distance, decides membership everywhere
     "q_qa_win_range_matrix_full" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4786,7 +4722,6 @@ object SparkEntry {
     // deterministically without a sort key.
     "q_qa_win_frame_no_orderby" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4811,7 +4746,6 @@ object SparkEntry {
     // frames walk the resulting order.
     "q_qa_win_dup_sortkey" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4835,7 +4769,6 @@ object SparkEntry {
     // outside it)
     "q_qa_win_lag_ignores_frame" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4854,7 +4787,6 @@ object SparkEntry {
     // window outputs — windows must evaluate before the outer predicate
     "q_drill_window_named_mixed" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT * FROM (
@@ -4878,7 +4810,6 @@ object SparkEntry {
     // global (partition-less) named window ordered DESC
     "q_drill_window_all_funcs" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4900,7 +4831,6 @@ object SparkEntry {
     // variance over a 1-row partition is NULL, population variance 0
     "q_drill_window_var_stat" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4916,7 +4846,6 @@ object SparkEntry {
     // result is an input column to a plain GROUP BY
     "q_drill_window_frame_in_subq" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT cli, CAST(max(run) AS BIGINT) AS max_run,
@@ -4933,7 +4862,6 @@ object SparkEntry {
     // toward LARGER timestamps, so the 12-hour bound faces the other way
     "q_qa_win_range_interval_desc" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4971,7 +4899,6 @@ object SparkEntry {
     // explicitly.)
     "q_qa_scalar_datetime_battery" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         SELECT CAST(count(*) FILTER (WHERE
                  ${battery("ts", "ts - INTERVAL 2 YEAR", "ts + INTERVAL 2 YEAR", "STRING")}) AS BIGINT) AS cnt_time,
@@ -4988,7 +4915,6 @@ object SparkEntry {
     // byte order would break the count equality)
     "q_qa_scalar_ipv4_battery" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql(s"""
         WITH ips AS (
           SELECT ip, IPV4_PARSE(ip) AS ipl FROM (
@@ -5229,7 +5155,6 @@ object SparkEntry {
     // empty cell and are excluded, like the reference's null MVD)
     "q_qa_join_mv_filter_expr" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         WITH f AS (SELECT p_partkey,
                           MV_FILTER_ONLY(split(p_type, ' '), array('PROMO')) AS mv
@@ -5353,7 +5278,6 @@ object SparkEntry {
 
     "q_qa_sql_numeric_battery" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(count(*) AS BIGINT) AS cnt,
                CAST(count(CASE WHEN abs(TRUNCATE(value, 1)) <= abs(value)
@@ -5389,7 +5313,6 @@ object SparkEntry {
 
     "q_qa_sql_datetime_battery" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT date_format(min(TIME_FLOOR(ts, 'PT1H')), 'yyyy-MM-dd HH:mm:ss') AS min_floor,
                date_format(max(TIME_CEIL(ts, 'PT1H')), 'yyyy-MM-dd HH:mm:ss') AS max_ceil,
@@ -5425,7 +5348,6 @@ object SparkEntry {
 
     "q_qa_sql_ipv4_battery" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT CAST(count(CASE WHEN IPV4_MATCH(ip, '10.0.0.0/8') THEN 1 END) AS BIGINT) AS n_match,
                CAST(count(CASE WHEN IPV4_STRINGIFY(IPV4_PARSE(ip)) = ip THEN 1 END) AS BIGINT) AS n_rt,
@@ -5449,7 +5371,6 @@ object SparkEntry {
     // ----------------------------------------------- SQL façade (§3.1, §2.9)
     "q_sql_surface" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS n,
@@ -5466,7 +5387,6 @@ object SparkEntry {
       // EarliestLatestAnySqlAggregator) — injected MinBy/MaxBy, keyed on a
       // unique ordering column for cross-engine determinism
       Tables.registerAll(s, dir)
-      graft.GraftExtensions.register(s)
       s.sql("""SELECT o_orderpriority,
                       earliest(o_totalprice, o_orderkey) AS first_price,
                       latest(o_orderstatus, o_orderkey) AS last_status,
@@ -5479,7 +5399,6 @@ object SparkEntry {
       // round-5 reference-SQL compat additions: REGEXP_EXTRACT with group-0
       // default + NULL on no match, DIV integer division, IPV4_MATCH CIDR
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT o_orderkey,
                regexp_extract(o_orderpriority, '[0-9]+') AS prio_num,
@@ -5598,7 +5517,6 @@ object SparkEntry {
       // MultiValueStringOperatorConversions.java): offsets 0-based,
       // ordinals 1-based, set-add sorted-distinct
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT p_partkey,
                CAST(MV_LENGTH(w) AS BIGINT) AS n_words,
@@ -5618,7 +5536,6 @@ object SparkEntry {
       // TIME_IN_INTERVAL, IPV4_* (reference Function.java + builtin
       // operator conversions)
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT o_orderkey,
                TEXTCAT(o_orderstatus, o_orderpriority) AS cat,
@@ -5642,7 +5559,6 @@ object SparkEntry {
       // round-trip proves radix parsing without a DuckDB base-conv oracle;
       // the three hr_* columns pin each CASE branch with tie-free decimals.
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT o_orderkey,
                STRING_FORMAT('%s #%05d', o_orderpriority, o_orderkey) AS tag,
@@ -5697,7 +5613,6 @@ object SparkEntry {
       // quidem qaJsonCols funcs_and_sql_func_json_{keys,object,paths,query}:
       // the JSON function battery over the stored props column
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       // array-typed results ride as comma-joined strings: the driver's pandas
       // comparator cannot hash ndarray cells (r7 red gate)
       s.sql(
@@ -5812,7 +5727,6 @@ object SparkEntry {
         }
       q.processAllAvailable(); q.stop()
       s.table("stream_sessionize_out")
-        .filter(col("key") =!= "-1")
         .select(col("key"),
           date_trunc("second", col("session_start")).as("session_start"),
           date_trunc("second", col("session_end")).as("session_end"),
@@ -6752,7 +6666,6 @@ object SparkEntry {
       // named lookup resolved through the registry by the SQL LOOKUP fn
       graft.functions.LookupRegistry.register("status_names", Map(
         "F" -> "finished", "O" -> "open", "P" -> "partial"))
-      graft.functions.LookupRegistry.registerSql(s)
       Tables.registerAll(s, dir)
       s.sql("""SELECT lookup(o_orderstatus, 'status_names', 'unknown') AS status,
                       count(*) AS n
@@ -6780,7 +6693,6 @@ object SparkEntry {
       // optimization is forced while the declaration is on (optimizedPlan
       // is a cached lazy val), then the flag is dropped so non-covering
       // lookups elsewhere never see it
-      graft.GraftExtensions.register(s) // idempotent: injects the rule
       s.conf.set("spark.graft.assumeInjectiveLookups", "true")
       try {
         val df = t(s, dir)("orders")
@@ -7043,7 +6955,6 @@ object SparkEntry {
 
     // ------------------------- typed UDAF extension surface (§2.13)
     "q_agg_geomean" -> ((s, dir) => {
-      graft.functions.TypedAggregators.register(s)
       Tables.registerAll(s, dir)
       s.sql("""SELECT l_returnflag,
                       round(geometric_mean(l_quantity), 6) AS geo_qty,
@@ -7195,7 +7106,6 @@ object SparkEntry {
       // value types — number/string/boolean/float in one object, rendered
       // compact and type-preserving in both engines
       Tables.registerAll(s, dir)
-      DruidFunctions.register(s)
       s.sql("""
         SELECT event_id,
                JSON_OBJECT('id', event_id, 'type', event_type,
@@ -7424,7 +7334,6 @@ object SparkEntry {
       // distinct/median computed in the same query (bounds ≥2× the observed
       // sketch error at these K values).
       Tables.registerAll(s, dir)
-      GraftExtensions.register(s)
       s.sql("""
         WITH sk AS (
           SELECT event_type,

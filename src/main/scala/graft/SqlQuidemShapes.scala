@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.DruidFunctions
-
 /** Port of the reference's `sql/src/test/quidem/org.apache.druid.quidem.
   * SqlQuidemTest/` edge-shape files (15 .iq) not already on the board:
   *
@@ -137,7 +135,6 @@ object SqlQuidemShapes {
   private def runSpark(s: SparkSession, dir: String, sqlText: String)
       : DataFrame = {
     Tables.registerAll(s, dir)
-    DruidFunctions.register(s)
     graft.api.SqlApi.runSql(s, sqlText)
   }
 

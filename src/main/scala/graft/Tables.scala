@@ -125,14 +125,9 @@ object Tables {
       new java.util.WeakHashMap[SparkSession, String]())
 
   /** Register every table as a temp view so `spark.sql` works against the
-    * set — and arm the engine-level plan rewrites on the session, so a
-    * session that was not built `withExtensions(GraftExtensions)` still
-    * plans SQL the way the engine intends (idempotent, list-contains
-    * cheap; deterministic rather than depending on WHICH gate registered
-    * extensions first in a shared session).
+    * set.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    graft.plans.HybridDecimalSumRule.ensureRegistered(spark)
     if (registeredDir.get(spark) != dir) {
       all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
       registeredDir.put(spark, dir)

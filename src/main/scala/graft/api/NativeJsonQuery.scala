@@ -113,6 +113,7 @@ object NativeJsonQuery {
   private def nativeExpr(text: String): Column = expr(rewriteNativeExpr(text))
 
   private def runParsed(spark: SparkSession, dir: String, q: JValue): DataFrame = {
+    graft.GraftSession.attach(spark)
     // context.queryId → Spark job group, so the reference's
     // DELETE /druid/v2/{id} cancellation maps to cancelJobGroup (see
     // [[cancel]]); interruptOnCancel stops running tasks, not just queued

@@ -11,8 +11,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.types._
 
-import graft.Tables
-import graft.functions.DruidFunctions
+import graft.{GraftSession, Tables}
 
 /** SQL-over-HTTP facade — the reference's primary user-facing API
   * (`POST /druid/v2/sql`; payload shape `sql/src/main/java/org/apache/druid/
@@ -44,8 +43,8 @@ object SqlApi {
     */
   def run(spark: SparkSession, dir: String, payload: String): DataFrame = {
     val j = JsonMethods.parse(payload)
+    GraftSession.attach(spark)
     Tables.registerAll(spark, dir)
-    DruidFunctions.register(spark)
     registerWarehouse(spark)
     // context.lane (reference query laning, QueryContexts.getLane) → Spark
     // fair-scheduler pool, same mapping as the native JSON route: all jobs
@@ -1901,6 +1900,7 @@ object SqlApi {
     // the dialect passes' SQLConf reads must see THIS session, not
     // whichever one the calling thread touched last
     org.apache.spark.sql.graftbridge.Bridge.withActive(spark) {
+      GraftSession.attach(spark)
       sqlWithSortWindows(spark, rewriteSql(sqlText))
     }
 
@@ -1952,7 +1952,7 @@ object SqlApi {
     * JSON arguments). Gate batteries enter through rewriteSql and keep
     * Spark dialect.
     */
-  private[graft] def calciteLiteralEscape(sqlText: String): String = {
+  private def calciteLiteralEscape(sqlText: String): String = {
     val (masked, lits) = maskLiterals(sqlText)
     unmaskLiterals(masked, lits.map(_.replace("\\", "\\\\")))
   }

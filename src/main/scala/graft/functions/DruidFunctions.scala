@@ -2296,14 +2296,11 @@ object DruidFunctions {
     * temporary macros expand inline at parse time, so they stay fully inside
     * Catalyst optimization + whole-stage codegen (no UDF boundary).
     *
-    * Idempotent and re-entry-cheap: each CREATE FUNCTION is a driver-side
-    * parse+analyze round, and queries call register() defensively — a
-    * per-session guard keeps the repeat cost at one conf read instead of
-    * ~75 SQL commands.
+    * Each CREATE FUNCTION is a driver-side parse+analyze round; call
+    * through [[graft.GraftSession.attach]], whose per-session flag keeps
+    * the repeat cost at one conf read.
     */
-  def register(spark: SparkSession): Unit = {
-    val Flag = "spark.graft.internal.fnsRegistered"
-    if (spark.conf.getOption(Flag).contains("true")) return
+  private[graft] def register(spark: SparkSession): Unit = {
     catalystBuilders.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
@@ -2375,9 +2372,7 @@ object DruidFunctions {
       // all three ISO-8601 interval spellings — start/end, start/period,
       // period/end — resolved at conversion time from a literal)
       // ------------------------------------------------------------ string ----
-      "TEXTCAT(x STRING, y STRING) RETURNS STRING RETURN concat(x, y)",
       "STRPOS(h STRING, n STRING) RETURNS INT RETURN instr(h, n)",
-      "DECODE_BASE64_UTF8(s STRING) RETURNS STRING RETURN decode(unbase64(s), 'UTF-8')",
       // (TRUNCATE/TRUNC live in catalystBuilders: optional-digits arity and
       // the reference's TRUNC alias, which Spark's builtin date-trunc would
       // otherwise shadow)
@@ -2493,6 +2488,5 @@ object DruidFunctions {
       // newer-docs alias of COMPLEX_DECODE_BASE64
       "DECODE_BASE64_COMPLEX(t STRING, s STRING) RETURNS BINARY RETURN unbase64(s)")
     fns.foreach(f => spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $f"))
-    spark.conf.set(Flag, "true")
   }
 }

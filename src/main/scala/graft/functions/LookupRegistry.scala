@@ -211,8 +211,10 @@ object LookupRegistry {
         replace = if (c.size > 2) Some(c(2)) else None)
   }
 
-  /** Register the SQL function on a session. */
-  def registerSql(spark: SparkSession): Unit =
+  /** Register the SQL function on a session (via
+    * [[graft.GraftSession.attach]]).
+    */
+  private[graft] def registerSql(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction("lookup", lookupBuilder, "built-in")
 }

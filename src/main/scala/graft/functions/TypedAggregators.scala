@@ -30,8 +30,10 @@ object TypedAggregators {
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** Register SQL-callable UDAFs on a session. */
-  def register(spark: SparkSession): Unit = {
+  /** Register SQL-callable UDAFs on a session (via
+    * [[graft.GraftSession.attach]]).
+    */
+  private[graft] def register(spark: SparkSession): Unit = {
     spark.udf.register("geometric_mean", udaf(GeometricMean))
   }
 }

@@ -194,8 +194,7 @@ object Metadata {
     */
   def informationSchemaRoutines(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    graft.functions.DruidFunctions.register(spark)
-    graft.GraftExtensions.register(spark)
+    graft.GraftSession.attach(spark)
     // Aggregate-ness comes from the function registry's ExpressionInfo group
     // for built-ins, plus an exact-name list for graft-registered aggregates
     // (their injected ExpressionInfo carries no group). Substring hints

@@ -25,8 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This is the full custom-plan extension tier: LogicalPlan node →
   * SparkStrategy → SparkPlan, spliced into the public API via
-  * `Bridge.ofRows` and registered through either `SparkSessionExtensions`
-  * or `spark.experimental.extraStrategies`.
+  * `Bridge.ofRows`; the strategy is armed by `GraftSession.attach`.
   */
 case class LocalApproxTopN(
     dim: Expression,
@@ -107,14 +106,6 @@ case class LocalApproxTopNExec(
 
 object ApproxTopN {
 
-  /** Ensure the planner knows the custom node — injectable via extensions
-    * at session build, or at runtime here for sessions we didn't construct.
-    */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(ApproxTopNStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ ApproxTopNStrategy
-
   /** Approximate topN: top `k` values of `dimCol` by count (valueCol=None)
     * or by sum(valueCol). Returns (dimCol, metric DOUBLE) ordered metric
     * desc, dim asc.
@@ -122,7 +113,7 @@ object ApproxTopN {
   def approxTopN(df: DataFrame, dimCol: String, valueCol: Option[String],
                  k: Int, localLimit: Int = 1000): DataFrame = {
     val spark = df.sparkSession
-    ensureStrategy(spark)
+    graft.GraftSession.attach(spark)
     val analyzed = df.queryExecution.analyzed
     val dimAttr = analyzed.output.find(_.name == dimCol)
       .getOrElse(throw new IllegalArgumentException(s"no column $dimCol"))

@@ -243,14 +243,4 @@ object HybridDecimalSumRule extends Rule[LogicalPlan] {
         }
     }
   }
-
-  /** Idempotently arm the rule on a session not built with extensions. */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val alreadyInjected = spark.sessionState.optimizer.batches
-      .exists(_.rules.exists(_ eq this))
-    if (!alreadyInjected &&
-        !spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 }

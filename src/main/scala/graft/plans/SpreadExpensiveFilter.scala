@@ -116,16 +116,4 @@ object SpreadExpensiveFilter extends Rule[LogicalPlan] with PredicateHelper {
         Filter(cond, Repartition(parallelism, shuffle = true, child))
     }
   }
-
-  /** Idempotently arm the rule on a session that was not built with
-    * `withExtensions(GraftExtensions)`.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val alreadyInjected = spark.sessionState.optimizer.batches
-      .exists(_.rules.exists(_ eq this))
-    if (!alreadyInjected &&
-        !spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 }

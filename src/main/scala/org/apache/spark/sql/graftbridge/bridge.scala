@@ -46,13 +46,14 @@ object Bridge {
     * CacheManager; a checkpoint's blocks are an RDD-LEVEL persist the
     * CacheManager never sees, so without this they linger until the
     * ContextCleaner notices the RDD is unreachable (driver-GC-timed).
-    * Walks the analyzed plan for the LogicalRDD node the checkpoint
-    * produced and unpersists its RDD directly. No-op on non-checkpointed
-    * plans.
+    * Walks the analyzed plan for the LogicalRDD nodes a checkpoint
+    * produced and unpersists their RDDs directly; a LogicalRDD over any
+    * other RDD (say, a deliberately persisted one) keeps its blocks.
     */
   def unpersistCheckpointBlocks(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      case lr: org.apache.spark.sql.execution.LogicalRDD
+          if lr.rdd.checkpointData.isDefined =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }

@@ -135,4 +135,31 @@ class CacheScopeSpec extends AnyFunSuite {
     b.count() // second scope's consumer
     assert(awaitRelease(), "cache still registered after both consumers")
   }
+
+  test("checkpoint release frees a localCheckpoint's blocks and keeps a " +
+       "persisted RDD's") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.storage.StorageLevel
+    // a DataFrame whose LogicalRDD reads a deliberately persisted RDD
+    val base = spark.range(50).toDF("v")
+    val rows = base.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_ONLY)
+    rows.count()
+    val persisted = Bridge.ofRows(spark, LogicalRDD(
+      base.queryExecution.analyzed.output, rows)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+    Bridge.unpersistCheckpointBlocks(persisted)
+    assert(rows.getStorageLevel == StorageLevel.MEMORY_ONLY)
+    assert(spark.sparkContext.getPersistentRDDs.contains(rows.id))
+    rows.unpersist(blocking = true)
+
+    val cp = spark.range(50).toDF("v").localCheckpoint()
+    val cpRdd = cp.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRDD => lr.rdd
+    }.get
+    assert(cpRdd.getStorageLevel.isValid)
+    Bridge.unpersistCheckpointBlocks(cp)
+    assert(cpRdd.getStorageLevel == StorageLevel.NONE)
+  }
 }

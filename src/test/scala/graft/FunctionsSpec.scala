@@ -64,7 +64,7 @@ class FunctionsSpec extends AnyFunSuite {
     assert(d(3).getDouble(0) == 3.5)
     // long path: integral inputs divide as longs (truncation), zero
     // divisor is null EVEN for 0/0
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val l = spark.sql(
       """SELECT safe_divide(7L, 2L) AS a, safe_divide(-7L, 2L) AS b,
                 safe_divide(0L, 0L) AS c, safe_divide(5L, 0L) AS d,
@@ -75,7 +75,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("human_readable format family matches HumanReadableBytes.format") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT human_readable_binary_byte_format(1024L) AS a,
                 human_readable_binary_byte_format(1048576L, 1) AS b,
@@ -94,7 +94,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("scalb and textcat match the reference's native expressions") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT scalb(3.0D, 4) AS a, scalb(1.0D, -2) AS b,
                 scalb(0.0D, 100) AS c,
@@ -107,7 +107,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("nvl is a two-argument coalesce") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       "SELECT nvl(NULL, 'x') AS a, nvl('y', 'x') AS b, nvl(NULL, 5) AS c")
       .head()
@@ -236,7 +236,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL TIME_FLOOR / TIME_SHIFT registered functions") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT TIME_FLOOR(TIMESTAMP '2024-03-05 10:37:45', 'PT15M'),
                 TIME_FLOOR(TIMESTAMP '2024-03-05 10:37:45', 'P1M'),
@@ -256,7 +256,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("misc SQL macros: contains/parse_long/subtract_months/byte formats") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT CONTAINS_STRING('Apache Spark', 'Spark'),
                 ICONTAINS_STRING('Apache Spark', 'spark'),
@@ -277,7 +277,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("STRING_FORMAT varargs / PARSE_LONG radix / TIME_EXTRACT / decimal format") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT STRING_FORMAT('%s=%d', 'k', 7),
                 STRING_FORMAT('%03d-%s-%.1f', 5, 'x', 2.25),
@@ -303,7 +303,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("timestamp()/subtract_months() native-expression functions match the reference") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT TIMESTAMP('2024-03-07 01:02:03'),
                 TIMESTAMP('07/03/2024', 'dd/MM/yyyy'),
@@ -330,7 +330,7 @@ class FunctionsSpec extends AnyFunSuite {
   test("TIME_PARSE with pattern returns NULL on unparseable input (both arities agree)") {
     // reference TimestampParseExprMacro catches parse failures → NULL; the
     // patterned arity must not ANSI-error where the no-pattern arity TRYs
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT TIME_PARSE('garbage', 'yyyy-MM-dd'),
                 TIME_PARSE('garbage'),
@@ -341,7 +341,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("TIME_EXTRACT reference units: MILLISECOND/ISOYEAR/DECADE/CENTURY/MILLENNIUM") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT TIME_EXTRACT(TIMESTAMP '2024-01-07 10:37:45.123', 'MILLISECOND'),
                 TIME_EXTRACT(TIMESTAMP '2024-01-07 10:37:45', 'ISOYEAR'),
@@ -358,7 +358,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("JSON SQL surface: JSON_OBJECT / JSON_QUERY_ARRAY / TO_JSON_STRING / MV_TO_ARRAY") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT JSON_OBJECT('a', 'b'),
                 JSON_QUERY_ARRAY('{"xs": ["p", "q"]}', '$.xs'),
@@ -381,7 +381,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("JSON fns over datetime inputs see epoch millis, not internals") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     // the reference's expr layer carries datetimes as LONG millis —
     // json_value(__time, '$') = '1640995200000' (qaJsonCols
     // funcs_and_sql_func_json_value A001), never the internal micros /
@@ -396,7 +396,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL TIME_FLOOR / TIME_SHIFT raise on unsupported periods") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     // the Catalyst-builder TIME_FLOOR handles ANY fixed ISO period (the old
     // SQL macro's enumerated list is gone) — PT10M is now a valid floor…
     val ok = spark.sql(
@@ -425,7 +425,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("TIME_CEIL / TIME_SHIFT full arity: timezone frames track DST") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql("""
       SELECT TIME_CEIL(TIMESTAMP '2024-03-15 13:45:00', 'PT15M') AS aligned,
              TIME_CEIL(TIMESTAMP '2024-03-15 13:47:21', 'P1D', NULL,
@@ -447,7 +447,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("TIME_FLOOR full arity: origin-anchored and timezone wall-clock floors") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql("""
       SELECT TIME_FLOOR(TIMESTAMP '2024-03-15 13:47:21', 'PT15M',
                '1970-01-01T00:07:00') AS a,
@@ -699,7 +699,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL TIME_CEIL: aligned stays, unaligned rounds up, calendar periods") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT TIME_CEIL(TIMESTAMP '2024-03-05 10:37:45', 'PT15M') AS a,
                 TIME_CEIL(TIMESTAMP '2024-03-05 10:45:00', 'PT15M') AS b,
@@ -712,7 +712,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL MV offset/ordinal are 0/1-based and null out of bounds") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT MV_OFFSET(array('a','b','c'), 1) AS off1,
                 MV_ORDINAL(array('a','b','c'), 1) AS ord1,
@@ -727,7 +727,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL ARRAY_QUANTILE interpolates like the reference") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT ARRAY_QUANTILE(array(1D, 3D, 2D, 4D), 0.5) AS med,
                 ARRAY_QUANTILE(array(1D, 3D, 2D, 4D), 0.25) AS q1,
@@ -738,7 +738,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL TIME_IN_INTERVAL is [start, end)") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT TIME_IN_INTERVAL(TIMESTAMP '1995-06-01', '1995-01-01/1996-01-01') AS yes,
                 TIME_IN_INTERVAL(TIMESTAMP '1996-01-01', '1995-01-01/1996-01-01') AS excl""").head()
@@ -746,7 +746,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL bitwise, TRUNCATE, TEXTCAT, STRPOS, base64, IPV4 round-trip") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql(
       """SELECT BITWISE_AND(12, 10) AS band, BITWISE_XOR(5, 3) AS bxor,
                 BITWISE_COMPLEMENT(5) AS bnot, BITWISE_SHIFT_LEFT(3, 2) AS shl,
@@ -985,7 +985,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL REGEXP_EXTRACT: reference semantics — group 0 default, NULL on no match") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql("""
       SELECT regexp_extract('foo123bar', '[0-9]+') AS whole,
              regexp_extract('foo123bar', '([a-z]+)([0-9]+)', 2) AS grp,
@@ -997,7 +997,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("native expression language: timestamp_* aliases, case_searched/simple, notnull") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql("""
       SELECT timestamp_floor(TIMESTAMP '2024-03-15 13:47:11', 'PT1H') AS fl,
              timestamp_shift(TIMESTAMP '2024-01-31 00:00:00', 'P1M', 1) AS sh,
@@ -1014,7 +1014,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL DIV, IPV4_MATCH, IPV6_MATCH, COMPLEX_DECODE_BASE64") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val r = spark.sql("""
       SELECT DIV(17, 5) AS d1, DIV(-17, 5) AS d2,
              IPV4_MATCH('10.64.1.2', '10.64.0.0/10') AS m1,
@@ -1031,7 +1031,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("sketch-returning SQL surface: theta set ops match pairwise estimates") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(0, 3000).selectExpr("id % 2000 AS a", "id + 1000 AS b")
       .createOrReplaceTempView("theta_src")
     val r = spark.sql(
@@ -1057,7 +1057,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("sketch set ops: null sides follow per-op semantics") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(0, 2000).selectExpr("id AS a", "CAST(id AS DOUBLE) AS m")
       .createOrReplaceTempView("null_setop_src")
     val r = spark.sql(
@@ -1087,7 +1087,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("tuple sketch union lowers theta when trimming to K") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     // two disjoint key ranges, each > K=4096 distinct so both sides carry a
     // tagged theta < 1; the union must re-tighten theta or it reports ~half
     spark.range(0, 20000).selectExpr(
@@ -1102,7 +1102,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("hll_sketch_union / to_string / estimate_with_error_bounds") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(0, 5000).selectExpr("id AS a", "id + 2500 AS b")
       .createOrReplaceTempView("hll_src")
     val r = spark.sql(
@@ -1120,7 +1120,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("ds_tuple_doubles set ops sum summaries; metrics_sum_estimate") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(0, 1000).selectExpr("id AS k", "CAST(1.0 AS DOUBLE) AS m1",
       "CAST(id AS DOUBLE) AS m2").createOrReplaceTempView("tup_src")
     val r = spark.sql(
@@ -1147,7 +1147,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("approx_quantile, approx_count_distinct_builtin, array_concat_agg") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(0, 10000).selectExpr("CAST(id AS DOUBLE) AS v", "id % 100 AS k",
       "array(id, id + 1) AS arr").createOrReplaceTempView("aq_src")
     val r = spark.sql(
@@ -1161,7 +1161,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("approx_quantile_fixed_buckets modes") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     // uniform 0..999 plus outliers at -50 and 5000
     spark.range(0, 1000).selectExpr("CAST(id AS DOUBLE) AS v")
       .union(Seq(-50.0, 5000.0).toDF("v"))
@@ -1177,8 +1177,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("ds_quantiles_sketch / ds_quantile_summary and scalar macro additions") {
-    GraftExtensions.register(spark)
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     spark.range(0, 1000).selectExpr("CAST(id AS DOUBLE) AS v")
       .createOrReplaceTempView("kll_src")
     val s = spark.sql(
@@ -1209,7 +1208,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("json_merge is SHALLOW (JsonMergeExprMacro, " +
       "NestedDataExpressions.java:140-185)") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     def s(sql: String): String = {
       val v = spark.sql(s"SELECT $sql AS r").head()
       if (v.isNullAt(0)) null else v.getString(0)
@@ -1232,7 +1231,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("native predicate family uses Evals.asBoolean truthiness " +
       "(Function.java IsTrueFunc:2530, Evals.java:55-68)") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     def b(sql: String): Boolean = spark.sql(s"SELECT $sql AS r").head().getBoolean(0)
     // numerics: true iff > 0 (−1 is FALSE, unlike a SQL nonzero cast)
     assert(b("istrue(1)") && !b("istrue(-1)") && !b("istrue(0)"))
@@ -1260,7 +1259,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("decode_base64_utf8 and native unix_timestamp " +
       "(BuiltInExprMacros:149, Function.java UnixTimestampFunc:3245)") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     assert(one("decode_base64_utf8('aGVsbG8=')") == "hello")
     assert(spark.sql("SELECT decode_base64_utf8(CAST(NULL AS STRING)) AS r")
       .head().isNullAt(0))
@@ -1274,7 +1273,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("native like() function form resolves to Spark's like builder " +
       "(LikeExprMacro parity: % _ wildcards, custom escape)") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     def b(sql: String): Boolean = spark.sql(s"SELECT $sql AS r").head().getBoolean(0)
     assert(b("like('abcdef', 'abc%')") && !b("like('abcdef', 'xyz%')"))
     assert(b("like('a_c', 'a\\\\_c')") && b("like('abc', 'a_c')"))

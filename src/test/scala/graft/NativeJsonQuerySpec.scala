@@ -220,7 +220,7 @@ class NativeJsonQuerySpec extends AnyFunSuite {
     val m = graft.functions.LookupRegistry.get("region_names").get
     assert(m == Map("0" -> "AFRICA", "1" -> "AMERICA_V2"))
     // and the loaded lookup resolves through SQL LOOKUP()
-    graft.functions.LookupRegistry.registerSql(spark)
+    GraftSession.attach(spark)
     val r = spark.sql("SELECT LOOKUP('1', 'region_names') AS v").head()
     assert(r.getString(0) == "AMERICA_V2")
     intercept[IllegalArgumentException] {
@@ -606,6 +606,11 @@ class NativeJsonQuerySpec extends AnyFunSuite {
          FROM events""").head()
     assert(r.getTimestamp(0).toString.startsWith("2024-01-01"))
     assert(r.getLong(1) > 10)
+    // one builder per name: a name in both lists is shadowed by whichever
+    // attach registers last
+    val names = (graft.functions.DruidFunctions.catalystBuilders.map(_._1) ++
+      GraftExtensions.functions.map(_._1)).map(_.toLowerCase)
+    assert(names.distinct.size == names.size, names.diff(names.distinct))
   }
 
   test("union datasource appends tables by name") {

@@ -93,7 +93,7 @@ class PlanSpec extends AnyFunSuite {
     // Spark itself — pin the non-HOF core (length/offset/ordinal/
     // contains over STRING_TO_MV) instead, which must codegen end-to-end
     Tables.registerAll(spark, dir)
-    graft.functions.DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val df = spark.sql(
       """SELECT p_partkey, MV_LENGTH(w) AS n, MV_OFFSET(w, 0) AS w0,
                 MV_ORDINAL(w, 2) AS w2, MV_CONTAINS(w, 'green') AS g
@@ -143,7 +143,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("reverse-lookup rule inverts lookup filters into pushable IN filters") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     val lkp = Map("1-URGENT" -> "hot", "2-HIGH" -> "hot", "3-MEDIUM" -> "warm")
     val df = Tables.load(spark, dir, "orders")
       .filter(graft.functions.DruidFunctions
@@ -160,7 +160,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("aggregate pull-up-lookup rule lifts injective lookups above the agg") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     val lkp = Map("F" -> "finished", "O" -> "open", "P" -> "partial")
     def query = Tables.load(spark, dir, "orders")
       .groupBy(graft.functions.DruidFunctions
@@ -412,7 +412,7 @@ class PlanSpec extends AnyFunSuite {
     // ObjectHashAggregate with a partial mode below the exchange; pin that
     // shape for the reference-named SQL surface.
     Tables.registerAll(spark, dir)
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     val p = spark.sql(
       """SELECT event_type, theta_sketch_estimate(ds_theta(user_id)) AS t,
                 hll_sketch_estimate(ds_hll(user_id)) AS h,
@@ -539,5 +539,58 @@ class PlanSpec extends AnyFunSuite {
       "expected a hash exchange (final agg) and the lineitem scan:\n" + p)
     assert(liIdx > aggIdx,
       "the only hash exchange must be the final aggregate's, above the fact scan")
+  }
+
+  test("one rule placement: a created session and an attached newSession " +
+       "carry the same rules and plan the same") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val prevActive = SparkSession.getActiveSession
+    val prevDefault = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    // no default session: create builds a new one on the running context
+    val created =
+      try GraftSession.create("local[4]", shufflePartitions = 4)
+      finally {
+        prevActive.foreach(SparkSession.setActiveSession)
+        prevDefault.foreach(SparkSession.setDefaultSession)
+      }
+    val attached = created.newSession()
+    GraftSession.attach(attached)
+    Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+        "spark.sql.files.maxPartitionBytes", "spark.sql.session.timeZone")
+      .foreach(k => attached.conf.set(k, created.conf.get(k)))
+
+    def placement(s: SparkSession) = {
+      val graftRules = s.sessionState.optimizer.batches.flatMap(b =>
+        b.rules.filter(GraftSession.rules.contains).map(r => (b.name, r)))
+      val strategies = s.sessionState.planner.strategies
+        .count(_ == graft.plans.ApproxTopNStrategy)
+      (graftRules, strategies)
+    }
+    for (s <- Seq(created, attached)) {
+      val (graftRules, strategies) = placement(s)
+      assert(graftRules.map(_._2) == GraftSession.rules)
+      assert(graftRules.map(_._1).distinct == Seq("User Provided Optimizers"))
+      assert(strategies == 1)
+      GraftSession.attach(s)
+      assert(placement(s) == ((graftRules, strategies)),
+        "a second attach must change nothing")
+    }
+
+    def optimized(s: SparkSession, gate: String): String =
+      SparkEntry.queries(gate)(s, dir).queryExecution.optimizedPlan.toString
+        .replaceAll("#\\d+L?", "#")
+    val gates = Seq("q_tpch_q01_decimal", "q_qasql_tautology_json_keys",
+      "q_lookup_pullup", "q_topn_approx", "q_drill_window_lag_lead")
+    for (gate <- gates) {
+      val a = optimized(created, gate)
+      assert(a == optimized(attached, gate), s"$gate plans differ:\n$a")
+    }
+    // the placement-sensitive rules fire on their gates, so the equality
+    // above compares rewritten plans
+    assert(optimized(created, "q_tpch_q01_decimal").contains("decimal_sum_hybrid"))
+    assert(optimized(created, "q_qasql_tautology_json_keys")
+      .contains("Repartition"))
   }
 }

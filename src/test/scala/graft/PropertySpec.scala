@@ -49,7 +49,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("safe_divide matches an independent model of SafeDivide") {
     import spark.implicits._
-    functions.DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     // long path model: zero divisor -> null, else Java truncation
     def longModel(x: Long, y: Long): Option[Long] =
       if (y == 0L) None else Some(x / y)

@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.DruidFunctions
-
 /** Pins the reference semantics mined from the quidem QA suites
   * (quidem-ut `.iq` expected outputs) directly against the engine — the
   * Verify/DuckDB gates in QaSuites check cross-engine agreement; these pin
@@ -19,7 +17,7 @@ class QaSuitesSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    DruidFunctions.register(s)
+    GraftSession.attach(s)
     s
   }
 
@@ -135,7 +133,7 @@ class QaSuitesSpec extends AnyFunSuite {
   }
 
   test("two UNNESTs cross-join; empty/null arrays drop rows (multi_unnests A6_B7_D1)") {
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val sql = graft.api.SqlApi.rewriteUnnest(
       """SELECT count(*) AS n
          FROM (SELECT array(1L, 2L, NULL) AS a, CAST(array() AS ARRAY<STRING>) AS e
@@ -163,7 +161,7 @@ class QaSuitesSpec extends AnyFunSuite {
     // the reference allows any expression before the path
     // (NestedDataOperatorConversions.java) — e.g. JSON_QUERY output or a
     // CAST — not just a bare column reference
-    DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val sql = graft.api.SqlApi.rewriteJsonReturning(
       """SELECT json_value(json_query(j, '$[1]'), '$[0]' RETURNING bigint) AS nested,
                 json_value(CAST(j AS STRING), '$[1][1]' RETURNING bigint) AS casted,
@@ -217,7 +215,7 @@ class QaSuitesSpec extends AnyFunSuite {
     // (QueryInterruptedException) — 'ROWS BETWEEN -1 PRECEDING AND CURRENT
     // ROW' and the RANGE analogues. Spark silently evaluates the empty
     // frame to NULL, so the engine adds RejectInvertedFrames.
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     for (frame <- Seq(
       "ROWS BETWEEN -1 PRECEDING AND CURRENT ROW",
       "ROWS BETWEEN CURRENT ROW AND -1 FOLLOWING",

@@ -20,7 +20,7 @@ class Round21Spec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(s)
+    GraftSession.attach(s)
     s
   }
 
@@ -86,7 +86,7 @@ class Round21Spec extends AnyFunSuite {
 
   test("spread rule inserts the exchange and keeps rows identical") {
     Tables.registerAll(spark, "/root/testdata/sf0.001")
-    functions.DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     val gate = QaSqlBatteries.queries("q_qasql_tautology_json_keys")
     def run(enabled: Boolean): (Seq[Row], String) = {
       spark.conf.set("spark.graft.spreadFilter.enabled", enabled.toString)

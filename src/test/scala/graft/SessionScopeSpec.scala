@@ -54,8 +54,8 @@ class SessionScopeSpec extends AnyFunSuite {
   test("scoped lookups resolve per session; teardown is scoped") {
     val a = spark.newSession()
     val b = spark.newSession()
-    LookupRegistry.registerSql(a)
-    LookupRegistry.registerSql(b)
+    GraftSession.attach(a)
+    GraftSession.attach(b)
     LookupRegistry.registerScoped(a, "tenant_lk", Map("k" -> "va"))
     LookupRegistry.registerScoped(b, "tenant_lk", Map("k" -> "vb"))
     def probe(s: SparkSession): String =

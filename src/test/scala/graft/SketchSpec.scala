@@ -126,7 +126,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("SQL names: tdigest_generate_sketch/quantile, ds_histogram/ds_get_quantiles") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(50000).selectExpr("CAST(id AS DOUBLE) AS v")
       .createOrReplaceTempView("tdg")
     val r = spark.sql(
@@ -234,7 +234,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("SQL registration exposes sketch functions") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(1000).select((col("id") % 321).as("v"))
       .createOrReplaceTempView("sketch_in")
     val est = spark.sql("SELECT hll_estimate_agg(v) FROM sketch_in").head().getLong(0)
@@ -255,7 +255,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("hll_sketch_estimate returns DOUBLE (reference HllSketchToEstimate)") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(1000).select((col("id") % 321).as("v"))
       .createOrReplaceTempView("hll_est_in")
     val df = spark.sql(
@@ -266,7 +266,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("EARLIEST/LATEST numeric-literal 2nd arg is maxBytesPerString") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     import spark.implicits._
     Seq(("2024-01-01T00:00:00", "aé-first"), ("2024-01-03T00:00:00", "zz-last"))
       .toDF("ts", "name")
@@ -293,7 +293,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("Druid SQL sketch names run reference SQL text unchanged") {
-    GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     spark.range(5000).select((col("id") % 321).as("v"), (col("id") % 2).as("g"))
       .createOrReplaceTempView("dsql_in")
     val r = spark.sql(
@@ -319,18 +319,9 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("approx-count-distinct rewrite rule fires when enabled") {
-    // force a fresh session so withExtensions actually applies
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    // a fresh session armed only by attach
+    val ext = spark.newSession()
+    GraftSession.attach(ext)
     try {
       ext.conf.set("spark.graft.useApproximateCountDistinct", "true")
       val df = ext.range(10000).selectExpr("id % 777 AS v")
@@ -344,8 +335,6 @@ class SketchSpec extends AnyFunSuite {
       assert(exact == 777)
     } finally {
       ext.conf.set("spark.graft.useApproximateCountDistinct", "false")
-      prevActive.foreach(SparkSession.setActiveSession)
-      prevDefault.foreach(SparkSession.setDefaultSession)
     }
   }
 }

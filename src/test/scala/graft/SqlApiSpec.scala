@@ -476,8 +476,7 @@ class SqlApiSpec extends AnyFunSuite {
 
   test("context.sqlReverseLookup=false disables the lookup inversion rewrite") {
     graft.functions.LookupRegistry.register("rl_ctx", Map("0" -> "AFRICA"))
-    graft.functions.LookupRegistry.registerSql(spark)
-    GraftExtensions.register(spark) // installs ReverseLookupRule in this session
+    GraftSession.attach(spark) // installs ReverseLookupRule in this session
     def planOf(ctx: String): String = SqlApi.run(spark, dir, s"""{
       "query": "SELECT n_name FROM nation WHERE LOOKUP(CAST(n_nationkey AS VARCHAR(8)), 'rl_ctx') = 'AFRICA'"$ctx
     }""").queryExecution.optimizedPlan.toString
@@ -700,7 +699,7 @@ class SqlApiSpec extends AnyFunSuite {
     // rejects it; stock Spark would evaluate the empty frame to NULL, so
     // the engine adds RejectInvertedFrames — the bound pair (-1 PRECEDING,
     // CURRENT ROW) is inverted (lower +1 > upper 0) and throws loudly.
-    graft.GraftExtensions.register(spark)
+    GraftSession.attach(spark)
     intercept[Exception] {
       spark.sql(
         """SELECT sum(n_regionkey) OVER (ORDER BY n_nationkey
@@ -796,7 +795,7 @@ class SqlApiSpec extends AnyFunSuite {
 
   test("payload string literals keep Calcite no-escape semantics " +
       "(ops_funcs_mv_funcs A1_B15: split on '\\|' is a pipe split)") {
-    graft.functions.DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     // '\|' through the facade = backslash+pipe = regex-escaped pipe;
     // Spark's parser alone would eat the backslash and split per-char
     val df = graft.api.SqlApi.run(spark, dir,
@@ -810,7 +809,7 @@ class SqlApiSpec extends AnyFunSuite {
 
   test("qaArray ops_funcs_scalar_funcs rejection grid: scalar functions " +
       "over ARRAY columns are analysis errors (43-file !error battery)") {
-    graft.functions.DruidFunctions.register(spark)
+    GraftSession.attach(spark)
     spark.sql(
       """SELECT array(1L, 2L, CAST(NULL AS BIGINT)) AS a_int,
                 array('S1', 'S2', CAST(NULL AS STRING)) AS a_str

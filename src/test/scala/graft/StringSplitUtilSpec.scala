@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.DruidFunctions
-
 /** Reference split/join edge semantics — StringToArrayFunction
   * (Function.java:3582, Java String.split limit-0 drops trailing empties)
   * and ArrayToStringFunction (Function.java:3623-3649, null elements print
@@ -19,7 +17,7 @@ class StringSplitUtilSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    DruidFunctions.register(s)
+    GraftSession.attach(s)
     s
   }
 

@@ -1,15 +1,21 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate.
 
-Usage: python3 tools/check.py <outDir> <sfDir>
+Usage: python3 tools/check.py <outDir> <sfDir> [--baseline <baseDir>]
 Reads <outDir>/<name>/ parquet (written by graft.Verify) and
 <outDir>/oracle_sql.json, runs each oracle in DuckDB over the parquet
 tables in <sfDir>, and reports row/schema/value comparison per query
 (exact + tolerant float compare so we can see how close we are).
+
+--baseline <baseDir> also compares every gate's rows with another Verify
+dump (say, of the parent commit): same schema and the same multiset of
+rows, value for value, with no float tolerance. Any CHANGED, NEW or GONE
+gate fails the run.
 """
-import json, sys, glob, math
+import json, sys, glob, math, os
 import duckdb
 import pandas as pd
+import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -91,8 +97,55 @@ def compare(a: pd.DataFrame, b: pd.DataFrame):
     return exact, tol, "; ".join(detail[:3])
 
 
+def read_dump(gate_dir: str):
+    """(schema, rows) of one gate's parquet output; rows are sorted tuples of
+    repr()s, so the compare is exact (floats round-trip through repr) and
+    independent of row order."""
+    tables = [pq.read_table(f) for f in sorted(glob.glob(f"{gate_dir}/*.parquet"))]
+    if not tables:
+        return None, []
+    schema = tables[0].schema.remove_metadata()
+    rows = sorted(tuple(repr(r[c]) for c in schema.names)
+                  for t in tables for r in t.to_pylist())
+    return schema, rows
+
+
+def compare_baseline(out_dir: str, base_dir: str) -> int:
+    """Print one line per gate whose rows differ from the baseline dump;
+    return the number of such gates."""
+    def gates(d):
+        return {g for g in os.listdir(d) if os.path.isdir(f"{d}/{g}")}
+    ours, base = gates(out_dir), gates(base_dir)
+    n_changed = 0
+    for g in sorted(ours | base):
+        if g not in base:
+            status, detail = "NEW", "no baseline output"
+        elif g not in ours:
+            status, detail = "GONE", "no output"
+        else:
+            (sa, ra), (sb, rb) = read_dump(f"{out_dir}/{g}"), read_dump(f"{base_dir}/{g}")
+            if sa != sb:
+                status, detail = "CHANGED", f"schema {sa} vs {sb}".replace("\n", ", ")
+            elif ra != rb:
+                diff = sorted(set(ra) ^ set(rb))
+                status, detail = "CHANGED", (
+                    f"{len(ra)} vs {len(rb)} rows, e.g. {diff[0] if diff else 'duplicates'}")
+            else:
+                continue
+        n_changed += 1
+        print(f"BAD {status:9s} {g:28s} {detail}"[:400])
+    print(f"\n{len(ours | base)} gates against the baseline, {n_changed} changed")
+    return n_changed
+
+
 def main():
-    out_dir, sf_dir = sys.argv[1], sys.argv[2]
+    args = sys.argv[1:]
+    base_dir = None
+    if "--baseline" in args:
+        i = args.index("--baseline")
+        base_dir = args[i + 1]
+        del args[i:i + 2]
+    out_dir, sf_dir = args
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -114,7 +167,6 @@ def main():
         status = "EXACT" if exact else ("TOL" if tol else "FAIL")
         results[name] = (status, detail)
     # queries without oracle → rows-only
-    import os
     for d in sorted(os.listdir(out_dir)):
         if os.path.isdir(f"{out_dir}/{d}") and d not in oracle:
             files = glob.glob(f"{out_dir}/{d}/*.parquet")
@@ -127,6 +179,8 @@ def main():
             n_bad += 1
         print(f"{flag} {status:9s} {name:28s} {detail}")
     print(f"\n{len(results)} queries, {n_bad} failing")
+    if base_dir is not None:
+        n_bad += compare_baseline(out_dir, base_dir)
     sys.exit(1 if n_bad else 0)
 
 
