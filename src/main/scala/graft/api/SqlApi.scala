@@ -2888,11 +2888,13 @@ object SqlApi {
     * back what INSERT/REPLACE wrote.
     */
   /** Registered-warehouse-view memo: every facade call re-registered every
-    * warehouse table, and each `spark.read.parquet` is ~75 ms of driver-side
-    * footer work — with a handful of ingested tables that dominated the
-    * facade's per-query cost (measured ~0.7 s/call). A view re-registers
-    * only when its directory changed (mtime + entry count — ingest writes
-    * both add files and touch the dir); content and results are untouched.
+    * warehouse table, and each table open costs ~170 ms when its schema is
+    * inferred (a Spark job) and 20–40 ms on a schema-memo hit
+    * ([[Tables.readParquet]]) — with a handful of ingested tables that
+    * dominated the facade's per-query cost (measured ~0.7 s/call). A view
+    * re-registers only when its directory changed (mtime + entry count —
+    * ingest writes both add files and touch the dir); content and results
+    * are untouched.
     * (Weak session keys so sessions stay collectable.)
     */
   private val warehouseViewStamp =
@@ -2924,7 +2926,9 @@ object SqlApi {
     val dirs = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory)
     dirs.foreach { d =>
-      val key = d.getAbsolutePath
+      // canonical, as runIngest keys the epoch: a symlinked or differently
+      // spelled warehouse root still names the same table
+      val key = d.getCanonicalPath
       // stamp = (root mtime, max direct-child mtime, entry count, ingest
       // epoch): the child mtimes catch in-place rewrites inside partition
       // subdirs (__day=X replaced → that child's mtime moves, the root's
@@ -2936,7 +2940,7 @@ object SqlApi {
         Option(ingestEpochs.get(key)).map(_.longValue).getOrElse(0L))
       if (!stamps.get(key).contains(stamp)) {
         try {
-          spark.read.parquet(key).createOrReplaceTempView(d.getName)
+          Tables.readParquet(spark, key).createOrReplaceTempView(d.getName)
           stamps.put(key, stamp)
         } catch { case _: Exception => () } // mid-write/empty dir: skip
       }
@@ -3060,11 +3064,12 @@ object SqlApi {
             org.apache.spark.sql.functions.col): _*)
           .write.mode("append").partitionBy(partCol).parquet(path)
     }
-    spark.read.parquet(path).createOrReplaceTempView(ing.table)
+    val table = new java.io.File(path).getCanonicalPath
+    Tables.readParquet(spark, table).createOrReplaceTempView(ing.table)
     // bump the table's ingest epoch so OTHER sessions' registerWarehouse
     // stamps invalidate even when this write lands in the same mtime tick
     // as the previous one (this session's view was just replaced above)
-    ingestEpochs.merge(new java.io.File(path).getAbsolutePath,
+    ingestEpochs.merge(table,
       java.lang.Long.valueOf(1L), (a, b) => java.lang.Long.valueOf(a + b))
     // the reference invalidates result-level cache entries when segments
     // change; an ingest is exactly that event, so stale cached bodies for

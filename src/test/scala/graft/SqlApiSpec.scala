@@ -200,6 +200,34 @@ class SqlApiSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.warehouse")
   }
 
+  test("an ingest through a symlinked warehouse re-registers other sessions' views") {
+    val real = java.nio.file.Files.createTempDirectory("graft_wh_real")
+    val link = real.resolveSibling(real.getFileName.toString + "_link")
+    java.nio.file.Files.createSymbolicLink(link, real)
+    // one warehouse, spelled through the link by the writer and directly
+    // by the reader
+    val writer = spark.newSession()
+    writer.conf.set("spark.graft.warehouse", link.toString)
+    val reader = spark.newSession()
+    reader.conf.set("spark.graft.warehouse", real.toString)
+    def replace(v: Int): Unit = SqlApi.run(writer, dir, s"""{
+      "query": "REPLACE INTO wh_epoch OVERWRITE WHERE __time >= TIMESTAMP '2024-01-02' AND __time < TIMESTAMP '2024-01-03' SELECT TIMESTAMP '2024-01-02 00:00:00' AS __time, $v AS v PARTITIONED BY DAY"
+    }""")
+    def read(): Int = SqlApi.run(reader, dir,
+      """{"query": "SELECT max(v) FROM wh_epoch"}""").head.getInt(0)
+    replace(1)
+    assert(read() == 1)
+    val table = real.resolve("wh_epoch").toFile
+    def entries = table +: table.listFiles().toSeq
+    val mtimes = entries.map(f => f.getName -> f.lastModified).toMap
+    replace(2)
+    // the same day replaced: same entries; with their mtimes set back, only
+    // the ingest epoch tells the reader the table changed
+    assert(entries.map(_.getName).toSet == mtimes.keySet)
+    entries.foreach(f => assert(f.setLastModified(mtimes(f.getName))))
+    assert(read() == 2)
+  }
+
   test("TABLE(APPEND(...)) merges schemas across tables") {
     val df = SqlApi.run(spark, dir, """{
       "query": "SELECT count(*) AS n, count(n_name) AS nn, count(r_name) AS rn FROM TABLE(APPEND('nation','region'))"
