@@ -7650,9 +7650,11 @@ object SparkEntry {
     "q_ssb_q3_0" -> drillSql("ssb_q3_0"),
     "q_ssb_q3_3" -> drillSql("ssb_q3_3"),
     "q_ssb_q4_2" -> drillSql("ssb_q4_2"),
+    // DOUBLE → BIGINT truncates in Calcite/Druid and Spark; DuckDB's CAST
+    // rounds, so the oracle truncates explicitly
     "q_sql_interval_precision" ->
       """SELECT count(*) AS n,
-                CAST(sum(CAST(l_quantity AS DOUBLE)) / 7.0 AS BIGINT) AS avg7
+                CAST(trunc(sum(CAST(l_quantity AS DOUBLE)) / 7.0) AS BIGINT) AS avg7
          FROM lineitem
          WHERE l_shipdate <= DATE '1998-12-01' - INTERVAL 63 DAY""",
     "q_sql_date_trunc_units" ->

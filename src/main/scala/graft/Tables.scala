@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, OneRowRelation,
+  Range}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 /** Table layer: named parquet tables under a scale-factor directory.
@@ -100,11 +105,48 @@ object Tables {
     "spark.sql.sources.partitionColumnTypeInference.enabled",
     "spark.sql.session.timeZone")
 
-  /** What an inferred schema depends on: every leaf file's (path, length,
-    * modification time) under the table path, and the [[SchemaConfs]].
+  /** One data file's version: (path, length, modification time). A table's
+    * version is the sorted versions of its data files ([[version]]); it is
+    * graft's one notion of "this table changed", behind the schema memo,
+    * the warehouse views' freshness and the result cache
+    * ([[graft.api.ResultCache]]).
     */
-  private case class SchemaKey(files: Seq[(String, Long, Long)],
-                               confs: Seq[Option[String]])
+  type FileVersion = (String, Long, Long)
+
+  private def versionOf(index: PartitioningAwareFileIndex): Seq[FileVersion] =
+    index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+
+  /** The version of the table at `path`, listed as a read of it lists its
+    * files (hidden and `_`-prefixed ones left out). None when no file is
+    * listed (a missing or empty path, a glob). For a seven-file table on 4
+    * cores this listing took ~2.5 ms, Hadoop's recursive `listFiles` ~47 ms.
+    */
+  private[graft] def version(spark: SparkSession, path: String): Option[Seq[FileVersion]] =
+    try Some(versionOf(new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)))
+      .filter(_.nonEmpty)
+    catch { case _: java.io.IOException => None }
+
+  /** The version of every file `plan` (its subqueries included) reads, as
+    * its file indexes listed them. None when a leaf's data is not in listed
+    * files: an in-memory or streaming table, an RDD, local rows. `Range`
+    * and `OneRowRelation` read no files.
+    */
+  private[graft] def planVersion(plan: LogicalPlan): Option[Seq[FileVersion]] = {
+    val leaves = plan.collectWithSubqueries {
+      case LogicalRelation(h: HadoopFsRelation, _, _, false, _) => h.location match {
+        case i: PartitioningAwareFileIndex => Some(versionOf(i))
+        case _ => None
+      }
+      case _: Range | _: OneRowRelation => Some(Nil)
+      case _: LeafNode => None
+    }
+    if (leaves.exists(_.isEmpty)) None else Some(leaves.flatten.flatten.sorted)
+  }
+
+  /** What an inferred schema depends on: the table's [[version]] and the
+    * [[SchemaConfs]].
+    */
+  private case class SchemaKey(files: Seq[FileVersion], confs: Seq[Option[String]])
 
   /** JVM-wide parquet schema memo, one entry per path (a rewrite replaces
     * its path's entry, so ingest churn cannot grow it). The reference's
@@ -122,33 +164,19 @@ object Tables {
     schemaMemo.keySet.asScala.toSeq
   }
 
-  /** None when the path cannot be listed (missing, a glob): such a read is
-    * never memoized and fails or succeeds exactly as a plain read does.
-    */
-  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listFiles(p, true)
-      val files = Vector.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      Some(SchemaKey(files.result().sorted, SchemaConfs.map(spark.conf.getOption)))
-    } catch { case _: java.io.IOException => None }
-
   /** Open the parquet table at `path`. Reading with an inferred schema runs
     * one Spark job over the footers: at sf0.1 on 4 cores the ten tables
     * took ~1.7 s that way (~170 ms a table) and 0.24–0.39 s (20–40 ms a
     * table, the listing included) through a memo hit, which runs no job.
     * So the schema is inferred once per fingerprint ([[SchemaKey]]) and
-    * supplied on every later open of the same files. The fingerprint is
-    * taken before inference: a write racing the read can only leave an
-    * entry whose file list is already out of date, which never matches.
+    * supplied on every later open of the same files. A path without a
+    * [[version]] is never memoized and fails or succeeds exactly as a plain
+    * read does. The fingerprint is taken before inference: a write racing the
+    * read can only leave an entry whose file list is already out of date,
+    * which never matches.
     */
   private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val key = schemaKey(spark, path)
+    val key = version(spark, path).map(SchemaKey(_, SchemaConfs.map(spark.conf.getOption)))
     Option(schemaMemo.get(path)) match {
       case Some((k, schema)) if key.contains(k) =>
         spark.read.schema(schema).parquet(path)

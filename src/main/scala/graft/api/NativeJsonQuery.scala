@@ -346,42 +346,10 @@ object NativeJsonQuery {
     */
   val DefaultMaxResultRows = 100000
 
-  // ------------------------------------------------------- result cache ----
-  // Reference CachingQueryRunner (`query/.../CachingQueryRunner.java`):
-  // per-segment results are cached keyed on (segment id, query cache key)
-  // and reused under context.useCache / populated under
-  // context.populateCache. Here a "segment set" is the immutable parquet
-  // directory, so the cache key is (dir, canonical query minus
-  // non-semantic context fields). Participation is OPT-IN via the context
-  // flags (the reference defaults them true against versioned segments;
-  // file paths carry no version, so opting in is the caller asserting
-  // immutability). Bounded LRU; oversize results are never cached.
-
-  private val MaxCacheEntries = 128
-
-  private val resultCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Array[org.apache.spark.sql.Row]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Array[org.apache.spark.sql.Row]]): Boolean =
-        size() > MaxCacheEntries
-    })
-
-  private val cacheHitCount = new java.util.concurrent.atomic.AtomicLong
-  private val cacheMissCount = new java.util.concurrent.atomic.AtomicLong
-
-  /** (hits, misses) since start/clear — the reference's cache metrics
-    * (`query/cache/CacheMonitor` surface).
-    */
-  def cacheStats: (Long, Long) = (cacheHitCount.get, cacheMissCount.get)
-
-  def clearCache(): Unit = {
-    resultCache.clear(); cacheHitCount.set(0); cacheMissCount.set(0)
-  }
-
-  /** Canonical cache key: the query with ONLY the top-level context
-    * stripped (a nested query-datasource's context stays in the key — its
-    * flags are semantic for that subquery), and every result-affecting
+  /** The text part of the [[ResultCache]] key (reference
+    * `CacheStrategy.computeCacheKey`): the query with ONLY the top-level
+    * context stripped (a nested query-datasource's context stays in the key
+    * — its flags are semantic for that subquery), and every result-affecting
     * top-level context flag folded back in explicitly, including the
     * effective maxSubqueryRows so a cached small-cap result can never
     * satisfy a stricter cap.
@@ -414,6 +382,12 @@ object NativeJsonQuery {
     * [[DefaultMaxResultRows]]): the collect fetches at most cap+1 rows —
     * never the unbounded result — and overflow raises
     * [[ResourceLimitExceeded]] instead of OOMing the driver.
+    * `context.useCache` / `populateCache` (the reference's
+    * `CachingQueryRunner` flags) serve the rows through [[ResultCache]],
+    * opt-in: the key is the canonical query, the built plan and the
+    * version of every file it reads, and a plan it cannot version is never
+    * served from it. The lookup follows the plan build, so a hit skips only
+    * execution.
     */
   def execute(spark: SparkSession, dir: String, json: String)
       : Array[org.apache.spark.sql.Row] = {
@@ -439,16 +413,6 @@ object NativeJsonQuery {
       case JLong(n) => Some(n.toInt)
       case _        => None
     }).getOrElse(DefaultMaxResultRows)
-    val useCache = bool(parsed \ "context" \ "useCache").getOrElse(false)
-    val populateCache = bool(parsed \ "context" \ "populateCache").getOrElse(false)
-    val key = if (useCache || populateCache) Some(cacheKey(dir, parsed)) else None
-    if (useCache) {
-      val hit = key.flatMap(k => Option(resultCache.get(k)))
-      hit match {
-        case Some(rows) => cacheHitCount.incrementAndGet(); return rows
-        case None       => cacheMissCount.incrementAndGet()
-      }
-    }
     val df0 = runParsed(spark, dir, parsed)
     // fetch cap+1, never the unbounded result; cap+1 rows back = overflow.
     // limit-after-sort preserves ordered prefixes, so an in-cap result is
@@ -460,12 +424,13 @@ object NativeJsonQuery {
           s"query result exceeds maxSubqueryRows=$maxRows " +
             "(reference ResourceLimitExceededException); raise " +
             "context.maxSubqueryRows or add a limit/aggregation")
-      else {
-        if (populateCache) key.foreach(resultCache.put(_, rows))
-        rows
-      }
+      else rows
     spark.sparkContext.setJobGroup(group, s"graft query $group",
       interruptOnCancel = true)
+    def collect() = ResultCache.through[Array[org.apache.spark.sql.Row]](
+        ResultCache.key(cacheKey(dir, parsed), df0.queryExecution.analyzed),
+        bool(parsed \ "context" \ "useCache").contains(true),
+        bool(parsed \ "context" \ "populateCache").contains(true))(guarded(df.collect()))
     try timeoutMs match {
       case Some(ms) =>
         val timer = new java.util.Timer("graft-query-timeout", true)
@@ -476,8 +441,8 @@ object NativeJsonQuery {
           override def run(): Unit =
             spark.sparkContext.cancelJobGroupAndFutureJobs(group)
         }, ms)
-        try guarded(df.collect()) finally timer.cancel()
-      case None => guarded(df.collect())
+        try collect() finally timer.cancel()
+      case None => collect()
     } finally {
       spark.sparkContext.clearJobGroup()
       queryId.foreach(activeGroups.remove(_, group))

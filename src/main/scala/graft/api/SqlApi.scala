@@ -154,60 +154,27 @@ object SqlApi {
     * [[NativeJsonQuery.DefaultMaxResultRows]]): rows are fetched through
     * `toLocalIterator` — never an unbounded `collect` — and overflow raises
     * [[NativeJsonQuery.ResourceLimitExceeded]] instead of OOMing the driver.
+    * `context.useCache` / `populateCache` serve the body through
+    * [[ResultCache]], opt-in: the key is the payload's result-affecting
+    * fields, the compiled plan and the version of every file it reads, and
+    * a plan it cannot version is never served from it. The lookup follows
+    * compilation, so a hit skips only execution; DML (already run by then,
+    * with a local result) is never cached.
     * For unbounded streaming of line-shaped formats use [[executeStream]].
     */
   def execute(spark: SparkSession, dir: String, payload: String): String = {
-    val j = JsonMethods.parse(payload)
-    // DML never participates in the result cache: a cache-hit INSERT would
-    // silently no-op (returning a success body for work that never ran),
-    // and populating would cache a side effect
-    val isDml = ingestTarget(sql(j)).isDefined
-    val useCache = !isDml && ctxValue(j, "useCache") == JBool(true)
-    val populateCache = !isDml && ctxValue(j, "populateCache") == JBool(true)
-    val key = if (useCache || populateCache) Some(sqlCacheKey(dir, j)) else None
-    if (useCache) {
-      key.flatMap(k => Option(sqlResultCache.get(k))) match {
-        case Some(body) => sqlCacheHits.incrementAndGet(); return body
-        case None       => sqlCacheMisses.incrementAndGet()
-      }
-    }
     val out = new java.io.StringWriter()
     executeTo(spark, dir, payload, out, capped = true)
-    val body = out.toString
-    if (populateCache && body.length <= MaxCachedBodyChars)
-      key.foreach(sqlResultCache.put(_, body))
-    body
+    out.toString
   }
 
-  // ------------------------------------------------------- result cache ----
-  // Reference broker result-level cache for SQL (`useResultLevelCache` /
-  // `CachingClusteredClient` on the SQL path; the SQL context reuses the
-  // same useCache/populateCache flags). Opt-in via the flags — file-backed
-  // "segments" carry no version, so opting in is the caller asserting the
-  // parquet dir is immutable. Keyed on everything result-affecting: dir,
-  // the parameter-bound SQL, result format + header flags, and caps.
-  // Bounded LRU of rendered bodies; oversize bodies are never cached.
-
-  private val MaxSqlCacheEntries = 64
+  // the reference's SQL result-level cache (`useResultLevelCache`) reuses
+  // the useCache/populateCache flags; oversize bodies are never cached
   private val MaxCachedBodyChars = 4 << 20
 
-  private val sqlResultCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, String](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, String]): Boolean =
-        size() > MaxSqlCacheEntries
-    })
-
-  private val sqlCacheHits = new java.util.concurrent.atomic.AtomicLong
-  private val sqlCacheMisses = new java.util.concurrent.atomic.AtomicLong
-
-  /** (hits, misses) since start/clear. */
-  def cacheStats: (Long, Long) = (sqlCacheHits.get, sqlCacheMisses.get)
-
-  def clearCache(): Unit = {
-    sqlResultCache.clear(); sqlCacheHits.set(0); sqlCacheMisses.set(0)
-  }
-
+  /** Everything result-affecting in the payload besides the plan itself:
+    * dir, the parameter-bound SQL, result format + header flags, and caps.
+    */
   private def sqlCacheKey(dir: String, j: JValue): String = {
     val boundSql = sql(j) // SET statements folded, parameters bound
     val flags = Seq("resultFormat", "header", "typesHeader", "sqlTypesHeader")
@@ -215,7 +182,7 @@ object SqlApi {
     val ctxFlags = Seq("maxSubqueryRows", "sqlOuterLimit", "sqlTimeZone",
         "sqlStringifyArrays")
       .map(k => k + "=" + JsonMethods.compact(JsonMethods.render(ctxValue(j, k))))
-    (dir +: boundSql +: (flags ++ ctxFlags)).mkString("\u0001")
+    ("sql" +: dir +: boundSql +: (flags ++ ctxFlags)).mkString("\u0001")
   }
 
   /** Streaming variant of [[execute]]: renders the response body
@@ -289,7 +256,7 @@ object SqlApi {
       else explicitMaxRows
     spark.sparkContext.setJobGroup(group, s"graft sql $group",
       interruptOnCancel = true)
-    def body(): Unit = {
+    def body(out: java.io.Writer): Unit = {
       // fetch cap+1 at most: cap+1 rows back = overflow, never the full
       // result. Clamped: at cap = Int.MaxValue the +1 would overflow
       // limit() to a negative value — treat it as effectively uncapped.
@@ -315,6 +282,18 @@ object SqlApi {
       }
       render(rows, df.schema, j, out)
     }
+    // execute's cache flags buffer the body through ResultCache; else it goes to `out`
+    val useCache = capped && ctxValue(j, "useCache") == JBool(true)
+    val populateCache = capped && ctxValue(j, "populateCache") == JBool(true)
+    def respond(): Unit =
+      if (!useCache && !populateCache) body(out)
+      else out.write(ResultCache.through(
+          ResultCache.key(sqlCacheKey(dir, j), df.queryExecution.analyzed),
+          useCache, populateCache, (b: String) => b.length <= MaxCachedBodyChars) {
+        val buf = new java.io.StringWriter()
+        body(buf)
+        buf.toString
+      })
     try timeoutMs match {
       case Some(ms) =>
         val timer = new java.util.Timer("graft-sql-timeout", true)
@@ -322,8 +301,8 @@ object SqlApi {
           override def run(): Unit =
             spark.sparkContext.cancelJobGroupAndFutureJobs(group)
         }, ms)
-        try body() finally timer.cancel()
-      case None => body()
+        try respond() finally timer.cancel()
+      case None => respond()
     } finally {
       spark.sparkContext.clearJobGroup()
       queryId.foreach(activeGroups.remove(_, group))
@@ -2887,64 +2866,26 @@ object SqlApi {
   /** Register every warehouse datasource as a temp view so SQL can read
     * back what INSERT/REPLACE wrote.
     */
-  /** Registered-warehouse-view memo: every facade call re-registered every
-    * warehouse table, and each table open costs ~170 ms when its schema is
-    * inferred (a Spark job) and 20–40 ms on a schema-memo hit
-    * ([[Tables.readParquet]]) — with a handful of ingested tables that
-    * dominated the facade's per-query cost (measured ~0.7 s/call). A view
-    * re-registers only when its directory changed (mtime + entry count —
-    * ingest writes both add files and touch the dir); content and results
-    * are untouched.
-    * (Weak session keys so sessions stay collectable.)
-    */
-  private val warehouseViewStamp =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        scala.collection.concurrent.TrieMap[String, (Long, Long, Int, Long)]]())
-
-  /** Explicit per-table ingest epoch, bumped by [[runIngest]] (which owns
-    * every in-process warehouse write). Folded into the registration stamp
-    * so two ingests landing within one `File.lastModified` tick with an
-    * unchanged entry count still force re-registration — the filesystem
-    * mtime heuristic alone can miss that (r20 advice). EXTERNAL writers
-    * (another JVM mutating the warehouse dir) remain on the mtime
-    * heuristic; the facade contract is single-process.
-    */
-  private val ingestEpochs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def registerWarehouse(spark: SparkSession): Unit = {
-    val stamps = warehouseViewStamp.synchronized {
-      var m = warehouseViewStamp.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Int, Long)]
-        warehouseViewStamp.put(spark, m)
-      }
-      m
-    }
-    val root = new java.io.File(warehouseDir(spark))
-    val dirs = Option(root.listFiles()).getOrElse(Array.empty)
+  private def registerWarehouse(spark: SparkSession): Unit =
+    Option(new java.io.File(warehouseDir(spark)).listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory)
-    dirs.foreach { d =>
-      // canonical, as runIngest keys the epoch: a symlinked or differently
-      // spelled warehouse root still names the same table
-      val key = d.getCanonicalPath
-      // stamp = (root mtime, max direct-child mtime, entry count, ingest
-      // epoch): the child mtimes catch in-place rewrites inside partition
-      // subdirs (__day=X replaced → that child's mtime moves, the root's
-      // doesn't); the epoch catches same-tick facade ingests
-      val children = Option(d.listFiles()).getOrElse(Array.empty)
-      val stamp = (d.lastModified,
-        if (children.isEmpty) 0L else children.map(_.lastModified).max,
-        children.length,
-        Option(ingestEpochs.get(key)).map(_.longValue).getOrElse(0L))
-      if (!stamps.get(key).contains(stamp)) {
-        try {
-          Tables.readParquet(spark, key).createOrReplaceTempView(d.getName)
-          stamps.put(key, stamp)
-        } catch { case _: Exception => () } // mid-write/empty dir: skip
-      }
-    }
+      .foreach(d => registerWarehouseTable(spark, d.getName, d.getCanonicalPath))
+
+  /** (Re-)register the view `name` over the table at `path` unless the view
+    * already reads the table's current version ([[Tables.version]]),
+    * whoever wrote it: an ingest in this or another session, or a writer
+    * outside graft. Opening a table costs 20–40 ms on a schema-memo hit
+    * ([[Tables.readParquet]]); with a handful of ingested tables, reopening
+    * them all on every facade call dominated its cost (measured ~0.7 s a
+    * call), so a call with nothing new only lists each table's files
+    * (~2.5 ms for a seven-file table on 4 cores) and reads the view's plan.
+    */
+  private def registerWarehouseTable(spark: SparkSession, name: String,
+                                     path: String): Unit = {
+    val registered = spark.sessionState.catalog.getTempView(name).flatMap(Tables.planVersion)
+    if (Tables.version(spark, path).exists(v => !registered.contains(v)))
+      try Tables.readParquet(spark, path).createOrReplaceTempView(name)
+      catch { case _: Exception => () } // mid-write/empty dir: skip
   }
 
   private[graft] case class IngestStatement(
@@ -3064,18 +3005,7 @@ object SqlApi {
             org.apache.spark.sql.functions.col): _*)
           .write.mode("append").partitionBy(partCol).parquet(path)
     }
-    val table = new java.io.File(path).getCanonicalPath
-    Tables.readParquet(spark, table).createOrReplaceTempView(ing.table)
-    // bump the table's ingest epoch so OTHER sessions' registerWarehouse
-    // stamps invalidate even when this write lands in the same mtime tick
-    // as the previous one (this session's view was just replaced above)
-    ingestEpochs.merge(table,
-      java.lang.Long.valueOf(1L), (a, b) => java.lang.Long.valueOf(a + b))
-    // the reference invalidates result-level cache entries when segments
-    // change; an ingest is exactly that event, so stale cached bodies for
-    // the mutated warehouse must not survive it (entries only — hit/miss
-    // monitoring counters are not reset by an invalidation)
-    sqlResultCache.clear()
+    registerWarehouseTable(spark, ing.table, new java.io.File(path).getCanonicalPath)
     import spark.implicits._
     Seq((ing.table, path)).toDF("dataSource", "location")
   }

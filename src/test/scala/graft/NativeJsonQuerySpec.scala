@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.api.NativeJsonQuery
+import graft.api.{NativeJsonQuery, ResultCache}
 
 /** JSON query façade shapes not covered by the oracle-gated entries. */
 class NativeJsonQuerySpec extends AnyFunSuite {
@@ -1009,8 +1009,8 @@ class NativeJsonQuerySpec extends AnyFunSuite {
       Seq(("a", 1L), ("b", 2L), ("c", 1L)))
   }
 
-  test("result cache: populate + use hit, key discriminates, clear resets") {
-    NativeJsonQuery.clearCache()
+  test("result cache: a native hit ignores queryId, other dimensions are another key, flagless queries leave the stats") {
+    ResultCache.clear()
     def q(dim: String, id: String = "cache-test") = s"""
       {"queryType": "groupBy", "dataSource": "events",
        "dimensions": ["$dim"],
@@ -1018,26 +1018,26 @@ class NativeJsonQuerySpec extends AnyFunSuite {
        "context": {"useCache": true, "populateCache": true,
                    "queryId": "$id", "timeout": 60000}}"""
     val first = NativeJsonQuery.execute(spark, dir, q("event_type"))
-    val (h0, m0) = NativeJsonQuery.cacheStats
+    val (h0, m0) = ResultCache.stats
     assert(h0 == 0 && m0 == 1)
     val second = NativeJsonQuery.execute(spark, dir,
       q("event_type", id = "other-query-id"))
-    val (h1, m1) = NativeJsonQuery.cacheStats
+    val (h1, m1) = ResultCache.stats
     assert(h1 == 1 && m1 == 1, "identical query (modulo queryId) must hit")
     assert(second.map(_.toString).sorted.sameElements(first.map(_.toString).sorted))
     NativeJsonQuery.execute(spark, dir, q("user_id"))
-    val (h2, m2) = NativeJsonQuery.cacheStats
+    val (h2, m2) = ResultCache.stats
     assert(h2 == 1 && m2 == 2, "different dimensions must be a different key")
     // an uncached query leaves the counters alone
     NativeJsonQuery.execute(spark, dir, """
       {"queryType": "timeBoundary", "dataSource": "events"}""")
-    assert(NativeJsonQuery.cacheStats == ((1L, 2L)))
-    NativeJsonQuery.clearCache()
-    assert(NativeJsonQuery.cacheStats == ((0L, 0L)))
+    assert(ResultCache.stats == ((1L, 2L)))
+    ResultCache.clear()
+    assert(ResultCache.stats == ((0L, 0L)))
   }
 
-  test("result cache: nested query-datasource context discriminates the key") {
-    NativeJsonQuery.clearCache()
+  test("result cache: a nested query's context splits the native key") {
+    ResultCache.clear()
     // identical outer queries over a nested timeseries differing ONLY in the
     // nested context's skipEmptyBuckets — semantic for the subquery, so it
     // must be a different cache key (no false hit)
@@ -1053,11 +1053,40 @@ class NativeJsonQuerySpec extends AnyFunSuite {
                         {"type": "count", "name": "buckets"}],
        "context": {"useCache": true, "populateCache": true}}"""
     NativeJsonQuery.execute(spark, dir, q(skip = false))
-    val second = NativeJsonQuery.execute(spark, dir, q(skip = true))
-    val (h, m) = NativeJsonQuery.cacheStats
-    assert(h == 0 && m == 2, s"nested context must split the key (h=$h m=$m)")
-    NativeJsonQuery.clearCache()
-    val _ = second
+    NativeJsonQuery.execute(spark, dir, q(skip = false))
+    assert(ResultCache.stats == ((1L, 1L)), "the nested query is cached")
+    NativeJsonQuery.execute(spark, dir, q(skip = true))
+    val (h, m) = ResultCache.stats
+    assert(h == 1 && m == 2, s"nested context must split the key (h=$h m=$m)")
+    ResultCache.clear()
+  }
+
+  test("result cache: a native hit is not served after an outside rewrite of the table's file") {
+    // a private copy of the tables, so the rewrite leaves the test data alone
+    val copy = java.nio.file.Files.createTempDirectory("graft_sf_copy")
+    new java.io.File(dir).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, copy.resolve(f.getName)))
+    val q = """
+      {"queryType": "groupBy", "dataSource": "nation",
+       "dimensions": ["n_regionkey"],
+       "aggregations": [{"type": "count", "name": "n"}],
+       "context": {"useCache": true, "populateCache": true}}"""
+    def groups(s: SparkSession): Seq[(Long, Long)] =
+      NativeJsonQuery.execute(s, copy.toString, q)
+        .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).toSeq.sorted
+    ResultCache.clear()
+    val before = groups(spark)
+    assert(before.map(_._2).sum == 25)
+    assert(groups(spark) == before && ResultCache.stats == ((1L, 1L)))
+    // nation.parquet rewritten from outside: region 0's five nations only
+    val out = java.nio.file.Files.createTempDirectory("graft_nation_src").resolve("out")
+    spark.read.parquet(s"$dir/nation.parquet").filter("n_regionkey = 0")
+      .coalesce(1).write.parquet(out.toString)
+    val part = out.toFile.listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, copy.resolve("nation.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(groups(spark.newSession()) == Seq((0L, 5L)))
   }
 
   test("movingAverage densifies the bucket grid on sparse series") {

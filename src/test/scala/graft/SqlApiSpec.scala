@@ -5,7 +5,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.SqlApi
+import graft.api.{ResultCache, SqlApi}
 
 /** SQL-over-HTTP facade (reference POST /druid/v2/sql payload shape):
   * parameter binding, UNNEST translation, result formats, EXPLAIN PLAN FOR.
@@ -551,33 +551,33 @@ class SqlApiSpec extends AnyFunSuite {
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
   }
 
-  test("useCache/populateCache: SQL result-level cache round trip") {
-    SqlApi.clearCache()
+  test("result cache: a SQL hit returns the stored body; result format and flagless queries stay apart") {
+    ResultCache.clear()
     val payload = """{
       "query": "SELECT n_name FROM nation ORDER BY n_nationkey LIMIT 3",
       "resultFormat": "csv",
       "context": {"useCache": true, "populateCache": true}
     }"""
     val first = SqlApi.execute(spark, dir, payload)
-    val (h1, m1) = SqlApi.cacheStats
+    val (h1, m1) = ResultCache.stats
     assert(h1 == 0 && m1 == 1)
     val second = SqlApi.execute(spark, dir, payload)
-    val (h2, _) = SqlApi.cacheStats
+    val (h2, _) = ResultCache.stats
     assert(h2 == 1 && second == first)
     // a different result format must never hit the same entry
     val other = SqlApi.execute(spark, dir, payload.replace("csv", "arrayLines"))
     assert(other != first)
-    val (h3, m3) = SqlApi.cacheStats
+    val (h3, m3) = ResultCache.stats
     assert(h3 == 1 && m3 == 2)
     // no flags → no cache participation at all
-    SqlApi.clearCache()
+    ResultCache.clear()
     SqlApi.execute(spark, dir,
       """{"query": "SELECT n_name FROM nation LIMIT 1"}""")
-    assert(SqlApi.cacheStats == ((0L, 0L)))
+    assert(ResultCache.stats == ((0L, 0L)))
   }
 
-  test("ingest invalidates the SQL result cache (reference segment-change semantics)") {
-    SqlApi.clearCache()
+  test("result cache: a re-ingest changes the files the key reads, so the read misses; DML always executes") {
+    ResultCache.clear()
     val tbl = "cache_inval_t"
     def ingest(maxKey: Long): Unit = SqlApi.execute(spark, dir, s"""{
       "query": "REPLACE INTO $tbl OVERWRITE ALL SELECT o_orderdate AS __time, o_orderkey FROM orders WHERE o_orderkey <= $maxKey PARTITIONED BY DAY"
@@ -591,16 +591,16 @@ class SqlApiSpec extends AnyFunSuite {
     val before = SqlApi.execute(spark, dir, q)
     // second read hits the cache
     assert(SqlApi.execute(spark, dir, q) == before)
-    val (h1, _) = SqlApi.cacheStats
+    val (h1, _) = ResultCache.stats
     assert(h1 >= 1)
-    // re-ingest with different data: the cached body must NOT survive
+    // re-ingest with different data: the cached body must NOT be served
     ingest(50)
     val after = SqlApi.execute(spark, dir, q)
     assert(after != before,
       s"stale cached result served after ingest: $after")
-    // invalidation clears ENTRIES, not the monitoring counters
-    val (h2, m2) = SqlApi.cacheStats
-    assert(h2 >= h1 && m2 >= 1, s"ingest reset cacheStats: ($h2, $m2)")
+    // a write touches no counter: the read after it is one more miss
+    val (h2, m2) = ResultCache.stats
+    assert(h2 >= h1 && m2 >= 1, s"ingest reset the cache stats: ($h2, $m2)")
     // DML never participates in the cache: a repeated INSERT with cache
     // flags must EXECUTE (not no-op from a cache hit)
     def insertDml(): String = SqlApi.execute(spark, dir, s"""{
@@ -616,6 +616,97 @@ class SqlApiSpec extends AnyFunSuite {
     val n0 = countApp()   // one insert inside
     val n1 = countApp()   // a second insert — must append again, not no-op
     assert(n1 > n0, s"cached DML must still execute: $n0 -> $n1")
+  }
+
+  /** `n` (or `n,m`) from a headerless csv body. */
+  private def csvValue(body: String): String = body.trim.split("\n").last.trim
+
+  private def cachedCsv(query: String, cached: Boolean = true): String =
+    s"""{"query": "$query", "resultFormat": "csv",
+         "context": {"useCache": $cached, "populateCache": $cached}}"""
+
+  /** A session over its own fresh warehouse directory. */
+  private def warehouseSession(prefix: String): (SparkSession, java.nio.file.Path) = {
+    val wh = java.nio.file.Files.createTempDirectory(prefix)
+    val s = spark.newSession()
+    s.conf.set("spark.graft.warehouse", wh.toString)
+    (s, wh)
+  }
+
+  test("result cache: a useCache read after applyRetention drops a day shows the new count") {
+    val (s, wh) = warehouseSession("graft_wh_retention")
+    SqlApi.execute(s, dir, """{
+      "query": "REPLACE INTO wh_ret OVERWRITE ALL SELECT TIMESTAMP '2024-01-01 00:00:00' AS __time, 1 AS v UNION ALL SELECT TIMESTAMP '2024-01-02 00:00:00', 2 UNION ALL SELECT TIMESTAMP '2024-01-03 00:00:00', 3 PARTITIONED BY DAY"
+    }""")
+    val q = cachedCsv("SELECT count(*) AS n FROM wh_ret")
+    assert(csvValue(SqlApi.execute(s, dir, q)) == "3")
+    val (h0, _) = ResultCache.stats
+    assert(csvValue(SqlApi.execute(s, dir, q)) == "3")
+    assert(ResultCache.stats._1 == h0 + 1, "the repeat is a hit")
+    val dropped = graft.operators.Ingest.applyRetention(s,
+      wh.resolve("wh_ret").toString, keepDays = 2, asOfDay = "2024-01-03")
+    assert(dropped.size == 1)
+    assert(csvValue(SqlApi.execute(s, dir, q)) == "2")
+  }
+
+  test("an outside in-place rewrite of a warehouse file shows in SqlApi reads, cached or not") {
+    val (s, wh) = warehouseSession("graft_wh_rewrite")
+    SqlApi.execute(s, dir, """{
+      "query": "REPLACE INTO wh_rw OVERWRITE ALL SELECT TIMESTAMP '2024-01-02 00:00:00' AS __time, 1 AS v PARTITIONED BY DAY"
+    }""")
+    def read(cached: Boolean): String =
+      csvValue(SqlApi.execute(s, dir,
+        cachedCsv("SELECT count(*) AS n, max(v) AS m FROM wh_rw", cached)))
+    assert(read(cached = true) == "1,1")
+    assert(read(cached = false) == "1,1")
+    val table = wh.resolve("wh_rw").toFile
+    val day = table.listFiles().filter(_.getName.startsWith("__day=")).head
+    val leaf = day.listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    val mtimes = Seq(table, day).map(d => d -> d.lastModified)
+    // new content under the leaf's name: 5000 rows in ~1 KB row groups, so
+    // a read that still plans with the old file length misses rows
+    val out = java.nio.file.Files.createTempDirectory("graft_rw_src").resolve("out")
+    spark.range(5000)
+      .selectExpr("TIMESTAMP '2024-01-02 00:00:00' AS __time", "CAST(id AS INT) + 10 AS v")
+      .coalesce(1).write.option("parquet.block.size", "1024").parquet(out.toString)
+    val part = out.toFile.listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, leaf.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(day, "." + leaf.getName + ".crc").delete()
+    // the directories look untouched: only the leaf file tells the change
+    mtimes.foreach { case (d, t) => assert(d.setLastModified(t)) }
+    assert(read(cached = true) == "5000,5009")
+    assert(read(cached = false) == "5000,5009")
+  }
+
+  test("result cache: a read of a view over an RDD-backed DataFrame is never cached") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    def view(v: Int): Unit =
+      spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(v))),
+        StructType(Seq(StructField("v", IntegerType))))
+        .createOrReplaceTempView("rdd_view")
+    val q = cachedCsv("SELECT max(v) AS m FROM rdd_view")
+    view(1)
+    assert(csvValue(SqlApi.execute(spark, dir, q)) == "1")
+    view(2)
+    assert(csvValue(SqlApi.execute(spark, dir, q)) == "2")
+  }
+
+  test("result cache: a view redefined over the same files is a new key") {
+    def view(maxKey: Int): Unit =
+      spark.read.parquet(s"$dir/nation.parquet").filter(s"n_nationkey < $maxKey")
+        .createOrReplaceTempView("nation_head")
+    val q = cachedCsv("SELECT count(*) AS n FROM nation_head")
+    view(5)
+    assert(csvValue(SqlApi.execute(spark, dir, q)) == "5")
+    val (h0, _) = ResultCache.stats
+    assert(csvValue(SqlApi.execute(spark, dir, q)) == "5")
+    assert(ResultCache.stats._1 == h0 + 1, "a plan over files is cached")
+    view(10)
+    assert(csvValue(SqlApi.execute(spark, dir, q)) == "10")
   }
 
   test("drill negative corpus: window misuse is rejected") {
@@ -683,7 +774,7 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("text rewrites never fire inside string literals (literal masking)") {
-    import graft.api.SqlApi
+    import graft.api.{ResultCache, SqlApi}
     // a literal whose CONTENT looks like the rewrite triggers must survive
     // the whole rewrite chain verbatim
     val payload = """{"query": "SELECT 'use FLOOR(x TO DAY) here' AS a, 'GROUP BY ()' AS b, FLOOR(__time TO HOUR) AS h FROM t GROUP BY ()"}"""
