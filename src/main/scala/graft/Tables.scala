@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, OneRowRelation,
-  Range}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex,
-  LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, LeafNode, LogicalPlan,
+  OneRowRelation, Range}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 /** Table layer: named parquet tables under a scale-factor directory.
@@ -113,31 +113,43 @@ object Tables {
     */
   type FileVersion = (String, Long, Long)
 
-  private def versionOf(index: PartitioningAwareFileIndex): Seq[FileVersion] =
-    index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+  private def versionOf(f: FileStatus): FileVersion =
+    (f.getPath.toString, f.getLen, f.getModificationTime)
 
-  /** The version of the table at `path`, listed as a read of it lists its
-    * files (hidden and `_`-prefixed ones left out). None when no file is
-    * listed (a missing or empty path, a glob). For a seven-file table on 4
-    * cores this listing took ~2.5 ms, Hadoop's recursive `listFiles` ~47 ms.
+  /** The version of the table at `path`: its files as a read of it lists
+    * them, which leaves out names starting with `.`, ending in `._COPYING_`
+    * or starting with `_` but holding no `=`. None when no file is listed (a missing
+    * or empty path, a glob). Listed through the Hadoop FileSystem alone:
+    * Spark's own file index lists a table of more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * partition directories with a Spark job.
     */
-  private[graft] def version(spark: SparkSession, path: String): Option[Seq[FileVersion]] =
-    try Some(versionOf(new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)))
-      .filter(_.nonEmpty)
+  private[graft] def version(spark: SparkSession, path: String): Option[Seq[FileVersion]] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def hidden(name: String) = name.startsWith(".") || name.endsWith("._COPYING_") ||
+      name.startsWith("_") && !name.contains("=")
+    def list(f: FileStatus): Seq[FileVersion] =
+      if (f.isDirectory) fs.listStatus(f.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
+        .flatMap(list)
+      else Seq(versionOf(f))
+    try Some(list(fs.getFileStatus(root)).sorted).filter(_.nonEmpty)
     catch { case _: java.io.IOException => None }
+  }
 
   /** The version of every file `plan` (its subqueries included) reads, as
     * its file indexes listed them. None when a leaf's data is not in listed
     * files: an in-memory or streaming table, an RDD, local rows. `Range`
-    * and `OneRowRelation` read no files.
+    * and `OneRowRelation` read no files, and a `WITH` clause's reference
+    * reads what its definition, a child of the plan's `WithCTE`, reads.
     */
   private[graft] def planVersion(plan: LogicalPlan): Option[Seq[FileVersion]] = {
     val leaves = plan.collectWithSubqueries {
       case LogicalRelation(h: HadoopFsRelation, _, _, false, _) => h.location match {
-        case i: PartitioningAwareFileIndex => Some(versionOf(i))
+        case i: PartitioningAwareFileIndex => Some(i.allFiles().map(versionOf))
         case _ => None
       }
-      case _: Range | _: OneRowRelation => Some(Nil)
+      case _: Range | _: OneRowRelation | _: CTERelationRef => Some(Nil)
       case _: LeafNode => None
     }
     if (leaves.exists(_.isEmpty)) None else Some(leaves.flatten.flatten.sorted)

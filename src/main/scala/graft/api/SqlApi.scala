@@ -282,11 +282,13 @@ object SqlApi {
       }
       render(rows, df.schema, j, out)
     }
-    // execute's cache flags buffer the body through ResultCache; else it goes to `out`
-    val useCache = capped && ctxValue(j, "useCache") == JBool(true)
-    val populateCache = capped && ctxValue(j, "populateCache") == JBool(true)
+    // execute's cache flags buffer the body through ResultCache; else it goes
+    // to `out`. DML has already run in `run`: it stays out of the cache and its stats
+    def flag(k: String) = capped && ctxValue(j, k) == JBool(true)
+    val useCache = flag("useCache")
+    val populateCache = flag("populateCache")
     def respond(): Unit =
-      if (!useCache && !populateCache) body(out)
+      if (!useCache && !populateCache || ingestTarget(sql(j)).isDefined) body(out)
       else out.write(ResultCache.through(
           ResultCache.key(sqlCacheKey(dir, j), df.queryExecution.analyzed),
           useCache, populateCache, (b: String) => b.length <= MaxCachedBodyChars) {
@@ -2864,29 +2866,24 @@ object SqlApi {
       System.getProperty("java.io.tmpdir") + "/graft_warehouse")
 
   /** Register every warehouse datasource as a temp view so SQL can read
-    * back what INSERT/REPLACE wrote.
+    * back what INSERT/REPLACE wrote. A view is (re-)registered unless it already reads its table's current
+    * version ([[Tables.version]]), whoever wrote it: an ingest in this or
+    * another session, or a writer outside graft. Opening a table costs
+    * 20–40 ms on a schema-memo hit ([[Tables.readParquet]]); with a handful
+    * of ingested tables, reopening them all on every facade call dominated
+    * its cost (measured ~0.7 s a call), so a call with nothing new only
+    * lists each table's files and reads the view's plan.
     */
   private def registerWarehouse(spark: SparkSession): Unit =
     Option(new java.io.File(warehouseDir(spark)).listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .foreach(d => registerWarehouseTable(spark, d.getName, d.getCanonicalPath))
-
-  /** (Re-)register the view `name` over the table at `path` unless the view
-    * already reads the table's current version ([[Tables.version]]),
-    * whoever wrote it: an ingest in this or another session, or a writer
-    * outside graft. Opening a table costs 20–40 ms on a schema-memo hit
-    * ([[Tables.readParquet]]); with a handful of ingested tables, reopening
-    * them all on every facade call dominated its cost (measured ~0.7 s a
-    * call), so a call with nothing new only lists each table's files
-    * (~2.5 ms for a seven-file table on 4 cores) and reads the view's plan.
-    */
-  private def registerWarehouseTable(spark: SparkSession, name: String,
-                                     path: String): Unit = {
-    val registered = spark.sessionState.catalog.getTempView(name).flatMap(Tables.planVersion)
-    if (Tables.version(spark, path).exists(v => !registered.contains(v)))
-      try Tables.readParquet(spark, path).createOrReplaceTempView(name)
-      catch { case _: Exception => () } // mid-write/empty dir: skip
-  }
+      .filter(_.isDirectory).foreach { d =>
+        val path = d.getCanonicalPath
+        val registered =
+          spark.sessionState.catalog.getTempView(d.getName).flatMap(Tables.planVersion)
+        if (Tables.version(spark, path).exists(v => !registered.contains(v)))
+          try Tables.readParquet(spark, path).createOrReplaceTempView(d.getName)
+          catch { case _: Exception => () } // mid-write/empty dir: skip
+      }
 
   private[graft] case class IngestStatement(
       replace: Boolean, table: String,
@@ -3005,7 +3002,8 @@ object SqlApi {
             org.apache.spark.sql.functions.col): _*)
           .write.mode("append").partitionBy(partCol).parquet(path)
     }
-    registerWarehouseTable(spark, ing.table, new java.io.File(path).getCanonicalPath)
+    Tables.readParquet(spark, new java.io.File(path).getCanonicalPath)
+      .createOrReplaceTempView(ing.table)
     import spark.implicits._
     Seq((ing.table, path)).toDF("dataSource", "location")
   }

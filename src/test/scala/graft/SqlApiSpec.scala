@@ -614,8 +614,10 @@ class SqlApiSpec extends AnyFunSuite {
             "resultFormat": "csv"}""").trim.split("\n").last.trim.toLong
     }
     val n0 = countApp()   // one insert inside
+    val s0 = ResultCache.stats
     val n1 = countApp()   // a second insert — must append again, not no-op
     assert(n1 > n0, s"cached DML must still execute: $n0 -> $n1")
+    assert(ResultCache.stats == s0, "DML with cache flags stays out of the stats")
   }
 
   /** `n` (or `n,m`) from a headerless csv body. */
@@ -693,6 +695,15 @@ class SqlApiSpec extends AnyFunSuite {
     assert(csvValue(SqlApi.execute(spark, dir, q)) == "1")
     view(2)
     assert(csvValue(SqlApi.execute(spark, dir, q)) == "2")
+  }
+
+  test("result cache: a WITH query over a table is cached") {
+    val q = cachedCsv("WITH t AS (SELECT n_regionkey FROM nation WHERE n_nationkey < 7) " +
+      "SELECT count(*) AS n FROM t")
+    assert(csvValue(SqlApi.execute(spark, dir, q)) == "7")
+    val (h0, _) = ResultCache.stats
+    assert(csvValue(SqlApi.execute(spark, dir, q)) == "7")
+    assert(ResultCache.stats._1 == h0 + 1, "the repeat is a hit")
   }
 
   test("result cache: a view redefined over the same files is a new key") {

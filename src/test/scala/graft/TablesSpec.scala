@@ -133,6 +133,19 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.memoizedSchemaPaths.count(_ == path) == 1)
   }
 
+  test("a table's version is what a read lists, taken without a Spark job") {
+    val s = freshSession()
+    import s.implicits._
+    val path = tmpTable()
+    // more partition directories than Spark lists without a job (32)
+    // (the write's `_SUCCESS` and `.crc` files are hidden from a read)
+    (0 until 40).map(i => (i, i.toString)).toDF("k", "p").write.partitionBy("p").parquet(path)
+    var v: Option[Seq[Tables.FileVersion]] = None
+    assert(jobsDuring { v = Tables.version(s, path) } == 0)
+    assert(v.map(_.size).contains(40))
+    assert(v == Tables.planVersion(s.read.parquet(path).queryExecution.analyzed))
+  }
+
   test("table-plan cache drops a stale session's entries on the next miss") {
     val extra = spark.newSession()
     Tables.load(extra, "/root/testdata/sf0.001", "nation")
