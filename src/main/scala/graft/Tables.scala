@@ -118,9 +118,9 @@ object Tables {
 
   /** The version of the table at `path`: its files as a read of it lists
     * them, which leaves out names starting with `.`, ending in `._COPYING_`
-    * or starting with `_` but holding no `=`. None when no file is listed (a missing
-    * or empty path, a glob). Listed through the Hadoop FileSystem alone:
-    * Spark's own file index lists a table of more than
+    * or starting with `_` but holding no `=`. None when no file is listed
+    * (a missing or empty path, a glob). Listed through the Hadoop
+    * FileSystem alone: Spark's own file index lists a table of more than
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
     * partition directories with a Spark job.
     */

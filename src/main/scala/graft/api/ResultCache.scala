@@ -31,8 +31,9 @@ object ResultCache {
       val md = java.security.MessageDigest.getInstance("SHA-256")
       def add(s: String): Unit = md.update(s.getBytes(StandardCharsets.UTF_8))
       // every part before the plan is length-prefixed, so no two keys' parts run together
-      (text +: files.size.toString +: files.flatMap { case (p, n, t) => Seq(p, n.toString, t.toString) })
-        .foreach { s => add(s"${s.length}:"); add(s) }
+      val parts = text +: files.size.toString +:
+        files.flatMap { case (p, n, t) => Seq(p, n.toString, t.toString) }
+      parts.foreach { s => add(s"${s.length}:"); add(s) }
       cteIdsNumbered(plan).canonicalized.treeString(add(_), verbose = true, addSuffix = false,
         maxFields = Int.MaxValue, printOperatorId = false, printOutputColumns = false)
       java.util.HexFormat.of.formatHex(md.digest)
