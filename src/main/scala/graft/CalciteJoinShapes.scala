@@ -209,15 +209,9 @@ object CalciteJoinShapes {
          GROUP BY c_mktsegment
          ORDER BY c_mktsegment"""))
 
-  private def runSpark(s: SparkSession, dir: String, sqlText: String)
-      : DataFrame = {
-    Tables.registerAll(s, dir)
-    graft.api.SqlApi.runSql(s, sqlText)
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, dir: String) => runSpark(s, dir, sparkSql))
+      name -> ((s: SparkSession, _: String) => graft.api.SqlApi.runSql(s, sparkSql))
     }.toMap
 
   def oracleSql: Map[String, String] =

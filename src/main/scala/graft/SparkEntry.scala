@@ -334,10 +334,7 @@ object SparkEntry {
   private def winRound4Queries
       : Map[String, (SparkSession, String) => DataFrame] =
     winRound4.map { case (name, body) =>
-      name -> ((s: SparkSession, dir: String) => {
-        Tables.registerAll(s, dir)
-        s.sql(s"WITH w AS ($winSparkBase) $body")
-      })
+      name -> ((s: SparkSession, _: String) => s.sql(s"WITH w AS ($winSparkBase) $body"))
     }.toMap
 
   private def winRound4Oracle: Map[String, String] =
@@ -1653,13 +1650,16 @@ object SparkEntry {
     parts.mkString("", "\nUNION ALL\n", "\nORDER BY qid, d")
   }
 
-  /** Every gate, armed: each builder first runs `GraftSession.attach`, so
-    * a gate answers the same whichever gates ran before it on the session.
+  /** Every gate, armed and over its tables: each builder first runs
+    * `GraftSession.attach` and registers `dir`'s tables as the session's
+    * views, so a gate answers the same whichever gates ran before it on the
+    * session, and SQL-text bodies read the tables by name.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     gates.map { case (name, build) =>
       name -> ((s: SparkSession, dir: String) => {
         GraftSession.attach(s)
+        Tables.registerAll(s, dir)
         build(s, dir)
       })
     }
@@ -1933,7 +1933,6 @@ object SparkEntry {
       // full TIME_FLOOR arity (reference TimeFloorOperatorConversion):
       // origin-anchored fixed buckets, timezone wall-clock calendar floors
       // (zone-local midnight across the DST line), arbitrary fixed periods
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT event_id,
                TIME_FLOOR(ts, 'PT15M', '1970-01-01T00:07:00') AS f_origin,
@@ -1945,7 +1944,6 @@ object SparkEntry {
     "q_sql_quoted_idents" -> ((s, dir) => {
       // Calcite double-quoted identifiers exactly as the reference console
       // emits them — the SQL API accepts the dialect verbatim
-      Tables.registerAll(s, dir)
       graft.api.SqlApi.run(s, dir, """{
         "query": "SELECT \"t\".\"event_type\" AS \"type\", CAST(COUNT(*) AS BIGINT) AS \"count\" FROM \"events\" AS \"t\" WHERE \"t\".\"event_id\" < 1000 GROUP BY \"t\".\"event_type\" ORDER BY \"type\""
       }""")
@@ -1954,7 +1952,6 @@ object SparkEntry {
     "q_sql_floor_to" -> ((s, dir) => {
       // Calcite FLOOR(t TO unit) / CEIL(t TO unit) — the console's time
       // bucketing syntax, translated by SqlApi.rewriteFloorCeilTo
-      Tables.registerAll(s, dir)
       graft.api.SqlApi.run(s, dir, """{
         "query": "SELECT FLOOR(ts TO DAY) AS d, CEIL(ts TO HOUR) AS ch, CAST(count(*) AS BIGINT) AS n FROM events WHERE event_id < 2000 GROUP BY FLOOR(ts TO DAY), CEIL(ts TO HOUR) ORDER BY d, ch"
       }""")
@@ -1963,7 +1960,6 @@ object SparkEntry {
     "q_sql_trunc_alias" -> ((s, dir) => {
       // DruidOperatorTable.java:229: TRUNC aliases numeric TRUNCATE (digits
       // default 0) — Spark's own trunc is DATE truncation and would shadow
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT trunc(3.77D * 10) / 10 AS t1,
                TRUNCATE(-2.99D, 1) AS t2,
@@ -1976,7 +1972,6 @@ object SparkEntry {
       // TimeInIntervalConvertletFactory: all three ISO interval spellings —
       // start/end, start/PERIOD, PERIOD/end — as half-open [start, end),
       // with calendar (P6M) and fixed (PT36H) period endpoints
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(*) FILTER (WHERE TIME_IN_INTERVAL(
                  CAST(o_orderdate AS TIMESTAMP), '1995-01-01/1996-01-01')) AS BIGINT) AS c_se,
@@ -1993,7 +1988,6 @@ object SparkEntry {
       // PeriodGranularity.java:417,436: year/month MULTIPLES (P2Y, P6M)
       // are calendar buckets aligned on 1970-01; TIME_CEIL at an exact
       // boundary stays on the boundary
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(TIME_FLOOR(CAST(o_orderdate AS TIMESTAMP), 'P6M') AS STRING) AS h1,
                CAST(TIME_FLOOR(CAST(o_orderdate AS TIMESTAMP), 'P2Y') AS STRING) AS y2,
@@ -2006,7 +2000,6 @@ object SparkEntry {
       // PeriodGranularity.java:455: MULTI-week periods are fixed-length and
       // epoch-anchored (1970-01-01, a Thursday) — unlike single P1W, which
       // is the Monday calendar week
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(TIME_FLOOR(ts, 'P2W') AS STRING) AS wk2,
                CAST(count(*) AS BIGINT) AS cnt
@@ -2020,7 +2013,6 @@ object SparkEntry {
       // starts with it — '-0xfF' is NOT '-255', it fails Long.parseLong
       // and NULLs, while '0x-f' parses (sign allowed after the strip) and
       // a leading '+' is a Long.parseLong-legal sign
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT parse_long('123') AS p10,
                parse_long('-45') AS pneg,
@@ -2040,7 +2032,6 @@ object SparkEntry {
       // Function.java Round/RepeatFunc edges: NaN rounds to 0.0, ±Infinity
       // clamps to ±Double.MaxValue, HALF_UP away from zero on .5 both
       // signs, negative scale; repeat with count < 1 is NULL (not '')
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT round(CAST('NaN' AS DOUBLE), 2) AS r_nan,
                round(CAST('Infinity' AS DOUBLE)) AS r_pinf,
@@ -2060,7 +2051,6 @@ object SparkEntry {
       // a real divisor: DIV(10.0, 2.5) = 4 (not 10/2 = 5) and a divisor
       // < 1 divides instead of nulling out; x/0.0 → Infinity → Long.Max.
       // The LONG path stays integer division truncating toward zero.
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT r_regionkey,
                DIV(10.0D, 2.5D) AS d_frac,
@@ -2079,7 +2069,6 @@ object SparkEntry {
       // collapses to [], '' splits to [''], a null delimiter splits per
       // character — none of which Spark's split() reproduces (it keeps
       // trailing empties even at limit 0), hence the StaticInvoke builder.
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT MV_TO_STRING(STRING_TO_MV('a,b,,', ','), '|') AS trail,
                MV_LENGTH(STRING_TO_MV('a,b,,', ',')) AS trail_len,
@@ -2097,7 +2086,6 @@ object SparkEntry {
       // array is SQL NULL (:3643), and a null separator joins with ''
       // (:3646) — Spark's bare array_join silently SKIPS null elements, so
       // the builder transforms through CAST + coalesce('null') first.
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT MV_TO_STRING(array('a', CAST(NULL AS STRING), 'b'), '|') AS j_null,
                ARRAY_TO_STRING(array(1, 0, CAST(NULL AS INT)), '|') AS j_num,
@@ -2116,7 +2104,6 @@ object SparkEntry {
       // native if() runs its condition through the same rule; plus
       // decode_base64_utf8 (BuiltInExprMacros:149) and the native
       // unix_timestamp's ISO parse in epoch seconds (Function.java:3245)
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT istrue(1 > 0) AS t_bool,
                istrue(-1) AS t_neg,
@@ -2144,7 +2131,6 @@ object SparkEntry {
       // the reference returns the unformatted pattern with "; arg" appended
       // per argument; %-conversions that don't fit the arg type degrade the
       // same way; Locale.ENGLISH formatting otherwise
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT STRING_FORMAT('%q', 5) AS f_bad,
                STRING_FORMAT('%d apples; %s', 3, 'red') AS f_ok,
@@ -2162,7 +2148,6 @@ object SparkEntry {
       // CopySign:1789, Remainder:1831 = IEEEremainder, NextAfter:1906) and
       // the null-propagating bivariate max/min (Max:1852/Min:1879 — note
       // max(1, NULL) is NULL, unlike SQL GREATEST)
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(getexponent(10.0D) AS BIGINT) AS ge_10,
                CAST(getexponent(0.5D) AS BIGINT) AS ge_half,
@@ -2185,7 +2170,6 @@ object SparkEntry {
       // BivariateBitwiseMathFunction evals asLong() per operand — truncate
       // toward zero, NaN → 0 (never round, never reject) — and the
       // IEEE-754 reinterpretation pair (BitwiseConvert*:944,976)
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT bitwiseAnd(3.9D, 7.2D) AS and_trunc,
                bitwiseAnd(-3.9D, -1L) AS and_negtrunc,
@@ -2206,7 +2190,6 @@ object SparkEntry {
       // Function.java LpadFunc/RpadFunc edges: len 0 → NULL, len < 0 → '',
       // empty pad leaves the base untouched, truncation below base length,
       // multi-char pad cycling, 2-arg space default, null propagation
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT lpad('abc', 0, 'x') AS l0, rpad('abc', 0, 'x') AS r0,
                lpad('abc', -2, 'x') AS lneg,
@@ -2224,7 +2207,6 @@ object SparkEntry {
       // — a verbatim java.time read would print the locale week-based year
       // and be wrong the first days of January; 'ZZ' is the offset WITH a
       // colon; 'DDD' is padded day-of-year; Joda patterns also drive parse
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT TIME_FORMAT(TIME_PARSE('2021-01-01 00:00:00'), 'YYYY-MM-dd') AS yoe,
                TIME_FORMAT(TIME_PARSE('2021-06-15 12:34:56'),
@@ -2238,7 +2220,6 @@ object SparkEntry {
       // timezone arities of TIME_EXTRACT / TIME_FORMAT / TIME_PARSE
       // (incl. a half-hour-offset zone) plus the 1-arg ISO default format
       // and the lenient 1-arg parse round-trip
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT event_id,
                TIME_EXTRACT(ts, 'HOUR', 'America/New_York') AS h_ny,
@@ -2252,7 +2233,6 @@ object SparkEntry {
       // PARTITIONED BY HOUR (reference hour-granularity segments): the
       // ingest lands hour-chunk dirs (__hour=yyyy-MM-dd-HH) and the
       // read-back chunk column reproduces the per-hour rollup exactly
-      Tables.registerAll(s, dir)
       graft.api.SqlApi.run(s, dir, """{
         "query": "REPLACE INTO graft_hourly OVERWRITE ALL SELECT ts AS __time, event_type, value FROM events WHERE event_id < 2000 PARTITIONED BY HOUR"
       }""")
@@ -2265,7 +2245,6 @@ object SparkEntry {
       // SQL-driven batch ingestion (reference INSERT ... PARTITIONED BY via
       // MSQ): CREATE TABLE + INSERT OVERWRITE ... SELECT, then query the
       // ingested table
-      Tables.registerAll(s, dir)
       val loc = s"${System.getProperty("java.io.tmpdir")}/graft_sqlins_" +
         dir.replaceAll("[^a-zA-Z0-9]", "_")
       s.sql("DROP TABLE IF EXISTS graft_daily_rollup")
@@ -2539,13 +2518,11 @@ object SparkEntry {
     "q_drill_window_nestagg_frames" -> ((s, dir) => {
       // nestedAggs/frmclause* family: explicit frames over GROUP-BY
       // aggregates (windows evaluate on the post-aggregation row set)
-      Tables.registerAll(s, dir)
       s.sql(drillSql("nested_agg_frames"))
     }),
 
     "q_drill_window_named_scope" -> ((s, dir) => {
       // aggregates/aggOWnFn_1.q: window-name shadowing across query levels
-      Tables.registerAll(s, dir)
       s.sql(drillSql("named_scope"))
     }),
 
@@ -2553,7 +2530,6 @@ object SparkEntry {
       // frameclause/RBUPACR (ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT
       // ROW), e.g. RBUPACR_int_1.q: running MAX/COUNT under an explicit
       // cumulative ROWS frame
-      Tables.registerAll(s, dir)
       s.sql(drillSql("rbupacr"))
     }),
 
@@ -2561,14 +2537,12 @@ object SparkEntry {
       // frameclause/RBCRACR (RANGE BETWEEN CURRENT ROW AND CURRENT ROW),
       // e.g. RBCRACR_int_1.q: the frame is exactly the CURRENT PEER GROUP —
       // every row with a tied order key aggregates its whole tie class
-      Tables.registerAll(s, dir)
       s.sql(drillSql("rbcracr"))
     }),
 
     "q_drill_window_rbupauf" -> ((s, dir) => {
       // frameclause/RBUPAUF (ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
       // FOLLOWING) + a named WINDOW clause (frameclause/multipl_wnwds style)
-      Tables.registerAll(s, dir)
       s.sql(drillSql("rbupauf"))
     }),
 
@@ -2576,35 +2550,30 @@ object SparkEntry {
       // frameclause/defaultFrame: ORDER BY with duplicates and NO explicit
       // frame — the implicit RANGE UNBOUNDED PRECEDING..CURRENT ROW frame
       // includes the WHOLE peer group, so the running sum jumps by ties
-      Tables.registerAll(s, dir)
       s.sql(drillSql("default_frame"))
     }),
 
     "q_drill_window_multi" -> ((s, dir) => {
       // frameclause/multipl_wnwds/mulwind_01.q: four named windows with
       // different frame semantics consumed by interleaved projections
-      Tables.registerAll(s, dir)
       s.sql(drillSql("multi"))
     }),
 
     "q_drill_window_nested_aggs" -> ((s, dir) => {
       // nestedAggs (e.g. woutPrtnBy_45.q): window functions OVER the result
       // of GROUP BY aggregates — COUNT(DISTINCT) feeding MIN() OVER()
-      Tables.registerAll(s, dir)
       s.sql(drillSql("nested_aggs"))
     }),
 
     "q_drill_window_ntile" -> ((s, dir) => {
       // ntile_func/ntileFn_33.q: NTILE in a subquery, outer GROUP BY over
       // the bucket assignment
-      Tables.registerAll(s, dir)
       s.sql(drillSql("ntile"))
     }),
 
     "q_drill_window_lag_lead" -> ((s, dir) => {
       // lag_func/lead_func with explicit NULLS FIRST ordering (engines
       // disagree on the default) + non-null lag default and offset-2 lead
-      Tables.registerAll(s, dir)
       s.sql(drillSql("lag_lead"))
     }),
 
@@ -2612,122 +2581,67 @@ object SparkEntry {
       // first_val/last_val: LAST_VALUE under the DEFAULT frame returns the
       // current row (the classic drill gotcha — frame ends at current row),
       // unlike the explicit unbounded-following frame
-      Tables.registerAll(s, dir)
       s.sql(drillSql("first_last"))
     }),
 
     "q_drill_window_empty_over" -> ((s, dir) => {
       // empty_over_clause/avg_01.sql: OVER () — one global frame, no
       // partition, no order
-      Tables.registerAll(s, dir)
       s.sql(drillSql("empty_over"))
     }),
 
     "q_drill_window_subquery" -> ((s, dir) => {
       // frameclause/subQueries/frmInSubQry_25.q: window computed in a
       // subquery, outer WHERE filters on the window result
-      Tables.registerAll(s, dir)
       s.sql(drillSql("subquery"))
     }),
 
     "q_drill_window_agg_outer" -> ((s, dir) => {
       // aggregates (e.g. winFnQry_* MAX-over-FIRST_VALUE): scalar aggregate
       // OVER the per-row window results of a subquery
-      Tables.registerAll(s, dir)
       s.sql(drillSql("agg_outer"))
     }),
 
     "q_random_consistency" -> ((s, dir) => {
       // seeded randomized consistency corpus (see consistencySql): 24
       // generated aggregation queries, one shared text, both engines
-      Tables.registerAll(s, dir)
       s.sql(consistencySql(seed = 42L, n = 24))
     }),
 
     // ------------------------------------ TPC-H quidem suite (see tpchSql)
-    "q_tpch_q01" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q01"))
-    }),
-    "q_tpch_q06" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q06"))
-    }),
-    "q_tpch_q14" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q14"))
-    }),
-    "q_tpch_q15" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q15"))
-    }),
-    "q_tpch_q17" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q17"))
-    }),
-    "q_tpch_q19" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q19"))
-    }),
-    "q_tpch_q22" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q22"))
-    }),
-    "q_tpch_q02" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q02"))
-    }),
-    "q_tpch_q03" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q03"))
-    }),
-    "q_tpch_q04" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q04"))
-    }),
-    "q_tpch_q05" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q05"))
-    }),
-    "q_tpch_q07" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q07"))
-    }),
-    "q_tpch_q08" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q08"))
-    }),
-    "q_tpch_q09" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q09"))
-    }),
-    "q_tpch_q10" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q10"))
-    }),
-    "q_tpch_q11" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q11"))
-    }),
-    "q_tpch_q12" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q12"))
-    }),
-    "q_tpch_q13" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q13"))
-    }),
-    "q_tpch_q16" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q16"))
-    }),
-    "q_tpch_q18" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q18"))
-    }),
-    "q_tpch_q20" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q20"))
-    }),
-    "q_tpch_q21" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q21"))
-    }),
-    "q_tpch_q01_decimal" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q01_decimal"))
-    }),
-    "q_tpch_q06_decimal" -> ((s, dir) => {
-      Tables.registerAll(s, dir); s.sql(tpchSql("q06_decimal"))
-    }),
+    "q_tpch_q01" -> ((s, _) => s.sql(tpchSql("q01"))),
+    "q_tpch_q06" -> ((s, _) => s.sql(tpchSql("q06"))),
+    "q_tpch_q14" -> ((s, _) => s.sql(tpchSql("q14"))),
+    "q_tpch_q15" -> ((s, _) => s.sql(tpchSql("q15"))),
+    "q_tpch_q17" -> ((s, _) => s.sql(tpchSql("q17"))),
+    "q_tpch_q19" -> ((s, _) => s.sql(tpchSql("q19"))),
+    "q_tpch_q22" -> ((s, _) => s.sql(tpchSql("q22"))),
+    "q_tpch_q02" -> ((s, _) => s.sql(tpchSql("q02"))),
+    "q_tpch_q03" -> ((s, _) => s.sql(tpchSql("q03"))),
+    "q_tpch_q04" -> ((s, _) => s.sql(tpchSql("q04"))),
+    "q_tpch_q05" -> ((s, _) => s.sql(tpchSql("q05"))),
+    "q_tpch_q07" -> ((s, _) => s.sql(tpchSql("q07"))),
+    "q_tpch_q08" -> ((s, _) => s.sql(tpchSql("q08"))),
+    "q_tpch_q09" -> ((s, _) => s.sql(tpchSql("q09"))),
+    "q_tpch_q10" -> ((s, _) => s.sql(tpchSql("q10"))),
+    "q_tpch_q11" -> ((s, _) => s.sql(tpchSql("q11"))),
+    "q_tpch_q12" -> ((s, _) => s.sql(tpchSql("q12"))),
+    "q_tpch_q13" -> ((s, _) => s.sql(tpchSql("q13"))),
+    "q_tpch_q16" -> ((s, _) => s.sql(tpchSql("q16"))),
+    "q_tpch_q18" -> ((s, _) => s.sql(tpchSql("q18"))),
+    "q_tpch_q20" -> ((s, _) => s.sql(tpchSql("q20"))),
+    "q_tpch_q21" -> ((s, _) => s.sql(tpchSql("q21"))),
+    "q_tpch_q01_decimal" -> ((s, _) => s.sql(tpchSql("q01_decimal"))),
+    "q_tpch_q06_decimal" -> ((s, _) => s.sql(tpchSql("q06_decimal"))),
 
     "q_drill_window_const_args" -> ((s, dir) => {
       // bugs/drill-3292.sql: SUM over constant arguments
-      Tables.registerAll(s, dir)
       s.sql(drillSql("const_args"))
     }),
 
     "q_drill_window_rank_orderby" -> ((s, dir) => {
       // bugs/drill-3348.sql: window fn in projection + a different window
       // fn in the ORDER BY clause
-      Tables.registerAll(s, dir)
       s.sql(drillSql("rank_orderby"))
     }),
 
@@ -2736,7 +2650,6 @@ object SparkEntry {
       // time-ordered first/last aggregates composed OVER exploded rows —
       // explosion multiplies rows but the (value, key) pairs keep the
       // aggregate deterministic (event_id is unique per source row)
-      Tables.registerAll(s, dir)
       s.sql(graft.api.SqlApi.rewriteUnnest("""
         SELECT w AS word, CAST(count(*) AS BIGINT) AS cnt,
                earliest(event_id, event_id) AS first_id,
@@ -2772,26 +2685,22 @@ object SparkEntry {
 
     "q_drill_window_mixed_over" -> ((s, dir) => {
       // bugs/drill-3574.sql: partition-only OVER + OVER () side by side
-      Tables.registerAll(s, dir)
       s.sql(drillSql("mixed_over"))
     }),
 
     "q_drill_window_ntile_nested" -> ((s, dir) => {
       // bugs/drill-3679.sql: NTILE over a ROW_NUMBER subquery
-      Tables.registerAll(s, dir)
       s.sql(drillSql("ntile_nested"))
     }),
 
     "q_drill_window_firstval_mixed" -> ((s, dir) => {
       // bugs/drill-3700.sql: FIRST_VALUE across over-clause variants
-      Tables.registerAll(s, dir)
       s.sql(drillSql("firstval_mixed"))
     }),
 
     "q_drill_window_stat_aggs" -> ((s, dir) => {
       // statistical_aggregates family: var/stddev pop+samp windows with
       // guarded single-row partitions
-      Tables.registerAll(s, dir)
       s.sql(drillSql("stat_aggs"))
     }),
 
@@ -2813,188 +2722,149 @@ object SparkEntry {
     "q_drill_window_lastval" -> ((s, dir) => {
       // last_val/lastValFn_1.q: LAST_VALUE under the default frame returns
       // the current row when the order key is unique
-      Tables.registerAll(s, dir)
       s.sql(drillSql("lastval_peers"))
     }),
 
     "q_drill_window_lead_only" -> ((s, dir) => {
       // lead_func/lead_Fn_1.q: lone LEAD projection, NULL at partition tails
-      Tables.registerAll(s, dir)
       s.sql(drillSql("lead_only"))
     }),
 
     "q_drill_window_lead_offset" -> ((s, dir) => {
       // lead_func offset+default forms: LEAD(k, 2, -1) / LAG(k, 3, 0)
-      Tables.registerAll(s, dir)
       s.sql(drillSql("lead_offset_default"))
     }),
 
     "q_drill_window_shared_named" -> ((s, dir) => {
       // aggregates/aggOWnFn_1.q: same-named WINDOW clause reused in inner
       // and outer query scopes (NTILE inside, LEAD outside)
-      Tables.registerAll(s, dir)
       s.sql(drillSql("shared_named"))
     }),
 
     "q_drill_window_multipart_arith" -> ((s, dir) => {
       // multiple_partitions/q1.sql: filter on arithmetic of window functions
       // with three different partitionings
-      Tables.registerAll(s, dir)
       s.sql(drillSql("multipart_arith"))
     }),
 
     "q_drill_window_multipart_cast" -> ((s, dir) => {
       // multiple_partitions/q10.sql: CASTs over windowed aggregates added
       // across partitionings
-      Tables.registerAll(s, dir)
       s.sql(drillSql("multipart_cast"))
     }),
 
     "q_drill_window_orderonly" -> ((s, dir) => {
       // order_by/avg_01.sql + count_01.sql: ORDER-BY-only windows with tie
       // classes on the date key
-      Tables.registerAll(s, dir)
       s.sql(drillSql("orderonly_running"))
     }),
 
     "q_drill_window_cumedist" -> ((s, dir) => {
       // order_by/cume_dist_01.sql: CUME_DIST/PERCENT_RANK over an
       // ORDER-BY-only window with large tie groups
-      Tables.registerAll(s, dir)
       s.sql(drillSql("cumedist_orderonly"))
     }),
 
     "q_drill_window_partonly" -> ((s, dir) => {
       // partition_by/one_part_01.sql: PARTITION-only window on varchar key
-      Tables.registerAll(s, dir)
       s.sql(drillSql("partonly_sum"))
     }),
 
     "q_drill_window_join_outer" -> ((s, dir) => {
       // misc/q1.sql: window over a LEFT OUTER JOIN result with NULL order
       // keys pinned NULLS FIRST
-      Tables.registerAll(s, dir)
       s.sql(drillSql("join_outer_window"))
     }),
 
     "q_drill_window_join_subq" -> ((s, dir) => {
       // misc/q10.sql: inner join of two windowed subqueries
-      Tables.registerAll(s, dir)
       s.sql(drillSql("join_windowed_subq"))
     }),
 
     "q_drill_window_multi_parts" -> ((s, dir) => {
       // druid_queries/over_clause_only_partitioning/
       // multiple_over_different_partition_column.q
-      Tables.registerAll(s, dir)
       s.sql(drillSql("multi_over_parts"))
     }),
 
     "q_drill_window_null_args" -> ((s, dir) => {
       // aggregates/testW_Nulls family: NULL-bearing aggregate arguments
       // inside running windows
-      Tables.registerAll(s, dir)
       s.sql(drillSql("nulls_in_args"))
     }),
 
     "q_drill_window_frames_subq" -> ((s, dir) => {
       // frameclause/subQueries/frmInSubQry_25.q: three mixed-frame named
       // windows behind a subquery with an outer filter
-      Tables.registerAll(s, dir)
       s.sql(drillSql("frames_in_subq"))
     }),
 
     "q_drill_window_rank_filtered" -> ((s, dir) => {
       // aggregates/wPrtnOrdrBy_1.q: rank in a WHERE-pinned partition
-      Tables.registerAll(s, dir)
       s.sql(drillSql("rank_filtered"))
     }),
 
     "q_drill_window_runmax" -> ((s, dir) => {
       // aggregates/woPrtnBy_1.q: running MAX, ORDER-BY-only window
-      Tables.registerAll(s, dir)
       s.sql(drillSql("runmax_orderonly"))
     }),
 
     "q_drill_window_lag_dates" -> ((s, dir) => {
       // lag_func over date-derived ordering: previous value + gap
-      Tables.registerAll(s, dir)
       s.sql(drillSql("lag_dates"))
     }),
 
     "q_drill_window_ntile_overflow" -> ((s, dir) => {
       // ntile_func edge: more tiles than rows
-      Tables.registerAll(s, dir)
       s.sql(drillSql("ntile_overflow"))
     }),
 
     "q_drill_window_firstval_sliding" -> ((s, dir) => {
       // first_val/last_val over a sliding 1-PRECEDING..1-FOLLOWING frame
-      Tables.registerAll(s, dir)
       s.sql(drillSql("firstval_sliding"))
     }),
 
     "q_drill_window_share_total" -> ((s, dir) => {
       // aggregates/mtyOvrCluse: empty OVER () share-of-total over GROUP BY
-      Tables.registerAll(s, dir)
       s.sql(drillSql("share_of_total"))
     }),
 
     "q_drill_window_lead_expr" -> ((s, dir) => {
       // lead_func with a computed expression argument
-      Tables.registerAll(s, dir)
       s.sql(drillSql("lead_expr"))
     }),
 
     "q_drill_tpcds_q53" -> ((s, dir) => {
       // tpcds/query53.sql: quarterly brand sales vs whole-brand average
-      Tables.registerAll(s, dir)
       s.sql(drillSql("tpcds_q53"))
     }),
 
     "q_drill_tpcds_q51" -> ((s, dir) => {
       // tpcds/query51: FULL OUTER JOIN of two per-channel cumulative series
-      Tables.registerAll(s, dir)
       s.sql(drillSql("tpcds_q51"))
     }),
 
     "q_ssb_q1" -> ((s, dir) => {
       // quidem qaSsb Q1_1: date-filtered discount revenue
-      Tables.registerAll(s, dir)
       s.sql(drillSql("ssb_q1"))
     }),
 
     "q_ssb_q2" -> ((s, dir) => {
       // quidem qaSsb Q2_1: brand × year revenue over the star
-      Tables.registerAll(s, dir)
       s.sql(drillSql("ssb_q2"))
     }),
 
     "q_ssb_q3" -> ((s, dir) => {
       // quidem qaSsb Q3_1: customer × supplier nation revenue per year
-      Tables.registerAll(s, dir)
       s.sql(drillSql("ssb_q3"))
     }),
 
-    "q_ssb_q1_0" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(drillSql("ssb_q1_0"))
-    }),
-    "q_ssb_q3_0" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(drillSql("ssb_q3_0"))
-    }),
-    "q_ssb_q3_3" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(drillSql("ssb_q3_3"))
-    }),
-    "q_ssb_q4_2" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(drillSql("ssb_q4_2"))
-    }),
+    "q_ssb_q1_0" -> ((s, _) => s.sql(drillSql("ssb_q1_0"))),
+    "q_ssb_q3_0" -> ((s, _) => s.sql(drillSql("ssb_q3_0"))),
+    "q_ssb_q3_3" -> ((s, _) => s.sql(drillSql("ssb_q3_3"))),
+    "q_ssb_q4_2" -> ((s, _) => s.sql(drillSql("ssb_q4_2"))),
     "q_ssb_q4" -> ((s, dir) => {
       // quidem qaSsb Q4_1: profit per year × customer nation, 5-table star
-      Tables.registerAll(s, dir)
       s.sql(drillSql("ssb_q4"))
     }),
 
@@ -3004,7 +2874,6 @@ object SparkEntry {
       // fractional-mix division riding CalciteDiv's DOUBLE coercion
       // (TPC-H Q17: sum(double) / 7.0 must resolve inside the
       // RuntimeReplaceable)
-      Tables.registerAll(s, dir)
       // l_quantity is integer-valued, so the double sum is exact and the
       // division result is partition-order and engine independent
       graft.api.SqlApi.runSql(s, """
@@ -3020,7 +2889,6 @@ object SparkEntry {
       // (millennium(1987) → 1970, not the calendar 1000), micro/milliseconds
       // truncate to millis, quarter/week are the calendar floors — Spark's
       // builtin silently NULLs the extended units, hence the shadow builder
-      Tables.registerAll(s, dir)
       s.sql(graft.api.SqlApi.rewriteFloorCeilTo(graft.api.SqlApi.rewriteExtractUnits("""
         SELECT CAST(DATE_TRUNC('decade', TIMESTAMP'1987-06-15 10:00:00') AS STRING) AS dec_u,
                CAST(DATE_TRUNC('century', TIMESTAMP'1987-06-15 10:00:00') AS STRING) AS cen_u,
@@ -3043,7 +2911,6 @@ object SparkEntry {
       // qaSql aggr_general.std: aggregates with POST-arithmetic (+1), MIN/
       // MAX of the time_floor key shifted by INTERVAL '1' YEAR, and HAVING
       // on the GROUP key itself with a BETWEEN timestamp range
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(TIME_FLOOR(ts, 'PT1H') AS STRING) AS t,
                CAST(count(*) + 1 AS BIGINT) AS c1,
@@ -3066,7 +2933,6 @@ object SparkEntry {
       // and the a1 running SUM equals the whole-partition sum; computed
       // over the customer ⋈ orders comma-join like the corpus's
       // customer ⋈ store_sales
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(DISTINCT pr) AS BIGINT) AS pr_vals,
                CAST(max(pr) AS DOUBLE) AS pr_max,
@@ -3093,19 +2959,12 @@ object SparkEntry {
     "q_drill_tpcds_q47" -> ((s, dir) => {
       // tpcds/query47.sql: monthly brand sales with LAG/LEAD neighbors and
       // a DESC in-brand rank
-      Tables.registerAll(s, dir)
       s.sql(drillSql("tpcds_q47"))
     }),
 
-    "q_drill_tpcds_q57" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(drillSql("tpcds_q57"))
-    }),
+    "q_drill_tpcds_q57" -> ((s, _) => s.sql(drillSql("tpcds_q57"))),
 
-    "q_drill_tpcds_q63" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(drillSql("tpcds_q63"))
-    }),
+    "q_drill_tpcds_q63" -> ((s, _) => s.sql(drillSql("tpcds_q63"))),
 
     "q_window_frame" -> ((s, dir) => {
       // frames over integer-valued doubles → exact under any association;
@@ -3363,7 +3222,6 @@ object SparkEntry {
     "q_qa_datetime_extract" -> ((s, dir) => {
       // scalar_datetime EXTRACT variants + TIMESTAMPADD/TIMESTAMPDIFF
       // round-trip, cross-derived in the oracle
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(sum(extract(DOY FROM ts)) AS BIGINT) AS s_doy,
                CAST(sum(extract(QUARTER FROM ts)) AS BIGINT) AS s_q,
@@ -3378,7 +3236,6 @@ object SparkEntry {
       // qaSsb denorm variants: the star pre-joined into one wide input,
       // then aggregated — the flat-table plan the reference's denorm_*
       // suites pin
-      Tables.registerAll(s, dir)
       s.sql("""
         WITH denorm AS (
           SELECT n_name, year(o_orderdate) AS yr,
@@ -3442,7 +3299,6 @@ object SparkEntry {
     "q_qa_union_self_merge" -> ((s, dir) => {
       // numMerge (sql quidem corpus): aggregate over a triple self-UNION —
       // partial-agg merge across identical inputs
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT n_regionkey, CAST(sum(n_nationkey) AS BIGINT) AS s,
                CAST(count(*) AS BIGINT) AS n
@@ -3456,7 +3312,6 @@ object SparkEntry {
     "q_qa_conditional_count" -> ((s, dir) => {
       // decoupled corpus: COUNT over a CASE that yields a column (counts
       // only non-null branches) next to count(1)
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT event_type,
                CAST(count(CASE WHEN value > 0.5 THEN event_type END) AS BIGINT) AS cnt,
@@ -3480,7 +3335,6 @@ object SparkEntry {
 
     "q_qa_union_limit" -> ((s, dir) => {
       // testUnionAllQueriesWithLimit: UNION ALL under a global sort+limit
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT * FROM (
           SELECT 'c' AS src, c_custkey AS k FROM customer
@@ -3492,7 +3346,6 @@ object SparkEntry {
     "q_qa_groupby_limit_extraction" -> ((s, dir) => {
       // testGroupByLimitPushdownExtraction: extraction-fn grouping key,
       // ordered by the aggregate with a limit
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT right(c_name, 2) AS e, CAST(count(*) AS BIGINT) AS n
         FROM customer GROUP BY right(c_name, 2)
@@ -3502,7 +3355,6 @@ object SparkEntry {
     "q_qa_time_filter_subquery" -> ((s, dir) => {
       // testTimeFilterOnSubquery: the outer __time range must reach the
       // scan through the subquery
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(count(DISTINCT user_id) AS BIGINT) AS nd
@@ -3514,7 +3366,6 @@ object SparkEntry {
     "q_qa_repeated_virtual_grouping" -> ((s, dir) => {
       // testRepeatedIdenticalVirtualExpressionGrouping: the same virtual
       // expression listed twice in GROUP BY and projected twice
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT user_id % 7 AS a, user_id % 7 AS b, CAST(count(*) AS BIGINT) AS n
         FROM events GROUP BY user_id % 7, user_id % 7
@@ -3525,7 +3376,6 @@ object SparkEntry {
       // testExactCountDistinctWithGroupingAndOtherAggregators (sql quidem
       // corpus): two exact COUNT(DISTINCT) columns alongside plain
       // aggregates under ROLLUP, with GROUPING() disambiguating the total
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT event_type,
                CAST(count(DISTINCT user_id) AS BIGINT) AS nd_user,
@@ -3542,7 +3392,6 @@ object SparkEntry {
       // scalar_numeric.02/.03 extended fns: trig/log/root identities plus
       // SAFE_DIVIDE-by-zero and bitwise-and-vs-mod equivalence, as a
       // must-hold-per-row battery
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(*) AS BIGINT) AS cnt,
                CAST(count(CASE WHEN BITWISE_AND(user_id, 255) = user_id % 256
@@ -3565,7 +3414,6 @@ object SparkEntry {
     // explicit precision (inputs chosen so every printed value is exact at
     // the printed precision — no cross-engine rounding ties)
     "q_qa_scalar_misc_fns" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderkey,
                SAFE_DIVIDE(o_orderkey, o_orderkey % 3) AS sd_long,
@@ -3584,7 +3432,6 @@ object SparkEntry {
     // grouping_sets_single_value_filter — a WHERE-pinned dim inside
     // GROUPING SETS; interval_arithmetic — CURRENT_TIMESTAMP ± INTERVAL)
     "q_qa_filtered_sum_empty" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(1) FILTER (WHERE user_id = -1) AS BIGINT) AS c_eq,
                CAST(count(1) FILTER (WHERE user_id <> -1) AS BIGINT) AS c_ne,
@@ -3595,7 +3442,6 @@ object SparkEntry {
     }),
 
     "q_qa_notin_values" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT event_type, CAST(count(*) AS BIGINT) AS n
         FROM events
@@ -3604,7 +3450,6 @@ object SparkEntry {
     }),
 
     "q_qa_grouping_sets_filtered_dim" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         WITH base AS (SELECT event_type, CAST(user_id % 3 AS STRING) AS u3
                       FROM events)
@@ -3615,7 +3460,6 @@ object SparkEntry {
     }),
 
     "q_qa_interval_arith" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(CASE WHEN ts < CURRENT_TIMESTAMP - INTERVAL '1' DAY
                            THEN 1 END) AS BIGINT) AS n_past,
@@ -3632,7 +3476,6 @@ object SparkEntry {
     // unbounded-to-preceding frames over ROWS, and value-offset RANGE
     // frames — in one pinned query over a deterministic inner aggregate)
     "q_qa_win_frame_matrix" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         WITH base AS (
           SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
@@ -3669,7 +3512,6 @@ object SparkEntry {
     // bucketing via FLOOR(x/w)*w with a time filter + LIMIT, and the
     // hour×weekday heatmap grid)
     "q_qa_kttm_bucket" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(FLOOR(CAST(value AS DOUBLE) / 0.5) * 0.5 AS DOUBLE) AS bucket,
                CAST(count(*) AS BIGINT) AS n
@@ -3684,7 +3526,6 @@ object SparkEntry {
       // kttm_Stackarea drill-in: the 2-D stacked series — hour bucket ×
       // numeric bin (FLOOR(x/w)*w) under BOTH a time-range and a bin-range
       // filter, exactly the generated console shape
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT date_trunc('hour', ts) AS h,
                CAST(FLOOR(CAST(value AS DOUBLE) / 0.5) * 0.5 AS DOUBLE) AS bin,
@@ -3701,7 +3542,6 @@ object SparkEntry {
       // kttm_sunburst drill-in: a JSON_VALUE-filtered slice (equality +
       // IS NULL branch) under a DISJUNCTION of bin ranges — the generated
       // sunburst segment-click query shape
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(FLOOR(CAST(value AS DOUBLE) / 0.5) * 0.5 AS DOUBLE) AS bin,
                CAST(count(*) AS BIGINT) AS n
@@ -3718,7 +3558,6 @@ object SparkEntry {
     }),
 
     "q_qa_kttm_heatmap" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(extract(HOUR FROM ts) AS BIGINT) AS h,
                CAST(dayofweek(ts) - 1 AS BIGINT) AS dow,
@@ -3734,7 +3573,6 @@ object SparkEntry {
     // previous window (plus an intentionally-empty window pinning the
     // SQL-standard empty-filter semantics: COUNT→0, SUM→NULL)
     "q_qa_kttm_compare" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT
           count(*) FILTER (WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
@@ -3755,7 +3593,6 @@ object SparkEntry {
     // kttm_Line-chart/Stackarea: TIME_FLOOR bucket series with a
     // per-bucket filtered measure
     "q_qa_kttm_timefloor_compare" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT date_trunc('hour', ts) AS bucket,
                count(*) AS cnt,
@@ -3774,7 +3611,6 @@ object SparkEntry {
     // TIME_FLOOR(…, 'PT1H', NULL, 'Etc/UTC') ≡ the 2-arg form under this
     // engine's pinned-UTC sessions)
     "q_qa_kttm_spotmatrix" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT JSON_VALUE(props, '$.k') AS k,
                TIME_FLOOR(ts, 'PT1H') AS t,
@@ -3808,7 +3644,6 @@ object SparkEntry {
     // misc gates)
 
     "q_qa_groupby_on_groupby_timefloor" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderstatus,
                CAST(date_trunc('month', gran) AS DATE) AS mon,
@@ -3822,7 +3657,6 @@ object SparkEntry {
     }),
 
     "q_qa_limit_pushdown_extraction" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderstatus, substring(o_orderpriority, 1, 1) AS p1,
                count(*) AS cnt
@@ -3840,7 +3674,6 @@ object SparkEntry {
     // must share one sort/exchange for the same-partitioning pair and add
     // exactly one more for the second partitioning (pinned in PlanSpec)
     "q_qa_win_multi_partitions" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         WITH base AS (
           SELECT user_id, event_type, count(*) AS n
@@ -3861,7 +3694,6 @@ object SparkEntry {
     // time filter — the planner must recognize the repeated aggregate
     // expression as one aggregate, not re-evaluate per predicate term
     "q_qa_aggr_having_distinct_from" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT date_trunc('hour', ts) AS t, count(*) + 1 AS c
         FROM events
@@ -3880,7 +3712,6 @@ object SparkEntry {
     // string-concatenated AGGREGATE inside HAVING (every term must resolve
     // to the same aggregate instance, not re-aggregate per predicate)
     "q_qa_aggr_battery_having" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         SELECT date_trunc('hour', ts) AS t, '1' || min(event_type) AS c,
                CAST(count(*) AS BIGINT) AS n
@@ -3897,7 +3728,6 @@ object SparkEntry {
     // aggregates and over a TIMESTAMP aggregate shifted by interval
     // arithmetic — both probe families compared in HAVING like the corpus
     "q_qa_aggr_battery_bit_time" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         SELECT date_trunc('hour', ts) AS t,
                CAST(bit_xor(user_id) + 1 AS BIGINT) AS bx,
@@ -3920,7 +3750,6 @@ object SparkEntry {
     // aggr_general A21: the battery over JSON_VALUE OF an aggregate —
     // json extraction composed on top of the aggregated json column
     "q_qa_aggr_battery_json" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         SELECT date_trunc('hour', ts) AS t,
                '1' || JSON_VALUE(min(props), '$$.k') AS c,
@@ -3936,7 +3765,6 @@ object SparkEntry {
     }),
 
     "q_qa_union_all_limit" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT * FROM (
           SELECT c_name AS name, c_acctbal AS bal FROM customer
@@ -3959,7 +3787,6 @@ object SparkEntry {
     // battery (orderby_range_1_preceding_*.iq: 49/50 !error) is pinned in
     // SqlApiSpec — Spark rejects the same shapes at analysis.)
     "q_qa_win_rows_ub_prec" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -3974,7 +3801,6 @@ object SparkEntry {
       // orderby_rows_{1_preceding,0_preceding,1_following,ub_*}_first_last:
       // empty frames at both partition edges must yield NULL, 0 PRECEDING/
       // 0 FOLLOWING must parse as CURRENT ROW
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -3993,7 +3819,6 @@ object SparkEntry {
       // orderby_rows_1_{preceding,following}_sum_count + the
       // strictly-ahead frame (2 FOLLOWING AND 3 FOLLOWING): sum over an
       // empty frame is NULL while count is 0
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4010,7 +3835,6 @@ object SparkEntry {
       // orderby_range_{current,ub_preceding,ub_following}_sum_count over a
       // tie-heavy single ORDER BY key: RANGE frames are peer-group frames,
       // so every row of a tz tie class gets the whole class's sum/count
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4028,7 +3852,6 @@ object SparkEntry {
     "q_qa_win_func_in_func" -> ((s, dir) => {
       // basics_window_func_in_func A1_W1_G1: scalar function wrapping a
       // window aggregate whose argument is itself a function call
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4044,7 +3867,6 @@ object SparkEntry {
     // a value-offset frame spans VALUE distance, not row distance, so tie
     // classes and value gaps behave differently from ROWS
     "q_qa_win_range_numeric_offset" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4063,7 +3885,6 @@ object SparkEntry {
     // sorts on time_floor(__time, 'PT12H'); a 12-hour offset spans exactly
     // one bucket, a 1-day offset two)
     "q_qa_win_range_interval" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4079,7 +3900,6 @@ object SparkEntry {
     // CLASS (the classic last_value surprise), and CURRENT..UNBOUNDED
     // starts at the class head
     "q_qa_win_range_first_last_peers" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4097,7 +3917,6 @@ object SparkEntry {
     // k > partition size gives each row its own bucket 1..cnt, NTILE(3)
     // spreads remainders into the FIRST buckets
     "q_qa_win_ntile_edges" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4113,7 +3932,6 @@ object SparkEntry {
     // nulls, in which case IGNORE NULLS yields NULL even mid-partition.
     // Spark spells it `f(x) IGNORE NULLS OVER`, DuckDB `f(x IGNORE NULLS)`.
     "q_qa_win_ignore_nulls_frames" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12, v,
@@ -4133,7 +3951,6 @@ object SparkEntry {
     // NTH_VALUE under cumulative / sliding / whole-partition frames — the
     // frame decides WHICH rows are numbered, so nth over a slide moves
     "q_qa_win_nth_value" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4149,7 +3966,6 @@ object SparkEntry {
     // window over a correlated UNNEST (qaUnnest × qaWin): the partition key
     // IS the unnested value — candidate rows multiply before windowing
     "q_qa_win_over_unnest" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT word, p_partkey,
                CAST(count(*) OVER (PARTITION BY word) AS BIGINT) AS word_cnt,
@@ -4164,7 +3980,6 @@ object SparkEntry {
 
     // sql_union_all family: windows straddling a UNION ALL of two sources
     "q_qa_win_over_union" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         WITH u AS (
           SELECT 'c' AS src, CAST(c_nationkey AS BIGINT) AS k, c_custkey AS id
@@ -4182,7 +3997,6 @@ object SparkEntry {
     // basics_multi_windows: six windows with distinct partitionings, frame
     // modes, and an empty OVER () in one projection
     "q_qa_win_multi_windows" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4200,7 +4014,6 @@ object SparkEntry {
     // sql_limit_offset: LIMIT/OFFSET applied AFTER window evaluation — the
     // cumulative sums must reflect the full input, not the page
     "q_qa_win_limit_offset" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT cli, srv, tz, t12,
@@ -4213,7 +4026,6 @@ object SparkEntry {
     // sql_select_distinct: DISTINCT over whole-partition window outputs
     // collapses each partition to one row
     "q_qa_win_distinct" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT DISTINCT cli,
@@ -4225,7 +4037,6 @@ object SparkEntry {
     // basics_data_types_and_exprs: window aggregates over string, timestamp
     // and numeric arguments in one projection
     "q_qa_win_datatypes" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4241,7 +4052,6 @@ object SparkEntry {
     // window ORDER BY over a null-bearing expression (engine defaults
     // differ — Spark asc=nulls-first, DuckDB asc=nulls-last)
     "q_qa_win_nulls_order" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12, v,
@@ -4258,7 +4068,6 @@ object SparkEntry {
     // sql_subquery_with_where: outer WHERE over rank fractions computed in
     // a subquery (rank pages, percent_rank/cume_dist round-pinned)
     "q_qa_win_rank_subq_filter" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT * FROM (
@@ -4273,7 +4082,6 @@ object SparkEntry {
     // orderby DESC families: value-offset RANGE frames over a DESCENDING
     // numeric key — "preceding" walks toward larger values
     "q_qa_win_desc_range" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4288,7 +4096,6 @@ object SparkEntry {
     // basics_window_and_aggr: window aggregates whose ARGUMENTS are
     // expressions (arithmetic, CASE, function calls) — not bare columns
     "q_qa_win_expr_args" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4303,7 +4110,6 @@ object SparkEntry {
     // sql_subquery_with_where pagination idiom: global row_number paged
     // with BETWEEN in the outer query
     "q_qa_win_pagination" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT * FROM (
@@ -4316,7 +4122,6 @@ object SparkEntry {
     // LEAD/LAG with typed defaults (string default, zero offset ≡ current
     // row, timestamp argument)
     "q_qa_win_lead_lag_typed" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4332,7 +4137,6 @@ object SparkEntry {
     // stacked windows: an outer window over an inner window's output
     // (rank of running sums)
     "q_qa_win_stacked" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase),
         inner_w AS (
@@ -4350,7 +4154,6 @@ object SparkEntry {
     // tie-heavy rank fractions: percent_rank/cume_dist where the whole
     // partition can be one tie class
     "q_qa_win_tie_fractions" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4362,7 +4165,6 @@ object SparkEntry {
 
     // basics_group_by: a window ranking GROUP BY aggregates, under HAVING
     "q_qa_win_group_by_having" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT cli, CAST(sum(n) AS BIGINT) AS tot,
@@ -4377,7 +4179,6 @@ object SparkEntry {
     // BEFORE the join multiplies rows, so the per-side first/last/cnt
     // values replicate, not recompute, across the join fanout
     "q_qa_win_join_self" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase),
         win AS (
@@ -4400,7 +4201,6 @@ object SparkEntry {
     // block as GROUP BY — evaluated over the grouped output, so the running
     // count(tz) numbers group rows, not raw rows
     "q_qa_win_groupby_running" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT user_id % 3 AS srv, event_type AS cli,
                CAST(user_id % 5 AS STRING) AS tz,
@@ -4423,7 +4223,6 @@ object SparkEntry {
     // rows but grouping collapses them back, so window output matches the
     // single-source shape while any count(*) aggregate doubles
     "q_qa_win_union_groupby" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT user_id % 3 AS srv, event_type AS cli,
                CAST(count(*) AS BIGINT) AS n,
@@ -4441,7 +4240,6 @@ object SparkEntry {
     // basics_window_and_aggr A1_G1_Q2: a named WINDOW clause shared by
     // several functions (row_number / sum / first_value all OVER w)
     "q_qa_win_named_window" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4460,7 +4258,6 @@ object SparkEntry {
     // (DuckDB parses but does not implement GROUPS either, so the oracle
     // states the same peer-class definition through dense_rank)
     "q_qa_win_mixed_frames" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4482,7 +4279,6 @@ object SparkEntry {
     // PRECEDING frame INCLUDES the previous bucket on 23 h days but
     // EXCLUDES it on 25 h days — a fixed-24 h mental model gets both wrong
     "q_qa_win_range_interval_dst" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       val daily = t(s, dir)("orders")
         .groupBy(graft.operators.Windows
           .timeFloorZone(col("o_orderdate").cast("timestamp"), "P1D",
@@ -4502,7 +4298,6 @@ object SparkEntry {
     // single row of a 1-row partition (denominator n-1 = 0), cume_dist
     // counts the whole peer class, NTILE(2) on a 1-row partition is 1
     "q_qa_win_percent_edges" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4519,7 +4314,6 @@ object SparkEntry {
     // ROWS frames yield count 0 / sum NULL at the partition edges — the
     // corpus's 0_preceding/0_following suites pin exactly this boundary
     "q_qa_win_empty_frames" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4539,7 +4333,6 @@ object SparkEntry {
     // DOUBLE)+0.123 ASC, timezone, time_floor): redundant derived keys must
     // not perturb the ordering or the frame contents
     "q_qa_win_multi_sortkey_expr" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4562,7 +4355,6 @@ object SparkEntry {
     // results — length(first_value(..)), concat of two different windows,
     // and arithmetic combining two window aggregates in one expression
     "q_qa_win_scalar_chain" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4584,7 +4376,6 @@ object SparkEntry {
     // as value semantics; Spark requires the window in the projection,
     // ordered by its alias)
     "q_drill_window_star_orderby" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT *, CAST(sum(n) OVER w AS BIGINT) AS s,
                CAST(count(n) OVER w AS BIGINT) AS c,
@@ -4602,7 +4393,6 @@ object SparkEntry {
     // partition (sorted + joined so the value is deterministic); the empty
     // OVER () variant collects across the entire input
     "q_drill_window_list_agg" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT grp, cli, n,
                array_join(array_sort(collect_list(cli) OVER
@@ -4619,7 +4409,6 @@ object SparkEntry {
     // subquery — the window evaluates fully before the outer count/sum,
     // even when the outer query keeps none of the window's input columns
     "q_qa_win_agg_over_window" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT CAST(count(*) AS BIGINT) AS c,
@@ -4639,7 +4428,6 @@ object SparkEntry {
     // ASC NULLS LAST then DESC NULLS FIRST on later keys, under a bounded
     // frame — the null placement of EACH key independently shapes frames
     "q_qa_win_mixed_null_dirs" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12, v,
@@ -4659,7 +4447,6 @@ object SparkEntry {
     // variance/stddev over a 3-row window — partials must combine exactly
     // (rounded identically on both sides)
     "q_drill_window_var_sliding" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4677,7 +4464,6 @@ object SparkEntry {
     // unnest → GROUP BY → window: running aggregates over the GROUPED
     // output of an exploded array (qaUnnest × window composition)
     "q_qa_unnest_group_window" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT word, n,
                CAST(row_number() OVER (ORDER BY n DESC, word) AS BIGINT) AS rk,
@@ -4696,7 +4482,6 @@ object SparkEntry {
     // hybrids, and FIRST/LAST over a symmetric value window — value
     // distance, not row distance, decides membership everywhere
     "q_qa_win_range_matrix_full" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4721,7 +4506,6 @@ object SparkEntry {
     // (current-row-only and whole-partition), which both engines define
     // deterministically without a sort key.
     "q_qa_win_frame_no_orderby" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4745,7 +4529,6 @@ object SparkEntry {
     // (later duplicates are no-op tie-breaks on an already-decided key), and
     // frames walk the resulting order.
     "q_qa_win_dup_sortkey" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4768,7 +4551,6 @@ object SparkEntry {
     // 1-row frame (the aggregate sees only the frame; lag still reaches
     // outside it)
     "q_qa_win_lag_ignores_frame" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4786,7 +4568,6 @@ object SparkEntry {
     // CURRENT ROW peers, wrapped in a subquery FILTERED on one of the
     // window outputs — windows must evaluate before the outer predicate
     "q_drill_window_named_mixed" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT * FROM (
@@ -4809,7 +4590,6 @@ object SparkEntry {
     // Drill misc q15: the full ranking+aggregate battery over ONE shared
     // global (partition-less) named window ordered DESC
     "q_drill_window_all_funcs" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4830,7 +4610,6 @@ object SparkEntry {
     // Drill statistical_aggregates + empty-partition variants: sample
     // variance over a 1-row partition is NULL, population variance 0
     "q_drill_window_var_stat" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4845,7 +4624,6 @@ object SparkEntry {
     // computed in a subquery, aggregated by the OUTER query — the frame
     // result is an input column to a plain GROUP BY
     "q_drill_window_frame_in_subq" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT cli, CAST(max(run) AS BIGINT) AS max_run,
@@ -4861,7 +4639,6 @@ object SparkEntry {
     // DESC time-ordered RANGE INTERVAL frame: "PRECEDING" under DESC walks
     // toward LARGER timestamps, so the 12-hour bound faces the other way
     "q_qa_win_range_interval_desc" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH w AS ($winSparkBase)
         SELECT srv, cli, tz, t12,
@@ -4898,7 +4675,6 @@ object SparkEntry {
     // raw value through an implicit cast; both dialects here cast
     // explicitly.)
     "q_qa_scalar_datetime_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         SELECT CAST(count(*) FILTER (WHERE
                  ${battery("ts", "ts - INTERVAL 2 YEAR", "ts + INTERVAL 2 YEAR", "STRING")}) AS BIGINT) AS cnt_time,
@@ -4914,7 +4690,6 @@ object SparkEntry {
     // recomputes the parse arithmetically, so a wrong octet weight or
     // byte order would break the count equality)
     "q_qa_scalar_ipv4_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         WITH ips AS (
           SELECT ip, IPV4_PARSE(ip) AS ipl FROM (
@@ -4934,7 +4709,6 @@ object SparkEntry {
     }),
 
     "q_qa_scalar_string_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         SELECT CAST(count(*) FILTER (WHERE
                  ${battery("'1' || event_type", "'0' || event_type",
@@ -4950,7 +4724,6 @@ object SparkEntry {
       // (the reference's greatest/least ignore NULL arguments — so does
       // Spark; the DuckDB oracle drops the NULL argument to express the
       // same value)
-      Tables.registerAll(s, dir)
       s.sql(s"""
         SELECT CAST(count(*) FILTER (WHERE
                  ${battery("'1' || greatest(user_id, 1L, CAST(NULL AS BIGINT))",
@@ -4972,7 +4745,6 @@ object SparkEntry {
     }),
 
     "q_qa_scalar_numeric_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql(s"""
         SELECT CAST(count(*) FILTER (WHERE
                  ${battery("user_id * 2 + 1", "user_id * 2", "user_id * 2 + 2", "STRING")}) AS BIGINT) AS cnt_long,
@@ -4989,7 +4761,6 @@ object SparkEntry {
     // aggregation over an aggregate, extraction functions inside an IN
     // subquery)
     "q_qa_join_semi_anti_simul" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n
         FROM orders
@@ -5001,7 +4772,6 @@ object SparkEntry {
     }),
 
     "q_qa_join_union_inputs" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT n_name, CAST(count(*) AS BIGINT) AS n FROM (
           SELECT c_nationkey AS k FROM customer WHERE c_acctbal > 9000
@@ -5027,7 +4797,6 @@ object SparkEntry {
     // aggregates on the floored key, UNION ALL where both branches are
     // joins, and two simultaneous IN semi joins
     "q_qa_join_cast_key" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT n_name, count(*) AS n
         FROM orders JOIN nation
@@ -5036,7 +4805,6 @@ object SparkEntry {
     }),
 
     "q_qa_join_isnull_filter" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT c_mktsegment, count(*) AS n
         FROM customer LEFT JOIN
@@ -5048,7 +4816,6 @@ object SparkEntry {
     }),
 
     "q_qa_join_timefloor_agg" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(a.d AS TIMESTAMP) AS d, a.n_orders, b.n_lines
         FROM (SELECT date_trunc('month', o_orderdate) AS d, count(*) AS n_orders
@@ -5065,7 +4832,6 @@ object SparkEntry {
     // re-aggregation above a self-join — the planner must keep one join
     // and collapse the redundant outer grouping
     "q_qa_join_groupby_over_groupby" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT event_type FROM (
           SELECT event_type, ts FROM (
@@ -5080,7 +4846,6 @@ object SparkEntry {
     // testUsingSubqueryAsPartOfAndFilter: IN-subquery semi join AND'ed
     // with a plain predicate under a grouped count
     "q_qa_join_subq_and_filter" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderstatus, o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n
         FROM orders
@@ -5096,7 +4861,6 @@ object SparkEntry {
     // one grouping — plans through Spark's Expand (the reference rewrites
     // to a join of per-distinct subqueries; same results, one pass here)
     "q_qa_multi_count_distinct" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderstatus,
                CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT) AS d_pri,
@@ -5111,7 +4875,6 @@ object SparkEntry {
     // scalar function to the left column — the planner must hoist the
     // function into a pre-join projection, not a post-join filter
     "q_qa_join_fn_on_key" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT c.c_name, r.r_name
         FROM customer c, region r
@@ -5124,7 +4887,6 @@ object SparkEntry {
     // joined to a grouped subquery of the same table, lexicographic
     // dimension ordering with a limit
     "q_qa_join_topn_limit" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT f1.o_orderpriority AS pri,
                CAST(FLOOR(sum(CAST(f1.o_totalprice AS DECIMAL(18,2)))) AS BIGINT) AS s
@@ -5139,7 +4901,6 @@ object SparkEntry {
     // semi join under an outer COUNT(DISTINCT) grouped and ordered by a
     // time-extract virtual column
     "q_qa_join_semi_time_extract" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n,
                CAST(EXTRACT(DAY FROM ts) AS BIGINT) AS d
@@ -5154,7 +4915,6 @@ object SparkEntry {
     // MV_FILTER_ONLY virtual column (non-matching rows filter to the
     // empty cell and are excluded, like the reference's null MVD)
     "q_qa_join_mv_filter_expr" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         WITH f AS (SELECT p_partkey,
                           MV_FILTER_ONLY(split(p_type, ' '), array('PROMO')) AS mv
@@ -5166,7 +4926,6 @@ object SparkEntry {
     }),
 
     "q_qa_union_two_joins" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT * FROM (
           SELECT 'cust' AS side, c_mktsegment AS k, count(*) AS n
@@ -5182,7 +4941,6 @@ object SparkEntry {
     }),
 
     "q_qa_two_semi_joins" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderpriority, count(*) AS n
         FROM orders
@@ -5212,7 +4970,6 @@ object SparkEntry {
     // whose second is a bare NULL row — type coercion across the union
     // must keep the (BIGINT, STRING) shape
     "q_qa_union_null_branch" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         (SELECT CAST(count(*) AS BIGINT) AS c, o_orderstatus AS ch FROM orders
          WHERE o_orderdate >= DATE '2030-01-01' GROUP BY o_orderstatus)
@@ -5222,7 +4979,6 @@ object SparkEntry {
     }),
 
     "q_qa_nested_groupby_agg" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT pri_class, CAST(count(*) AS BIGINT) AS n_groups,
                CAST(sum(n) AS BIGINT) AS total
@@ -5234,7 +4990,6 @@ object SparkEntry {
     }),
 
     "q_qa_subq_extraction_fn" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT substring(o_orderpriority, 3, 1) AS p, CAST(count(*) AS BIGINT) AS n
         FROM orders
@@ -5252,7 +5007,6 @@ object SparkEntry {
     // fixture onto the events table; each predicate battery must hold for
     // every row, so the oracle pins the engine's operator semantics)
     "q_qa_sql_string_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(*) AS BIGINT) AS cnt FROM events
         WHERE ('1'||event_type IS NULL
@@ -5277,7 +5031,6 @@ object SparkEntry {
     }),
 
     "q_qa_sql_numeric_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(*) AS BIGINT) AS cnt,
                CAST(count(CASE WHEN abs(TRUNCATE(value, 1)) <= abs(value)
@@ -5299,7 +5052,6 @@ object SparkEntry {
     }),
 
     "q_qa_sql_reduction" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(*) AS BIGINT) AS cnt,
                round(sum(greatest(value, 0.5)), 3) AS g_sum,
@@ -5312,7 +5064,6 @@ object SparkEntry {
     }),
 
     "q_qa_sql_datetime_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT date_format(min(TIME_FLOOR(ts, 'PT1H')), 'yyyy-MM-dd HH:mm:ss') AS min_floor,
                date_format(max(TIME_CEIL(ts, 'PT1H')), 'yyyy-MM-dd HH:mm:ss') AS max_ceil,
@@ -5330,7 +5081,6 @@ object SparkEntry {
     }),
 
     "q_qa_sql_other_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(*) AS BIGINT) AS cnt,
           CAST(count(CASE WHEN NVL(NULLIF(event_type, 'zzz'), 'd') = event_type
@@ -5347,7 +5097,6 @@ object SparkEntry {
     }),
 
     "q_qa_sql_ipv4_battery" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT CAST(count(CASE WHEN IPV4_MATCH(ip, '10.0.0.0/8') THEN 1 END) AS BIGINT) AS n_match,
                CAST(count(CASE WHEN IPV4_STRINGIFY(IPV4_PARSE(ip)) = ip THEN 1 END) AS BIGINT) AS n_rt,
@@ -5370,7 +5119,6 @@ object SparkEntry {
 
     // ----------------------------------------------- SQL façade (§3.1, §2.9)
     "q_sql_surface" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS n,
@@ -5386,7 +5134,6 @@ object SparkEntry {
       // SQL EARLIEST/LATEST/EARLIEST_BY/LATEST_BY aggregates (reference
       // EarliestLatestAnySqlAggregator) — injected MinBy/MaxBy, keyed on a
       // unique ordering column for cross-engine determinism
-      Tables.registerAll(s, dir)
       s.sql("""SELECT o_orderpriority,
                       earliest(o_totalprice, o_orderkey) AS first_price,
                       latest(o_orderstatus, o_orderkey) AS last_status,
@@ -5398,7 +5145,6 @@ object SparkEntry {
     "q_sql_ref_compat" -> ((s, dir) => {
       // round-5 reference-SQL compat additions: REGEXP_EXTRACT with group-0
       // default + NULL on no match, DIV integer division, IPV4_MATCH CIDR
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderkey,
                regexp_extract(o_orderpriority, '[0-9]+') AS prio_num,
@@ -5516,7 +5262,6 @@ object SparkEntry {
       // MV_* / ARRAY_* SQL surface (reference
       // MultiValueStringOperatorConversions.java): offsets 0-based,
       // ordinals 1-based, set-add sorted-distinct
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT p_partkey,
                CAST(MV_LENGTH(w) AS BIGINT) AS n_words,
@@ -5535,7 +5280,6 @@ object SparkEntry {
       // scalar SQL surface: TEXTCAT/STRPOS/TRUNCATE, BITWISE_*, TIME_CEIL,
       // TIME_IN_INTERVAL, IPV4_* (reference Function.java + builtin
       // operator conversions)
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderkey,
                TEXTCAT(o_orderstatus, o_orderpriority) AS cat,
@@ -5558,7 +5302,6 @@ object SparkEntry {
       // SizeFormatFunc + TimestampExtractExprMacro). The PARSE_LONG hex
       // round-trip proves radix parsing without a DuckDB base-conv oracle;
       // the three hr_* columns pin each CASE branch with tie-free decimals.
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderkey,
                STRING_FORMAT('%s #%05d', o_orderpriority, o_orderkey) AS tag,
@@ -5612,7 +5355,6 @@ object SparkEntry {
     "q_sql_json_funcs" -> ((s, dir) => {
       // quidem qaJsonCols funcs_and_sql_func_json_{keys,object,paths,query}:
       // the JSON function battery over the stored props column
-      Tables.registerAll(s, dir)
       // array-typed results ride as comma-joined strings: the driver's pandas
       // comparator cannot hash ndarray cells (r7 red gate)
       s.sql(
@@ -5629,7 +5371,6 @@ object SparkEntry {
     "q_sql_pivot" -> ((s, dir) => {
       // reference experimental PIVOT (sql.md:90): rows→columns with an
       // aggregate per pivoted value; one shared standard-syntax text
-      Tables.registerAll(s, dir)
       s.sql(
         """SELECT * FROM (SELECT o_orderstatus, o_orderpriority FROM orders)
            PIVOT (count(*) FOR o_orderstatus IN ('O' AS o, 'F' AS f, 'P' AS p))
@@ -5638,7 +5379,6 @@ object SparkEntry {
 
     "q_sql_unpivot" -> ((s, dir) => {
       // reference experimental UNPIVOT (sql.md:61): columns→rows
-      Tables.registerAll(s, dir)
       s.sql(
         """SELECT o_orderpriority, status, n FROM (
              SELECT o_orderpriority,
@@ -6666,7 +6406,6 @@ object SparkEntry {
       // named lookup resolved through the registry by the SQL LOOKUP fn
       graft.functions.LookupRegistry.register("status_names", Map(
         "F" -> "finished", "O" -> "open", "P" -> "partial"))
-      Tables.registerAll(s, dir)
       s.sql("""SELECT lookup(o_orderstatus, 'status_names', 'unknown') AS status,
                       count(*) AS n
                FROM orders GROUP BY 1 ORDER BY 1""")
@@ -6873,7 +6612,6 @@ object SparkEntry {
 
     "q_scalar_subquery" -> ((s, dir) => {
       // scalar subquery (reference singleValue aggregator enforcement)
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT o_orderpriority, count(*) AS n
         FROM orders
@@ -6884,7 +6622,6 @@ object SparkEntry {
     "q_correlated_subquery" -> ((s, dir) => {
       // correlated subquery → decorrelated join (Catalyst does this free;
       // the reference needs DruidCorrelateUnnestRule/join rewrites)
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT l_orderkey, count(*) AS n_above_avg
         FROM lineitem l1
@@ -6955,7 +6692,6 @@ object SparkEntry {
 
     // ------------------------- typed UDAF extension surface (§2.13)
     "q_agg_geomean" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       s.sql("""SELECT l_returnflag,
                       round(geometric_mean(l_quantity), 6) AS geo_qty,
                       count(*) AS n
@@ -7105,7 +6841,6 @@ object SparkEntry {
       // reference json_object takes variadic KV pairs with heterogeneous
       // value types — number/string/boolean/float in one object, rendered
       // compact and type-preserving in both engines
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT event_id,
                JSON_OBJECT('id', event_id, 'type', event_type,
@@ -7121,7 +6856,6 @@ object SparkEntry {
       // aggregation immune to float accumulation error): Spark's native
       // DECIMAL(38,10) sum IS that capability — exact, order-independent,
       // and rendered at full scale for a digit-exact oracle compare
-      Tables.registerAll(s, dir)
       s.sql("""
         SELECT l_returnflag,
                CAST(sum(CAST(l_extendedprice AS DECIMAL(38,10))) AS STRING)
@@ -7333,7 +7067,6 @@ object SparkEntry {
       // APPROX_QUANTILE_FIXED_BUCKETS. Self-asserting against the exact
       // distinct/median computed in the same query (bounds ≥2× the observed
       // sketch error at these K values).
-      Tables.registerAll(s, dir)
       s.sql("""
         WITH sk AS (
           SELECT event_type,

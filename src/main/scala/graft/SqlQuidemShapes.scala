@@ -132,15 +132,9 @@ object SqlQuidemShapes {
            GROUP BY n_regionkey, n_name LIMIT 30)
          SELECT ranking, trend_score FROM t ORDER BY trend_score"""))
 
-  private def runSpark(s: SparkSession, dir: String, sqlText: String)
-      : DataFrame = {
-    Tables.registerAll(s, dir)
-    graft.api.SqlApi.runSql(s, sqlText)
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, dir: String) => runSpark(s, dir, sparkSql))
+      name -> ((s: SparkSession, _: String) => graft.api.SqlApi.runSql(s, sparkSql))
     }.toMap
 
   def oracleSql: Map[String, String] =

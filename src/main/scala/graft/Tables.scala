@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, LeafNode, LogicalPlan,
   OneRowRelation, Range}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** Table layer: named parquet tables under a scale-factor directory.
@@ -17,6 +18,14 @@ import org.apache.spark.sql.types.StructType
   * `date_trunc('day', __time)` so that interval filters prune partitions
   * (reference behavior: `MoveTimeFiltersToIntervals.java`, mapped to Spark
   * partition pruning — see SURVEY.md §4.1).
+  *
+  * A session's tables are its temp views, as the reference's broker
+  * timeline resolves a datasource name to its current segments:
+  * [[register]] keeps a view while it reads its table's current
+  * [[version]] and re-opens it otherwise. The sf-dir tables, the SQL
+  * warehouse's datasources and [[load]] all go through it. The only table
+  * state kept outside a session is the JVM-wide schema memo
+  * ([[readParquet]]).
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -26,73 +35,46 @@ object Tables {
   /** The reference's mandatory time column name (ColumnHolder.java:32). */
   val TimeColumn = "__time"
 
-  /** Memoized per (session, dir, name): a load costs ~20–40 ms per table
-    * with its schema memoized ([[readParquet]]) and ~170 ms without, and
-    * gate builders call it on every build (the bench builds each gate
-    * three times — warmup + two timed runs).
-    * This caches the immutable logical PLAN, never data or results: every
-    * execution still scans the parquet inputs.
-    *
-    * Keyed by `sessionUUID` (a plain String), NOT by the session object:
-    * a WeakHashMap keyed on the session would never collect, because the
-    * cached DataFrames strongly reference their SparkSession through
-    * `Dataset.sparkSession` — the classic value→key leak (r20 advice).
-    * Stale sessions' entries are swept on the next cache miss instead:
-    * sweep cost is O(live sessions), and entries of closed sessions are
-    * dropped as soon as any other session takes a miss.
+  /** Point the session's temp view `name` at the parquet table at `path`
+    * and return the plan the view holds. The view is the session's one
+    * store of an open table: it is kept while it reads the table's current
+    * [[version]] and re-opened otherwise, whoever changed the files or the
+    * view. A check lists the table's files and the view's: at sf0.1 on 4
+    * cores a [[load]] of a current view took 0.26 ms (median) and a
+    * [[registerAll]] of ten 2.2 ms, where an open costs 20–40 ms with the
+    * schema memoized ([[readParquet]]) and ~170 ms without. A path without
+    * a version is re-opened on every call, and fails as a plain read does.
     */
-  private val loadCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
-
-  /** Drop cached plans owned by sessions that have been stopped (their
-    * SparkContext is gone) or whose SparkSession is no longer registered as
-    * an active/default session. Called on cache misses only — the hot path
-    * (hit) stays a single map read.
-    */
-  // sessionUUID is private[sql] in Spark 4 — read it through the bridge
-  private def sid(s: SparkSession): String =
-    org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)
-
-  private def sweepStaleSessions(live: SparkSession): Unit = {
-    val liveIds = new java.util.HashSet[String]()
-    liveIds.add(sid(live))
-    SparkSession.getActiveSession.foreach(s => liveIds.add(sid(s)))
-    SparkSession.getDefaultSession.foreach(s => liveIds.add(sid(s)))
-    loadCache.keySet.removeIf(k => !liveIds.contains(k))
+  def register(spark: SparkSession, name: String, path: String): LogicalPlan = {
+    val current = version(spark, path)
+    spark.sessionState.catalog.getTempView(name).map(_.child)
+      .filter(p => current.isDefined && planVersion(p) == current)
+      .getOrElse {
+        val df = open(spark, name, path, current)
+        df.createOrReplaceTempView(name)
+        df.queryExecution.analyzed
+      }
   }
 
-  /** Test hook: session ids currently holding cached plans. */
-  private[graft] def cachedSessionIds: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    loadCache.keySet.asScala.toSet
-  }
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = loadCache.computeIfAbsent(sid(spark),
-      _ => scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-    perSession.get((dir, name)) match {
-      case Some(df) => df
-      case None =>
-        // a miss already pays 20–170 ms of table open; piggyback the sweep
-        // here so stale sessions' plans drop without touching the hit path
-        sweepStaleSessions(spark)
-        perSession.getOrElseUpdate((dir, name), loadUncached(spark, dir, name))
-    }
-  }
-
-  private def loadUncached(spark: SparkSession, dir: String, name: String): DataFrame = {
+  private def open(spark: SparkSession, name: String, path: String,
+                   files: Option[Seq[FileVersion]]): DataFrame =
     if (name == "events") {
       // events.ts has shipped as either INT64 TIMESTAMP(NANOS) (which Spark's
       // reader rejects outright without the legacy nanos-as-long conf) or as
       // plain TIMESTAMP(MICROS) with isAdjustedToUTC=false (which Spark 4
       // infers as TIMESTAMP_NTZ).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeTs(readParquet(spark, s"$dir/$name.parquet"))
+      normalizeTs(readParquet(spark, path, files))
     } else {
-      readParquet(spark, s"$dir/$name.parquet")
+      readParquet(spark, path, files)
     }
-  }
+
+  /** Table `name` of the scale-factor directory `dir`, as the session's
+    * view of it reads it: gate builders call this on every build, and a
+    * current view is served without re-opening the table.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    Bridge.ofRows(spark, register(spark, name, s"$dir/$name.parquet"))
 
   /** Confs whose values change the schema Spark infers for a parquet path. */
   private val SchemaConfs = Seq(
@@ -108,8 +90,8 @@ object Tables {
   /** One data file's version: (path, length, modification time). A table's
     * version is the sorted versions of its data files ([[version]]); it is
     * graft's one notion of "this table changed", behind the schema memo,
-    * the warehouse views' freshness and the result cache
-    * ([[graft.api.ResultCache]]).
+    * the freshness of the session's table views ([[register]]) and the
+    * result cache ([[graft.api.ResultCache]]).
     */
   type FileVersion = (String, Long, Long)
 
@@ -187,8 +169,13 @@ object Tables {
     * read can only leave an entry whose file list is already out of date,
     * which never matches.
     */
-  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val key = version(spark, path).map(SchemaKey(_, SchemaConfs.map(spark.conf.getOption)))
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    readParquet(spark, path, version(spark, path))
+
+  /** [[readParquet]] of a path whose [[version]] the caller has listed. */
+  private def readParquet(spark: SparkSession, path: String,
+                          files: Option[Seq[FileVersion]]): DataFrame = {
+    val key = files.map(SchemaKey(_, SchemaConfs.map(spark.conf.getOption)))
     Option(schemaMemo.get(path)) match {
       case Some((k, schema)) if key.contains(k) =>
         spark.read.schema(schema).parquet(path)
@@ -227,26 +214,20 @@ object Tables {
     }
   }
 
-  /** Latest-registered sf dir per session: registerAll is called defensively
-    * before every SQL-text query, and each call replaces ten temp views
-    * (opening the ten tables costs ~0.2–0.4 s at sf0.1 even with their
-    * schemas memoized) — skip when the session's views already point at
-    * `dir`.
-    * (Weak keys: sessions must stay collectable.)
+  /** Register every table of `dir` as a temp view so `spark.sql` works
+    * against the set. A table `dir` does not hold loses its view: a query
+    * naming it fails as an unknown table instead of reading another
+    * directory's, and a gate over inline data builds with any `dir`.
     */
-  private val registeredDir =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
-
-  /** Register every table as a temp view so `spark.sql` works against the
-    * set.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    if (registeredDir.get(spark) != dir) {
-      all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-      registeredDir.put(spark, dir)
+  def registerAll(spark: SparkSession, dir: String): Unit =
+    all.foreach { n =>
+      val path = s"$dir/$n.parquet"
+      try register(spark, n, path)
+      catch {
+        case _: AnalysisException if version(spark, path).isEmpty =>
+          spark.catalog.dropTempView(n)
+      }
     }
-  }
 
   /** Expose a table Druid-style: its event-time column renamed to `__time`.
     * Only `events` (ts) and the date-bearing TPC-H tables have event time.

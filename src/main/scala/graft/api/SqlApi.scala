@@ -2866,23 +2866,16 @@ object SqlApi {
       System.getProperty("java.io.tmpdir") + "/graft_warehouse")
 
   /** Register every warehouse datasource as a temp view so SQL can read
-    * back what INSERT/REPLACE wrote. A view is (re-)registered unless it already reads its table's current
-    * version ([[Tables.version]]), whoever wrote it: an ingest in this or
-    * another session, or a writer outside graft. Opening a table costs
-    * 20–40 ms on a schema-memo hit ([[Tables.readParquet]]); with a handful
-    * of ingested tables, reopening them all on every facade call dominated
-    * its cost (measured ~0.7 s a call), so a call with nothing new only
-    * lists each table's files and reads the view's plan.
+    * back what INSERT/REPLACE wrote, whoever wrote it: an ingest in this or
+    * another session, or a writer outside graft. [[Tables.register]]
+    * re-opens only a view that does not read its table's current version,
+    * so a call with nothing new only lists each table's files.
     */
   private def registerWarehouse(spark: SparkSession): Unit =
     Option(new java.io.File(warehouseDir(spark)).listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).foreach { d =>
-        val path = d.getCanonicalPath
-        val registered =
-          spark.sessionState.catalog.getTempView(d.getName).flatMap(Tables.planVersion)
-        if (Tables.version(spark, path).exists(v => !registered.contains(v)))
-          try Tables.readParquet(spark, path).createOrReplaceTempView(d.getName)
-          catch { case _: Exception => () } // mid-write/empty dir: skip
+        try Tables.register(spark, d.getName, d.getCanonicalPath)
+        catch { case _: Exception => () } // mid-write/empty dir: skip
       }
 
   private[graft] case class IngestStatement(
@@ -3002,8 +2995,7 @@ object SqlApi {
             org.apache.spark.sql.functions.col): _*)
           .write.mode("append").partitionBy(partCol).parquet(path)
     }
-    Tables.readParquet(spark, new java.io.File(path).getCanonicalPath)
-      .createOrReplaceTempView(ing.table)
+    Tables.register(spark, ing.table, new java.io.File(path).getCanonicalPath)
     import spark.implicits._
     Seq((ing.table, path)).toDF("dataSource", "location")
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Spread an EXPENSIVE filter evaluated over a single-task scan across the
   * cluster (guide §2.5: "one huge unsplittable file … repartition
@@ -26,9 +27,10 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *    string splits. Cheap per-row predicates LOSE by shuffling raw rows
   *    (r20 probe: spread-on-aggregate measured 2.3× WORSE on TPC-H), so
   *    the bar is high;
-  *  - NO conjunct is a pushable scan predicate (attribute vs literal) —
-  *    the exchange sits between the scan and the filter, so a pushable
-  *    conjunct would lose its PushedFilters slot;
+  *  - NO conjunct is a pushable scan predicate (one the file source
+  *    strategy translates to a data source filter) — the exchange sits
+  *    between the scan and the filter, so a pushable conjunct would lose
+  *    its PushedFilters slot;
   *  - the scan is SMALL enough to be (near-)single-task: estimated size ≤
   *    2 × spark.sql.files.maxPartitionBytes. At real table sizes the scan
   *    already has thousands of tasks and an extra exchange of payload rows
@@ -71,36 +73,23 @@ object SpreadExpensiveFilter extends Rule[LogicalPlan] with PredicateHelper {
     n
   }
 
-  /** A conjunct the parquet scan could have taken as a pushed filter:
-    * attribute-vs-literal comparison, IN over literals, or null test on a
-    * bare attribute. Conservative: anything of this shape blocks the rule.
+  /** A conjunct the scan of `rel` could have taken as a pushed filter:
+    * one the file source strategy translates, as it does when it plans
+    * the scan.
     */
-  private def pushableConjunct(e: Expression): Boolean = e match {
-    case b: BinaryComparison =>
-      (b.left.isInstanceOf[Attribute] && b.right.foldable) ||
-        (b.right.isInstanceOf[Attribute] && b.left.foldable)
-    case In(a: Attribute, list) => list.forall(_.foldable)
-    case InSet(a: Attribute, _) => true
-    case IsNull(_: Attribute) | IsNotNull(_: Attribute) => true
-    case StartsWith(_: Attribute, Literal(_, _)) => true
-    case EndsWith(_: Attribute, Literal(_, _)) => true
-    case Contains(_: Attribute, Literal(_, _)) => true
-    case _ => false
-  }
+  private def pushable(conjunct: Expression, rel: LogicalRelation): Boolean =
+    Bridge.pushableFilter(conjunct, rel.relation)
 
   /** The scan side: a bare relation, or a relation under the Project that
     * column pruning already placed (kept as-is below the new exchange).
     */
-  private def smallLeafScan(p: LogicalPlan): Boolean = {
+  private def smallLeafScan(p: LogicalPlan): Option[LogicalRelation] = {
     val rel = p match {
       case r: LogicalRelation => Some(r)
       case Project(_, r: LogicalRelation) => Some(r)
       case _ => None
     }
-    rel.exists { r =>
-      val maxSplit = conf.filesMaxPartitionBytes
-      r.stats.sizeInBytes <= BigInt(2L) * BigInt(maxSplit)
-    }
+    rel.filter(_.stats.sizeInBytes <= BigInt(2L) * BigInt(conf.filesMaxPartitionBytes))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -109,10 +98,9 @@ object SpreadExpensiveFilter extends Rule[LogicalPlan] with PredicateHelper {
       .map(_.sparkContext.defaultParallelism).getOrElse(1)
     if (parallelism <= 1) return plan
     plan.transformUpWithSubqueries {
-      case f @ Filter(cond, child)
-          if smallLeafScan(child) &&
-            heavyCalls(cond) >= minHeavyCalls &&
-            splitConjunctivePredicates(cond).forall(c => !pushableConjunct(c)) =>
+      case Filter(cond, child) if smallLeafScan(child).exists(rel =>
+          heavyCalls(cond) >= minHeavyCalls &&
+            !splitConjunctivePredicates(cond).exists(pushable(_, rel))) =>
         Filter(cond, Repartition(parallelism, shuffle = true, child))
     }
   }

@@ -34,12 +34,16 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .withActive(body)
 
-  /** Stable per-session identifier (`sessionUUID` is private[sql]) — a
-    * cache key that does NOT reference the session object, so caches keyed
-    * by it cannot pin the session against collection.
+  /** Whether the file source strategy pushes `predicate` into the scan of
+    * `relation` as a data source filter (`DataSourceStrategy
+    * .translateFilter` is protected[sql]).
     */
-  def sessionUUID(s: org.apache.spark.sql.SparkSession): String =
-    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+  def pushableFilter(predicate: Expression,
+                     relation: org.apache.spark.sql.sources.BaseRelation): Boolean = {
+    import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils}
+    DataSourceStrategy.translateFilter(predicate,
+      DataSourceUtils.supportNestedPredicatePushdown(relation)).isDefined
+  }
 
   /** Deterministically release the storage blocks behind a (local)
     * checkpoint'd Dataset. `Dataset.unpersist()` only talks to the

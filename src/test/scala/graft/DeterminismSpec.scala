@@ -94,4 +94,17 @@ class DeterminismSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.shuffle.partitions", "4")
     }
   }
+
+  test("the gate wrapper's registration is enough: SQL gates answer the same in a session with no views") {
+    spark.sparkContext.setLogLevel("ERROR")
+    Seq("q_tpch_q03", "q_qa_win_join_on_wincol", "q_cjq_semi_anti_simul",
+        "q_squid_grouping_sets_pinned", "q_qasql_tautology_numeric").foreach { gate =>
+      def rows(s: SparkSession): Seq[String] =
+        SparkEntry.queries(gate)(s, dir).collect().map(_.toString).sorted.toSeq
+      val shared = rows(spark)
+      val fresh = spark.newSession()
+      assert(Tables.all.forall(n => !fresh.catalog.tableExists(n)))
+      assert(shared.nonEmpty && rows(fresh) == shared, gate)
+    }
+  }
 }

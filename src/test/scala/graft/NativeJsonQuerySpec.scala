@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.api.{NativeJsonQuery, ResultCache}
+import graft.api.{NativeJsonQuery, ResultCache, SqlApi}
 
 /** JSON query façade shapes not covered by the oracle-gated entries. */
 class NativeJsonQuerySpec extends AnyFunSuite {
@@ -1061,11 +1061,29 @@ class NativeJsonQuerySpec extends AnyFunSuite {
     ResultCache.clear()
   }
 
-  test("result cache: a native hit is not served after an outside rewrite of the table's file") {
-    // a private copy of the tables, so the rewrite leaves the test data alone
+  /** A private copy of the tables, so a rewrite leaves the test data alone. */
+  private def tablesCopy(): java.nio.file.Path = {
     val copy = java.nio.file.Files.createTempDirectory("graft_sf_copy")
     new java.io.File(dir).listFiles().foreach(f =>
       java.nio.file.Files.copy(f.toPath, copy.resolve(f.getName)))
+    copy
+  }
+
+  /** Rewrite `copy`'s nation.parquet from outside graft: region 0's five
+    * nations only.
+    */
+  private def rewriteNation(copy: java.nio.file.Path): Unit = {
+    val out = java.nio.file.Files.createTempDirectory("graft_nation_src").resolve("out")
+    spark.read.parquet(s"$dir/nation.parquet").filter("n_regionkey = 0")
+      .coalesce(1).write.parquet(out.toString)
+    val part = out.toFile.listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, copy.resolve("nation.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("result cache: a native hit is not served after an outside rewrite of the table's file") {
+    val copy = tablesCopy()
     val q = """
       {"queryType": "groupBy", "dataSource": "nation",
        "dimensions": ["n_regionkey"],
@@ -1078,15 +1096,30 @@ class NativeJsonQuerySpec extends AnyFunSuite {
     val before = groups(spark)
     assert(before.map(_._2).sum == 25)
     assert(groups(spark) == before && ResultCache.stats == ((1L, 1L)))
-    // nation.parquet rewritten from outside: region 0's five nations only
-    val out = java.nio.file.Files.createTempDirectory("graft_nation_src").resolve("out")
-    spark.read.parquet(s"$dir/nation.parquet").filter("n_regionkey = 0")
-      .coalesce(1).write.parquet(out.toString)
-    val part = out.toFile.listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(part.toPath, copy.resolve("nation.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    rewriteNation(copy)
     assert(groups(spark.newSession()) == Seq((0L, 5L)))
+  }
+
+  test("result cache: a same-session read after an outside rewrite of an sf table reads the new file, cached or not") {
+    val copy = tablesCopy()
+    def q(cached: Boolean) = s"""
+      {"queryType": "groupBy", "dataSource": "nation",
+       "dimensions": ["n_regionkey"],
+       "aggregations": [{"type": "count", "name": "n"}],
+       "context": {"useCache": $cached, "populateCache": $cached}}"""
+    val s = spark.newSession()
+    def nativeGroups(cached: Boolean): Int =
+      NativeJsonQuery.execute(s, copy.toString, q(cached)).length
+    def sqlGroups(): Int = SqlApi.execute(s, copy.toString, """{
+      "query": "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey",
+      "resultFormat": "csv", "context": {"useCache": true, "populateCache": true}
+    }""").trim.split("\n").length
+    ResultCache.clear()
+    assert(nativeGroups(cached = true) == 5 && sqlGroups() == 5)
+    rewriteNation(copy)
+    assert(nativeGroups(cached = true) == 1, "stale cached native read")
+    assert(nativeGroups(cached = false) == 1, "stale uncached native read")
+    assert(sqlGroups() == 1, "stale cached SQL read")
   }
 
   test("movingAverage densifies the bucket grid on sparse series") {

@@ -593,4 +593,19 @@ class PlanSpec extends AnyFunSuite {
     assert(optimized(created, "q_qasql_tautology_json_keys")
       .contains("Repartition"))
   }
+
+  test("expensive-filter spread: a pushable disjunction keeps the filter on its scan") {
+    GraftSession.attach(spark)
+    val s = spark
+    import s.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_spread").toString + "/t"
+    (1 to 40).map(i => (i % 4, s"k$i")).toDF("a", "s").write.parquet(path)
+    // twelve regex engines: enough heavy calls for the rule
+    val heavy = (0 until 12).map(i => s"regexp_extract(s, 'k($i)', 1) = '$i'")
+      .mkString("(", " OR ", ")")
+    def spread(cond: String): Boolean = s.read.parquet(path).filter(cond)
+      .queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+    assert(spread(heavy), "no pushable conjunct: the filter spreads")
+    assert(!spread(s"(a = 1 OR a = 2) AND $heavy"))
+  }
 }

@@ -577,47 +577,57 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("result cache: a re-ingest changes the files the key reads, so the read misses; DML always executes") {
-    ResultCache.clear()
-    val tbl = "cache_inval_t"
-    def ingest(maxKey: Long): Unit = SqlApi.execute(spark, dir, s"""{
-      "query": "REPLACE INTO $tbl OVERWRITE ALL SELECT o_orderdate AS __time, o_orderkey FROM orders WHERE o_orderkey <= $maxKey PARTITIONED BY DAY"
-    }""")
-    ingest(100)
-    val q = s"""{
-      "query": "SELECT count(*) AS n FROM $tbl",
-      "resultFormat": "csv",
-      "context": {"useCache": true, "populateCache": true}
-    }"""
-    val before = SqlApi.execute(spark, dir, q)
-    // second read hits the cache
-    assert(SqlApi.execute(spark, dir, q) == before)
-    val (h1, _) = ResultCache.stats
-    assert(h1 >= 1)
-    // re-ingest with different data: the cached body must NOT be served
-    ingest(50)
-    val after = SqlApi.execute(spark, dir, q)
-    assert(after != before,
-      s"stale cached result served after ingest: $after")
-    // a write touches no counter: the read after it is one more miss
-    val (h2, m2) = ResultCache.stats
-    assert(h2 >= h1 && m2 >= 1, s"ingest reset the cache stats: ($h2, $m2)")
-    // DML never participates in the cache: a repeated INSERT with cache
-    // flags must EXECUTE (not no-op from a cache hit)
-    def insertDml(): String = SqlApi.execute(spark, dir, s"""{
-      "query": "INSERT INTO cache_inval_app SELECT o_orderdate AS __time, o_orderkey FROM orders WHERE o_orderkey <= 10 PARTITIONED BY DAY",
-      "context": {"useCache": true, "populateCache": true}
-    }""")
-    def countApp(): Long = {
-      insertDml() // ensure the table exists before counting
-      SqlApi.execute(spark, dir,
-        """{"query": "SELECT count(*) AS n FROM cache_inval_app",
-            "resultFormat": "csv"}""").trim.split("\n").last.trim.toLong
+    // a warehouse of its own, removed afterwards: the default one is shared
+    // by every session and run
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_cache_inval")
+    spark.conf.set("spark.graft.warehouse", wh.toString)
+    try {
+      ResultCache.clear()
+      val tbl = "cache_inval_t"
+      def ingest(maxKey: Long): Unit = SqlApi.execute(spark, dir, s"""{
+        "query": "REPLACE INTO $tbl OVERWRITE ALL SELECT o_orderdate AS __time, o_orderkey FROM orders WHERE o_orderkey <= $maxKey PARTITIONED BY DAY"
+      }""")
+      ingest(100)
+      val q = s"""{
+        "query": "SELECT count(*) AS n FROM $tbl",
+        "resultFormat": "csv",
+        "context": {"useCache": true, "populateCache": true}
+      }"""
+      val before = SqlApi.execute(spark, dir, q)
+      // second read hits the cache
+      assert(SqlApi.execute(spark, dir, q) == before)
+      val (h1, _) = ResultCache.stats
+      assert(h1 >= 1)
+      // re-ingest with different data: the cached body must NOT be served
+      ingest(50)
+      val after = SqlApi.execute(spark, dir, q)
+      assert(after != before,
+        s"stale cached result served after ingest: $after")
+      // a write touches no counter: the read after it is one more miss
+      val (h2, m2) = ResultCache.stats
+      assert(h2 >= h1 && m2 >= 1, s"ingest reset the cache stats: ($h2, $m2)")
+      // DML never participates in the cache: a repeated INSERT with cache
+      // flags must EXECUTE (not no-op from a cache hit)
+      def insertDml(): String = SqlApi.execute(spark, dir, s"""{
+        "query": "INSERT INTO cache_inval_app SELECT o_orderdate AS __time, o_orderkey FROM orders WHERE o_orderkey <= 10 PARTITIONED BY DAY",
+        "context": {"useCache": true, "populateCache": true}
+      }""")
+      def countApp(): Long = {
+        insertDml() // ensure the table exists before counting
+        SqlApi.execute(spark, dir,
+          """{"query": "SELECT count(*) AS n FROM cache_inval_app",
+              "resultFormat": "csv"}""").trim.split("\n").last.trim.toLong
+      }
+      val n0 = countApp()   // one insert inside
+      val s0 = ResultCache.stats
+      val n1 = countApp()   // a second insert — must append again, not no-op
+      assert(n1 > n0, s"cached DML must still execute: $n0 -> $n1")
+      assert(ResultCache.stats == s0, "DML with cache flags stays out of the stats")
+    } finally {
+      spark.conf.unset("spark.graft.warehouse")
+      Seq("cache_inval_t", "cache_inval_app").foreach(spark.catalog.dropTempView)
+      org.apache.commons.io.FileUtils.deleteDirectory(wh.toFile)
     }
-    val n0 = countApp()   // one insert inside
-    val s0 = ResultCache.stats
-    val n1 = countApp()   // a second insert — must append again, not no-op
-    assert(n1 > n0, s"cached DML must still execute: $n0 -> $n1")
-    assert(ResultCache.stats == s0, "DML with cache flags stays out of the stats")
   }
 
   /** `n` (or `n,m`) from a headerless csv body. */

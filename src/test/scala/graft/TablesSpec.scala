@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The table layer: the JVM-wide parquet schema memo behind every table
   * open (second sessions open the tables without an inference job, reads
   * are the plain reads, rewrites and schema confs re-infer) and the
-  * per-session plan cache.
+  * session's table views (a load is served from its view while the view
+  * reads the table's current files, and re-opens it otherwise).
   */
 class TablesSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
@@ -146,17 +147,35 @@ class TablesSpec extends AnyFunSuite {
     assert(v == Tables.planVersion(s.read.parquet(path).queryExecution.analyzed))
   }
 
-  test("table-plan cache drops a stale session's entries on the next miss") {
-    val extra = spark.newSession()
-    Tables.load(extra, "/root/testdata/sf0.001", "nation")
-    val extraId = org.apache.spark.sql.graftbridge.Bridge.sessionUUID(extra)
-    assert(Tables.cachedSessionIds.contains(extraId))
-    // `extra` is neither active nor default once the main session takes a
-    // miss on a fresh (dir, name) key → its entries must be swept
-    org.apache.spark.sql.SparkSession.setActiveSession(
-      spark.asInstanceOf[org.apache.spark.sql.SparkSession])
-    Tables.load(spark, "/root/testdata/sf0.001", "region")
-    Tables.load(spark, "/root/testdata/sf0.01", "region")
-    assert(!Tables.cachedSessionIds.contains(extraId))
+  test("a session's table views: a load is served from its view, each dir reads its own files") {
+    val s = freshSession()
+    val first = Tables.load(s, dir, "orders")
+    var second = s.emptyDataFrame
+    assert(jobsDuring { second = Tables.load(s, dir, "orders") } == 0)
+    // a re-open would give the relation new attribute ids
+    assert(second.queryExecution.analyzed == first.queryExecution.analyzed)
+    val other = dir.replace("sf0.001", "sf0.01")
+    val small = Tables.load(s, dir, "lineitem")
+    val big = Tables.load(s, other, "lineitem")
+    assert(small.inputFiles.toSeq.forall(_.contains("/sf0.001/")))
+    assert(big.inputFiles.toSeq.forall(_.contains("/sf0.01/")))
+    assert(small.count() == s.read.parquet(s"$dir/lineitem.parquet").count())
+    assert(big.count() == s.read.parquet(s"$other/lineitem.parquet").count())
+    assert(s.table("lineitem").inputFiles.toSeq == big.inputFiles.toSeq)
+    Tables.registerAll(s, dir) // memoizes all ten schemas
+    assert(jobsDuring(Tables.registerAll(freshSession(), dir)) == 0)
+  }
+
+  test("registerAll re-opens a view that no longer reads its table and drops one whose table is gone") {
+    val s = freshSession()
+    Tables.registerAll(s, dir)
+    s.range(3).toDF("o_orderkey").createOrReplaceTempView("orders")
+    Tables.registerAll(s, dir)
+    val path = s"$dir/orders.parquet"
+    assert(s.table("orders").count() == s.read.parquet(path).count())
+    assert(Tables.planVersion(s.table("orders").queryExecution.analyzed) ==
+      Tables.version(s, path))
+    Tables.registerAll(s, java.nio.file.Files.createTempDirectory("graft_no_tables").toString)
+    assert(Tables.all.forall(n => !s.catalog.tableExists(n)))
   }
 }
