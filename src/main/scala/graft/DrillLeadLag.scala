@@ -329,7 +329,7 @@ object DrillLeadLag {
 
   private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
     // the corpus's FETCH FIRST n ROWS ONLY is Calcite spelling → LIMIT
-    s.sql(graft.api.SqlApi.rewriteFetch(sqlText))
+    s.sql(graft.api.SqlApi.rewriteSql(sqlText, Seq(graft.api.SqlApi.fetch)))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =

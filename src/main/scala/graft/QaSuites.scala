@@ -2964,9 +2964,9 @@ object QaSuites {
   // ------------------------------------------------------------ plumbing ----
 
   private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    // the SAME rewrite pipeline as SqlApi.sql — one shared chain (masking
-    // included), so gates and the facade can never diverge on
-    // FETCH/FLOOR-TO/negative-frame handling.
+    // the SAME dialect passes as SqlApi.sql — one shared pipeline, so
+    // gates and the facade can never diverge on FETCH/FLOOR-TO/
+    // negative-frame handling.
     graft.api.SqlApi.runSql(s, sqlText)
   }
 

@@ -1951,7 +1951,7 @@ object SparkEntry {
 
     "q_sql_floor_to" -> ((s, dir) => {
       // Calcite FLOOR(t TO unit) / CEIL(t TO unit) — the console's time
-      // bucketing syntax, translated by SqlApi.rewriteFloorCeilTo
+      // bucketing syntax, translated by SqlApi.floorCeilTo
       graft.api.SqlApi.run(s, dir, """{
         "query": "SELECT FLOOR(ts TO DAY) AS d, CEIL(ts TO HOUR) AS ch, CAST(count(*) AS BIGINT) AS n FROM events WHERE event_id < 2000 GROUP BY FLOOR(ts TO DAY), CEIL(ts TO HOUR) ORDER BY d, ch"
       }""")
@@ -2650,7 +2650,7 @@ object SparkEntry {
       // time-ordered first/last aggregates composed OVER exploded rows —
       // explosion multiplies rows but the (value, key) pairs keep the
       // aggregate deterministic (event_id is unique per source row)
-      s.sql(graft.api.SqlApi.rewriteUnnest("""
+      s.sql(graft.api.SqlApi.rewriteSql("""
         SELECT w AS word, CAST(count(*) AS BIGINT) AS cnt,
                earliest(event_id, event_id) AS first_id,
                latest(event_id, event_id) AS last_id,
@@ -2660,7 +2660,7 @@ object SparkEntry {
               FROM events CROSS JOIN UNNEST(split(concat_ws('_', event_type,
                      CAST(event_id % 7 AS STRING)), '_')) AS u (w)
               WHERE user_id < 50)
-        GROUP BY w ORDER BY w"""))
+        GROUP BY w ORDER BY w""", Seq(graft.api.SqlApi.unnest)))
     }),
 
     "q_sql_unnest_multi" -> ((s, dir) => {
@@ -2889,7 +2889,7 @@ object SparkEntry {
       // (millennium(1987) → 1970, not the calendar 1000), micro/milliseconds
       // truncate to millis, quarter/week are the calendar floors — Spark's
       // builtin silently NULLs the extended units, hence the shadow builder
-      s.sql(graft.api.SqlApi.rewriteFloorCeilTo(graft.api.SqlApi.rewriteExtractUnits("""
+      s.sql(graft.api.SqlApi.rewriteSql("""
         SELECT CAST(DATE_TRUNC('decade', TIMESTAMP'1987-06-15 10:00:00') AS STRING) AS dec_u,
                CAST(DATE_TRUNC('century', TIMESTAMP'1987-06-15 10:00:00') AS STRING) AS cen_u,
                CAST(DATE_TRUNC('millennium', TIMESTAMP'1987-06-15 10:00:00') AS STRING) AS mil_u,
@@ -2904,7 +2904,8 @@ object SparkEntry {
                CAST(EXTRACT(MILLISECOND FROM TIMESTAMP'1987-06-15 10:00:00.789') AS BIGINT) AS x_ms,
                CAST(FLOOR(TIMESTAMP'1987-06-15 10:00:00' TO DECADE) AS STRING) AS f_dec,
                CAST(CEIL(TIMESTAMP'1987-06-15 10:00:00' TO DECADE) AS STRING) AS c_dec,
-               CAST(CEIL(TIMESTAMP'1987-06-15 10:00:00' TO CENTURY) AS STRING) AS c_cen""")))
+               CAST(CEIL(TIMESTAMP'1987-06-15 10:00:00' TO CENTURY) AS STRING) AS c_cen""",
+        Seq(graft.api.SqlApi.extractUnits, graft.api.SqlApi.floorCeilTo)))
     }),
 
     "q_qa_sql_aggr_general_having" -> ((s, dir) => {
@@ -3625,7 +3626,7 @@ object SparkEntry {
 
     // kttm_Table/Spotmatrix preamble: the console's GROUP BY () global
     // aggregate — Calcite's explicit empty grouping set, which Spark's
-    // parser rejects; SqlApi.rewriteEmptyGroupBy translates it to the
+    // parser rejects; SqlApi.emptyGroupBy translates it to the
     // GROUPING SETS spelling, so the gate goes through the facade
     "q_qa_kttm_groupby_empty" -> ((s, dir) => {
       graft.api.SqlApi.run(s, dir, """{
@@ -4653,7 +4654,7 @@ object SparkEntry {
     // Druid/Calcite single-bound FOLLOWING frame shorthand through the SQL
     // facade: `ROWS UNBOUNDED FOLLOWING` / `ROWS 1 FOLLOWING` mean BETWEEN
     // CURRENT ROW AND <b> FOLLOWING (qaWin orderby_*_following corpora;
-    // SqlApi.rewriteSuffixFrames — Spark's parser rejects the lone bound)
+    // SqlApi.suffixFrames — Spark's parser rejects the lone bound)
     "q_qa_win_suffix_frames" -> ((s, dir) => {
       val q = "SELECT user_id % 3 AS srv, event_type AS cli, " +
         "CAST(user_id % 5 AS VARCHAR) AS tz, " +

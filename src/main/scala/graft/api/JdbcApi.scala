@@ -413,8 +413,8 @@ object JdbcApi {
 
   /** Minimal SQL lexer feeding the parameter-type scan: identifiers
     * (qualified names kept whole), numbers, string literals (kept quoted),
-    * multi-char comparison operators, single-char punctuation. Comments and
-    * double-quoted identifiers follow [[countPlaceholders]]'s rules.
+    * multi-char comparison operators, single-char punctuation. Comments are
+    * skipped; a double-quoted identifier becomes its bare name.
     */
   private[graft] def lex(sql: String): Vector[String] = {
     val out = Vector.newBuilder[String]
@@ -459,27 +459,9 @@ object JdbcApi {
     out.result()
   }
 
-  /** Count `?` placeholders outside quoted regions and line comments —
-    * the same lexical rules as [[SqlApi.bind]].
+  /** Count `?` placeholders outside string literals, quoted identifiers
+    * and comments — the same tokens [[SqlApi.bind]] binds.
     */
-  private[graft] def countPlaceholders(sql: String): Int = {
-    var i = 0; var n = 0
-    while (i < sql.length) {
-      sql.charAt(i) match {
-        case '\'' | '"' =>
-          val q = sql.charAt(i); i += 1
-          while (i < sql.length && sql.charAt(i) != q) i += 1
-          i += 1
-        case '-' if i + 1 < sql.length && sql.charAt(i + 1) == '-' =>
-          val nl = sql.indexOf('\n', i)
-          i = if (nl < 0) sql.length else nl + 1
-        case '/' if i + 1 < sql.length && sql.charAt(i + 1) == '*' =>
-          val end = sql.indexOf("*/", i + 2)
-          i = if (end < 0) sql.length else end + 2
-        case '?' => n += 1; i += 1
-        case _ => i += 1
-      }
-    }
-    n
-  }
+  private[graft] def countPlaceholders(sql: String): Int =
+    SqlTokens.lex(sql).count(_.is("?"))
 }

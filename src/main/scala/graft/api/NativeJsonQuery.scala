@@ -32,9 +32,24 @@ object NativeJsonQuery {
   /** The native expression language's `substring`/`strpos` differ from the
     * same-named SQL functions (0-based, NULL past end / Java indexOf with
     * -1) — Function.java:2824,2867. Expression virtual columns and
-    * expression filters carry NATIVE text, so reroute those two names to
-    * the druid_-prefixed builders; string literals are masked first so
-    * content can't be rewritten.
+    * expression filters carry NATIVE text, so reroute those calls to the
+    * druid_-prefixed builders, on the facade's tokens ([[SqlTokens]]) so a
+    * string literal's content is never rewritten:
+    *  - native bivariate max/min (Function.java Max:1852/Min:1879) are
+    *    null-propagating scalars, not the SQL aggregates;
+    *  - native `if` runs its condition through asBoolean (numerics true
+    *    iff > 0), off Spark's IF (nonzero = true);
+    *  - native unix_timestamp parses ISO (or a Joda pattern), not Spark's
+    *    'yyyy-MM-dd HH:mm:ss' default;
+    *  - the native json_value macro resolves NEGATIVE array indexes from
+    *    the end (NestedPathArrayElement) — only the SQL layer's
+    *    virtual-column planning nulls them — so it goes to the guard-free
+    *    walker variant;
+    *  - the two-arg `cast(x, 'TYPE')` (Function.java CastFunc:1986 —
+    *    string→number via computeNumber, never an error) goes to
+    *    `druid_cast`, while the SQL-style `CAST(x AS TYPE)` (which some
+    *    native tests carry verbatim) stays on Spark's builtin: the
+    *    discriminator is a top-level comma inside the call.
     *
     * Documented residual dialect divergences (operators, not function
     * names, so a lexical reroute can't fix them without a type-aware
@@ -45,70 +60,25 @@ object NativeJsonQuery {
     * `concat`). The function forms are registered and exact.
     */
   private def rewriteNativeExpr(text: String): String = {
-    val (masked, lits) = graft.api.SqlApi.maskLiterals(text)
-    val rerouted = rerouteCasts(masked
-      .replaceAll("(?i)\\bsubstring\\s*\\(", "druid_substring(")
-      .replaceAll("(?i)\\bstrpos\\s*\\(", "druid_strpos(")
-      // native bivariate max/min (Function.java Max:1852/Min:1879) are
-      // null-propagating scalars, not the SQL aggregates — reroute so the
-      // aggregate names stay Spark's
-      .replaceAll("(?i)\\bmax\\s*\\(", "druid_max(")
-      .replaceAll("(?i)\\bmin\\s*\\(", "druid_min(")
-      // native `if` runs its condition through asBoolean (numerics true
-      // iff > 0) — reroute off Spark's IF (nonzero = true)
-      .replaceAll("(?i)\\bif\\s*\\(", "druid_if(")
-      // native unix_timestamp parses ISO (or a Joda pattern), not Spark's
-      // 'yyyy-MM-dd HH:mm:ss' default
-      .replaceAll("(?i)\\bunix_timestamp\\s*\\(", "druid_unix_timestamp(")
-      // the native json_value macro resolves NEGATIVE array indexes from
-      // the end (NestedPathArrayElement) — only the SQL layer's
-      // virtual-column planning nulls them, so reroute to the guard-free
-      // walker variant
-      .replaceAll("(?i)\\bjson_value\\s*\\(", "json_value_native("))
-    graft.api.SqlApi.unmaskLiterals(rerouted, lits)
+    import SqlTokens._
+    val ts = lex(text)
+    render(ts.indices.map { i =>
+      val t = ts(i)
+      val open = seq(ts, next(ts, i + 1), "(")
+      if (t.kind != Word || open < 0) t
+      else NativeCalls.get(t.text.toLowerCase) match {
+        case Some(to) => Tok(Word, to)
+        case None if t.is("cast") && splitTop(ts, open + 1, close(ts, open)).size > 1 =>
+          Tok(Word, "druid_cast")
+        case None => t
+      }
+    })
   }
 
-  /** Reroute the native expression language's two-arg `cast(x, 'TYPE')`
-    * (Function.java CastFunc:1986 — string→number via computeNumber, never
-    * an error) to the `druid_cast` builder, while leaving the SQL-style
-    * `CAST(x AS TYPE)` (which some native tests carry verbatim) on Spark's
-    * builtin. The discriminator is a TOP-LEVEL comma inside the call —
-    * literals are already masked, so commas in strings can't confuse it.
-    */
-  private def rerouteCasts(s: String): String = {
-    val lower = s.toLowerCase
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val idx = lower.indexOf("cast", i)
-      if (idx < 0) { out.append(s.substring(i)); i = s.length }
-      else {
-        val wordStart = idx == 0 || {
-          val c = lower.charAt(idx - 1)
-          !Character.isLetterOrDigit(c) && c != '_'
-        }
-        var j = idx + 4
-        while (j < s.length && s.charAt(j).isWhitespace) j += 1
-        if (wordStart && j < s.length && s.charAt(j) == '(') {
-          var depth = 1; var k = j + 1; var topComma = false
-          while (k < s.length && depth > 0) {
-            val c = s.charAt(k)
-            if (c == '(') depth += 1
-            else if (c == ')') depth -= 1
-            else if (c == ',' && depth == 1) topComma = true
-            k += 1
-          }
-          out.append(s.substring(i, idx))
-          out.append(if (topComma) "druid_cast" else s.substring(idx, idx + 4))
-          out.append(s.substring(idx + 4, j + 1))
-          out.append(rerouteCasts(s.substring(j + 1, k - 1)))
-          out.append(s.substring(k - 1, k))
-          i = k
-        } else { out.append(s.substring(i, idx + 4)); i = idx + 4 }
-      }
-    }
-    out.toString
-  }
+  private val NativeCalls = Map("substring" -> "druid_substring",
+    "strpos" -> "druid_strpos", "max" -> "druid_max", "min" -> "druid_min",
+    "if" -> "druid_if", "unix_timestamp" -> "druid_unix_timestamp",
+    "json_value" -> "json_value_native")
 
   private def nativeExpr(text: String): Column = expr(rewriteNativeExpr(text))
 

@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.types._
 
 import graft.{GraftSession, Tables}
+import SqlTokens._
 
 /** SQL-over-HTTP facade — the reference's primary user-facing API
   * (`POST /druid/v2/sql`; payload shape `sql/src/main/java/org/apache/druid/
@@ -32,17 +33,26 @@ import graft.{GraftSession, Tables}
   * the (PLAN, RESOURCES, ATTRIBUTES) row of the reference's explain handler
   * (`sql/.../planner/QueryHandler.java` planExplanation), and the reference's
   * `CROSS JOIN UNNEST(expr) AS alias (col)` SQL surface
-  * (`sql/.../rel/DruidCorrelateUnnestRel.java`) is translated to Spark's
-  * LATERAL VIEW explode. Everything else is plain Spark SQL — the engine's
-  * SQL dialect is a superset, so reference queries run unchanged.
+  * (`sql/.../rel/DruidCorrelateUnnestRel.java`) is translated to a lateral
+  * explode. The query is lexed once, on Calcite's lexical rules
+  * ([[SqlTokens]]); parameter binding, the dialect passes from Calcite
+  * spellings to Spark SQL ([[pipeline]]) and the table functions all work
+  * on those tokens, so none of them can fire inside a string literal, a
+  * quoted identifier or a comment. Everything else is plain Spark SQL.
   */
 object SqlApi {
 
-  /** Compile the payload's SQL (parameters bound, UNNEST translated) to a
+  /** Compile the payload's SQL (parameters bound, dialect rewritten) to a
     * DataFrame. EXPLAIN PLAN FOR payloads produce the one-row explain result.
     */
-  def run(spark: SparkSession, dir: String, payload: String): DataFrame = {
-    val j = JsonMethods.parse(payload)
+  def run(spark: SparkSession, dir: String, payload: String): DataFrame =
+    compile(spark, dir, JsonMethods.parse(payload))._2
+
+  /** The one compile step of a parsed payload: its dialect-rewritten SQL
+    * (as [[sql(j)]] gives it) and its DataFrame.
+    */
+  private def compile(spark: SparkSession, dir: String,
+                      j: JValue): (String, DataFrame) = {
     GraftSession.attach(spark)
     Tables.registerAll(spark, dir)
     registerWarehouse(spark)
@@ -58,7 +68,8 @@ object SqlApi {
       spark.conf.set("spark.graft.sqlReverseLookup", v.toString))
     bool(ctxValue(j, "sqlPullUpLookup")).foreach(v =>
       spark.conf.set("spark.graft.sqlPullUpLookup", v.toString))
-    val sqlText = calciteLiteralEscape(rewriteTableFunctions(spark, dir, sql(j)))
+    val ts = dialect(j)
+    val sqlText = renderCalcite(rewriteTableFunctions(spark, dir, ts))
     // context.sqlTimeZone (reference PlannerContext.getTimeZone): the query
     // plans under the requested zone — Catalyst's ResolveTimeZone bakes the
     // session zone into datetime expressions at ANALYSIS time, so setting
@@ -76,7 +87,7 @@ object SqlApi {
     val DqKey = "spark.sql.ansi.doubleQuotedIdentifiers"
     val TzKey = "spark.sql.session.timeZone"
     val tz = str(ctxValue(j, "sqlTimeZone"))
-    ingestTarget(sqlText) match {
+    val df = ingestTarget(sqlText) match {
       case Some(ing) =>
         confScopeLock(spark).synchronized {
           val prevDq = spark.conf.getOption(DqKey)
@@ -132,6 +143,7 @@ object SqlApi {
           }
         }
     }
+    (render(ts), df)
   }
 
   /** Per-session lock for the scoped-conf parse window above (weak keys:
@@ -175,8 +187,7 @@ object SqlApi {
   /** Everything result-affecting in the payload besides the plan itself:
     * dir, the parameter-bound SQL, result format + header flags, and caps.
     */
-  private def sqlCacheKey(dir: String, j: JValue): String = {
-    val boundSql = sql(j) // SET statements folded, parameters bound
+  private def sqlCacheKey(dir: String, j: JValue, boundSql: String): String = {
     val flags = Seq("resultFormat", "header", "typesHeader", "sqlTypesHeader")
       .map(k => k + "=" + JsonMethods.compact(JsonMethods.render(j \ k)))
     val ctxFlags = Seq("maxSubqueryRows", "sqlOuterLimit", "sqlTimeZone",
@@ -204,14 +215,13 @@ object SqlApi {
     // compile+execute runs under the lane/total permits so capacity counts
     // in-flight queries, and rejection happens before any work is planned
     QueryLanes.withAdmission(str(ctxValue(j, "lane"))) {
-      executeAdmitted(spark, dir, payload, j, out, capped)
+      executeAdmitted(spark, dir, j, out, capped)
     }
   }
 
-  private def executeAdmitted(spark: SparkSession, dir: String,
-                              payload: String, j: JValue,
+  private def executeAdmitted(spark: SparkSession, dir: String, j: JValue,
                               out: java.io.Writer, capped: Boolean): Unit = {
-    val df0 = run(spark, dir, payload)
+    val (boundSql, df0) = compile(spark, dir, j)
     // reference sqlStringifyArrays: complex-typed result columns render as
     // JSON strings (the reference's default for non-array-aware formats;
     // here opt-in so the native array rendering stays the default)
@@ -280,17 +290,17 @@ object SqlApi {
           it.next()
         }
       }
-      render(rows, df.schema, j, out)
+      renderRows(rows, df.schema, j, out)
     }
     // execute's cache flags buffer the body through ResultCache; else it goes
-    // to `out`. DML has already run in `run`: it stays out of the cache and its stats
+    // to `out`. DML has already run in `compile`: it stays out of the cache and its stats
     def flag(k: String) = capped && ctxValue(j, k) == JBool(true)
     val useCache = flag("useCache")
     val populateCache = flag("populateCache")
     def respond(): Unit =
-      if (!useCache && !populateCache || ingestTarget(sql(j)).isDefined) body(out)
+      if (!useCache && !populateCache || ingestTarget(boundSql).isDefined) body(out)
       else out.write(ResultCache.through(
-          ResultCache.key(sqlCacheKey(dir, j), df.queryExecution.analyzed),
+          ResultCache.key(sqlCacheKey(dir, j, boundSql), df.queryExecution.analyzed),
           useCache, populateCache, (b: String) => b.length <= MaxCachedBodyChars) {
         val buf = new java.io.StringWriter()
         body(buf)
@@ -324,7 +334,7 @@ object SqlApi {
                                         sqlText: String): DataFrame = {
     // Druid is LENIENT where ANSI throws: implicit string→number casts
     // over dirty values ('' sums as null), size-of-null, invalid casts.
-    // The pipeline's rewriteDoubleQuotedIdents covers the one ANSI
+    // The pipeline's doubleQuotedIdents covers the one ANSI
     // feature the facade used (double-quoted identifiers), so ANSI is
     // off at the SQL boundary — scoped to THIS call: every Dataset built
     // below analyzes eagerly (Bridge.ofRows / Dataset construction), so
@@ -1872,9 +1882,10 @@ object SqlApi {
     }
   }
 
-  /** The battery/gate SQL runner: full rewrite pipeline + Calcite
-    * division dialect + window-in-ORDER-BY splicing. One entry point so
-    * the QA batteries, the audit sweep, and the facade share semantics.
+  /** The battery/gate SQL runner: the facade's dialect passes over the
+    * lexed text ([[rewriteSql]]) + Calcite division dialect +
+    * window-in-ORDER-BY splicing. One entry point so the QA batteries and
+    * the facade share semantics.
     */
   def runSql(spark: SparkSession, sqlText: String): DataFrame =
     // withActive: the MVD/lookup registries' session-scoped overlays and
@@ -1901,215 +1912,100 @@ object SqlApi {
     sets.getOrElse(key, j \ "context" \ key)
   }
 
-  /** Bound + UNNEST-translated SQL text of a payload (SET statements
+  /** Bound, dialect-rewritten SQL text of a payload (SET statements
     * stripped — fold them into the context via [[setStatements]]).
     */
-  private[graft] def sql(j: JValue): String = {
+  private[graft] def sql(j: JValue): String = render(dialect(j))
+
+  /** A payload's query, lexed once: parameters bound, every dialect pass
+    * applied.
+    */
+  private def dialect(j: JValue): Toks = {
     val raw = str(j \ "query").getOrElse(
       throw new IllegalArgumentException("payload requires a query field"))
     val params = j \ "parameters" match {
       case JArray(xs) => xs; case _ => Nil
     }
-    // literal masking: the text rewrites below are regex-driven and would
-    // otherwise also fire inside single-quoted string literals (a literal
-    // containing "FLOOR(x TO DAY)" or "GROUP BY ()" would be corrupted
-    // before parsing). Each literal's content is swapped for an opaque
-    // placeholder before the rewrites and restored after — the rewrites
-    // still see a literal token where one was (so FLOOR(TIME_PARSE('...')
-    // TO DAY) keeps matching), but can never match text inside one.
-    val (masked, lits) = maskLiterals(bind(setStatements(raw)._2, params))
-    unmaskLiterals(rewritePipeline(masked), lits)
+    pipeline.foldLeft(bind(lex(setStatements(raw)._2), params))((ts, p) => p(ts))
   }
 
-  /** Calcite string literals do NOT process backslash escapes — '\|' is
-    * the two characters backslash+pipe (a regex-escaped pipe for the
-    * split functions; ops_funcs_mv_funcs A1_B15 splits 'a|b' on '\|') —
-    * while Spark's parser unescapes them ('\|' → '|', '\n' → newline).
-    * Doubling each backslash inside the masked-out literals makes Spark's
-    * unescaping return the original characters, giving payload SQL the
-    * reference's literal semantics. Applied as the LAST text step before
-    * the facade hands SQL to Spark's parser (after the structural rewrites
-    * — rewriteTableFunctions reads the TRUE literal text for its EXTERN
-    * JSON arguments). Gate batteries enter through rewriteSql and keep
-    * Spark dialect.
-    */
-  private def calciteLiteralEscape(sqlText: String): String = {
-    val (masked, lits) = maskLiterals(sqlText)
-    unmaskLiterals(masked, lits.map(_.replace("\\", "\\\\")))
-  }
+  private[graft] type Pass = Toks => Toks
 
-  /** The full rewrite pipeline over MASKED SQL text — the ONE chain shared
-    * by the facade ([[sql(j)]]) and the QA gate runner
-    * (`QaSuites.runSpark`), so the two entry points can never diverge on
-    * FETCH / FLOOR-TO / negative-frame handling.
+  /** The dialect passes from Calcite spellings to Spark SQL, in order: the
+    * ONE list shared by the facade ([[sql(j)]]) and the gate runner
+    * ([[rewriteSql]]), so the two can never diverge on FETCH / FLOOR-TO /
+    * negative-frame handling. Passes see tokens, so a string literal, a
+    * quoted identifier or a comment never matches one.
     */
-  private[graft] def rewritePipeline(masked: String): String =
-    rewriteJsonObject(rewriteJsonReturning(rewriteUnnest(rewriteEmptyGroupBy(
-      rewriteSuffixFrames(rewriteInBooleanTest(rewriteCastTry(rewriteCastTypes(rewriteArrayBrackets(
-        rewriteFloorCeilTo(rewriteFetch(
-          rewritePositionFrom(rewriteExtractUnits(
-            rejectNegativeFrameBounds(rewriteConcatAggDistinct(
-              rewriteNiladicPi(rewriteIntervalPrecision(
-                rewriteDoubleQuotedIdents(masked))))))))))))))))))
+  private[graft] val pipeline: Seq[Pass] = Seq(doubleQuotedIdents, intervals,
+    niladicPi, concatAggDistinct, negativeFrameBounds, extractUnits,
+    positionFrom, fetch, floorCeilTo, arrayBrackets, castTypes, castTry,
+    inBooleanTest, suffixFrames, emptyGroupBy, unnest, jsonReturning,
+    jsonObject)
+
+  /** Lex → `passes` (the whole pipeline by default) → render, for plain
+    * SQL text (no payload binding) — the gate-runner entry point.
+    */
+  private[graft] def rewriteSql(sqlText: String,
+                                passes: Seq[Pass] = pipeline): String =
+    render(passes.foldLeft(lex(sqlText))((ts, p) => p(ts)))
+
+  /** Druid (Calcite) double-quotes IDENTIFIERS - a quoted column in
+    * every console-generated query - where Spark's default (ANSI off)
+    * reads a string literal. Backtick them.
+    */
+  private[graft] def doubleQuotedIdents(ts: Toks): Toks = ts.map {
+    case Tok(Ident, t) if t.length > 1 && t.startsWith("\"") && t.endsWith("\"") =>
+      Tok(Ident, "`" + t.substring(1, t.length - 1).replace("\"\"", "\"") + "`")
+    case t => t
+  }
 
   /** Calcite interval literals carry an optional leading-field precision —
     * `INTERVAL '63' DAY (3)` (TPC-H Q1 as the reference's qaTpch corpus
     * writes it) — that Spark's grammar rejects. The precision only bounds
-    * the literal's digits, never its value, so it is dropped. Anchored on
-    * the masked-literal INTERVAL token so a bare `YEAR(col)` function call
-    * can never match.
+    * the literal's digits, never its value, so it is dropped. Calcite's
+    * `INTERVAL 'n' QUARTER` — a unit Spark's grammar lacks — is spelled as
+    * the month interval scaled by 3 (multiplication binds tighter than the
+    * +/- the interval participates in), its precision dropped too.
     */
-  private[graft] def rewriteIntervalPrecision(sqlText: String): String =
-    rewriteQuarterInterval(sqlText).replaceAll(
-      "(?i)\\b(INTERVAL\\s+'" + "\u0001" + "\\d+" + "\u0001" + "'\\s+" +
-        "(?:DAY|MONTH|YEAR|HOUR|MINUTE|SECOND))\\s*\\(\\s*\\d+\\s*\\)",
-      "$1")
+  private[graft] def intervals(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val lit = seq(ts, i, "INTERVAL", "'")
+    val unit = if (lit < 0) -1
+      else seq(ts, next(ts, lit + 1), "QUARTER|DAY|MONTH|YEAR|HOUR|MINUTE|SECOND")
+    val precision = if (unit < 0) -1 else seq(ts, next(ts, unit + 1), "(", "#", ")")
+    if (unit >= 0 && ts(unit).is("QUARTER"))
+      Some((math.max(unit, precision) + 1,
+        "(" + render(ts.slice(i, unit)) + "MONTH * 3)"))
+    else if (precision >= 0) Some((precision + 1, render(ts.slice(i, unit + 1))))
+    else None
+  }
 
-  /** Calcite's `INTERVAL 'n' QUARTER` — a unit Spark's grammar lacks —
-    * spelled as the month interval scaled by 3 (multiplication binds
-    * tighter than the +/- the interval participates in, and the rewrite
-    * never needs the masked literal's value). A leading-field precision
-    * `QUARTER(2)` is consumed here: this rewrite runs BEFORE the generic
-    * precision stripper, whose unit list lacks QUARTER — leaving the
-    * `(2)` dangling after `MONTH * 3` would no longer parse.
+  /** Calcite's niladic `PI` — usable without parens (`SELECT pi AS col`,
+    * qaArray scalar batteries) — becomes Spark's pi() call; pi() calls and
+    * qualified names (`t.pi`, `pi.x`) stay.
     */
-  private[graft] def rewriteQuarterInterval(sqlText: String): String =
-    sqlText.replaceAll(
-      "(?i)\\b(INTERVAL\\s+'[^']*'\\s+)QUARTER\\b\\s*(?:\\(\\s*\\d+\\s*\\))?",
-      "($1MONTH * 3)")
+  private[graft] def niladicPi(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    if (ts(i).is("PI") && seq(ts, prev(ts, i), ".") < 0 &&
+        seq(ts, next(ts, i + 1), "(|.") < 0) Some((i + 1, "pi()"))
+    else None
+  }
 
   /** ARRAY_CONCAT_AGG(DISTINCT x) — the builder's NULL-for-all-NULL-groups
     * wrapper means it can't return a bare AggregateFunction, so Spark's
     * DISTINCT syntax can't reach it; reroute to the dedicated
     * ARRAY_CONCAT_AGG_DISTINCT builder (sorted distinct element set, the
     * reference's array_set_add_all TreeSet fold —
-    * ops_funcs_agg_funcs A1_B30_C1_D1: [null, 0, 1]).
+    * ops_funcs_agg_funcs A1_B30_C1_D1: [null, 0, 1]). STRING_AGG(DISTINCT
+    * …) emits the SORTED distinct set in the reference (the distinct fold
+    * is a TreeSet — CalciteQueryTest testStringAgg: ',1,10.1,2,abc,def');
+    * the dedicated aggregate dedups + sorts internally, so the keyword
+    * drops.
     */
-  private[graft] def rewriteConcatAggDistinct(sqlText: String): String =
-    // runs on MASKED text (rewritePipeline input has string literals
-    // swapped for <idx> placeholders), so a literal containing
-    // 'ARRAY_CONCAT_AGG(DISTINCT' can never match; the lookbehind keeps
-    // backtick-quoted identifiers ending in the function name out too
-    sqlText.replaceAll("(?is)(?<![`\\w])ARRAY_CONCAT_AGG\\s*\\(\\s*DISTINCT\\b",
-      "ARRAY_CONCAT_AGG_DISTINCT(")
-      // STRING_AGG(DISTINCT …) emits the SORTED distinct set in the
-      // reference (the distinct fold is a TreeSet — CalciteQueryTest
-      // testStringAgg: ',1,10.1,2,abc,def'); the dedicated aggregate
-      // dedups + sorts internally, so the keyword drops
-      .replaceAll("(?is)(?<![`\\w])(?:STRING_AGG|LISTAGG)\\s*\\(\\s*DISTINCT\\b",
-        "STRING_AGG_SORTED(")
-
-  /** Calcite's niladic `PI` — usable without parens (`SELECT pi AS col`,
-    * qaArray scalar batteries) — becomes Spark's pi() call. Word-bounded
-    * and not followed by `(` or `.`, so pi() calls and qualified columns
-    * survive; runs on masked text.
-    */
-  private[graft] def rewriteNiladicPi(sqlText: String): String =
-    sqlText.replaceAll("(?i)(?<![\\w.`])PI(?![\\w(.`])", "pi()")
-
-  /** Mask → full pipeline → unmask, for plain SQL text (no payload
-    * binding) — the gate-runner entry point.
-    */
-  private[graft] def rewriteSql(sqlText: String): String = {
-    val (masked, lits) = maskLiterals(sqlText)
-    unmaskLiterals(rewritePipeline(masked), lits)
-  }
-
-  /** Calcite's SQL-standard row-limit spellings — `FETCH FIRST|NEXT n
-    * ROWS ONLY` and `OFFSET n ROWS` (the reference accepts both; the Drill
-    * window corpus writes them) — normalized to Spark's LIMIT/OFFSET.
-    * Runs on masked text so literals can't match.
-    */
-  private[graft] def rewriteFetch(sqlText: String): String =
-    sqlText
-      // Combined SQL-standard paging first: Calcite writes OFFSET before
-      // FETCH, but Spark's grammar only accepts LIMIT before OFFSET.
-      .replaceAll("(?is)\\bOFFSET\\s+(\\d+)\\s+ROWS?\\s+FETCH\\s+" +
-        "(?:FIRST|NEXT)\\s+(\\d+)\\s+ROWS?\\s+ONLY\\b", "LIMIT $2 OFFSET $1")
-      .replaceAll("(?is)\\bOFFSET\\s+(\\d+)\\s+ROWS?\\s+FETCH\\s+" +
-        "(?:FIRST|NEXT)\\s+ROW\\s+ONLY\\b", "LIMIT 1 OFFSET $1")
-      .replaceAll("(?is)\\bOFFSET\\s+(\\d+)\\s+ROWS?\\b", "OFFSET $1")
-      .replaceAll("(?is)\\bFETCH\\s+(?:FIRST|NEXT)\\s+(\\d+)\\s+ROWS?\\s+ONLY\\b",
-        "LIMIT $1")
-      // Count-less form: FETCH FIRST ROW ONLY = 1 row.
-      .replaceAll("(?is)\\bFETCH\\s+(?:FIRST|NEXT)\\s+ROW\\s+ONLY\\b", "LIMIT 1")
-
-  /** Calcite EXTRACT units Spark's builtin lacks or numbers differently —
-    * EPOCH (seconds), MILLISECOND/MICROSECOND, DECADE/CENTURY/MILLENNIUM,
-    * ISODOW/ISOYEAR, and DOW (the reference's TimeExtract is Joda ISO
-    * Monday=1..Sunday=7 where Spark's DOW is Sunday-based) — rerouted to
-    * the TIME_EXTRACT builder, which implements the reference's
-    * TimestampExtractExprMacro unit set. Standard units stay on Spark's
-    * builtin. Balanced-paren scan; runs on masked text.
-    */
-  private[graft] def rewriteExtractUnits(sqlText: String): String = {
-    val Re = ("""(?i)\bEXTRACT\s*\(\s*(EPOCH|MILLISECOND|MICROSECOND|DECADE""" +
-      """|CENTURY|MILLENNIUM|ISODOW|ISOYEAR|DOW)\s+FROM\b""").r
-    def loop(s: String, from: Int): String =
-      Re.findFirstMatchIn(s.substring(from)) match {
-        case None => s
-        case Some(m) =>
-          val start = from + m.start
-          val open = s.indexOf('(', start)
-          val close = matchParen(s, open)
-          val unit = m.group(1).toUpperCase
-          val inner = s.substring(start + m.matched.length, close).trim
-          val repl = s"time_extract($inner, '$unit')"
-          loop(s.substring(0, start) + repl + s.substring(close + 1), start)
-      }
-    loop(sqlText, 0)
-  }
-
-  /** Calcite's `POSITION(needle IN haystack FROM start)` — the FROM-start
-    * form Spark's grammar lacks (PositionOperatorConversion; the qaAggFuncs
-    * string_agg corpus writes it). `locate(needle, haystack, start)` has
-    * the identical contract: 1-based index in the FULL string, search
-    * starting at `start`, 0 when absent. Balanced-paren scan (operands may
-    * nest calls); the no-FROM form stays on Spark's builtin.
-    */
-  private[graft] def rewritePositionFrom(sqlText: String): String = {
-    val Re = """(?i)\bPOSITION\s*\(""".r
-    def topLevelToken(s: String, token: String): Int = {
-      val up = s.toUpperCase
-      var depth = 0
-      var i = 0
-      while (i < s.length) {
-        s.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-            def boundary(c: Char): Boolean = !(c.isLetterOrDigit || c == '_')
-            if (depth == 0 && up.startsWith(token, i) &&
-                (i == 0 || boundary(up.charAt(i - 1))) &&
-                (i + token.length >= s.length ||
-                 boundary(up.charAt(i + token.length))))
-              return i
-        }
-        i += 1
-      }
-      -1
-    }
-    def loop(s: String, from: Int): String =
-      Re.findFirstMatchIn(s.substring(from)) match {
-        case None => s
-        case Some(m) =>
-          val open = s.indexOf('(', from + m.start)
-          val close = matchParen(s, open)
-          val inner = s.substring(open + 1, close)
-          val inIdx = topLevelToken(inner, "IN")
-          val fromIdx = topLevelToken(inner, "FROM")
-          if (inIdx < 0 || fromIdx < 0 || fromIdx < inIdx)
-            loop(s, close + 1) // plain POSITION(x IN y) — Spark handles it
-          else {
-            val needle = inner.substring(0, inIdx).trim
-            val hay = inner.substring(inIdx + 2, fromIdx).trim
-            val start = inner.substring(fromIdx + 4).trim
-            val repl = s"locate($needle, $hay, $start)"
-            loop(s.substring(0, from + m.start) + repl +
-              s.substring(close + 1), from + m.start)
-          }
-      }
-    loop(sqlText, 0)
+  private[graft] def concatAggDistinct(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val d = seq(ts, i, "ARRAY_CONCAT_AGG|STRING_AGG|LISTAGG", "(", "DISTINCT")
+    if (d < 0) None
+    else Some((d + 1,
+      if (ts(i).is("ARRAY_CONCAT_AGG")) "ARRAY_CONCAT_AGG_DISTINCT(" else "STRING_AGG_SORTED("))
   }
 
   /** Calcite (and therefore the reference) rejects any NEGATIVE window-frame
@@ -2118,146 +2014,118 @@ object SqlApi {
     * are the same Catalyst bound (both `UnaryMinus(1)`), so the optimizer
     * rule [[graft.plans.RejectInvertedFrames]] can only catch the inverted
     * subset; the negated-literal spelling must be rejected here on the SQL
-    * text (masked, so string literals can't match). PRECEDING/FOLLOWING are
-    * reserved frame keywords, so `- <num> PRECEDING|FOLLOWING` can only be a
-    * frame bound.
+    * tokens. PRECEDING/FOLLOWING are reserved frame keywords, so
+    * `- <num> PRECEDING|FOLLOWING` can only be a frame bound.
     */
-  private[graft] def rejectNegativeFrameBounds(sqlText: String): String = {
-    if ("""(?is)-\s*\d+(?:\.\d+)?\s+(PRECEDING|FOLLOWING)\b""".r
-          .findFirstIn(sqlText).isDefined)
+  private[graft] def negativeFrameBounds(ts: Toks): Toks = {
+    if (ts.indices.exists(seq(ts, _, "-", "#", "PRECEDING|FOLLOWING") >= 0))
       throw new IllegalArgumentException(
         "Window frame bound amounts must be non-negative")
-    sqlText
+    ts
   }
 
-  /** Calcite's JSON_OBJECT syntaxes — `JSON_OBJECT(KEY k VALUE v, …)` and
-    * `JSON_OBJECT(k : v, …)` (what the reference's SQL and the qaJsonCols
-    * corpus write) — normalized to the plain pair-call form
-    * `json_object(k, v, …)` the registered variadic builder accepts. Only
-    * TOP-LEVEL `KEY`/`VALUE` tokens and `:` separators inside a
-    * json_object(…) call are touched (scan is balanced-paren aware and runs
-    * on masked text, so literals can't match); nested json_object calls
-    * recurse.
+  /** Calcite EXTRACT units Spark's builtin lacks or numbers differently —
+    * EPOCH (seconds), MILLISECOND/MICROSECOND, DECADE/CENTURY/MILLENNIUM,
+    * ISODOW/ISOYEAR, and DOW (the reference's TimeExtract is Joda ISO
+    * Monday=1..Sunday=7 where Spark's DOW is Sunday-based) — rerouted to
+    * the TIME_EXTRACT builder, which implements the reference's
+    * TimestampExtractExprMacro unit set. Standard units stay on Spark's
+    * builtin.
     */
-  /** Split on top-level commas (paren-aware; assumes masked literals). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var d = 0; var start = 0; var p = 0
-    while (p < s.length) {
-      val c = s.charAt(p)
-      if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (c == ',' && d == 0) { out += s.substring(start, p); start = p + 1 }
-      p += 1
-    }
-    out += s.substring(start)
-    out.result()
+  private[graft] def extractUnits(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val from = seq(ts, i, "EXTRACT", "(", "EPOCH|MILLISECOND|MICROSECOND|DECADE" +
+      "|CENTURY|MILLENNIUM|ISODOW|ISOYEAR|DOW", "FROM")
+    val open = next(ts, i + 1)
+    val end = if (from < 0) -1 else close(ts, open)
+    if (end < 0) None
+    else Some((end + 1, s"time_extract(${span(ts, from + 1, end)}, " +
+      s"'${ts(next(ts, open + 1)).text.toUpperCase}')"))
   }
 
-  private[graft] def rewriteJsonObject(sqlText: String): String = {
-    val lower = sqlText.toLowerCase
-    val out = new StringBuilder
-    var i = 0
-    while (i < sqlText.length) {
-      val idx = lower.indexOf("json_object", i)
-      if (idx < 0) { out.append(sqlText.substring(i)); i = sqlText.length }
-      else {
-        val wordStart = idx == 0 || {
-          val c = lower.charAt(idx - 1)
-          !Character.isLetterOrDigit(c) && c != '_'
-        }
-        var j = idx + "json_object".length
-        while (j < sqlText.length && sqlText.charAt(j).isWhitespace) j += 1
-        if (wordStart && j < sqlText.length && sqlText.charAt(j) == '(') {
-          var depth = 1; var k = j + 1
-          while (k < sqlText.length && depth > 0) {
-            val c = sqlText.charAt(k)
-            if (c == '(') depth += 1 else if (c == ')') depth -= 1
-            k += 1
-          }
-          val inner = rewriteJsonObject(sqlText.substring(j + 1, k - 1))
-          // top-level token pass over the (recursively rewritten) arg text:
-          // `KEY` counts as syntax only at an ARGUMENT START (so a column
-          // named key/value elsewhere is untouched), and `VALUE` only when
-          // a KEY opened the current argument
-          val normalized = {
-            val sb = new StringBuilder
-            var d = 0; var p = 0
-            var argStart = true; var expectValue = false
-            val innerLower = inner.toLowerCase
-            def isWordBoundary(pos: Int): Boolean =
-              pos < 0 || pos >= inner.length || {
-                val c = inner.charAt(pos)
-                !Character.isLetterOrDigit(c) && c != '_'
-              }
-            while (p < inner.length) {
-              val c = inner.charAt(p)
-              if (c.isWhitespace) { sb.append(c); p += 1 }
-              else if (c == '(') { d += 1; argStart = false; sb.append(c); p += 1 }
-              else if (c == ')') { d -= 1; sb.append(c); p += 1 }
-              else if (d == 0 && c == ',') {
-                argStart = true; expectValue = false; sb.append(c); p += 1
-              }
-              else if (d == 0 && c == ':') {
-                argStart = false; sb.append(','); p += 1
-              }
-              else if (d == 0 && argStart && innerLower.startsWith("key", p) &&
-                  isWordBoundary(p - 1) && isWordBoundary(p + 3)) {
-                argStart = false; expectValue = true; p += 3
-              }
-              else if (d == 0 && expectValue &&
-                  innerLower.startsWith("value", p) &&
-                  isWordBoundary(p - 1) && isWordBoundary(p + 5)) {
-                expectValue = false; sb.append(','); p += 5
-              }
-              else { argStart = false; sb.append(c); p += 1 }
-            }
-            sb.toString
-          }
-          // values that are SYNTACTICALLY json-typed (json_query /
-          // parse_json / try_parse_json / a nested json_object, or the
-          // concat('{' … construction a nested rewrite just produced)
-          // EMBED as nested documents like the reference's COMPLEX<json>
-          // values (func_json_object.03) — and the reference PRESERVES the
-          // source document's key order, so embedding splices the
-          // serialized text directly instead of re-parsing through Spark's
-          // key-sorting variant. Plain values JSON-encode through the
-          // to_json(array(v)) trick, which keeps their Spark TYPE (numbers
-          // stay numbers, strings quote+escape).
-          def isJsonTypedText(t: String): Boolean =
-            t.toLowerCase.matches(
-              "(?s)(json_query|json_object|parse_json|try_parse_json)\\s*\\(.*") ||
-            t.matches("(?s)concat\\s*\\(\\s*'\\{'.*")
-          val args = splitTopLevel(normalized)
-          val hasJsonValue = args.size % 2 == 0 && args.zipWithIndex.exists {
-            case (a, ix) => ix % 2 == 1 && isJsonTypedText(a.trim)
-          }
-          out.append(sqlText.substring(i, idx))
-          if (hasJsonValue) {
-            def enc(e: String) =
-              s"substr(to_json(array(($e))), 2, length(to_json(array(($e)))) - 2)"
-            val parts = args.grouped(2).map { case Seq(k0, v0) =>
-              val kk = enc(s"CAST((${k0.trim}) AS STRING)")
-              val t = v0.trim
-              val vv =
-                if (isJsonTypedText(t)) s"coalesce(CAST(($t) AS STRING), 'null')"
-                else s"coalesce(${enc(t)}, 'null')"
-              s"$kk, ':', $vv"
-            }.mkString(", ',', ")
-            out.append(s"concat('{', $parts, '}')")
-          } else {
-            out.append("json_object")
-              .append(sqlText.substring(idx + "json_object".length, j + 1))
-            out.append(normalized).append(')')
-          }
-          i = k
-        } else {
-          out.append(sqlText.substring(i, idx + "json_object".length))
-          i = idx + "json_object".length
-        }
-      }
+  /** Calcite's `POSITION(needle IN haystack FROM start)` — the FROM-start
+    * form Spark's grammar lacks (PositionOperatorConversion; the qaAggFuncs
+    * string_agg corpus writes it). `locate(needle, haystack, start)` has
+    * the identical contract: 1-based index in the FULL string, search
+    * starting at `start`, 0 when absent. The no-FROM form stays on Spark's
+    * builtin.
+    */
+  private[graft] def positionFrom(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val open = seq(ts, i, "POSITION", "(")
+    val end = if (open < 0) -1 else close(ts, open)
+    val in = topLevel(ts, open + 1, end, "IN")
+    val from = topLevel(ts, open + 1, end, "FROM")
+    if (in < 0 || from < in) None
+    else Some((end + 1, s"locate(${span(ts, open + 1, in)}, " +
+      s"${span(ts, in + 1, from)}, ${span(ts, from + 1, end)})"))
+  }
+
+  /** Calcite's SQL-standard row-limit spellings — `FETCH FIRST|NEXT n
+    * ROWS ONLY` and `OFFSET n ROWS` (the reference accepts both; the Drill
+    * window corpus writes them) — normalized to Spark's LIMIT/OFFSET.
+    * Calcite writes OFFSET before FETCH, but Spark's grammar only accepts
+    * LIMIT before OFFSET; a count-less FETCH FIRST ROW ONLY is 1 row.
+    */
+  private[graft] def fetch(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val off = seq(ts, i, "OFFSET", "#", "ROW|ROWS")
+    val f = if (off >= 0) next(ts, off + 1) else i
+    val n = seq(ts, f, "FETCH", "FIRST|NEXT", "#", "ROW|ROWS", "ONLY")
+    val one = seq(ts, f, "FETCH", "FIRST|NEXT", "ROW", "ONLY")
+    val limit =
+      if (n >= 0) Some((n + 1, "LIMIT " + ts(seq(ts, f, "FETCH", "FIRST|NEXT", "#")).text))
+      else if (one >= 0) Some((one + 1, "LIMIT 1"))
+      else None
+    def offset = "OFFSET " + ts(next(ts, i + 1)).text
+    (limit, off >= 0) match {
+      case (Some((end, l)), true) => Some((end, l + " " + offset))
+      case (None, true) => Some((off + 1, offset))
+      case (l, false) => l
     }
-    out.toString
+  }
+
+  private val CeilPeriods = Map("YEAR" -> "P1Y", "QUARTER" -> "P3M",
+    "MONTH" -> "P1M", "WEEK" -> "P1W", "DAY" -> "P1D", "HOUR" -> "PT1H",
+    "MINUTE" -> "PT1M", "SECOND" -> "PT1S", "DECADE" -> "P10Y",
+    "CENTURY" -> "P100Y", "MILLENNIUM" -> "P1000Y", "MILLISECOND" -> "PT0.001S")
+
+  /** Calcite's `FLOOR(expr TO unit)` / `CEIL(expr TO unit)` — the syntax
+    * the reference's own SQL (and every Druid console query) uses for time
+    * bucketing; Spark's parser has no TO form. FLOOR maps to date_trunc,
+    * CEIL to the engine's TIME_CEIL with the unit's ISO period.
+    */
+  private[graft] def floorCeilTo(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val open = seq(ts, i, "FLOOR|CEIL|CEILING", "(")
+    val end = if (open < 0) -1 else close(ts, open)
+    val unit = prev(ts, end)
+    val to = prev(ts, unit)
+    if (end < 0 || !CeilPeriods.contains(ts(unit).text.toUpperCase) || !ts(to).is("TO") ||
+        to <= next(ts, open + 1)) None
+    else {
+      val expr = span(ts, open + 1, to)
+      val u = ts(unit).text.toUpperCase
+      Some((end + 1,
+        if (ts(i).is("FLOOR")) s"date_trunc('$u', $expr)"
+        else s"TIME_CEIL($expr, '${CeilPeriods(u)}')"))
+    }
+  }
+
+  // Druid has NO decimal type — a literal with a decimal point is a
+  // DOUBLE (math/expr grammar), while Spark parses 0.1 as DECIMAL(1,1),
+  // whose ARRAY type then refuses to compare with a double-array
+  // column. Bare decimal-literal elements get the double cast.
+  private val DecLit = """-?\d+\.\d+(?:[eE][+-]?\d+)?""".r
+
+  /** Calcite's bracket array constructor — `ARRAY[1, 0, NULL]`, the
+    * spelling every reference corpus uses — to Spark's `array(...)` call
+    * form (array literals nest: ARRAY[ARRAY[1]]).
+    */
+  private[graft] def arrayBrackets(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val open = seq(ts, i, "ARRAY", "[")
+    val end = if (open < 0) -1 else close(ts, open)
+    if (end < 0) None
+    else Some((end + 1, splitTop(ts, open + 1, end).map { case (a, b) =>
+      val e = span(ts, a, b)
+      if (DecLit.matches(e)) s"CAST($e AS DOUBLE)" else e
+    }.mkString("array(", ", ", ")")))
   }
 
   /** Calcite's unparameterized string types: Druid SQL accepts
@@ -2265,96 +2133,23 @@ object SqlApi {
     * (sql/.../planner/Calcites.java type mappings); Spark requires a
     * length on VARCHAR/CHAR, so map the bare forms to STRING. Only the
     * `AS <type>)` CAST tail is touched — `RETURNING VARCHAR` (JSON_VALUE)
-    * keeps its own handling in rewriteJsonReturning.
+    * keeps its own handling in [[jsonReturning]]. The SQL-standard
+    * collection type `CAST(x AS BIGINT ARRAY)` (Calcite;
+    * CalciteArraysQueryTest testArrayToMvPostaggInline) becomes Spark's
+    * ARRAY<T>, so `VARCHAR ARRAY` lands as ARRAY<STRING>.
     */
-  /** Calcite's bracket array constructor — `ARRAY[1, 0, NULL]`, the
-    * spelling every reference corpus uses — to Spark's `array(...)` call
-    * form. Balanced-bracket scan (array literals nest: ARRAY[ARRAY[1]]);
-    * runs on masked text so literals can't match.
-    */
-  private[graft] def rewriteArrayBrackets(sqlText: String): String = {
-    val Re = """(?i)\bARRAY\s*\[""".r
-    def matchBracket(s: String, open: Int): Int = {
-      var depth = 0; var i = open
-      while (i < s.length) {
-        s.charAt(i) match {
-          case '[' => depth += 1
-          case ']' => depth -= 1; if (depth == 0) return i
-          case _ =>
-        }
-        i += 1
+  private[graft] def castTypes(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val arr = seq(ts, i, "AS", "VARCHAR|CHAR|BIGINT|INTEGER|SMALLINT|TINYINT" +
+      "|DOUBLE|FLOAT|REAL|BOOLEAN|TIMESTAMP|DATE", "ARRAY", ")")
+    val str = seq(ts, i, "AS", "VARCHAR|CHAR", ")")
+    if (arr >= 0) {
+      val et = ts(next(ts, i + 1)).text.toUpperCase match {
+        case "VARCHAR" | "CHAR" => "STRING"
+        case t => t
       }
-      -1
-    }
-    // Druid has NO decimal type — a literal with a decimal point is a
-    // DOUBLE (math/expr grammar), while Spark parses 0.1 as DECIMAL(1,1),
-    // whose ARRAY type then refuses to compare with a double-array
-    // column. Bare decimal-literal elements get the double cast.
-    val DecLit = """^-?\d+\.\d+(?:[eE][+-]?\d+)?$""".r
-    def splitElems(s: String): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      var d = 0; var start = 0; var p = 0
-      while (p < s.length) {
-        s.charAt(p) match {
-          case '(' | '[' => d += 1
-          case ')' | ']' => d -= 1
-          case ',' if d == 0 => out += s.substring(start, p); start = p + 1
-          case _ =>
-        }
-        p += 1
-      }
-      out += s.substring(start)
-      out.result()
-    }
-    def castDecimals(inner: String): String =
-      splitElems(inner).map(_.trim).map {
-        case e if DecLit.matches(e) => s"CAST($e AS DOUBLE)"
-        case e => e
-      }.mkString(", ")
-    @annotation.tailrec
-    def loop(s: String): String = Re.findFirstMatchIn(s) match {
-      case None => s
-      case Some(m) =>
-        val open = s.indexOf('[', m.start)
-        val close = matchBracket(s, open)
-        if (close < 0) s
-        else loop(s.substring(0, m.start) + "array(" +
-          castDecimals(s.substring(open + 1, close)) + ")" +
-          s.substring(close + 1))
-    }
-    loop(sqlText)
-  }
-
-  /** Druid (Calcite) double-quotes IDENTIFIERS - a quoted column in
-    * every console-generated query - where Spark's default (ANSI off)
-    * reads a string literal. Backtick them on the masked text
-    * (Druid-dialect SQL has no double-quoted strings; single-quoted
-    * literal content is already masked out).
-    */
-  private[graft] def rewriteDoubleQuotedIdents(sqlText: String): String = {
-    val Re = "\"((?:[^\"]|\"\")*)\"".r
-    Re.replaceAllIn(sqlText, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        "`" + m.group(1).replace("\"\"", "\"") + "`"))
-  }
-
-  /** Calcite parses `x IN (...) IS FALSE` (boolean test directly over
-    * an IN predicate) where Spark's grammar needs the predicate
-    * parenthesized. Conservative shape: identifier [NOT] IN (list)
-    * followed by IS [NOT] TRUE/FALSE, on masked text.
-    */
-  private[graft] def rewriteInBooleanTest(sqlText: String): String = {
-    // the tested expression may be a bare column OR a function call —
-    // LOOKUP(dim1, 'lookyloo') IN ('x6','nope') IS NOT TRUE
-    // (CalciteLookupFunctionQueryTest testFilterInIsNotTrue)
-    val callOrIdent =
-      """[A-Za-z_][A-Za-z0-9_.]*\s*(?:\((?:[^()']|'[^']*'|\((?:[^()']|'[^']*')*\))*\))?"""
-    val Re = ("""(?is)(?<![A-Za-z0-9_.)])(""" + callOrIdent +
-      """\s+(?:NOT\s+)?IN\s*\([^()]*\))""" +
-      """(\s+IS\s+(?:NOT\s+)?(?:TRUE|FALSE)\b)""").r
-    Re.replaceAllIn(sqlText, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        "(" + m.group(1) + ")" + m.group(2)))
+      Some((arr + 1, s"AS ARRAY<$et>)"))
+    } else if (str >= 0) Some((str + 1, "AS STRING)"))
+    else None
   }
 
   /** Druid casts are LENIENT — CAST('' AS BIGINT) and CAST('abc' AS
@@ -2364,42 +2159,43 @@ object SqlApi {
     * facade SQL all become TRY_CAST here; the remaining lenient behaviors
     * (implicit coercions, size(null), …) come from the ANSI-off window
     * that [[sqlWithSortWindows]] scopes around plan analysis.
-    * Double-quoted identifiers are handled independently by
-    * [[rewriteDoubleQuotedIdents]] and do not need ANSI.
+    * Casts TO STRING are total — they can never fail, so CAST and
+    * TRY_CAST agree — and keeping the plain CAST matters: Spark rejects
+    * TRY_CAST over a correlated outer reference in lateral position
+    * (qaUnnest array_sql_mv_funcs `string_to_mv(cast(c AS char), …)`
+    * under a correlated UNNEST), while the equivalent CAST decorrelates
+    * fine. [[castTypes]] has already normalized VARCHAR/CHAR→STRING.
     */
-  private[graft] def rewriteCastTry(sqlText: String): String = {
-    // Casts TO STRING are total — they can never fail, so CAST and
-    // TRY_CAST agree — and keeping the plain CAST matters: Spark rejects
-    // TRY_CAST over a correlated outer reference in lateral position
-    // (qaUnnest array_sql_mv_funcs `string_to_mv(cast(c AS char), …)`
-    // under a correlated UNNEST), while the equivalent CAST decorrelates
-    // fine. rewriteCastTypes has already normalized VARCHAR/CHAR→STRING.
-    val Re = """(?i)(?<![A-Za-z0-9_])CAST\s*\(""".r
-    val ToString = """(?is).*\bAS\s+STRING\s*$""".r
-    val hits = Re.findAllMatchIn(sqlText).toVector
-    hits.reverseIterator.foldLeft(sqlText) { (s, m) =>
-      val open = s.indexOf('(', m.start)
-      val close = matchParen(s, open)
-      val inner = s.substring(open + 1, close)
-      if (ToString.pattern.matcher(inner).matches()) s
-      else s.substring(0, m.start) + "TRY_CAST(" + s.substring(open + 1)
-    }
+  private[graft] def castTry(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val open = seq(ts, i, "CAST", "(")
+    val end = if (open < 0) -1 else close(ts, open)
+    val last = prev(ts, end)
+    if (end < 0 || ts(last).is("STRING") && ts(prev(ts, last)).is("AS")) None
+    else Some((open + 1, "TRY_CAST("))
   }
 
-  private[graft] def rewriteCastTypes(sqlText: String): String =
-    // SQL-standard collection type syntax `CAST(x AS BIGINT ARRAY)`
-    // (Calcite; CalciteArraysQueryTest testArrayToMvPostaggInline) →
-    // Spark's ARRAY<T>; the element type normalizes first so
-    // `VARCHAR ARRAY` lands as ARRAY<STRING>
-    """(?is)\bAS\s+(VARCHAR|CHAR|BIGINT|INTEGER|SMALLINT|TINYINT|DOUBLE|FLOAT|REAL|BOOLEAN|TIMESTAMP|DATE)\s+ARRAY\s*\)""".r
-      .replaceAllIn(sqlText, m => {
-        val et = m.group(1).toUpperCase match {
-          case "VARCHAR" | "CHAR" => "STRING"
-          case t => t
-        }
-        s"AS ARRAY<$et>)"
-      })
-      .replaceAll("(?is)\\bAS\\s+(?:VARCHAR|CHAR)\\s*\\)", "AS STRING)")
+  /** Calcite parses `x IN (...) IS FALSE` (boolean test directly over
+    * an IN predicate) where Spark's grammar needs the predicate
+    * parenthesized. The tested operand is a (dotted) name or a call —
+    * LOOKUP(dim1, 'lookyloo') IN ('x6','nope') IS NOT TRUE
+    * (CalciteLookupFunctionQueryTest testFilterInIsNotTrue).
+    */
+  private[graft] def inBooleanTest(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    var name = i
+    while (name + 2 < ts.length && ts(name + 1).is(".") && ts(name + 2).kind == Word)
+      name += 2
+    val call = next(ts, name + 1)
+    val operand = if (seq(ts, call, "(") >= 0) close(ts, call) else name
+    val not = seq(ts, next(ts, operand + 1), "NOT")
+    val list = seq(ts, if (not >= 0) next(ts, not + 1) else next(ts, operand + 1), "IN", "(")
+    val end = if (list < 0) -1 else close(ts, list)
+    val is = next(ts, end + 1)
+    if (ts(i).kind != Word || i > 0 && (ts(i - 1).is(".") || ts(i - 1).is(")")) ||
+        operand < 0 || end < 0 ||
+        seq(ts, is, "IS", "TRUE|FALSE") < 0 && seq(ts, is, "IS", "NOT", "TRUE|FALSE") < 0)
+      None
+    else Some((end + 1, "(" + render(ts.slice(i, end + 1)) + ")"))
+  }
 
   /** Calcite/Druid single-bound FOLLOWING frame shorthand: `ROWS <b>
     * FOLLOWING` (and RANGE, incl. `UNBOUNDED FOLLOWING`) means
@@ -2409,115 +2205,18 @@ object SqlApi {
     * FOLLOWING bound, so expand it. PRECEDING shorthand is already
     * standard (BETWEEN <b> PRECEDING AND CURRENT ROW) in both.
     */
-  private[graft] def rewriteSuffixFrames(sqlText: String): String =
-    """(?is)\b(ROWS|RANGE)\s+((?:UNBOUNDED|\d+|INTERVAL\s+'[^']*'(?:\s+\w+)?)\s+FOLLOWING)""".r
-      .replaceAllIn(sqlText, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          s"${m.group(1)} BETWEEN CURRENT ROW AND ${m.group(2)}"))
-
-  /** SQL-standard Unicode literal body — U&'\\005C.' (Calcite accepts
-    * them; CalciteArraysQueryTest testUnnestTwice spells a regex dot
-    * that way): \\XXXX = the code point, \\\\ = a backslash; a decoded
-    * quote re-escapes as '' so the masked content stays well-formed.
-    */
-  private def decodeUnicodeBody(body: String): String = {
-    val dec = new StringBuilder
-    var k = 0
-    while (k < body.length) {
-      val c = body.charAt(k)
-      if (c == '\\' && k + 1 < body.length && body.charAt(k + 1) == '\\') {
-        dec.append('\\'); k += 2
-      } else if (c == '\\' && k + 4 < body.length &&
-          body.substring(k + 1, k + 5).forall(h =>
-            h.isDigit || ('a' to 'f').contains(h.toLower))) {
-        val cp = Integer.parseInt(body.substring(k + 1, k + 5), 16).toChar
-        if (cp == '\'') dec.append("''") else dec.append(cp)
-        k += 5
-      } else { dec.append(c); k += 1 }
-    }
-    dec.toString
-  }
-
-  /** Replace every single-quoted literal's content ('' escapes included)
-    * with a numbered placeholder; [[unmaskLiterals]] restores them.
-    * U&'…' Unicode literals are recognized HERE, inside the scanner
-    * where in/out-of-literal state is known (a whole-text pre-pass regex
-    * could match a "U&' … '" span CROSSING the boundaries of ordinary
-    * literals that merely contain "U&", silently corrupting them), and
-    * decode to plain content.
-    */
-  private[graft] def maskLiterals(sqlText: String): (String, Vector[String]) = {
-    val sb = new StringBuilder
-    val lits = Vector.newBuilder[String]
-    var i = 0
-    var n = 0
-    def identChar(c: Char): Boolean =
-      c.isLetterOrDigit || c == '_' || c == '$' || c == '"'
-    while (i < sqlText.length) {
-      val c = sqlText.charAt(i)
-      val uniOpen = (c == 'U' || c == 'u') && i + 2 < sqlText.length &&
-        sqlText.charAt(i + 1) == '&' && sqlText.charAt(i + 2) == '\'' &&
-        (i == 0 || !identChar(sqlText.charAt(i - 1)))
-      if (c == '\'' || uniOpen) {
-        var j = if (uniOpen) i + 3 else i + 1
-        val lit = new StringBuilder
-        var done = false
-        while (!done && j < sqlText.length) {
-          if (sqlText.charAt(j) == '\'') {
-            if (j + 1 < sqlText.length && sqlText.charAt(j + 1) == '\'') {
-              lit.append("''"); j += 2
-            } else { done = true; j += 1 }
-          } else { lit.append(sqlText.charAt(j)); j += 1 }
-        }
-        lits += (if (uniOpen) decodeUnicodeBody(lit.toString)
-                 else lit.toString)
-        sb.append('\'').append('\u0001').append(n).append('\u0001').append('\'')
-        n += 1
-        i = j
-      } else { sb.append(c); i += 1 }
-    }
-    (sb.toString, lits.result())
-  }
-
-  private[graft] def unmaskLiterals(sqlText: String, lits: Vector[String]): String = {
-    val Re = "'\u0001(\\d+)\u0001'".r
-    Re.replaceAllIn(sqlText, m =>
-      scala.util.matching.Regex.quoteReplacement("'" + lits(m.group(1).toInt) + "'"))
-  }
-
-  /** Calcite's `FLOOR(expr TO unit)` / `CEIL(expr TO unit)` — the syntax
-    * the reference's own SQL (and every Druid console query) uses for time
-    * bucketing; Spark's parser has no TO form. FLOOR maps to date_trunc,
-    * CEIL to the engine's TIME_CEIL with the unit's ISO period. The
-    * expression may contain one nesting level of call parentheses
-    * (`FLOOR(CAST(t AS TIMESTAMP) TO YEAR)`).
-    */
-  private[graft] def rewriteFloorCeilTo(sqlText: String): String = {
-    val Re =
-      ("""(?is)\b(FLOOR|CEIL|CEILING)\s*\(\s*((?:[^()',]|'[^']*'|\((?:[^()']|'[^']*')*\))+?)""" +
-        """\s+TO\s+(YEAR|QUARTER|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND""" +
-        """|DECADE|CENTURY|MILLENNIUM|MILLISECOND)\s*\)""").r
-    val out = Re.replaceAllIn(sqlText, m => {
-      val expr = m.group(2).trim
-      val unit = m.group(3).toUpperCase
-      val rep =
-        if (m.group(1).equalsIgnoreCase("FLOOR"))
-          s"date_trunc('$unit', $expr)"
-        else {
-          val period = unit match {
-            case "YEAR" => "P1Y"; case "QUARTER" => "P3M"; case "MONTH" => "P1M"
-            case "WEEK" => "P1W"; case "DAY" => "P1D"; case "HOUR" => "PT1H"
-            case "MINUTE" => "PT1M"
-            case "DECADE" => "P10Y"; case "CENTURY" => "P100Y"
-            case "MILLENNIUM" => "P1000Y"; case "MILLISECOND" => "PT0.001S"
-            case _ => "PT1S"
-          }
-          s"TIME_CEIL($expr, '$period')"
-        }
-      scala.util.matching.Regex.quoteReplacement(rep)
-    })
-    // nested FLOOR(FLOOR(t TO DAY) TO …) resolves inner-out across passes
-    if (out != sqlText) rewriteFloorCeilTo(out) else out
+  private[graft] def suffixFrames(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val b = next(ts, i + 1)
+    val lit = seq(ts, b, "INTERVAL", "'")
+    val unit = next(ts, lit + 1)
+    val bound =
+      if (seq(ts, b, "UNBOUNDED|#") >= 0) b
+      else if (lit < 0) -1
+      else if (seq(ts, unit, "_") >= 0 && !ts(unit).is("FOLLOWING")) unit
+      else lit
+    if (seq(ts, i, "ROWS|RANGE") < 0 || bound < 0 ||
+        seq(ts, next(ts, bound + 1), "FOLLOWING") < 0) None
+    else Some((b, ts(i).text + " BETWEEN CURRENT ROW AND "))
   }
 
   /** Calcite's explicit empty grouping set — `GROUP BY ()` — is what the
@@ -2525,67 +2224,144 @@ object SqlApi {
     * (every kttm_*.iq visualization query). Spark's parser rejects the
     * bare form but accepts the equivalent GROUPING SETS spelling.
     */
-  private[graft] def rewriteEmptyGroupBy(sqlText: String): String =
-    sqlText.replaceAll("(?i)\\bGROUP\\s+BY\\s*\\(\\s*\\)",
-      "GROUP BY GROUPING SETS (())")
+  private[graft] def emptyGroupBy(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val e = seq(ts, i, "GROUP", "BY", "(", ")")
+    if (e < 0) None else Some((e + 1, "GROUP BY GROUPING SETS (())"))
+  }
+
+  /** Translate the reference's correlated-unnest SQL surface
+    * `[CROSS JOIN | ,] UNNEST(expr) AS alias (col)` into a lateral
+    * derived table. UNNEST as the SOLE table factor (`SELECT * FROM
+    * UNNEST(ARRAY[1,2,3])` — CalciteArraysQueryTest testUnnestInline)
+    * becomes a bare derived table, not a lateral join.
+    */
+  private[graft] def unnest(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val u = Seq(seq(ts, i, "CROSS", "JOIN", "UNNEST"), seq(ts, i, ",", "UNNEST"),
+      seq(ts, i, "UNNEST")).find(_ >= 0).getOrElse(-1)
+    if (u < 0) None
+    else {
+      val open = next(ts, u + 1)
+      require(seq(ts, open, "(") >= 0, "UNNEST must be followed by (expr)")
+      val end = close(ts, open)
+      require(end >= 0, "unbalanced parentheses after UNNEST")
+      // optional: AS alias (col)  /  AS alias(col)  /  alias (col)
+      val a = next(ts, end + 1)
+      val alias = if (seq(ts, a, "AS", "_", "(", "_", ")") >= 0) next(ts, a + 1) else a
+      val aliasEnd = seq(ts, alias, "_", "(", "_", ")")
+      val (name, col, stop) =
+        if (aliasEnd < 0) ("unnested", "col", end + 1)
+        else (ts(alias).text, ts(prev(ts, aliasEnd)).text, aliasEnd + 1)
+      // LATERAL subquery, not LATERAL VIEW: Spark's grammar hangs lateral
+      // views off the END of the FROM clause, so `… CROSS JOIN UNNEST(x)
+      // AS u(c) INNER JOIN t2 ON u.c = …` (a shape all over the reference
+      // corpus) could not be expressed — a JOIN LATERAL derived table
+      // composes with subsequent joins and keeps the alias addressable.
+      // mv_unnest_input: a null MVD row unnests to a null-element row
+      // (resolved lazily on the druid.mv tag; TRUE arrays pass through)
+      val joinKw = if (u == i && seq(ts, prev(ts, i), "FROM") >= 0) "" else " JOIN LATERAL"
+      Some((stop, s"$joinKw (SELECT explode(mv_unnest_input(" +
+        s"${render(ts.slice(open + 1, end))})) AS $col) $name"))
+    }
+  }
 
   /** Translate the reference's `JSON_VALUE(expr, path RETURNING type [ARRAY])`
     * (Calcite syntax Spark doesn't parse —
     * `sql/.../expression/builtin/NestedDataOperatorConversions.java`) into
     * the typed JSON_VALUE_* functions registered by DruidFunctions.
     * DECIMAL/FLOAT map to the double variants like the reference's ExprEval
-    * coercion; CHAR/VARCHAR to the string one.
+    * coercion; CHAR/VARCHAR to the string one. The first argument may be
+    * any expression (the reference accepts arbitrary ones), so a RETURNING
+    * clause nested inside it rewrites too.
     */
-  private[graft] def rewriteJsonReturning(sqlText0: String): String = {
+  private[graft] def jsonReturning(ts: Toks): Toks = rewrite(rewrite(ts) { (ts, i) =>
     // the SQL-standard behavior clauses: the reference accepts ONLY the
     // NULL behaviors (NestedDataOperatorConversions.java:300-310 throws on
     // anything else) — NULL ON EMPTY / NULL ON ERROR are its defaults, so
-    // strip them before the RETURNING match; non-NULL behaviors fall
-    // through to Spark's parser, which rejects them loudly like the
-    // reference
-    val sqlText = sqlText0.replaceAll(
-      "(?is)\\s+NULL\\s+ON\\s+(EMPTY|ERROR)\\b", "")
-    // first arg: any expression without top-level commas — bare refs,
-    // string literals, and nested call parens to a fixed depth (enough
-    // for JSON_VALUE(JSON_OBJECT(KEY 'x' VALUE JSON_VALUE(…)), …) —
-    // testCompositionTyping; the reference accepts arbitrary expressions,
-    // NestedDataOperatorConversions.java). Applied to FIXPOINT so
-    // RETURNING clauses nested inside the first argument rewrite too
-    // (innermost matches once the outer pattern fails on them).
-    val parenDepth4: String = {
-      val atom = "[^()']|'[^']*'"
-      (1 to 4).foldLeft(atom) { (inner, _) =>
-        s"$atom|\\((?:$inner)*\\)"
-      }
+    // they drop; non-NULL behaviors fall through to Spark's parser, which
+    // rejects them loudly like the reference
+    val e = seq(ts, i, "NULL", "ON", "EMPTY|ERROR")
+    if (e < 0) None else Some((e + 1, ""))
+  }) { (ts, i) =>
+    val open = seq(ts, i, "JSON_VALUE", "(")
+    val end = if (open < 0) -1 else close(ts, open)
+    (if (end < 0) Nil else splitTop(ts, open + 1, end)) match {
+      case Seq((a, b), (p0, _)) =>
+        val path = next(ts, p0)
+        val t = seq(ts, path, "'", "RETURNING",
+          "BIGINT|INTEGER|INT|DECIMAL|DOUBLE|FLOAT|VARCHAR|CHAR|BOOLEAN")
+        val arr = if (t < 0) -1 else seq(ts, next(ts, t + 1), "ARRAY")
+        if (t < 0 || next(ts, math.max(t, arr) + 1) != end) None
+        else {
+          val base = ts(t).text.toUpperCase match {
+            case "BIGINT" | "INTEGER" | "INT"   => "BIGINT"
+            case "DECIMAL" | "DOUBLE" | "FLOAT" => "DOUBLE"
+            case "BOOLEAN"                      => "BOOLEAN"
+            case _                              => "VARCHAR"
+          }
+          val name =
+            if (arr >= 0) s"JSON_VALUE_${base}_ARRAY"
+            else if (base == "VARCHAR") "JSON_VALUE_STR"
+            else s"JSON_VALUE_$base"
+          Some((end + 1, s"$name(${span(ts, a, b)}, ${ts(path).text})"))
+        }
+      case _ => None
     }
-    val Re =
-      ("""(?is)\bJSON_VALUE\s*\(\s*((?:[A-Za-z0-9_.\s+*/%-]|\|\||'[^']*'|\((?:""" +
-        parenDepth4 +
-        """)*\))+?)\s*,\s*('[^']*')\s+RETURNING\s+(BIGINT|INTEGER|INT|DECIMAL|DOUBLE|FLOAT|VARCHAR|CHAR|BOOLEAN)(\s+ARRAY)?\s*\)""").r
-    def pass(s: String): String = Re.replaceAllIn(s, m => {
-      val base = m.group(3).toUpperCase match {
-        case "BIGINT" | "INTEGER" | "INT"    => "BIGINT"
-        case "DECIMAL" | "DOUBLE" | "FLOAT"  => "DOUBLE"
-        case "BOOLEAN"                       => "BOOLEAN"
-        case _                               => "VARCHAR"
+  }
+
+  /** Calcite's JSON_OBJECT syntaxes — `JSON_OBJECT(KEY k VALUE v, …)` and
+    * `JSON_OBJECT(k : v, …)` (what the reference's SQL and the qaJsonCols
+    * corpus write) — normalized to the plain pair-call form
+    * `json_object(k, v, …)` the registered variadic builder accepts. Only
+    * TOP-LEVEL `KEY`/`VALUE` tokens and `:` separators inside a
+    * json_object(…) call are touched; nested calls rewrite in turn.
+    */
+  private[graft] def jsonObject(ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val open = seq(ts, i, "JSON_OBJECT", "(")
+    val end = if (open < 0) -1 else close(ts, open)
+    if (end < 0) None
+    else {
+      // `KEY` counts as syntax only at an ARGUMENT START (so a column
+      // named key/value elsewhere is untouched), and `VALUE` only when a
+      // KEY opened the current argument
+      var d = 0
+      var argStart = true
+      var expectValue = false
+      val comma = Tok(Sym, ",")
+      val norm = ts.slice(open + 1, end).flatMap { t =>
+        if (!t.sig) Some(t)
+        else if (t.is("(") || t.is("[")) { d += 1; argStart = false; Some(t) }
+        else if (t.is(")") || t.is("]")) { d -= 1; Some(t) }
+        else if (d == 0 && t.is(",")) { argStart = true; expectValue = false; Some(t) }
+        else if (d == 0 && t.is(":")) { argStart = false; Some(comma) }
+        else if (d == 0 && argStart && t.is("KEY")) {
+          argStart = false; expectValue = true; None
+        } else if (d == 0 && expectValue && t.is("VALUE")) {
+          expectValue = false; Some(comma)
+        } else { argStart = false; Some(t) }
       }
-      val isArray = m.group(4) != null
-      val name =
-        if (isArray) s"JSON_VALUE_${base}_ARRAY"
-        else if (base == "VARCHAR") "JSON_VALUE_STR"
-        else s"JSON_VALUE_$base"
-      // JSON paths contain '$' — quote so replaceAllIn doesn't read them as
-      // group references
-      scala.util.matching.Regex.quoteReplacement(
-        s"$name(${m.group(1)}, ${m.group(2)})")
-    })
-    var cur = sqlText
-    var i = 0
-    while (i < 8) { // nesting depth bound; each pass strips one layer
-      val next = pass(cur)
-      if (next == cur) i = 8 else { cur = next; i += 1 }
+      // values that are SYNTACTICALLY json-typed (json_query / parse_json
+      // / try_parse_json / a nested json_object) EMBED as nested documents
+      // like the reference's COMPLEX<json> values (func_json_object.03) —
+      // and the reference PRESERVES the source document's key order, so
+      // embedding splices the serialized text directly instead of
+      // re-parsing through Spark's key-sorting variant. Plain values
+      // JSON-encode through the to_json(array(v)) trick, which keeps their
+      // Spark TYPE (numbers stay numbers, strings quote+escape).
+      val args = splitTop(norm, 0, norm.length).map { case (a, b) => norm.slice(a, b) }
+      def jsonTyped(arg: Toks): Boolean =
+        seq(arg, next(arg, 0), "JSON_QUERY|JSON_OBJECT|PARSE_JSON|TRY_PARSE_JSON", "(") >= 0
+      def enc(e: String) =
+        s"substr(to_json(array(($e))), 2, length(to_json(array(($e)))) - 2)"
+      if (args.size % 2 == 0 && args.indices.exists(k => k % 2 == 1 && jsonTyped(args(k))))
+        Some((end + 1, args.grouped(2).map { case Seq(k, v) =>
+          val vt = render(v).trim
+          s"${enc(s"CAST((${render(k).trim}) AS STRING)")}, ':', " +
+            (if (jsonTyped(v)) s"coalesce(CAST(($vt) AS STRING), 'null')"
+             else s"coalesce(${enc(vt)}, 'null')")
+        }.mkString("concat('{', ", ", ',', ", ", '}')")))
+      else Some((end + 1, "json_object" + render(ts.slice(i + 1, open + 1)) +
+        render(norm) + ")"))
     }
-    cur
   }
 
   /** Leading `SET key = value;` statements (reference `DruidSqlSet` — SQL
@@ -2614,58 +2390,17 @@ object SqlApi {
   // ---------------------------------------------------------------- binding
 
   /** Substitute positional `?` placeholders with typed SQL literals.
-    * Placeholders inside 'string literals', "quoted identifiers" and
-    * -- line comments are left alone, matching JDBC semantics.
+    * Placeholders inside string literals, quoted identifiers and comments
+    * are other tokens and stay, matching JDBC semantics.
     */
-  private[graft] def bind(sqlText: String, params: List[JValue]): String = {
-    if (params.isEmpty && !sqlText.contains("?")) return sqlText
-    // java.lang.StringBuilder: the scala one lacks append(CharSequence,int,int)
-    // and would silently auto-tuple the 3-arg calls below
-    val out = new java.lang.StringBuilder(sqlText.length + 64)
-    var i = 0
-    var p = 0
-    val n = sqlText.length
-    while (i < n) {
-      sqlText.charAt(i) match {
-        case '\'' =>
-          val end = copyQuoted(sqlText, i, '\'', out); i = end
-        case '"' =>
-          val end = copyQuoted(sqlText, i, '"', out); i = end
-        case '-' if i + 1 < n && sqlText.charAt(i + 1) == '-' =>
-          val nl = sqlText.indexOf('\n', i)
-          val end = if (nl < 0) n else nl + 1
-          out.append(sqlText, i, end); i = end
-        case '/' if i + 1 < n && sqlText.charAt(i + 1) == '*' =>
-          val star = sqlText.indexOf("*/", i + 2)
-          val end = if (star < 0) n else star + 2
-          out.append(sqlText, i, end); i = end
-        case '?' =>
-          if (p >= params.length)
-            throw new IllegalArgumentException(
-              s"SQL has more ? placeholders than parameters (${params.length})")
-          out.append(literal(params(p))); p += 1; i += 1
-        case c =>
-          out.append(c); i += 1
-      }
+  private[graft] def bind(ts: Toks, params: List[JValue]): Toks = {
+    val values = params.iterator
+    ts.flatMap { t =>
+      if (!t.is("?")) Vector(t)
+      else if (values.hasNext) lex(literal(values.next()))
+      else throw new IllegalArgumentException(
+        s"SQL has more ? placeholders than parameters (${params.length})")
     }
-    out.toString
-  }
-
-  /** Copy a quoted region (with doubled-quote escapes) verbatim; returns the
-    * index just past the closing quote.
-    */
-  private def copyQuoted(s: String, start: Int, q: Char,
-                         out: java.lang.StringBuilder): Int = {
-    var i = start + 1
-    val n = s.length
-    while (i < n) {
-      if (s.charAt(i) == q) {
-        if (i + 1 < n && s.charAt(i + 1) == q) i += 2 // escaped quote
-        else { i += 1; out.append(s, start, i); return i }
-      } else i += 1
-    }
-    out.append(s, start, n)
-    n
   }
 
   /** Typed SQL literal for one reference `SqlParameter` ({"type","value"}). */
@@ -2747,113 +2482,6 @@ object SqlApi {
   private def err(t: String, v: JValue): Nothing =
     throw new IllegalArgumentException(
       s"cannot bind ${JsonMethods.compact(JsonMethods.render(v))} as $t")
-
-  // ----------------------------------------------------------------- unnest
-
-  /** Translate the reference's correlated-unnest SQL surface
-    * `[CROSS JOIN | ,] UNNEST(expr) AS alias (col)` into Spark's
-    * `LATERAL VIEW explode(expr) alias AS col`. Quoted regions are skipped;
-    * the expression keeps balanced parentheses.
-    */
-  private[graft] def rewriteUnnest(sqlText: String): String = {
-    val upper = sqlText.toUpperCase
-    val idx = findUnnest(sqlText, upper)
-    if (idx < 0) return sqlText
-    val (start, exprStart, standalone) = {
-      // start of the region to replace (either the CROSS of CROSS JOIN
-      // UNNEST, the comma of ", UNNEST", or UNNEST itself). UNNEST as
-      // the SOLE table factor (`SELECT * FROM UNNEST(ARRAY[1,2,3])` —
-      // CalciteArraysQueryTest testUnnestInline) becomes a bare derived
-      // table, not a lateral join
-      val u = idx
-      val before = sqlText.substring(0, u)
-      val trimmed = before.reverse.dropWhile(_.isWhitespace).reverse
-      // whitespace-tolerant: CROSS \s+ JOIN (any amount/kind of whitespace)
-      val CrossJoin = """(?is)^(.*?)\bCROSS\s+JOIN\s*$""".r
-      val FromEnd = """(?is)^.*\bFROM$""".r
-      trimmed match {
-        case CrossJoin(prefix) => (prefix.length, u, false)
-        case _ if trimmed.endsWith(",") => (trimmed.length - 1, u, false)
-        case _ if FromEnd.findFirstIn(trimmed).isDefined => (u, u, true)
-        case _ => (u, u, false)
-      }
-    }
-    val open = sqlText.indexOf('(', exprStart)
-    require(open > 0, "UNNEST must be followed by (expr)")
-    val close = matchParen(sqlText, open)
-    val expr = sqlText.substring(open + 1, close)
-    // optional: AS alias (col)  /  AS alias(col)  /  alias (col)
-    val AliasRe =
-      """(?is)^\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)""".r
-    val rest = sqlText.substring(close + 1)
-    val (alias, colName, restAfter) = AliasRe.findFirstMatchIn(rest) match {
-      case Some(m) => (m.group(1), m.group(2), rest.substring(m.end))
-      case None    => ("unnested", "col", rest)
-    }
-    // LATERAL subquery, not LATERAL VIEW: Spark's grammar hangs lateral
-    // views off the END of the FROM clause, so `… CROSS JOIN UNNEST(x)
-    // AS u(c) INNER JOIN t2 ON u.c = …` (a shape all over the reference
-    // corpus) could not be expressed — a JOIN LATERAL derived table
-    // composes with subsequent joins and keeps the alias addressable
-    // mv_unnest_input: a null MVD row unnests to a null-element row
-    // (resolved lazily on the druid.mv tag; TRUE arrays pass through)
-    val joinKw = if (standalone) "" else " JOIN LATERAL"
-    val replaced = sqlText.substring(0, start) +
-      s"$joinKw (SELECT explode(mv_unnest_input($expr)) AS $colName)" +
-      s" $alias" + restAfter
-    rewriteUnnest(replaced) // handle multiple UNNESTs
-  }
-
-  // '_' is part of a SQL identifier: my_unnest(...) is NOT the keyword
-  private def isWordChar(c: Char): Boolean =
-    c == '_' || Character.isLetterOrDigit(c)
-
-  /** Index of the next top-level UNNEST keyword outside quotes, -1 if none. */
-  private def findUnnest(s: String, upper: String): Int = {
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case '\'' => i = skipQuoted(s, i, '\'')
-        case '"'  => i = skipQuoted(s, i, '"')
-        case 'u' | 'U'
-            if upper.startsWith("UNNEST", i) &&
-              (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-              (i + 6 >= n || !isWordChar(s.charAt(i + 6))) =>
-          return i
-        case _ => i += 1
-      }
-    }
-    -1
-  }
-
-  private def skipQuoted(s: String, start: Int, q: Char): Int = {
-    var i = start + 1
-    val n = s.length
-    while (i < n) {
-      if (s.charAt(i) == q) {
-        if (i + 1 < n && s.charAt(i + 1) == q) i += 2 else return i + 1
-      } else i += 1
-    }
-    n
-  }
-
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case '\'' => i = skipQuoted(s, i, '\'') - 1
-        case '"'  => i = skipQuoted(s, i, '"') - 1
-        case '('  => depth += 1
-        case ')'  => depth -= 1; if (depth == 0) return i
-        case _    =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException("unbalanced parentheses after UNNEST")
-  }
 
   // ----------------------------------------------------------- ingest SQL
 
@@ -3007,63 +2635,33 @@ object SqlApi {
     * (`sql/.../table/AppendCatalogMacro`), and
     * `TABLE(EXTERN('<inputSource>','<inputFormat>','<signature>'))` — MSQ
     * external input (`msq/sql/.../ExternalOperatorConversion`): inline /
-    * local / http input sources with csv, tsv or json input formats.
+    * local / http input sources with csv, tsv or json input formats. A
+    * string literal that merely contains "TABLE(EXTERN(" is one token and
+    * never expands.
     */
   private[graft] def rewriteTableFunctions(spark: SparkSession, dir: String,
-                                           sqlText: String): String = {
-    // Scan the MASKED text, like the sql(j) rewrites: a string literal that
-    // merely CONTAINS "TABLE(EXTERN(" (e.g. SQL-in-SQL audit rows) must
-    // never be structurally rewritten. The paren matcher also gets simpler
-    // guarantees on masked text (no parens/quotes hide inside literals).
-    // Literal contents are restored per-region — the EXTERN/APPEND argument
-    // JSON needs its real text back before parsing.
-    val (masked0, lits) = maskLiterals(sqlText)
-    val TableRe = """(?is)\bTABLE\s*\(\s*(APPEND|EXTERN)\s*\(""".r
-    @annotation.tailrec
-    def loop(masked: String): String =
-      TableRe.findFirstMatchIn(masked) match {
-        case None => masked
-        case Some(m) =>
-          val argsStart = m.end - 1 // points at the inner '('
-          val argsEnd = matchParen(masked, argsStart)
-          val outerEnd = matchParen(masked, masked.indexOf('(', m.start))
-          val argsRegion =
-            unmaskLiterals(masked.substring(argsStart + 1, argsEnd), lits)
-          val args = splitArgs(argsRegion)
-          val view = "__" + m.group(1).toLowerCase + "_" +
-            Integer.toHexString(argsRegion.hashCode).replace('-', 'n')
-          val df = m.group(1).toUpperCase match {
-            case "APPEND" =>
-              val names = args.map(unquoteSql)
-              names.map(Tables.load(spark, dir, _)).reduce(
-                _.unionByName(_, allowMissingColumns = true))
-            case "EXTERN" => externDataFrame(spark, args.map(unquoteSql))
-          }
-          df.createOrReplaceTempView(view)
-          loop(masked.substring(0, m.start) + view +
-            masked.substring(outerEnd + 1))
+                                           ts: Toks): Toks = rewrite(ts) { (ts, i) =>
+    val args = seq(ts, i, "TABLE", "(", "APPEND|EXTERN", "(")
+    val argsEnd = if (args < 0) -1 else close(ts, args)
+    val end = if (argsEnd < 0) -1 else close(ts, next(ts, i + 1))
+    if (end < 0) None
+    else {
+      val fn = ts(prev(ts, args)).text.toUpperCase
+      val region = render(ts.slice(args + 1, argsEnd))
+      val values = splitTop(ts, args + 1, argsEnd).map { case (a, b) =>
+        unquoteSql(span(ts, a, b))
+      }.toList
+      val view = "__" + fn.toLowerCase + "_" +
+        Integer.toHexString(region.hashCode).replace('-', 'n')
+      val df = fn match {
+        case "APPEND" =>
+          values.map(Tables.load(spark, dir, _)).reduce(
+            _.unionByName(_, allowMissingColumns = true))
+        case "EXTERN" => externDataFrame(spark, values)
       }
-    unmaskLiterals(loop(masked0), lits)
-  }
-
-  /** Split a SQL argument list on top-level commas (quote-aware). */
-  private def splitArgs(s: String): List[String] = {
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => i = skipQuoted(s, i, '\'') - 1
-        case '('  => depth += 1
-        case ')'  => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
+      df.createOrReplaceTempView(view)
+      Some((end + 1, view))
     }
-    out += s.substring(start)
-    out.map(_.trim).toList
   }
 
   private def unquoteSql(s: String): String = {
@@ -3215,7 +2813,7 @@ object SqlApi {
   private[graft] def format(rows: Array[Row], schema: StructType,
                             j: JValue): String = {
     val out = new java.io.StringWriter()
-    render(rows.iterator, schema, j, out)
+    renderRows(rows.iterator, schema, j, out)
     out.toString
   }
 
@@ -3224,7 +2822,7 @@ object SqlApi {
     * nothing is accumulated, so memory is O(one row) regardless of result
     * size (the reference's ResultFormat writers stream the same way).
     */
-  private def render(rows: Iterator[Row], schema: StructType,
+  private def renderRows(rows: Iterator[Row], schema: StructType,
                      j: JValue, out: java.io.Writer): Unit = {
     val fmt = str(j \ "resultFormat").getOrElse("object")
     val header = bool(j \ "header").getOrElse(false)

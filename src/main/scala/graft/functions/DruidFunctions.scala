@@ -883,7 +883,7 @@ object DruidFunctions {
             .fromString("{}"), StringType)
         else {
         // (COMPLEX<json>-valued pairs — json_query / nested json_object
-        // values — are handled upstream by SqlApi.rewriteJsonObject, which
+        // values — are handled upstream by SqlApi.jsonObject, which
         // splices their serialized text order-preserved; by the time this
         // builder runs, children are plain typed expressions)
         // reference value typing (JsonObjectExprMacro over ExprEval):
@@ -2174,7 +2174,7 @@ object DruidFunctions {
           Literal.create(null, org.apache.spark.sql.types.NullType),
           Flatten(cl))
       }),
-      // DISTINCT form (rerouted by SqlApi.rewriteConcatAggDistinct): the
+      // DISTINCT form (rerouted by SqlApi.concatAggDistinct): the
       // reference folds through array_set_add_all's TreeSet — distinct
       // ELEMENTS, sorted ascending with nulls first — and keeps the
       // NULL-for-all-NULL-groups rule

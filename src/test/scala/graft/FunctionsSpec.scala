@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.api.SqlApi
 import graft.functions.DruidFunctions
 import graft.pipeline.{Dedup, Similarity, TextAnalysis}
 
@@ -1283,4 +1284,49 @@ class FunctionsSpec extends AnyFunSuite {
 
   private def one(sql: String): String =
     spark.sql(s"SELECT $sql AS r").head().getString(0)
+
+  test("TIME_FLOOR calendar period with explicit origin") {
+    val got = SqlApi.runSql(spark,
+      """SELECT CAST(TIME_FLOOR(TIMESTAMP'2000-01-01 00:00:00', 'P1M',
+                       TIMESTAMP '1970-01-01 01:02:03') AS STRING) AS a,
+                CAST(TIME_FLOOR(TIMESTAMP'2000-01-02 10:00:00', 'P1M',
+                       TIMESTAMP '1970-01-01 01:02:03') AS STRING) AS b""")
+      .collect().head
+    assert(got.getString(0) == "1999-12-01 01:02:03")
+    assert(got.getString(1) == "2000-01-01 01:02:03")
+  }
+
+  test("EXTRACT(EPOCH FROM DATE) is timezone-independent") {
+    val prev = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      val e = SqlApi.runSql(spark,
+        "SELECT EXTRACT(EPOCH FROM DATE '1970-01-02') AS e")
+        .collect().head.getLong(0)
+      assert(e == 86400L, s"DATE epoch shifted by the session zone: $e")
+    } finally spark.conf.set("spark.sql.session.timeZone", prev)
+  }
+
+  test("positional_eq_count treats null slots as non-matches (HOF parity)") {
+    val df = spark.sql(
+      """SELECT CAST(array(1, NULL, 3, NULL) AS ARRAY<BIGINT>) AS a,
+                CAST(array(1, NULL, 4, 3) AS ARRAY<BIGINT>) AS b""")
+    val counted = df.select(
+      graft.functions.VectorMath.positionalEqCount(col("a"), col("b")).as("c"),
+      expr("aggregate(zip_with(a, b, (x, y) -> IF(x = y, 1, 0)), 0, " +
+        "(acc, v) -> acc + coalesce(v, 0))").as("hof"))
+      .collect().head
+    assert(counted.getInt(0) == 1)      // only position 0 matches; nulls never do
+    assert(counted.getInt(0) == counted.getInt(1))
+  }
+
+  test("sorted_intersect_count stops at null slots (array_sort puts them last)") {
+    val r = spark.sql(
+      """SELECT CAST(array(1, 2, 3, NULL) AS ARRAY<BIGINT>) AS a,
+                CAST(array(2, 3, NULL, NULL) AS ARRAY<BIGINT>) AS b""")
+      .select(graft.functions.VectorMath
+        .sortedIntersectCount(col("a"), col("b")).as("c"))
+      .collect().head
+    assert(r.getInt(0) == 2)
+  }
 }

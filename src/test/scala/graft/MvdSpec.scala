@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.api.SqlApi
 import graft.functions.DruidFunctions
 
 /** Multi-value dimension semantics (SURVEY §1.2 / §7.4.1 — the reference's
@@ -88,5 +89,60 @@ class MvdSpec extends AnyFunSuite {
     // null and [] both become the single-null array; real arrays untouched
     assert(rows.map(_.getInt(0)).sorted.toSeq == Seq(1, 1, 2))
     assert(rows.count(r => r.isNullAt(1)) == 2)
+  }
+
+  test("q_mvd_array_agg_flatten emits joined scalar strings") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val df = MvdGates.queries("q_mvd_array_agg_flatten")(spark, "")
+    val r = df.collect().head
+    assert(r.getString(0) == "x,y,y,null,null")
+    assert(r.getString(1) == "null,x,y")
+  }
+
+  test("empty MVD arrays group into the null group") {
+    val mvMeta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putBoolean("druid.mv", true).build()
+    spark.sql(
+      """SELECT * FROM VALUES
+           ('a', array('x', 'y')), ('b', array()),
+           ('c', CAST(NULL AS ARRAY<STRING>))
+         AS t(k, mv)""")
+      .withColumn("mv", col("mv").cast("array<string>").as("mv", mvMeta))
+      .createOrReplaceTempView("r20_empty_gate")
+    graft.functions.MvdTables.register("r20_empty_gate")
+    val got = SqlApi.runSql(spark,
+      """SELECT mv AS e, CAST(count(*) AS BIGINT) AS n
+         FROM r20_empty_gate GROUP BY 1 ORDER BY e NULLS FIRST""")
+      .collect().map(r => (Option(r.getString(0)).getOrElse("<null>"),
+        r.getLong(1)))
+      .toSeq
+    // the empty-array row 'b' and the null row 'c' BOTH land in the null
+    // group (Druid's groupBy engine) — explode must not drop row 'b'
+    assert(got == Seq(("<null>", 2L), ("x", 1L), ("y", 1L)))
+  }
+
+  test("functions over two MVDs apply to the cartesian element product") {
+    val mvMeta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putBoolean("druid.mv", true).build()
+    spark.sql(
+      """SELECT * FROM VALUES
+           ('r1', array('a'), array('a', 'b'), 'z1'),
+           ('r2', CAST(NULL AS ARRAY<STRING>), array('b', 'c'), 'z2'),
+           ('r3', CAST(NULL AS ARRAY<STRING>), CAST(NULL AS ARRAY<STRING>),
+            'z3')
+         AS t(k, mva, mvb, s)""")
+      .withColumn("mva", col("mva").as("mva", mvMeta))
+      .withColumn("mvb", col("mvb").as("mvb", mvMeta))
+      .createOrReplaceTempView("r20_cart_gate")
+    graft.functions.MvdTables.register("r20_cart_gate")
+    // COALESCE(mva, mvb, s): r1 maps over mva×mvb (coalesce short-
+    // circuits per pair → ['a','a']); r2's null mva fills from mvb; r3
+    // falls through to the scalar (CalciteQueryTest
+    // testCoalesceMoreColumns: the 'a' group counts BOTH r1 cells)
+    val got = SqlApi.runSql(spark,
+      """SELECT COALESCE(mva, mvb, s) AS e, CAST(count(*) AS BIGINT) AS n
+         FROM r20_cart_gate GROUP BY 1 ORDER BY e""")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(got == Seq(("a", 2L), ("b", 1L), ("c", 1L), ("z3", 1L)))
   }
 }

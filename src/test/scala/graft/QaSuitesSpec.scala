@@ -134,13 +134,13 @@ class QaSuitesSpec extends AnyFunSuite {
 
   test("two UNNESTs cross-join; empty/null arrays drop rows (multi_unnests A6_B7_D1)") {
     GraftSession.attach(spark)
-    val sql = graft.api.SqlApi.rewriteUnnest(
+    val sql = graft.api.SqlApi.rewriteSql(
       """SELECT count(*) AS n
          FROM (SELECT array(1L, 2L, NULL) AS a, CAST(array() AS ARRAY<STRING>) AS e
                FROM VALUES (1), (2), (3) AS t(i)) src,
               UNNEST(a) AS u1(c1), UNNEST(a) AS u2(c2)""")
     assert(spark.sql(sql).head().getLong(0) == 27L)
-    val empty = graft.api.SqlApi.rewriteUnnest(
+    val empty = graft.api.SqlApi.rewriteSql(
       """SELECT count(*) AS n
          FROM (SELECT CAST(array() AS ARRAY<STRING>) AS e FROM VALUES (1) AS t(i)) src,
               UNNEST(e) AS u(c)""")
@@ -148,7 +148,7 @@ class QaSuitesSpec extends AnyFunSuite {
   }
 
   test("JSON_VALUE RETURNING rewrite produces typed arrays") {
-    val sql = graft.api.SqlApi.rewriteJsonReturning(
+    val sql = graft.api.SqlApi.rewriteSql(
       """SELECT array_to_string(json_value(j, '$[1]' RETURNING bigint array), '|') AS a,
                 json_value(j, '$[1][0]' RETURNING bigint) AS s
          FROM VALUES ('[[true],[1,2,null]]') AS t(j)""")
@@ -162,7 +162,7 @@ class QaSuitesSpec extends AnyFunSuite {
     // (NestedDataOperatorConversions.java) — e.g. JSON_QUERY output or a
     // CAST — not just a bare column reference
     GraftSession.attach(spark)
-    val sql = graft.api.SqlApi.rewriteJsonReturning(
+    val sql = graft.api.SqlApi.rewriteSql(
       """SELECT json_value(json_query(j, '$[1]'), '$[0]' RETURNING bigint) AS nested,
                 json_value(CAST(j AS STRING), '$[1][1]' RETURNING bigint) AS casted,
                 array_to_string(json_value(json_query(j, '$[1]'),

@@ -5,7 +5,8 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.{ResultCache, SqlApi}
+import graft.api.{ResultCache, SqlApi, SqlTokens}
+import graft.api.SqlApi.rewriteSql
 
 /** SQL-over-HTTP facade (reference POST /druid/v2/sql payload shape):
   * parameter binding, UNNEST translation, result formats, EXPLAIN PLAN FOR.
@@ -20,8 +21,8 @@ class SqlApiSpec extends AnyFunSuite {
 
   val dir = "/root/testdata/sf0.001"
 
-  private def bind(sql: String, params: String): String =
-    SqlApi.bind(sql, JsonMethods.parse(params).asInstanceOf[JArray].arr)
+  private def bind(sql: String, params: String): String = SqlTokens.render(
+    SqlApi.bind(SqlTokens.lex(sql), JsonMethods.parse(params).asInstanceOf[JArray].arr))
 
   test("typed parameter binding") {
     val s = bind(
@@ -65,7 +66,7 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("UNNEST rewrite: CROSS JOIN form") {
-    val s = SqlApi.rewriteUnnest(
+    val s = rewriteSql(
       "SELECT w FROM nation CROSS JOIN UNNEST(split(n_comment, ' ')) AS t (w)")
     assert(s.contains("JOIN LATERAL (SELECT explode(mv_unnest_input(split(n_comment, ' '))) AS w) t"))
     // the UNNEST keyword is gone (mv_unnest_input is the null-row adapter)
@@ -73,13 +74,13 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("UNNEST rewrite: comma form and nested parens") {
-    val s = SqlApi.rewriteUnnest(
+    val s = rewriteSql(
       "SELECT x FROM t, UNNEST(filter(a, v -> v > (1+2))) AS u(x) WHERE x > 0")
     assert(s.contains("JOIN LATERAL (SELECT explode(mv_unnest_input(filter(a, v -> v > (1+2)))) AS x) u"))
   }
 
   test("UNNEST inside a string literal is untouched") {
-    val s = SqlApi.rewriteUnnest("SELECT 'UNNEST(x)' FROM t")
+    val s = rewriteSql("SELECT 'UNNEST(x)' FROM t")
     assert(s == "SELECT 'UNNEST(x)' FROM t")
   }
 
@@ -274,12 +275,12 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("identifier ending in unnest is not the UNNEST keyword") {
-    val s = SqlApi.rewriteUnnest("SELECT my_unnest(a) FROM t")
+    val s = rewriteSql("SELECT my_unnest(a) FROM t")
     assert(s == "SELECT my_unnest(a) FROM t")
   }
 
   test("CROSS JOIN with extra whitespace before UNNEST rewrites cleanly") {
-    val s = SqlApi.rewriteUnnest(
+    val s = rewriteSql(
       "SELECT w FROM nation CROSS  JOIN\nUNNEST(split(c, ' ')) AS t (w)")
     assert(s.contains("JOIN LATERAL (SELECT explode(mv_unnest_input(split(c, ' '))) AS w) t"))
     assert(!s.toUpperCase.contains("CROSS"))
@@ -756,7 +757,7 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("suffix frame shorthand: lone FOLLOWING bound expands to CURRENT ROW AND") {
-    import graft.api.SqlApi.rewriteSuffixFrames
+    def rewriteSuffixFrames(s: String) = rewriteSql(s)
     assert(rewriteSuffixFrames("OVER (ORDER BY a ROWS UNBOUNDED FOLLOWING)") ==
       "OVER (ORDER BY a ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)")
     assert(rewriteSuffixFrames("OVER (ORDER BY a ROWS 2 FOLLOWING)") ==
@@ -771,7 +772,7 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("bare VARCHAR/CHAR casts map to STRING; parameterized forms untouched") {
-    import graft.api.SqlApi.rewriteCastTypes
+    def rewriteCastTypes(s: String) = rewriteSql(s, Seq(SqlApi.castTypes))
     assert(rewriteCastTypes("CAST(x AS VARCHAR)") == "CAST(x AS STRING)")
     assert(rewriteCastTypes("cast(x as char)") == "cast(x AS STRING)")
     val sized = "CAST(x AS VARCHAR(10))"
@@ -781,7 +782,7 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("FLOOR/CEIL … TO unit rewrite: nested forms, plain FLOOR untouched") {
-    import graft.api.SqlApi.rewriteFloorCeilTo
+    def rewriteFloorCeilTo(s: String) = rewriteSql(s, Seq(SqlApi.floorCeilTo))
     assert(rewriteFloorCeilTo("SELECT FLOOR(__time TO HOUR) FROM t") ==
       "SELECT date_trunc('HOUR', __time) FROM t")
     assert(rewriteFloorCeilTo("SELECT CEILING(CAST(x AS TIMESTAMP) TO MONTH)") ==
@@ -805,10 +806,11 @@ class SqlApiSpec extends AnyFunSuite {
     // ...while the same patterns OUTSIDE literals still rewrite
     assert(out.contains("date_trunc('HOUR', __time)"), out)
     assert(out.contains("GROUP BY GROUPING SETS (())"), out)
-    // masking round-trips '' escapes
-    val (m, lits) = SqlApi.maskLiterals("SELECT 'it''s' || 'x', col FROM t")
-    assert(!m.contains("it"), m)
-    assert(SqlApi.unmaskLiterals(m, lits) == "SELECT 'it''s' || 'x', col FROM t")
+    // '' escapes stay inside one string token and round-trip
+    val lits = SqlTokens.lex("SELECT 'it''s' || 'x', col FROM t")
+      .filter(_.kind == SqlTokens.Str).map(_.text)
+    assert(lits == Seq("'it''s'", "'x'"), lits)
+    assert(rewriteSql("SELECT 'it''s' || 'x', col FROM t") == "SELECT 'it''s' || 'x', col FROM t")
     // end-to-end: the literal value comes back untouched from execution
     graft.Tables.registerAll(spark, dir)
     val r = SqlApi.run(spark, dir,
@@ -854,14 +856,14 @@ class SqlApiSpec extends AnyFunSuite {
     // a negative amount that does NOT invert the pair (-1 FOLLOWING parses
     // to the same Catalyst bound as 1 PRECEDING, so the optimizer rule
     // can't see it) — Calcite rejects any negative frame amount; the SQL
-    // facade catches the spelling on the masked text
+    // facade catches the spelling on the tokens
     intercept[IllegalArgumentException] {
-      graft.api.SqlApi.rejectNegativeFrameBounds(
+      rewriteSql(
         """SELECT sum(n_regionkey) OVER (ORDER BY n_nationkey
              ROWS BETWEEN UNBOUNDED PRECEDING AND -1 FOLLOWING) FROM nation""")
     }
     // legal PRECEDING-pair upper bound passes untouched
-    assert(graft.api.SqlApi.rejectNegativeFrameBounds(
+    assert(rewriteSql(
       "ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING").nonEmpty)
     // parity: BOTH entry points (facade pipeline and gate-runner pipeline)
     // reject the negated-literal spelling — the chains are unified
@@ -874,7 +876,7 @@ class SqlApiSpec extends AnyFunSuite {
 
   test("rewriteFetch handles the combined OFFSET…FETCH paging form " +
       "(Calcite order → Spark's LIMIT-before-OFFSET)") {
-    import graft.api.SqlApi.rewriteFetch
+    def rewriteFetch(s: String) = rewriteSql(s)
     assert(rewriteFetch("SELECT a FROM t OFFSET 5 ROWS FETCH NEXT 10 ROWS ONLY")
       == "SELECT a FROM t LIMIT 10 OFFSET 5")
     assert(rewriteFetch("SELECT a FROM t OFFSET 1 ROW FETCH FIRST 2 ROWS ONLY")
@@ -899,7 +901,6 @@ class SqlApiSpec extends AnyFunSuite {
 
   test("Calcite interval leading-field precision is dropped; a bare " +
       "YEAR(col) function call never matches (qaTpch Q1 dialect)") {
-    import graft.api.SqlApi.rewriteSql
     assert(rewriteSql(
       "SELECT * FROM t WHERE d <= date '1998-12-01' - interval '63' DAY (3)")
       .endsWith("interval '63' DAY"))
@@ -922,14 +923,11 @@ class SqlApiSpec extends AnyFunSuite {
 
   test("POSITION…FROM boundary check treats '_' as identifier (in_x is " +
       "not the IN keyword)") {
-    import graft.api.SqlApi.{maskLiterals, rewritePositionFrom, unmaskLiterals}
     // a column named in_x / y_from inside POSITION(...) must not be taken
     // as the IN/FROM keyword
     val noFrom = "SELECT POSITION(in_x IN y_from) FROM t"
-    assert(rewritePositionFrom(noFrom) == noFrom)
-    val (m, lits) = maskLiterals(
-      "SELECT POSITION('b' IN col_in FROM 2) FROM t")
-    assert(unmaskLiterals(rewritePositionFrom(m), lits)
+    assert(rewriteSql(noFrom) == noFrom)
+    assert(rewriteSql("SELECT POSITION('b' IN col_in FROM 2) FROM t")
       == "SELECT locate('b', col_in, 2) FROM t")
   }
 
@@ -1059,5 +1057,79 @@ class SqlApiSpec extends AnyFunSuite {
       case Some(v) => spark.conf.set(AnsiKey, v)
       case None    => spark.conf.unset(AnsiKey)
     }
+  }
+
+  test("WITH wrapper keeps the outermost ORDER BY over a druid table") {
+    val mvMeta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putBoolean("druid.mv", true).build()
+    spark.sql(
+      """SELECT * FROM VALUES ('a', array('x')), ('b', array('y')),
+           ('c', array('z')), ('d', CAST(NULL AS ARRAY<STRING>))
+         AS t(k, mv)""")
+      .withColumn("mv", org.apache.spark.sql.functions.col("mv").as("mv", mvMeta))
+      .createOrReplaceTempView("r20_with_gate")
+    graft.functions.MvdTables.register("r20_with_gate")
+    val got = SqlApi.runSql(spark,
+      """WITH one AS (SELECT 1 AS o)
+         SELECT k FROM r20_with_gate ORDER BY k DESC""")
+      .collect().map(_.getString(0)).toSeq
+    assert(got == Seq("d", "c", "b", "a"))
+    // and a CTE-referencing main query too
+    val got2 = SqlApi.runSql(spark,
+      """WITH g AS (SELECT k FROM r20_with_gate)
+         SELECT k FROM g ORDER BY k DESC""")
+      .collect().map(_.getString(0)).toSeq
+    assert(got2 == Seq("d", "c", "b", "a"))
+  }
+
+  test("inline UNNEST as the sole table factor") {
+    val got = SqlApi.runSql(spark,
+      "SELECT COUNT(*) AS n FROM (select c from UNNEST(ARRAY[1,2,3]) as u(c))")
+      .collect().head.getLong(0)
+    assert(got == 3L)
+  }
+
+  test("U& literals decode in-scanner; ordinary literals with U& survive") {
+    def lexed(s: String) = SqlTokens.render(SqlTokens.lex(s))
+    assert(lexed("SELECT U&'\\0025' AS p") == "SELECT '%' AS p")
+    // the r19 pre-pass regex hazard: a plain literal containing "U&"
+    // must not open a unicode literal spanning literal boundaries
+    val hazard = "WHERE a = 'PU&' AND b = 'x'"
+    assert(lexed(hazard) == hazard)
+    // a decoded quote re-escapes so the literal stays well-formed
+    assert(lexed("SELECT U&'a\\0027b'") == "SELECT 'a''b'")
+    // backslash escape and lowercase u&
+    assert(lexed("SELECT u&'x\\\\y'") == "SELECT 'x\\y'")
+  }
+
+  test("an apostrophe in a comment opens no string literal") {
+    val r = SqlApi.run(spark, dir, """{"query": "SELECT 1 AS x -- it's\n, FLOOR(CAST('2024-03-07' AS TIMESTAMP) TO MONTH) AS m"}""").head()
+    assert(r.getTimestamp(1).toString.startsWith("2024-03-01"))
+  }
+
+  test("a negative frame bound inside a comment is not rejected") {
+    val r = SqlApi.run(spark, dir,
+      """{"query": "SELECT count(*) AS n FROM nation -- -1 FOLLOWING"}""").head()
+    assert(r.getLong(0) == 25L)
+  }
+
+  test("a backquoted identifier is never rewritten") {
+    val df = SqlApi.run(spark, dir,
+      """{"query": "SELECT `FLOOR(x TO DAY)` FROM (SELECT 1 AS `FLOOR(x TO DAY)`)"}""")
+    assert(df.columns.toSeq == Seq("FLOOR(x TO DAY)"))
+  }
+
+  test("lex-then-render returns every corpus text byte for byte") {
+    val familySql = Seq(CalciteJoinShapes.gates, DrillAggregates.gates,
+      DrillFrameclause.gates, DrillLeadLag.gates, DrillMultiPartitions.gates,
+      DrillNestedAggs.gates, DrillWindowMisc.gates, QaSqlBatteries.gates,
+      QaSuites.gates, SqlQuidemShapes.gates).flatten.map(_._2)
+    val texts = SparkEntry.oracleSql.values.toSeq ++ familySql ++ Seq(
+      "SELECT '?' AS q, \"a?b\" FROM t -- is this ? ignored\nWHERE x = ?",
+      "SELECT /* not a param ? */ x FROM t WHERE x = ?",
+      "SELECT /*+ REPARTITION(3) */ n_nationkey, n_name FROM nation")
+    assert(SparkEntry.oracleSql.size == 674 && familySql.nonEmpty)
+    val changed = texts.filter(t => SqlTokens.render(SqlTokens.lex(t)) != t)
+    assert(changed.isEmpty, changed.take(3))
   }
 }
