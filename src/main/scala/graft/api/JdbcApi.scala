@@ -3,7 +3,6 @@ package graft.api
 import java.util.concurrent.ConcurrentHashMap
 
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -283,16 +282,14 @@ object JdbcApi {
 
   private def runPayload(spark: SparkSession, dir: String, sql: String,
       params: Seq[JValue], context: Map[String, String]): DataFrame = {
-    val payload = JObject(
+    val p = new SqlApi.Payload(JObject(
       "query" -> JString(sql),
       "parameters" -> JArray(params.toList),
       "context" -> JObject(context.map { case (k, v) =>
-        k -> (JString(v): JValue) }.toList))
+        k -> (JString(v): JValue) }.toList)))
     // the reference QueryScheduler lanes ALL entry points including
     // Avatica — switching protocol must not evade admission control
-    QueryLanes.withAdmission(context.get("lane")) {
-      SqlApi.run(spark, dir, JsonMethods.compact(JsonMethods.render(payload)))
-    }
+    QueryLanes.run(spark, p.lifecycle)(SqlApi.plan(spark, dir, p))
   }
 
   /** Scala value → the reference's typed-parameter JSON (`SqlParameter`). */
@@ -336,7 +333,21 @@ object JdbcApi {
   private[graft] def inferParameterTypes(spark: SparkSession, dir: String,
       sql: String): Seq[String] = {
     graft.Tables.registerAll(spark, dir)
-    val toks = lex(sql)
+    import SqlTokens.{Ident, Sym, Tok}
+    // the significant tokens' texts, a quoted identifier as its bare name;
+    // a two-character comparison operator lexes as two adjacent symbols
+    val ts = SqlTokens.lex(sql)
+    def pair(i: Int): Boolean = i >= 0 && i + 1 < ts.length &&
+      ts(i).kind == Sym && ts(i + 1).kind == Sym &&
+      Set("<=", ">=", "<>", "!=").contains(ts(i).text + ts(i + 1).text)
+    val toks = ts.indices.collect {
+      case i if ts(i).sig && !pair(i - 1) => ts(i) match {
+        case t if pair(i) => t.text + ts(i + 1).text
+        case Tok(Ident, q) =>
+          q.substring(1, q.length - 1).replace(q.take(1) * 2, q.take(1))
+        case t => t.text
+      }
+    }
     def up(i: Int): String =
       if (i >= 0 && i < toks.length) toks(i).toUpperCase else ""
     // name → SQL type over every identifier in the text that names a
@@ -350,7 +361,9 @@ object JdbcApi {
       .groupBy(_.name.toLowerCase)
       .map { case (n, fs) => n -> sqlTypeName(fs.head.dataType) }
     val cmp = Set("=", "<", ">", "<=", ">=", "<>", "!=", "LIKE", "IN")
-    def operandType(i: Int): Option[String] = {
+    def operandType(first: Int): Option[String] = {
+      var i = first // a qualified name's column is its last part
+      while (i >= 0 && i + 2 < toks.length && toks(i + 1) == ".") i += 2
       if (i < 0 || i >= toks.length) return None
       val t = toks(i)
       if (t.startsWith("'")) Some("VARCHAR")
@@ -409,54 +422,6 @@ object JdbcApi {
       case _: DecimalType => "DECIMAL"
       case _ => "OTHER"
     }
-  }
-
-  /** Minimal SQL lexer feeding the parameter-type scan: identifiers
-    * (qualified names kept whole), numbers, string literals (kept quoted),
-    * multi-char comparison operators, single-char punctuation. Comments are
-    * skipped; a double-quoted identifier becomes its bare name.
-    */
-  private[graft] def lex(sql: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        val sb = new StringBuilder("'")
-        i += 1
-        while (i < sql.length && sql.charAt(i) != '\'') { sb.append(sql.charAt(i)); i += 1 }
-        i += 1; sb.append('\'')
-        out += sb.toString
-      } else if (c == '"') {
-        val sb = new StringBuilder
-        i += 1
-        while (i < sql.length && sql.charAt(i) != '"') { sb.append(sql.charAt(i)); i += 1 }
-        i += 1
-        out += sb.toString // a quoted identifier token
-      } else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        val nl = sql.indexOf('\n', i); i = if (nl < 0) sql.length else nl + 1
-      } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        val end = sql.indexOf("*/", i + 2); i = if (end < 0) sql.length else end + 2
-      } else if (c.isLetter || c == '_') {
-        val sb = new StringBuilder
-        while (i < sql.length && (sql.charAt(i).isLetterOrDigit ||
-               sql.charAt(i) == '_' || sql.charAt(i) == '.')) {
-          sb.append(sql.charAt(i)); i += 1
-        }
-        out += sb.toString
-      } else if (c.isDigit) {
-        val sb = new StringBuilder
-        while (i < sql.length && (sql.charAt(i).isLetterOrDigit ||
-               sql.charAt(i) == '.')) { sb.append(sql.charAt(i)); i += 1 }
-        out += sb.toString
-      } else if ((c == '<' || c == '>' || c == '!') && i + 1 < sql.length &&
-                 (sql.charAt(i + 1) == '=' || sql.charAt(i + 1) == '>')) {
-        out += s"$c${sql.charAt(i + 1)}"; i += 2
-      } else if (!c.isWhitespace) {
-        out += c.toString; i += 1
-      } else i += 1
-    }
-    out.result()
   }
 
   /** Count `?` placeholders outside string literals, quoted identifiers

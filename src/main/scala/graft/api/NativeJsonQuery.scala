@@ -84,17 +84,6 @@ object NativeJsonQuery {
 
   private def runParsed(spark: SparkSession, dir: String, q: JValue): DataFrame = {
     graft.GraftSession.attach(spark)
-    // context.queryId → Spark job group, so the reference's
-    // DELETE /druid/v2/{id} cancellation maps to cancelJobGroup (see
-    // [[cancel]]); interruptOnCancel stops running tasks, not just queued
-    str(q \ "context" \ "queryId").foreach(id =>
-      spark.sparkContext.setJobGroup(id, s"graft query $id",
-        interruptOnCancel = true))
-    // context.lane (reference query laning / priority,
-    // QueryContexts.java:174) → fair-scheduler pool: jobs of a lane share
-    // that pool's slot allocation when spark.scheduler.mode=FAIR
-    str(q \ "context" \ "lane").foreach(lane =>
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", lane))
     // top-level union query (reference query/union/UnionQuery.java:52):
     // concatenate sub-query results by name
     if (str(q \ "queryType").contains("union"))
@@ -296,26 +285,6 @@ object NativeJsonQuery {
       }
     }
 
-  /** queryId → the unique job-group id of its latest [[execute]] run.
-    * Execution uses a fresh group per run because a timed-out group is
-    * cancelled with AndFutureJobs, which would poison RETRIES submitted
-    * under the same queryId (the normal reference retry pattern).
-    */
-  private val activeGroups =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Cancel a running query by its context.queryId (reference
-    * `DELETE /druid/v2/{id}`, QueryResource.java:130).
-    */
-  def cancel(spark: SparkSession, queryId: String): Unit =
-    spark.sparkContext.cancelJobGroup(
-      Option(activeGroups.get(queryId)).getOrElse(queryId))
-
-  /** Default [[execute]] result-row cap, the reference's
-    * `QueryContexts.DEFAULT_MAX_SUBQUERY_ROWS` (QueryContexts.java:174).
-    */
-  val DefaultMaxResultRows = 100000
-
   /** The text part of the [[ResultCache]] key (reference
     * `CacheStrategy.computeCacheKey`): the query with ONLY the top-level
     * context stripped (a nested query-datasource's context stays in the key
@@ -336,22 +305,15 @@ object NativeJsonQuery {
       "|" + flags.mkString(",")
   }
 
-  /** Thrown when an [[execute]] result exceeds `context.maxSubqueryRows` —
-    * the analog of the reference's ResourceLimitExceededException
-    * (query/ResourceLimitExceededException.java). The plan-returning [[run]]
-    * has no cap: only materializing to the driver is bounded.
-    */
-  final class ResourceLimitExceeded(msg: String)
-    extends RuntimeException(msg)
-
-  /** Execute with the reference's `context.timeout` (millis,
-    * QueryContexts.java:47) ENFORCED: the query's job group is cancelled
-    * when the deadline passes, failing the collect — the engine-side
-    * analog of the reference's QueryTimeoutException. Result size is
-    * bounded by `context.maxSubqueryRows` (default
-    * [[DefaultMaxResultRows]]): the collect fetches at most cap+1 rows —
-    * never the unbounded result — and overflow raises
-    * [[ResourceLimitExceeded]] instead of OOMing the driver.
+  /** Execute under the query lifecycle ([[QueryLanes.run]]): admission,
+    * `context.queryId` cancellation, the `context.lane` pool and the
+    * reference's `context.timeout` (millis, QueryContexts.java:47)
+    * ENFORCED — the query's job group is cancelled when the deadline
+    * passes, failing the collect. Result size is bounded by
+    * `context.maxSubqueryRows` (default [[QueryLanes.DefaultMaxResultRows]]):
+    * the collect fetches at most cap+1 rows — never the unbounded result —
+    * and overflow raises [[QueryLanes.ResourceLimitExceeded]] instead of
+    * OOMing the driver.
     * `context.useCache` / `populateCache` (the reference's
     * `CachingQueryRunner` flags) serve the rows through [[ResultCache]],
     * opt-in: the key is the canonical query, the built plan and the
@@ -362,60 +324,18 @@ object NativeJsonQuery {
   def execute(spark: SparkSession, dir: String, json: String)
       : Array[org.apache.spark.sql.Row] = {
     val parsed = JsonMethods.parse(json)
-    val queryId = str(parsed \ "context" \ "queryId")
-    // fresh group per run: a timed-out group stays cancelled (AndFutureJobs)
-    // and must not poison a retry that reuses the same queryId
-    val group = queryId.getOrElse("graft") + "#" + java.util.UUID.randomUUID()
-    queryId.foreach(activeGroups.put(_, group))
-    // timeout: 0 means NO timeout (reference QueryContexts.NO_TIMEOUT — a
-    // 0ms timer would cancel the job group immediately); NEGATIVE timeouts
-    // are a bad query context, rejected like the reference's QueryContexts
-    val timeoutMs = (parsed \ "context" \ "timeout" match {
-      case JInt(ms)  => Some(ms.toLong)
-      case JLong(ms) => Some(ms)
-      case _         => None
-    }).map { ms =>
-      require(ms >= 0, s"query context timeout must be >= 0, got $ms")
-      ms
-    }.filter(_ > 0)
-    val maxRows = (parsed \ "context" \ "maxSubqueryRows" match {
-      case JInt(n)  => Some(n.toInt)
-      case JLong(n) => Some(n.toInt)
-      case _        => None
-    }).getOrElse(DefaultMaxResultRows)
-    val df0 = runParsed(spark, dir, parsed)
-    // fetch cap+1, never the unbounded result; cap+1 rows back = overflow.
-    // limit-after-sort preserves ordered prefixes, so an in-cap result is
-    // identical to the uncapped collect
-    val df = df0.limit(maxRows + 1)
-    def guarded(rows: Array[org.apache.spark.sql.Row]) =
-      if (rows.length > maxRows)
-        throw new ResourceLimitExceeded(
-          s"query result exceeds maxSubqueryRows=$maxRows " +
-            "(reference ResourceLimitExceededException); raise " +
-            "context.maxSubqueryRows or add a limit/aggregation")
-      else rows
-    spark.sparkContext.setJobGroup(group, s"graft query $group",
-      interruptOnCancel = true)
-    def collect() = ResultCache.through[Array[org.apache.spark.sql.Row]](
-        ResultCache.key(cacheKey(dir, parsed), df0.queryExecution.analyzed),
-        bool(parsed \ "context" \ "useCache").contains(true),
-        bool(parsed \ "context" \ "populateCache").contains(true))(guarded(df.collect()))
-    try timeoutMs match {
-      case Some(ms) =>
-        val timer = new java.util.Timer("graft-query-timeout", true)
-        timer.schedule(new java.util.TimerTask {
-          // AndFutureJobs: the deadline may pass while the query is still
-          // planning, before any job is submitted — a plain cancelJobGroup
-          // would no-op and the query would run to completion
-          override def run(): Unit =
-            spark.sparkContext.cancelJobGroupAndFutureJobs(group)
-        }, ms)
-        try collect() finally timer.cancel()
-      case None => collect()
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      queryId.foreach(activeGroups.remove(_, group))
+    val q = QueryLanes.context(parsed \ "context" \ _, "queryId")
+    val maxRows = Some(q.maxRows.getOrElse(QueryLanes.DefaultMaxResultRows))
+    QueryLanes.run(spark, q) {
+      val df = runParsed(spark, dir, parsed)
+      ResultCache.through[Array[org.apache.spark.sql.Row]](
+          ResultCache.key(cacheKey(dir, parsed), df.queryExecution.analyzed),
+          bool(parsed \ "context" \ "useCache").contains(true),
+          bool(parsed \ "context" \ "populateCache").contains(true)) {
+        val rows = QueryLanes.limited(df, maxRows).collect()
+        QueryLanes.checkRows(rows.length, maxRows)
+        rows
+      }
     }
   }
 

@@ -46,108 +46,80 @@ object SqlApi {
     * DataFrame. EXPLAIN PLAN FOR payloads produce the one-row explain result.
     */
   def run(spark: SparkSession, dir: String, payload: String): DataFrame =
-    compile(spark, dir, JsonMethods.parse(payload))._2
+    plan(spark, dir, new Payload(JsonMethods.parse(payload)))
 
-  /** The one compile step of a parsed payload: its dialect-rewritten SQL
-    * (as [[sql(j)]] gives it) and its DataFrame.
+  /** A payload parsed once: its context and its query, lexed with the
+    * parameters bound and every dialect pass applied.
     */
-  private def compile(spark: SparkSession, dir: String,
-                      j: JValue): (String, DataFrame) = {
+  private[graft] final class Payload(val json: JValue) {
+    private val (sets, text) = setStatements(str(json \ "query").getOrElse(
+      throw new IllegalArgumentException("payload requires a query field")))
+
+    /** Context value for `key`: a leading SET statement wins over the
+      * payload's context object (reference DruidSqlSet precedence).
+      */
+    def ctx(key: String): JValue = sets.getOrElse(key, json \ "context" \ key)
+
+    val toks: Toks = pipeline.foldLeft(bind(lex(text), json \ "parameters" match {
+      case JArray(xs) => xs; case _ => Nil
+    }))((ts, p) => p(ts))
+
+    /** The bound, dialect-rewritten SQL text, SET statements stripped. */
+    val sql: String = render(toks)
+
+    lazy val isIngest: Boolean = ingestTarget(sql).isDefined
+
+    def lifecycle: QueryLanes.QueryContext = QueryLanes.context(ctx, "sqlQueryId")
+  }
+
+  /** The one plan step of a payload: its DataFrame, built on a per-query
+    * clone of the session. A DML payload runs its ingest here.
+    */
+  private[graft] def plan(spark: SparkSession, dir: String, p: Payload): DataFrame = {
     GraftSession.attach(spark)
     Tables.registerAll(spark, dir)
     registerWarehouse(spark)
-    // context.lane (reference query laning, QueryContexts.getLane) → Spark
-    // fair-scheduler pool, same mapping as the native JSON route: all jobs
-    // this query submits inherit the lane's pool weight/minShare under
-    // spark.scheduler.mode=FAIR
-    str(ctxValue(j, "lane")).foreach(lane =>
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", lane))
-    // reference lookup-rewrite context keys (default true): fold into the
-    // confs the optimizer rules read, so a query can opt out per request
-    bool(ctxValue(j, "sqlReverseLookup")).foreach(v =>
-      spark.conf.set("spark.graft.sqlReverseLookup", v.toString))
-    bool(ctxValue(j, "sqlPullUpLookup")).foreach(v =>
-      spark.conf.set("spark.graft.sqlPullUpLookup", v.toString))
-    val ts = dialect(j)
-    val sqlText = renderCalcite(rewriteTableFunctions(spark, dir, ts))
-    // context.sqlTimeZone (reference PlannerContext.getTimeZone): the query
-    // plans under the requested zone — Catalyst's ResolveTimeZone bakes the
-    // session zone into datetime expressions at ANALYSIS time, so setting
-    // the conf around plan construction (and restoring it after) scopes the
-    // zone to this query without leaking into the session
-    // Druid SQL quotes identifiers with double quotes (Calcite), Spark
-    // with backticks — accept the reference's form on this entry point so
-    // console-generated SQL runs verbatim. The conf (and the optional
-    // per-query sqlTimeZone) is session state; parsing happens on a CLONED
-    // session (shared context/catalog/temp views, independent SQLConf) so
-    // the parse-scoped confs cannot leak to concurrent direct `spark.sql`
-    // callers on the original session. DML is the exception: runIngest
-    // registers the ingested table as a temp view, which must land on the
-    // caller's session — that path keeps the serialized set/restore window.
-    val DqKey = "spark.sql.ansi.doubleQuotedIdentifiers"
-    val TzKey = "spark.sql.session.timeZone"
-    val tz = str(ctxValue(j, "sqlTimeZone"))
-    val df = ingestTarget(sqlText) match {
-      case Some(ing) =>
-        confScopeLock(spark).synchronized {
-          val prevDq = spark.conf.getOption(DqKey)
-          val prevTz = spark.conf.get(TzKey)
-          spark.conf.set(DqKey, "true")
-          tz.foreach(spark.conf.set(TzKey, _))
-          try runIngest(spark, ing)
-          finally {
-            spark.conf.set(TzKey, prevTz)
-            prevDq match {
-              case Some(v) => spark.conf.set(DqKey, v)
-              case None    => spark.conf.unset(DqKey)
-            }
-          }
-        }
+    val sqlText = renderCalcite(rewriteTableFunctions(spark, dir, p.toks))
+    // The query is read on a CLONE of the session (shared context and
+    // catalog, a copy of the temp views, its own SQLConf), so the per-query
+    // confs set here cannot leak into the caller's session or to its
+    // concurrent callers:
+    //  - Druid SQL quotes identifiers with double quotes (Calcite), Spark
+    //    with backticks — accept the reference's form on this entry point
+    //    so console-generated SQL runs verbatim;
+    //  - context.sqlTimeZone (reference PlannerContext.getTimeZone):
+    //    Catalyst's ResolveTimeZone bakes the zone into datetime
+    //    expressions at analysis time;
+    //  - the reference's lookup-rewrite keys sqlReverseLookup and
+    //    sqlPullUpLookup (default true) fold into the confs the optimizer
+    //    rules read, which run on the clone the DataFrame belongs to.
+    val ps = org.apache.spark.sql.GraftSessionAccess.cloneSession(spark)
+    ps.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+    str(p.ctx("sqlTimeZone")).foreach(ps.conf.set("spark.sql.session.timeZone", _))
+    Seq("sqlReverseLookup", "sqlPullUpLookup").foreach(k =>
+      bool(p.ctx(k)).foreach(v => ps.conf.set(s"spark.graft.$k", v.toString)))
+    ingestTarget(sqlText) match {
+      case Some(ing) => runIngest(spark, ps, ing)
       case None =>
-        val ps = org.apache.spark.sql.GraftSessionAccess.cloneSession(spark)
-        def build(): DataFrame = {
-          val df = explainTarget(sqlText) match {
-            case Some(inner) => explainPlan(ps, inner)
-            case None =>
-              val base = sqlWithSortWindows(ps, sqlText)
-              // context.sqlOuterLimit (reference QueryContexts): a hard
-              // outer row cap applied over whatever the query returns
-              ctxValue(j, "sqlOuterLimit") match {
-                case JInt(n)  => base.limit(n.toInt)
-                case JLong(n) => base.limit(n.toInt)
-                case _        => base
-              }
-          }
-          df.queryExecution.analyzed // bake zone/idents into the plan now
-          df
-        }
-        if (ps ne spark) {
-          // independent SQLConf: set-and-forget, nothing to restore
-          ps.conf.set(DqKey, "true")
-          tz.foreach(ps.conf.set(TzKey, _))
-          build()
-        } else confScopeLock(spark).synchronized {
-          // clone unavailable (non-classic session): fall back to the
-          // serialized set/restore window on the shared conf
-          val prevDq = spark.conf.getOption(DqKey)
-          val prevTz = spark.conf.get(TzKey)
-          spark.conf.set(DqKey, "true")
-          tz.foreach(spark.conf.set(TzKey, _))
-          try build()
-          finally {
-            spark.conf.set(TzKey, prevTz)
-            prevDq match {
-              case Some(v) => spark.conf.set(DqKey, v)
-              case None    => spark.conf.unset(DqKey)
+        val df = explainTarget(sqlText) match {
+          case Some(inner) => explainPlan(ps, inner)
+          case None =>
+            val base = sqlWithSortWindows(ps, sqlText)
+            // context.sqlOuterLimit (reference QueryContexts): a hard
+            // outer row cap applied over whatever the query returns
+            p.ctx("sqlOuterLimit") match {
+              case JInt(n)  => base.limit(n.toInt)
+              case JLong(n) => base.limit(n.toInt)
+              case _        => base
             }
-          }
         }
+        df.queryExecution.analyzed // bake zone/idents into the plan now
+        df
     }
-    (render(ts), df)
   }
 
-  /** Per-session lock for the scoped-conf parse window above (weak keys:
-    * sessions stay collectable).
+  /** Per-session lock for [[sqlWithSortWindows]]' scoped-conf window (weak
+    * keys: sessions stay collectable).
     */
   private val confScopeLocks =
     java.util.Collections.synchronizedMap(
@@ -160,12 +132,13 @@ object SqlApi {
     }
 
   /** Run the payload and render the HTTP response body per `resultFormat` +
-    * header flags, honoring context.timeout and context.sqlQueryId
-    * cancellation (reference `SqlResource` + `SqlLifecycle`). The result is
-    * bounded by `context.maxSubqueryRows` (default
-    * [[NativeJsonQuery.DefaultMaxResultRows]]): rows are fetched through
-    * `toLocalIterator` — never an unbounded `collect` — and overflow raises
-    * [[NativeJsonQuery.ResourceLimitExceeded]] instead of OOMing the driver.
+    * header flags, under the query lifecycle ([[QueryLanes.run]]: admission,
+    * context.sqlQueryId cancellation, context.lane and context.timeout —
+    * reference `SqlResource` + `SqlLifecycle`). The result is bounded by
+    * `context.maxSubqueryRows` (default [[QueryLanes.DefaultMaxResultRows]]):
+    * rows are fetched through `toLocalIterator` — never an unbounded
+    * `collect` — and overflow raises [[QueryLanes.ResourceLimitExceeded]]
+    * instead of OOMing the driver.
     * `context.useCache` / `populateCache` serve the body through
     * [[ResultCache]], opt-in: the key is the payload's result-affecting
     * fields, the compiled plan and the version of every file it reads, and
@@ -187,13 +160,13 @@ object SqlApi {
   /** Everything result-affecting in the payload besides the plan itself:
     * dir, the parameter-bound SQL, result format + header flags, and caps.
     */
-  private def sqlCacheKey(dir: String, j: JValue, boundSql: String): String = {
+  private def sqlCacheKey(dir: String, p: Payload): String = {
     val flags = Seq("resultFormat", "header", "typesHeader", "sqlTypesHeader")
-      .map(k => k + "=" + JsonMethods.compact(JsonMethods.render(j \ k)))
+      .map(k => k + "=" + JsonMethods.compact(JsonMethods.render(p.json \ k)))
     val ctxFlags = Seq("maxSubqueryRows", "sqlOuterLimit", "sqlTimeZone",
         "sqlStringifyArrays")
-      .map(k => k + "=" + JsonMethods.compact(JsonMethods.render(ctxValue(j, k))))
-    ("sql" +: dir +: boundSql +: (flags ++ ctxFlags)).mkString("\u0001")
+      .map(k => k + "=" + JsonMethods.compact(JsonMethods.render(p.ctx(k))))
+    ("sql" +: dir +: p.sql +: (flags ++ ctxFlags)).mkString("\u0001")
   }
 
   /** Streaming variant of [[execute]]: renders the response body
@@ -210,114 +183,58 @@ object SqlApi {
 
   private def executeTo(spark: SparkSession, dir: String, payload: String,
                         out: java.io.Writer, capped: Boolean): Unit = {
-    val j = JsonMethods.parse(payload)
-    // admission control (reference QueryScheduler.run): the whole
-    // compile+execute runs under the lane/total permits so capacity counts
-    // in-flight queries, and rejection happens before any work is planned
-    QueryLanes.withAdmission(str(ctxValue(j, "lane"))) {
-      executeAdmitted(spark, dir, j, out, capped)
-    }
-  }
-
-  private def executeAdmitted(spark: SparkSession, dir: String, j: JValue,
-                              out: java.io.Writer, capped: Boolean): Unit = {
-    val (boundSql, df0) = compile(spark, dir, j)
-    // reference sqlStringifyArrays: complex-typed result columns render as
-    // JSON strings (the reference's default for non-array-aware formats;
-    // here opt-in so the native array rendering stays the default)
-    val df =
-      if (bool(ctxValue(j, "sqlStringifyArrays")).contains(true)) {
-        import org.apache.spark.sql.functions.{col, to_json}
-        import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-        df0.select(df0.schema.fields.map { f =>
-          f.dataType match {
-            case _: ArrayType | _: MapType | _: StructType =>
-              to_json(col(s"`${f.name}`")).as(f.name)
-            case _ => col(s"`${f.name}`")
-          }
-        }.toIndexedSeq: _*)
-      } else df0
-    val queryId = str(ctxValue(j, "sqlQueryId"))
-    val group = queryId.getOrElse("graft-sql") + "#" + java.util.UUID.randomUUID()
-    queryId.foreach(activeGroups.put(_, group))
-    // timeout: 0 means NO timeout (reference QueryContexts.NO_TIMEOUT — a
-    // 0ms timer would cancel the job group immediately); NEGATIVE timeouts
-    // are a bad query context, rejected like the reference's QueryContexts
-    val timeoutMs = (ctxValue(j, "timeout") match {
-      case JInt(ms)  => Some(ms.toLong)
-      case JLong(ms) => Some(ms)
-      case _         => None
-    }).map { ms =>
-      require(ms >= 0, s"query context timeout must be >= 0, got $ms")
-      ms
-    }.filter(_ > 0)
-    val explicitMaxRows = ctxValue(j, "maxSubqueryRows") match {
-      case JInt(n)  => Some(n.toInt)
-      case JLong(n) => Some(n.toInt)
-      case _        => None
-    }
+    val p = new Payload(JsonMethods.parse(payload))
+    val q = p.lifecycle
     // capped (buffered) path: caller's cap or the default. Stream path:
     // unbounded by default (the caller owns the sink), but an EXPLICITLY
     // supplied maxSubqueryRows is honored — silently ignoring a requested
     // cap would be surprising for API parity.
-    val maxRowsOpt =
-      if (capped)
-        Some(explicitMaxRows.getOrElse(NativeJsonQuery.DefaultMaxResultRows))
-      else explicitMaxRows
-    spark.sparkContext.setJobGroup(group, s"graft sql $group",
-      interruptOnCancel = true)
-    def body(out: java.io.Writer): Unit = {
-      // fetch cap+1 at most: cap+1 rows back = overflow, never the full
-      // result. Clamped: at cap = Int.MaxValue the +1 would overflow
-      // limit() to a negative value — treat it as effectively uncapped.
-      val limited = maxRowsOpt match {
-        case Some(m) if m < Int.MaxValue => df.limit(m + 1)
-        case _ => df
-      }
-      val it = limited.toLocalIterator()
-      val rows = new Iterator[Row] {
-        private var n = 0
-        def hasNext: Boolean = it.hasNext
-        def next(): Row = {
-          n += 1
-          maxRowsOpt.foreach { m =>
-            if (n > m)
-              throw new NativeJsonQuery.ResourceLimitExceeded(
-                s"query result exceeds maxSubqueryRows=$m " +
-                  "(reference ResourceLimitExceededException); raise " +
-                  "context.maxSubqueryRows or add a limit/aggregation")
+    val maxRows =
+      if (capped) Some(q.maxRows.getOrElse(QueryLanes.DefaultMaxResultRows))
+      else q.maxRows
+    QueryLanes.run(spark, q) {
+      val df0 = plan(spark, dir, p)
+      // reference sqlStringifyArrays: complex-typed result columns render as
+      // JSON strings (the reference's default for non-array-aware formats;
+      // here opt-in so the native array rendering stays the default)
+      val df =
+        if (bool(p.ctx("sqlStringifyArrays")).contains(true)) {
+          import org.apache.spark.sql.functions.{col, to_json}
+          df0.select(df0.schema.fields.map { f =>
+            f.dataType match {
+              case _: ArrayType | _: MapType | _: StructType =>
+                to_json(col(s"`${f.name}`")).as(f.name)
+              case _ => col(s"`${f.name}`")
+            }
+          }.toIndexedSeq: _*)
+        } else df0
+      def body(out: java.io.Writer): Unit = {
+        val it = QueryLanes.limited(df, maxRows).toLocalIterator()
+        val rows = new Iterator[Row] {
+          private var n = 0L
+          def hasNext: Boolean = it.hasNext
+          def next(): Row = {
+            n += 1
+            QueryLanes.checkRows(n, maxRows)
+            it.next()
           }
-          it.next()
         }
+        renderRows(rows, df.schema, p.json, out)
       }
-      renderRows(rows, df.schema, j, out)
-    }
-    // execute's cache flags buffer the body through ResultCache; else it goes
-    // to `out`. DML has already run in `compile`: it stays out of the cache and its stats
-    def flag(k: String) = capped && ctxValue(j, k) == JBool(true)
-    val useCache = flag("useCache")
-    val populateCache = flag("populateCache")
-    def respond(): Unit =
-      if (!useCache && !populateCache || ingestTarget(boundSql).isDefined) body(out)
+      // execute's cache flags buffer the body through ResultCache; else it
+      // goes to `out`. DML has already run in `plan`: it stays out of the
+      // cache and its stats
+      def flag(k: String) = capped && p.ctx(k) == JBool(true)
+      val useCache = flag("useCache")
+      val populateCache = flag("populateCache")
+      if (!useCache && !populateCache || p.isIngest) body(out)
       else out.write(ResultCache.through(
-          ResultCache.key(sqlCacheKey(dir, j, boundSql), df.queryExecution.analyzed),
+          ResultCache.key(sqlCacheKey(dir, p), df.queryExecution.analyzed),
           useCache, populateCache, (b: String) => b.length <= MaxCachedBodyChars) {
         val buf = new java.io.StringWriter()
         body(buf)
         buf.toString
       })
-    try timeoutMs match {
-      case Some(ms) =>
-        val timer = new java.util.Timer("graft-sql-timeout", true)
-        timer.schedule(new java.util.TimerTask {
-          override def run(): Unit =
-            spark.sparkContext.cancelJobGroupAndFutureJobs(group)
-        }, ms)
-        try respond() finally timer.cancel()
-      case None => respond()
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      queryId.foreach(activeGroups.remove(_, group))
     }
   }
 
@@ -340,8 +257,7 @@ object SqlApi {
     // below analyzes eagerly (Bridge.ofRows / Dataset construction), so
     // cast eval modes are baked into the plan before the conf is
     // restored, and a DataFrame-API user of the same session keeps their
-    // ANSI semantics. Serialized via confScopeLock like the facade's
-    // other scoped-conf windows (re-entrant from the fallback path).
+    // ANSI semantics. Serialized per session via confScopeLock.
     // Calcite has NO lateral column aliases — a SELECT item's alias is
     // invisible to sibling expressions and to GROUP BY expressions, so
     // `SELECT time_floor(__time, …) AS __time … GROUP BY time_floor(
@@ -1896,38 +1812,10 @@ object SqlApi {
       sqlWithSortWindows(spark, rewriteSql(sqlText))
     }
 
-  /** DELETE /druid/v2/sql/{sqlQueryId} analog. */
-  def cancel(spark: SparkSession, sqlQueryId: String): Unit =
-    Option(activeGroups.get(sqlQueryId))
-      .foreach(spark.sparkContext.cancelJobGroupAndFutureJobs)
-
-  private val activeGroups =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Context value for `key`: a leading SET statement wins over the
-    * payload's context object (reference DruidSqlSet precedence).
-    */
-  private def ctxValue(j: JValue, key: String): JValue = {
-    val sets = str(j \ "query").map(setStatements(_)._1).getOrElse(Map.empty)
-    sets.getOrElse(key, j \ "context" \ key)
-  }
-
   /** Bound, dialect-rewritten SQL text of a payload (SET statements
     * stripped — fold them into the context via [[setStatements]]).
     */
-  private[graft] def sql(j: JValue): String = render(dialect(j))
-
-  /** A payload's query, lexed once: parameters bound, every dialect pass
-    * applied.
-    */
-  private def dialect(j: JValue): Toks = {
-    val raw = str(j \ "query").getOrElse(
-      throw new IllegalArgumentException("payload requires a query field"))
-    val params = j \ "parameters" match {
-      case JArray(xs) => xs; case _ => Nil
-    }
-    pipeline.foldLeft(bind(lex(setStatements(raw)._2), params))((ts, p) => p(ts))
-  }
+  private[graft] def sql(j: JValue): String = new Payload(j).sql
 
   private[graft] type Pass = Toks => Toks
 
@@ -2573,9 +2461,12 @@ object SqlApi {
     }
   }
 
-  private def runIngest(spark: SparkSession,
+  /** Run an ingest: its SELECT is read on `ps` (the query's session clone)
+    * and the written table registers as a view on the caller's `spark`.
+    */
+  private def runIngest(spark: SparkSession, ps: SparkSession,
                         ing: IngestStatement): DataFrame = {
-    val result = spark.sql(ing.innerSql)
+    val result = ps.sql(ing.innerSql)
     require(result.columns.contains(Tables.TimeColumn),
       s"ingest query must produce a ${Tables.TimeColumn} column")
     val path = warehouseDir(spark) + "/" + ing.table

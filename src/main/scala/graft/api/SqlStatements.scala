@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.StructType
   *
   * The registry is bounded: finished statements beyond [[MaxStatements]] are
   * evicted oldest-first (their result directories deleted); submit fails
-  * with [[NativeJsonQuery.ResourceLimitExceeded]] when every slot is still
+  * with [[QueryLanes.ResourceLimitExceeded]] when every slot is still
   * live.
   */
 object SqlStatements {
@@ -47,10 +47,8 @@ object SqlStatements {
 
   private final class Stmt(
       val queryId: String,
-      val payload: String,
-      val parsed: JValue,
+      val payload: SqlApi.Payload,
       val createdAtMs: Long,
-      val group: String,
       /** Pre-planned DataFrame (SELECT statements — planned at submit so
         * invalid SQL fails synchronously like the reference's 400); ingest
         * statements plan AND run inside the worker.
@@ -92,19 +90,13 @@ object SqlStatements {
     * since planning them runs the write.
     */
   def submit(spark: SparkSession, dir: String, payload: String): String = {
-    val parsed = JsonMethods.parse(payload)
-    val queryId = (parsed \ "context" \ "sqlQueryId" match {
-      case JString(s) => Some(s)
-      case _ => None
-    }).getOrElse(java.util.UUID.randomUUID().toString)
+    val p = new SqlApi.Payload(JsonMethods.parse(payload))
+    val queryId = p.lifecycle.id.getOrElse(java.util.UUID.randomUUID().toString)
     evictForCapacity()
-    val isIngest = SqlApi.ingestTarget(SqlApi.sql(parsed)).isDefined
     val planned =
-      if (isIngest) None
-      else Some(SqlApi.run(spark, dir, payload)) // analyzes eagerly; lazy exec
-    val stmt = new Stmt(queryId, payload, parsed, System.currentTimeMillis(),
-      group = s"graft-stmt-$queryId#${java.util.UUID.randomUUID()}",
-      planned = planned)
+      if (p.isIngest) None
+      else Some(SqlApi.plan(spark, dir, p)) // analyzes eagerly; lazy exec
+    val stmt = new Stmt(queryId, p, System.currentTimeMillis(), planned)
     val prev = registry.putIfAbsent(queryId, stmt)
     if (prev != null && !prev.finished)
       throw new IllegalStateException(
@@ -120,7 +112,7 @@ object SqlStatements {
     val finished = registry.values.asScala.filter(_.finished).toSeq
       .sortBy(_.createdAtMs)
     if (finished.isEmpty)
-      throw new NativeJsonQuery.ResourceLimitExceeded(
+      throw new QueryLanes.ResourceLimitExceeded(
         s"statement registry full ($MaxStatements live statements); " +
           "cancel or await completion before submitting more")
     finished.take(registry.size - MaxStatements + 1).foreach { s =>
@@ -131,52 +123,46 @@ object SqlStatements {
 
   private def execute(spark: SparkSession, dir: String, stmt: Stmt): Unit = {
     val t0 = System.currentTimeMillis()
-    stmt.state = Running
-    // job group is thread-local: set inside the worker thread so cancel()
-    // kills exactly this statement's jobs
-    spark.sparkContext.setJobGroup(stmt.group, s"graft statement ${stmt.queryId}",
-      interruptOnCancel = true)
+    val out = s"$statementsRoot/${stmt.queryId}"
     try {
-      // the async statement API is an entry point like any other — its
-      // execution counts against lane/total capacity (reference
-      // QueryScheduler lanes every protocol)
-      val lane = stmt.parsed \ "context" \ "lane" match {
-        case org.json4s.JString(s) => Some(s)
-        case _ => None
+      // the async statement API is an entry point like any other: its
+      // execution runs under the query lifecycle (reference QueryScheduler
+      // lanes every protocol), in a job group registered under its id
+      QueryLanes.run(spark, stmt.payload.lifecycle.copy(id = Some(stmt.queryId))) {
+        // a cancel that came first has finished the statement; one that
+        // comes later finds this run's job group registered
+        if (!stmt.finished) {
+          stmt.state = Running
+          val df = stmt.planned.getOrElse(SqlApi.plan(spark, dir, stmt.payload))
+          stmt.schema = Some(df.schema)
+          deleteRecursively(new java.io.File(out))
+          df.write.mode("overwrite").parquet(out)
+          // page inventory from the part files (reference PageInformation):
+          // one page per file, file order = result order
+          val files = Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
+            .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+            .sortBy(_.getName)
+          // per-page row counts in ONE job over the parquet footers (count()
+          // on parquet is a metadata-only aggregate), not a job per page
+          val counts: Map[String, Long] =
+            if (files.isEmpty) Map.empty
+            else spark.read.parquet(out)
+              .groupBy(org.apache.spark.sql.functions.input_file_name().as("f"))
+              .count().collect()
+              .map(r => new java.net.URI(r.getString(0)).getPath -> r.getLong(1))
+              .toMap
+          stmt.pages = files.toSeq.map(f =>
+            (f.getAbsolutePath, counts.getOrElse(f.getAbsolutePath, 0L), f.length()))
+          stmt.resultDir = Some(out)
+          stmt.durationMs = Some(System.currentTimeMillis() - t0)
+          stmt.state = Success
+        }
       }
-      val out = s"$statementsRoot/${stmt.queryId}"
-      QueryLanes.withAdmission(lane) {
-        val df = stmt.planned.getOrElse(SqlApi.run(spark, dir, stmt.payload))
-        stmt.schema = Some(df.schema)
-        deleteRecursively(new java.io.File(out))
-        df.write.mode("overwrite").parquet(out)
-      }
-      // page inventory from the part files (reference PageInformation):
-      // one page per file, file order = result order
-      val files = Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      // per-page row counts in ONE job over the parquet footers (count()
-      // on parquet is a metadata-only aggregate), not a job per page
-      val counts: Map[String, Long] =
-        if (files.isEmpty) Map.empty
-        else spark.read.parquet(out)
-          .groupBy(org.apache.spark.sql.functions.input_file_name().as("f"))
-          .count().collect()
-          .map(r => new java.net.URI(r.getString(0)).getPath -> r.getLong(1))
-          .toMap
-      stmt.pages = files.toSeq.map(f =>
-        (f.getAbsolutePath, counts.getOrElse(f.getAbsolutePath, 0L), f.length()))
-      stmt.resultDir = Some(out)
-      stmt.durationMs = Some(System.currentTimeMillis() - t0)
-      stmt.state = Success
     } catch {
       case e: Throwable =>
         stmt.durationMs = Some(System.currentTimeMillis() - t0)
         stmt.error = Some(String.valueOf(e.getMessage))
         stmt.state = Failed
-    } finally {
-      spark.sparkContext.clearJobGroup()
     }
   }
 
@@ -232,8 +218,8 @@ object SqlStatements {
       if (stmt.pages.isEmpty) Array.empty
       else spark.read.schema(schema).parquet(stmt.pages(page)._1).collect()
     val withFmt = resultFormat match {
-      case Some(f) => stmt.parsed.merge(JObject("resultFormat" -> JString(f)))
-      case None => stmt.parsed
+      case Some(f) => stmt.payload.json.merge(JObject("resultFormat" -> JString(f)))
+      case None => stmt.payload.json
     }
     SqlApi.format(rows, schema, withFmt)
   }
@@ -263,9 +249,9 @@ object SqlStatements {
     val stmt = registry.get(queryId)
     if (stmt == null) return false
     if (!stmt.finished) {
-      spark.sparkContext.cancelJobGroupAndFutureJobs(stmt.group)
       stmt.error = Some("Query canceled")
       stmt.state = Failed
+      QueryLanes.cancel(spark, queryId)
     }
     registry.remove(queryId)
     stmt.resultDir.foreach(d => deleteRecursively(new java.io.File(d)))

@@ -2,16 +2,14 @@ package org.apache.spark.sql
 
 /** Accessor for `SparkSession.cloneSession()` (which is `private[sql]`).
   *
-  * The SQL facade needs a parse-scoped conf window
-  * (`spark.sql.ansi.doubleQuotedIdentifiers`, per-query `sqlTimeZone`)
-  * without mutating session-wide conf: a clone shares the SparkContext,
-  * catalog and temp views but owns an independent SQLConf, so setting the
-  * parse confs on the clone cannot leak to concurrent direct `spark.sql`
-  * users of the original session.
+  * The SQL facade reads each query with per-query confs
+  * (`spark.sql.ansi.doubleQuotedIdentifiers`, `sqlTimeZone`, the lookup
+  * rewrite keys) without mutating session-wide conf: a clone shares the
+  * SparkContext and catalog, copies the temp views and owns an independent
+  * SQLConf, so setting the confs on the clone cannot leak to concurrent
+  * direct `spark.sql` users of the original session.
   */
 object GraftSessionAccess {
-  def cloneSession(s: SparkSession): SparkSession = s match {
-    case c: org.apache.spark.sql.classic.SparkSession => c.cloneSession()
-    case other => other // non-classic implementations: no clone available
-  }
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

@@ -63,6 +63,17 @@ class JdbcApiSpec extends AnyFunSuite {
         "SELECT coalesce(?, n_name) AS x FROM nation")
       assert(sig2.parameterTypes == Seq("OTHER"))
       JdbcApi.closeStatement("c-ptype", id2)
+      // a ''-escaped literal, a double-quoted column and a ? in a comment
+      // ahead of typed placeholders: lexed on the facade's own rules
+      val (id3, sig3) = JdbcApi.prepareStatement(spark, dir, "c-ptype",
+        """SELECT o_orderkey FROM orders
+           WHERE o_orderpriority <> 'it''s ?' -- is ? a placeholder here
+             AND "o_orderstatus" = ?
+             AND /* ? */ o_custkey >= ?""")
+      assert(sig3.parameterCount == 2)
+      assert(sig3.parameterTypes == Seq("VARCHAR", "BIGINT"),
+        sig3.parameterTypes.toString)
+      JdbcApi.closeStatement("c-ptype", id3)
     } finally JdbcApi.closeConnection("c-ptype")
   }
 

@@ -747,11 +747,17 @@ class NativeJsonQuerySpec extends AnyFunSuite {
   }
 
   test("context.lane maps onto a scheduler pool") {
-    NativeJsonQuery.run(spark, dir, """
-      {"queryType": "timeBoundary", "dataSource": "events",
-       "context": {"lane": "low"}}""").collect()
-    assert(spark.sparkContext.getLocalProperty("spark.scheduler.pool") == "low")
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+    // the query's jobs run in the lane's pool; the caller's thread keeps
+    // its own job group and pool
+    val (pools, group, pool) = QueryLifecycleSpec.lanesOf(spark, "lane-native-1") {
+      NativeJsonQuery.execute(spark, dir, """
+        {"queryType": "groupBy", "dataSource": "events",
+         "dimensions": ["event_type"],
+         "context": {"lane": "low", "queryId": "lane-native-1"},
+         "aggregations": [{"type": "count", "name": "n"}]}""")
+    }
+    assert(pools.nonEmpty && pools.forall(_ == "low"), pools)
+    assert(group == "outer-group" && pool == "outer-pool", (group, pool))
   }
 
   test("context.timeout cancels an overrunning query, passes a quick one") {
@@ -774,16 +780,37 @@ class NativeJsonQuerySpec extends AnyFunSuite {
   }
 
   test("context.queryId tags jobs for cancellation") {
-    val df = NativeJsonQuery.run(spark, dir, """
+    // a running query is cancelled by its id (reference DELETE
+    // /druid/v2/{id}): its jobs run in a group registered under the id
+    val slow = """
       {"queryType": "groupBy", "dataSource": "events",
-       "dimensions": ["event_type"],
+       "virtualColumns": [{"type": "expression", "name": "burn",
+         "expression": "aggregate(transform(sequence(1, 1000), i -> aggregate(sequence(1, 1000), 0L, (a, x) -> a + x)), 0L, (a, x) -> a + x)"}],
+       "dimensions": ["burn"],
        "context": {"queryId": "cancel-me-123"},
-       "aggregations": [{"type": "count", "name": "n"}]}""")
-    df.collect()
-    spark.sparkContext.clearJobGroup()
-    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup("cancel-me-123")
-    assert(jobs.nonEmpty)
-    NativeJsonQuery.cancel(spark, "cancel-me-123") // no-op when finished
+       "aggregations": [{"type": "count", "name": "n"}]}"""
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+              .exists(_.startsWith("cancel-me-123#"))) started.countDown()
+    }
+    sc.addSparkListener(listener)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val runner = new Thread(() =>
+      try NativeJsonQuery.execute(spark, dir, slow)
+      catch { case e: Throwable => failure.set(e) })
+    try {
+      runner.start()
+      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      graft.api.QueryLanes.cancel(spark, "cancel-me-123")
+      runner.join(60000)
+      assert(!runner.isAlive)
+      assert(failure.get != null &&
+        String.valueOf(failure.get.getMessage).toLowerCase.contains("cancel"), failure.get)
+    } finally sc.removeSparkListener(listener)
+    graft.api.QueryLanes.cancel(spark, "cancel-me-123") // no-op when finished
   }
 
   test("sys_servers and sys_tasks system views register") {
@@ -933,7 +960,7 @@ class NativeJsonQuerySpec extends AnyFunSuite {
 
   test("maxSubqueryRows caps execute() results like the reference broker") {
     // scan over the cap errors with the resource-limit message...
-    val over = intercept[NativeJsonQuery.ResourceLimitExceeded] {
+    val over = intercept[graft.api.QueryLanes.ResourceLimitExceeded] {
       NativeJsonQuery.execute(spark, dir, """
         {"queryType": "scan", "dataSource": "events",
          "columns": ["event_type"],

@@ -291,7 +291,7 @@ class SqlApiSpec extends AnyFunSuite {
       "query": "SELECT * FROM lineitem",
       "context": {"maxSubqueryRows": 100}
     }"""
-    val ex = intercept[graft.api.NativeJsonQuery.ResourceLimitExceeded] {
+    val ex = intercept[graft.api.QueryLanes.ResourceLimitExceeded] {
       SqlApi.execute(spark, dir, big)
     }
     assert(ex.getMessage.contains("maxSubqueryRows=100"))
@@ -326,7 +326,7 @@ class SqlApiSpec extends AnyFunSuite {
     // an explicitly supplied maxSubqueryRows is honored even when streaming
     // (silently ignoring a caller-requested cap would break API parity)
     val capped = new java.io.StringWriter()
-    val ex = intercept[graft.api.NativeJsonQuery.ResourceLimitExceeded] {
+    val ex = intercept[graft.api.QueryLanes.ResourceLimitExceeded] {
       SqlApi.executeStream(spark, dir, """{
         "query": "SELECT n_nationkey FROM nation ORDER BY n_nationkey",
         "resultFormat": "arrayLines",
@@ -509,13 +509,11 @@ class SqlApiSpec extends AnyFunSuite {
     def planOf(ctx: String): String = SqlApi.run(spark, dir, s"""{
       "query": "SELECT n_name FROM nation WHERE LOOKUP(CAST(n_nationkey AS VARCHAR(8)), 'rl_ctx') = 'AFRICA'"$ctx
     }""").queryExecution.optimizedPlan.toString
-    try {
-      // default: the filter inverts to an equality on the raw key
-      assert(!planOf("").contains("element_at"), "rewrite should fire by default")
-      // opted out: the map extraction survives optimization
-      assert(planOf(""", "context": {"sqlReverseLookup": false}""")
-        .contains("element_at"), "rewrite must be disabled by the context key")
-    } finally spark.conf.unset("spark.graft.sqlReverseLookup")
+    // default: the filter inverts to an equality on the raw key
+    assert(!planOf("").contains("element_at"), "rewrite should fire by default")
+    // opted out: the map extraction survives optimization
+    assert(planOf(""", "context": {"sqlReverseLookup": false}""")
+      .contains("element_at"), "rewrite must be disabled by the context key")
   }
 
   test("context.sqlTimeZone scopes datetime semantics to the query") {
@@ -542,14 +540,16 @@ class SqlApiSpec extends AnyFunSuite {
 
   test("context.lane routes the SQL query into a scheduler pool") {
     // reference query laning (QueryContexts.getLane): the SQL route maps a
-    // lane onto a Spark fair-scheduler pool exactly like the native route
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-    SqlApi.run(spark, dir, """{
-      "query": "SELECT count(*) AS n FROM nation",
-      "context": {"lane": "low"}
-    }""").collect()
-    assert(spark.sparkContext.getLocalProperty("spark.scheduler.pool") == "low")
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+    // lane onto a Spark fair-scheduler pool exactly like the native route,
+    // for the query's jobs only — the caller's thread keeps its own
+    val (pools, group, pool) = QueryLifecycleSpec.lanesOf(spark, "lane-sql-1") {
+      SqlApi.execute(spark, dir, """{
+        "query": "SELECT count(*) AS n FROM nation",
+        "context": {"lane": "low", "sqlQueryId": "lane-sql-1"}
+      }""")
+    }
+    assert(pools.nonEmpty && pools.forall(_ == "low"), pools)
+    assert(group == "outer-group" && pool == "outer-pool", (group, pool))
   }
 
   test("result cache: a SQL hit returns the stored body; result format and flagless queries stay apart") {
