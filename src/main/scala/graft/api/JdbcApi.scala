@@ -352,9 +352,14 @@ object JdbcApi {
       if (i >= 0 && i < toks.length) toks(i).toUpperCase else ""
     // name → SQL type over every identifier in the text that names a
     // readable table/view (unqualified column match, first table wins —
-    // the same best-effort a JDBC client gets from sparse metadata)
+    // the same best-effort a JDBC client gets from sparse metadata); only
+    // a word the session catalog lists is looked up, so keywords and
+    // column names cost no failed analysis
+    val catalog = spark.sessionState.catalog
+    val tables = catalog.listTables(catalog.getCurrentDatabase)
+      .map(_.table.toLowerCase).toSet
     val colType: Map[String, String] = toks
-      .filter(t => t.nonEmpty && (t.head.isLetter || t.head == '_'))
+      .filter(t => tables.contains(t.toLowerCase))
       .distinct
       .flatMap(t => scala.util.Try(spark.table(t).schema).toOption)
       .flatMap(_.fields)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge.{toCol, toExpr}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -340,6 +341,173 @@ case class LshBucket(child: Expression, numBits: Int, planeOffset: Int)
   override def prettyName: String = "lsh_bucket"
 }
 
+/** A trained `k × dim` centroid matrix (row-major `data`), held by value:
+  * two matrices with the same numbers are equal, and `toString` prints the
+  * shape and a SHA-256 digest of the numbers, so a plan that carries one
+  * prints neither its doubles nor an identity hash.
+  *
+  * It is also the nearest-centroid kernel that [[NearestCentroids]] and
+  * the driver-side Lloyd training both rank with: [[dots]] scores a vector
+  * against every row (left-to-right double accumulation over the common
+  * prefix, as [[DotProduct]]), and [[nearest]] picks the best ids.
+  */
+final class CentroidMatrix(val k: Int, val dim: Int, val data: Array[Double])
+  extends Serializable {
+  require(data.length == k * dim, s"$k×$dim matrix needs ${k * dim} values")
+
+  def row(j: Int): Array[Double] =
+    java.util.Arrays.copyOfRange(data, j * dim, (j + 1) * dim)
+
+  /** dot(v, row j) for every row j. */
+  def dots(v: Array[Double]): Array[Double] = {
+    val len = math.min(v.length, dim)
+    val out = new Array[Double](k)
+    var j = 0
+    while (j < k) {
+      val off = j * dim
+      var s = 0.0
+      var i = 0
+      while (i < len) { s += v(i) * data(off + i); i += 1 }
+      out(j) = s
+      j += 1
+    }
+    out
+  }
+
+  /** The 1-based ids of the `n` highest scores, best first, a tie going to
+    * the lower id; `min(n, k)` ids. A NaN score never ranks above a number.
+    */
+  def nearest(scores: Array[Double], n: Int): Array[Int] = {
+    val m = math.max(0, math.min(n, scores.length))
+    val ids = new Array[Int](m)
+    val best = new Array[Double](m)
+    def beats(s: Double, t: Double) = s > t || (t.isNaN && !s.isNaN)
+    var filled = 0
+    var j = 0
+    while (m > 0 && j < scores.length) {
+      val s = scores(j)
+      // insertion into the sorted top-m: a later (higher) id passes only
+      // a strictly lower score, so ties keep the lower id ahead
+      if (filled < m || beats(s, best(m - 1))) {
+        var p = if (filled < m) filled else m - 1
+        while (p > 0 && beats(s, best(p - 1))) {
+          best(p) = best(p - 1); ids(p) = ids(p - 1); p -= 1
+        }
+        best(p) = s; ids(p) = j + 1
+        if (filled < m) filled += 1
+      }
+      j += 1
+    }
+    ids
+  }
+
+  override def equals(o: Any): Boolean = o match {
+    case m: CentroidMatrix =>
+      k == m.k && dim == m.dim && java.util.Arrays.equals(data, m.data)
+    case _ => false
+  }
+  override def hashCode: Int = java.util.Arrays.hashCode(data)
+
+  private lazy val digest: String = {
+    val buf = java.nio.ByteBuffer.allocate(8 * data.length)
+    data.foreach(buf.putDouble)
+    java.security.MessageDigest.getInstance("SHA-256").digest(buf.array())
+      .take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+  override def toString: String = s"$k×$dim#$digest"
+}
+
+object CentroidMatrix {
+  def apply(rows: Seq[Array[Double]]): CentroidMatrix = {
+    val dim = rows.headOption.map(_.length).getOrElse(0)
+    require(rows.forall(_.length == dim), "centroid rows differ in length")
+    new CentroidMatrix(rows.length, dim, rows.flatten.toArray)
+  }
+}
+
+/** Native nearest-centroid lookup with real `doGenCode`: the `n` best
+  * 1-based centroid ids of a numeric vector, ranked by dot product with
+  * each row of `centroids` (ties to the lower id) — the IVF inverted-list
+  * assignment, as one expression over a row instead of a cross join with
+  * the centroid table and a window. The matrix reaches the generated code
+  * through `ctx.addReferenceObj`, so the code is the same for every
+  * trained index and a new index hits the codegen cache.
+  *
+  * A null vector gives null; null elements read as 0, as in [[DotProduct]].
+  */
+case class NearestCentroids(child: Expression, centroids: CentroidMatrix, n: Int)
+  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType | DoubleType | IntegerType | LongType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"nearest_centroids needs a numeric array, got $t")
+    }
+
+  private def elemType: DataType =
+    child.dataType.asInstanceOf[ArrayType].elementType
+
+  override def nullSafeEval(v: Any): Any = {
+    val a = v.asInstanceOf[ArrayData]
+    val x = elemType match {
+      case FloatType   => Array.tabulate(a.numElements())(a.getFloat(_).toDouble)
+      case DoubleType  => Array.tabulate(a.numElements())(a.getDouble)
+      case IntegerType => Array.tabulate(a.numElements())(a.getInt(_).toDouble)
+      case LongType    => Array.tabulate(a.numElements())(a.getLong(_).toDouble)
+      case t => throw new IllegalStateException(s"unsupported element type $t")
+    }
+    UnsafeArrayData.fromPrimitiveArray(centroids.nearest(centroids.dots(x), n))
+  }
+
+  private def accessor(t: DataType): String = t match {
+    case FloatType   => "getFloat"
+    case DoubleType  => "getDouble"
+    case IntegerType => "getInt"
+    case LongType    => "getLong"
+    case _ => throw new IllegalStateException(s"unsupported element type $t")
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("centroids", centroids)
+    nullSafeCodeGen(ctx, ev, a => {
+      val len = ctx.freshName("len")
+      val data = ctx.freshName("data")
+      val scores = ctx.freshName("scores")
+      val s = ctx.freshName("s")
+      val off = ctx.freshName("off")
+      val j = ctx.freshName("j")
+      val i = ctx.freshName("i")
+      val ga = accessor(elemType)
+      s"""
+         |int $len = java.lang.Math.min($a.numElements(), $m.dim());
+         |double[] $data = $m.data();
+         |double[] $scores = new double[$m.k()];
+         |for (int $j = 0; $j < $m.k(); $j++) {
+         |  int $off = $j * $m.dim();
+         |  double $s = 0.0;
+         |  for (int $i = 0; $i < $len; $i++) {
+         |    $s += (double) $a.$ga($i) * $data[$off + $i];
+         |  }
+         |  $scores[$j] = $s;
+         |}
+         |${ev.value} = ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray(
+         |  $m.nearest($scores, $n));
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(c: Expression): NearestCentroids =
+    copy(child = c)
+
+  override def prettyName: String = "nearest_centroids"
+}
+
 object VectorMath {
   def dotProduct(a: Column, b: Column): Column =
     toCol(DotProduct(toExpr(a), toExpr(b)))
@@ -349,4 +517,6 @@ object VectorMath {
     toCol(PositionalEqCount(toExpr(a), toExpr(b)))
   def lshBucket(vec: Column, numBits: Int, planeOffset: Int = 0): Column =
     toCol(LshBucket(toExpr(vec), numBits, planeOffset))
+  def nearestCentroids(vec: Column, centroids: CentroidMatrix, n: Int): Column =
+    toCol(NearestCentroids(toExpr(vec), centroids, n))
 }

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   *
   *  - group centroids are elementwise means via posexplode + (group, pos)
   *    hash aggregate — one shuffle of (group, pos, value) rows, never a
-  *    driver-side vector (same shape as Similarity.ivfCentroids)
+  *    driver-side vector: the group count is the data's, unbounded (IVF's
+  *    nlist centroids, by contrast, train on the driver from a bounded
+  *    sample, Similarity.trainIvf)
   *  - per-vector centroid distance is a broadcast join (centroids are
   *    #groups × dim — tiny) + a codegen'd zip_with fold per row
   *  - group diversity uses the variance identity

@@ -1,8 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField,
+  StructType}
+
+import graft.functions.CentroidMatrix
 
 /** Embedding similarity search: brute-force cosine top-k as the exact
   * baseline, and an LSH(random-hyperplane)-bucketed variant as the scale
@@ -199,142 +203,137 @@ object Similarity {
       .orderBy(col("q_id"), col("n_id"))
   }
 
-  /** IVF coarse quantizer: nlist centroids trained with `iters` relational
-    * Lloyd iterations. Seeds are the lowest-id vectors (deterministic);
-    * each iteration assigns every vector to its nearest centroid (stream ×
-    * broadcast centroids) and recomputes elementwise means via
-    * posexplode + groupBy — all distributed, no driver-side vectors.
-    *
-    * @return (centroid_id, centroid ARRAY<DOUBLE>)
+  /** Training rows per inverted list (or PQ codeword): k-means learns
+    * `k` centroids from at most `TrainPointsPerList × k` vectors, FAISS's
+    * bound for IVF training. A corpus that fits trains on all of its
+    * vectors; a larger one on a deterministic sample of that many.
     */
-  def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                   nlist: Int, iters: Int = 2): DataFrame = {
-    // spherical k-means: unit-normalize each vector ONCE, rank by plain
-    // dot product — cosine() per (vector, centroid) pair would recompute
-    // both norms nlist× per vector (interpreted HOFs, the hot cost here)
-    val vecs = corpus.select(col(idCol).as("__vid"),
-      transform(col(vecCol), _.cast("double")).as("__v0"))
-      .withColumn("__n", norm(col("__v0")))
-      .select(col("__vid"), when(col("__n") === 0, col("__v0"))
-        .otherwise(transform(col("__v0"), x => x / col("__n"))).as("__v"))
-    // persist: the trained centroid table (nlist rows) is probed by both
-    // the corpus and the query side — without the cache the whole Lloyd
-    // training re-runs per consumer
-    CacheScope.autoRelease(lloyd(vecs, nlist, iters,
-      score = (v, c) => dot(v, c), renormalizeMean = true),
-      consumingActions = 2)
-  }
+  val TrainPointsPerList = 256
 
-  /** Shared relational Lloyd loop: seed with the lowest-id vectors
-    * (deterministic), then per iteration assign every vector to its
-    * best-scoring centroid (stream × broadcast centroids) and recompute
-    * elementwise means via posexplode + groupBy — all distributed, no
-    * driver-side vectors. A centroid whose cluster goes empty in an
-    * iteration keeps its previous position (dropping it would shrink the
-    * codebook/list count, a data-dependent failure).
-    *
-    * @param score ranking expression (higher = closer): plain dot for
-    *              spherical k-means, v·c − ‖c‖²/2 for min-L2
-    * @param renormalizeMean re-project recomputed means to unit length
-    *                        (spherical) or keep their magnitude (PQ)
+  /** The training vectors of a `k`-centroid quantizer, in id order: one
+    * Spark job takes the `TrainPointsPerList × k` rows lowest in
+    * `(xxhash64(id), id)` — every row while the corpus fits, otherwise a
+    * sample that depends on the ids only, never on partitioning. Rows with
+    * a null vector take no part. These are the only vectors that reach the
+    * driver.
     */
-  private def lloyd(vecs: DataFrame, k: Int, iters: Int,
-                    score: (Column, Column) => Column,
-                    renormalizeMean: Boolean): DataFrame =
-    lloydGrouped(vecs.withColumn("__grp", lit(0)), k, iters, score,
-      renormalizeMean).drop("__grp")
-
-  /** Lloyd iterations for MANY independent trainings in ONE plan, keyed by
-    * `__grp` — PQ trains m subspaces; running them as m sequential plans
-    * multiplied plan-compile cost by m (the r14 bench's ann_pq tail), while
-    * a grouped equi-join keeps one plan of the same depth. Initial
-    * centroids are the first k `__vid`s per group (identical to the
-    * ungrouped form); the per-group math is untouched, so results are
-    * bit-identical to m independent runs.
-    */
-  private def lloydGrouped(vecs: DataFrame, k: Int, iters: Int,
-                           score: (Column, Column) => Column,
-                           renormalizeMean: Boolean): DataFrame = {
-    var centroids = vecs
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__grp")).orderBy(col("__vid"))))
-      .filter(col("__rn") <= k)
-      .select(col("__grp"), col("__rn").as("centroid_id"),
-        col("__v").as("centroid"))
-    var i = 0
-    while (i < iters) {
-      val w = Window.partitionBy(col("__grp"), col("__vid"))
-        .orderBy(col("__sim").desc, col("centroid_id").asc)
-      val assigned = vecs.join(broadcast(centroids), Seq("__grp"))
-        .select(col("__grp"), col("__vid"), col("__v"), col("centroid_id"),
-          score(col("__v"), col("centroid")).as("__sim"))
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") === 1)
-      val means = assigned
-        .select(col("__grp"), col("centroid_id"),
-          posexplode(col("__v")).as(Seq("pos", "x")))
-        .groupBy(col("__grp"), col("centroid_id"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("__grp"), col("centroid_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("__c0"))
-      val updated =
-        if (renormalizeMean)
-          // re-normalize the mean (spherical k-means) so dot == cosine
-          means.withColumn("__cn", norm(col("__c0")))
-            .select(col("__grp"), col("centroid_id"),
-              when(col("__cn") === 0, col("__c0"))
-              .otherwise(transform(col("__c0"), x => x / col("__cn")))
-              .as("centroid"))
-        else means.select(col("__grp"), col("centroid_id"),
-          col("__c0").as("centroid"))
-      // empty clusters keep their previous centroid — expressed as ONE
-      // full-outer join + coalesce so each iteration's plan is referenced
-      // exactly once (an anti-join formulation references it twice, and
-      // the recompute work then doubles per iteration)
-      centroids = centroids
-        .select(col("__grp"), col("centroid_id"), col("centroid").as("__prev"))
-        .join(updated, Seq("__grp", "centroid_id"), "full_outer")
-        .select(col("__grp"), col("centroid_id"),
-          coalesce(col("centroid"), col("__prev")).as("centroid"))
-      i += 1
+  private def trainingSample(corpus: DataFrame, idCol: String, vecCol: String,
+                             k: Int): IndexedSeq[Array[Double]] = {
+    val rows = corpus
+      .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
+      .filter(col("__v").isNotNull)
+      .orderBy(xxhash64(col("__id")), col("__id"))
+      .limit(TrainPointsPerList * k)
+      .collect()
+    val byId: Ordering[Row] = (a, b) => (a.get(0), b.get(0)) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+      case (x, _) =>
+        throw new IllegalArgumentException(s"unorderable id ${x.getClass}")
     }
-    centroids
+    rows.sorted(byId).map(_.getSeq[Double](1).toArray).toIndexedSeq
   }
 
-  /** Nearest `nprobe` centroid ids per row. Centroids are unit vectors, so
-    * ranking by dot(v, ĉ) equals ranking by cosine for a fixed row — no
-    * per-pair norm work.
-    */
-  private def probeAssign(df: DataFrame, centroids: DataFrame, vecCol: String,
-                          idCols: Seq[String], nprobe: Int): DataFrame = {
-    val w = Window.partitionBy(idCols.map(col): _*)
-      .orderBy(col("__csim").desc, col("centroid_id").asc)
-    df.crossJoin(broadcast(centroids))
-      .withColumn("__csim", dot(col(vecCol), col("centroid")))
-      .withColumn("__crk", row_number().over(w))
-      .filter(col("__crk") <= nprobe)
-      .drop("centroid", "__csim", "__crk")
+  /** `v / ‖v‖`, a zero vector as it is. */
+  private def unit(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(dotOf(v, v))
+    if (n == 0) v else v.map(_ / n)
   }
+
+  private def dotOf(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < math.min(a.length, b.length)) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** Lloyd's k-means on the driver: the first `k` vectors (the lowest
+    * ids) seed the centroids, and each iteration assigns every vector to
+    * its best-scoring centroid (the [[graft.functions.CentroidMatrix]]
+    * kernel, a tie to the lowest centroid id) and moves each centroid to
+    * the elementwise mean of its vectors. A centroid whose cluster goes
+    * empty keeps its position (dropping it would shrink the list count, a
+    * data-dependent failure).
+    *
+    * @param minL2 rank by v·c − ‖c‖²/2 and keep the means' magnitude (PQ);
+    *              otherwise rank by v·c and re-project each mean to unit
+    *              length (spherical k-means, IVF)
+    */
+  private def lloyd(vecs: IndexedSeq[Array[Double]], k: Int, iters: Int,
+                    minL2: Boolean): CentroidMatrix = {
+    var c = CentroidMatrix(vecs.take(k))
+    require(vecs.forall(_.length == c.dim),
+      s"training vectors differ in length (expected ${c.dim})")
+    var it = 0
+    while (it < iters) {
+      val penalty = Array.tabulate(c.k) { j =>
+        if (minL2) { val r = c.row(j); dotOf(r, r) / 2 } else 0.0
+      }
+      val sums = Array.ofDim[Double](c.k, c.dim)
+      val counts = new Array[Int](c.k)
+      vecs.foreach { v =>
+        val s = c.dots(v)
+        var p = 0
+        while (p < s.length) { s(p) -= penalty(p); p += 1 }
+        val j = c.nearest(s, 1)(0) - 1
+        val acc = sums(j)
+        var i = 0
+        while (i < v.length) { acc(i) += v(i); i += 1 }
+        counts(j) += 1
+      }
+      c = CentroidMatrix((0 until c.k).map { j =>
+        if (counts(j) == 0) c.row(j)
+        else {
+          val mean = sums(j).map(_ / counts(j))
+          if (minL2) mean else unit(mean)
+        }
+      })
+      it += 1
+    }
+    c
+  }
+
+  /** IVF coarse quantizer: `nlist` spherical k-means centroids of the
+    * unit-normalized vectors, trained with `iters` driver-side Lloyd
+    * iterations over the bounded training sample (at most
+    * [[TrainPointsPerList]] × `nlist` vectors, one Spark job). Centroids
+    * are unit vectors, so ranking a row by dot(v, ĉ) ranks it by cosine.
+    *
+    * @return the `nlist × dim` centroid matrix, row `j` being list `j + 1`
+    */
+  def trainIvf(corpus: DataFrame, idCol: String, vecCol: String,
+               nlist: Int, iters: Int = 2): CentroidMatrix =
+    lloyd(trainingSample(corpus, idCol, vecCol, nlist).map(unit), nlist, iters,
+      minL2 = false)
+
+  /** Ids of the `n` inverted lists nearest to `vec` (1-based, best first). */
+  private def nearestLists(vec: Column, centroids: CentroidMatrix, n: Int): Column =
+    explode(graft.functions.VectorMath.nearestCentroids(vec, centroids, n))
 
   /** IVF approximate NN (the scale path for similarity search): corpus
     * vectors live in their single nearest inverted list; each query probes
     * its `nprobe` nearest lists and scans only those candidates — at 1B+
     * vectors the scan cost drops by ~nlist/nprobe versus brute force while
     * the per-pair math stays identical to [[bruteForceKnn]].
+    *
+    * Each call trains its quantizer with [[trainIvf]]; the search plan then
+    * carries the centroid matrix as a value inside one expression
+    * ([[graft.functions.NearestCentroids]]) — no training lineage, no
+    * centroid table to join or cache — and no vector but the training
+    * sample's ever reaches the driver.
     */
   def annIvf(queries: DataFrame, corpus: DataFrame, idCol: String,
              vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
              iters: Int = 2, mode: String = "auto"): DataFrame = {
-    val centroids = ivfCentroids(corpus, idCol, vecCol, nlist, iters)
-    val c = probeAssign(
-      corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-        norm(col(vecCol)).as("n_norm")),
-      centroids, "n_vec", Seq("n_id"), nprobe = 1)
-    val q = probeAssign(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        norm(col(vecCol)).as("q_norm")),
-      centroids, "q_vec", Seq("q_id"), nprobe)
+    val centroids = trainIvf(corpus, idCol, vecCol, nlist, iters)
+    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
+      norm(col(vecCol)).as("n_norm"),
+      nearestLists(col(vecCol), centroids, 1).as("centroid_id"))
+    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
+      norm(col(vecCol)).as("q_norm"),
+      nearestLists(col(vecCol), centroids, nprobe).as("centroid_id"))
     // query side broadcasts only under the size gate (see annLsh) — a
     // corpus-scale query set shuffles on the inverted-list id instead
     val sims = graft.operators.Joins.boundedBlockJoin(c, q, Seq("centroid_id"),
@@ -364,33 +363,34 @@ object Similarity {
     when(n === 0, v).otherwise(transform(v, x => x / n))
   }
 
-  /** Train PQ codebooks: split the vector into `m` equal subvectors and
-    * run the relational [[lloyd]] per subspace (`k` centroids each) with
-    * min-L2 assignment and MAGNITUDE-PRESERVING means - ADC reconstructs
-    * dot(q, v) from per-subspace partial dots, so a unit-normalized
-    * codebook would throw away exactly the information PQ must preserve.
-    * The returned table is tiny (m*k rows), persisted ONCE (encode and
-    * search both probe it; a persist per subspace training would leak m
-    * cached frames per call), and broadcast by consumers.
+  /** Train PQ codebooks: split the unit-normalized vector into `m` equal
+    * subvectors and run the driver-side [[lloyd]] per subspace (`k`
+    * centroids each) over the bounded training sample (at most
+    * [[TrainPointsPerList]] × `k` vectors, one Spark job), with min-L2
+    * assignment and MAGNITUDE-PRESERVING means - ADC reconstructs dot(q, v)
+    * from per-subspace partial dots, so a unit-normalized codebook would
+    * throw away exactly the information PQ must preserve. The codebook is
+    * a local DataFrame of m*k rows, which consumers broadcast.
     *
     * @return (subspace, centroid_id, centroid ARRAY<DOUBLE>)
     */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
               m: Int, k: Int, iters: Int = 2): DataFrame = {
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
+    val sample = trainingSample(corpus, idCol, vecCol, k).map(unit)
+    val dim = sample.headOption.map(_.length).getOrElse(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
-    // all m subspaces train in ONE grouped plan (r14 verdict: m sequential
-    // lloyd plans multiplied plan-compile cost by m on this path)
-    val sliced = corpus
-      .select(col(idCol).as("__vid"), unitFull(vecCol).as("__u"))
-      .withColumn("__grp", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("__grp"), col("__vid"),
-        expr(s"slice(__u, __grp * $sub + 1, $sub)").as("__v"))
-    CacheScope.autoRelease(lloydGrouped(sliced, k, iters,
-      score = (v, c) => dot(v, c) - dot(c, c) / 2, renormalizeMean = false)
-      .select(col("__grp").as("subspace"), col("centroid_id"), col("centroid")),
-      consumingActions = 2)
+    val rows = (0 until m).flatMap { g =>
+      val books = lloyd(sample.map(_.slice(g * sub, (g + 1) * sub)), k, iters,
+        minL2 = true)
+      (0 until books.k).map(j => Row(g, j + 1, books.row(j).toSeq))
+    }
+    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(
+        StructField("subspace", IntegerType, nullable = false),
+        StructField("centroid_id", IntegerType, nullable = false),
+        StructField("centroid", ArrayType(DoubleType, containsNull = false),
+          nullable = false))))
   }
 
   /** Encode the corpus against trained codebooks: per subspace, the id of

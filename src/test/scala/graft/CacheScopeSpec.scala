@@ -95,16 +95,24 @@ class CacheScopeSpec extends AnyFunSuite {
     assert(awaitRelease(), "edge cache still registered after components()")
   }
 
-  test("ivf centroid training cache releases after corpus + query probes") {
+  test("ivf and pq searches leave no cache and no armed scope after one action") {
     resetCaches()
+    val armed = CacheScope.pendingCount
     val vecs = (0 until 40).map(i =>
       (i.toLong, Array.tabulate(4)(d => ((i * 7 + d) % 10).toFloat)))
       .toDF("id", "vec")
-    val res = Similarity.annIvf(vecs, vecs.limit(2), "id", "vec",
+    val ivf = Similarity.annIvf(vecs, vecs.limit(2), "id", "vec",
       k = 3, nlist = 4, nprobe = 2)
-    res.count() // first consuming action
-    res.count() // second — the centroid cache scopes two probes
-    assert(awaitRelease(), "centroid cache still registered")
+    assert(ivf.collect().nonEmpty)
+    assert(cacheEmpty, "annIvf left a cached plan")
+    assert(CacheScope.pendingCount == armed, "annIvf left an armed scope")
+    val books = Similarity.pqTrain(vecs, "id", "vec", m = 2, k = 4)
+    val codes = Similarity.pqEncode(vecs, "id", "vec", books, m = 2)
+    val pq = Similarity.pqSearch(vecs.limit(2), codes, books, "id", "vec",
+      m = 2, k = 3)
+    assert(pq.collect().nonEmpty)
+    assert(cacheEmpty, "pq search left a cached plan")
+    assert(CacheScope.pendingCount == armed, "pq search left an armed scope")
   }
 
   test("an abandoned result leaves no storage blocks (persist is lazy)") {

@@ -506,6 +506,104 @@ class FunctionsSpec extends AnyFunSuite {
     assert(recall >= 0.15, s"recall $recall")
   }
 
+  test("nearest_centroids: codegen and eval agree, ties go to the lowest id") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+    import graft.functions.{CentroidMatrix, NearestCentroids}
+    // rows 1 and 3 are equal, so every vector ties them
+    val cm = CentroidMatrix(Seq(Array(1.0, 0.0), Array(0.0, 1.0),
+      Array(1.0, 0.0), Array(-1.0, 0.0)))
+    val expected = Map(
+      Seq(1.0, 0.0) -> Seq(1, 3, 2, 4),
+      Seq(0.5, 0.5) -> Seq(1, 2, 3, 4),
+      Seq(0.0, 0.0) -> Seq(1, 2, 3, 4),
+      Seq(-2.0, 1.0) -> Seq(4, 2, 1, 3))
+    val encodings: Seq[(DataType, Seq[Double] => ArrayData)] = Seq(
+      FloatType -> (v => ArrayData.toArrayData(v.map(_.toFloat).toArray)),
+      DoubleType -> (v => ArrayData.toArrayData(v.toArray)))
+    for ((t, encode) <- encodings; n <- Seq(1, 2, 4, 9)) {
+      val e = NearestCentroids(
+        BoundReference(0, ArrayType(t, containsNull = false), nullable = true), cm, n)
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      for ((v, ids) <- expected) {
+        val row = InternalRow(encode(v))
+        val interpreted = e.eval(row).asInstanceOf[ArrayData].toIntArray().toSeq
+        assert(interpreted == ids.take(n), s"$t $v n=$n")
+        assert(generated(row).getArray(0).toIntArray().toSeq == interpreted,
+          s"$t $v n=$n")
+      }
+      assert(e.eval(InternalRow(null)) == null)
+      assert(generated(InternalRow(null)).isNullAt(0))
+    }
+    // value equality and a short, stable print: shape and digest
+    val same = CentroidMatrix(Seq(Array(1.0, 0.0), Array(0.0, 1.0),
+      Array(1.0, 0.0), Array(-1.0, 0.0)))
+    assert(same == cm && same.hashCode == cm.hashCode)
+    assert(same.toString == cm.toString)
+    assert(cm.toString.matches("4×2#[0-9a-f]{16}"), cm.toString)
+    assert(CentroidMatrix(Seq(Array(1.0, 0.0))) != CentroidMatrix(Seq(Array(0.0, 1.0))))
+    // inside a whole-stage-codegen span (range source so the projection
+    // can't constant-fold into a LocalTableScan), printed by its digest
+    val df = spark.range(2)
+      .select(array(col("id").cast("float"), lit(0.5f)).as("v"))
+      .select(graft.functions.VectorMath.nearestCentroids(col("v"), cm, 2).as("ids"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("*(1) Project") && plan.contains(s"nearest_centroids(") &&
+      plan.contains(cm.toString), plan)
+    assert(df.collect().map(_.getSeq[Int](0)).toSeq == Seq(Seq(2, 1), Seq(1, 3)))
+  }
+
+  test("trainIvf: repeatable, hand-checked centroids, an empty list keeps its seed") {
+    val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val a = Similarity.trainIvf(emb, "vec_id", "embedding", nlist = 8)
+    val b = Similarity.trainIvf(emb, "vec_id", "embedding", nlist = 8)
+    assert(a.k == 8 && a.dim == 64)
+    assert(a.data.sameElements(b.data))
+    // seeds are ids 1 and 2; both clusters hold one axis vector and one
+    // 3-4-5 vector, so each unit mean is (3, 1)/√10 or (1, 3)/√10
+    val two = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(4f, 3f)),
+      (4L, Seq(3f, 4f))).toDF("id", "v")
+    val c = Similarity.trainIvf(two, "id", "v", nlist = 2)
+    val r10 = math.sqrt(10)
+    def close(x: Array[Double], y: Seq[Double]) =
+      x.length == y.length && x.zip(y).forall { case (p, q) => math.abs(p - q) < 1e-12 }
+    assert(close(c.row(0), Seq(3 / r10, 1 / r10)), c.row(0).toSeq)
+    assert(close(c.row(1), Seq(1 / r10, 3 / r10)), c.row(1).toSeq)
+    // seed 3 points where seed 1 does: in the first iteration its vector
+    // ties and goes to list 1, so list 3 is empty and keeps its seed while
+    // list 1 moves to the mean of (1, 0), (2, 0) and (3, 1)
+    val drained = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(2f, 0f)),
+      (4L, Seq(0f, 5f)), (5L, Seq(3f, 1f))).toDF("id", "v")
+    val d = Similarity.trainIvf(drained, "id", "v", nlist = 3, iters = 1)
+    assert(close(d.row(2), Seq(1.0, 0.0)), d.row(2).toSeq)
+    assert(d.row(0)(1) > 0, d.row(0).toSeq)
+  }
+
+  test("IVF over a corpus larger than its training sample keeps recall@10 >= 0.8") {
+    // 6 well-separated clusters of 250 vectors each: 1,500 rows, beyond
+    // the 256 × nlist = 1,024 rows the quantizer trains on
+    val rnd = new scala.util.Random(11)
+    val dim = 16
+    val centres = Array.fill(6)(Array.fill(dim)(rnd.nextGaussian() * 4))
+    val corpus = (0 until 1500).map { i =>
+      val c = centres(i % 6)
+      (i.toLong, c.map(x => (x + rnd.nextGaussian()).toFloat).toSeq)
+    }.toDF("vec_id", "embedding")
+    val nlist = 4
+    assert(corpus.count() > Similarity.TrainPointsPerList * nlist)
+    val queries = corpus.filter(col("vec_id") < 20)
+    val exact = Similarity.bruteForceKnn(queries, corpus, "vec_id", "embedding", 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val approx = Similarity.annIvf(queries, corpus, "vec_id", "embedding", 10,
+      nlist = nlist, nprobe = 2).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(approx.size == 200)
+    val recall = (exact intersect approx).size.toDouble / exact.size
+    assert(recall >= 0.8, s"recall $recall")
+  }
+
   test("connected components cluster transitive dup chains") {
     // chain 1-2, 2-3 plus island 7-8: components {1,2,3} and {7,8}
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")

@@ -77,6 +77,27 @@ class JdbcApiSpec extends AnyFunSuite {
     } finally JdbcApi.closeConnection("c-ptype")
   }
 
+  test("a keyword-heavy prepare keeps its parameter types") {
+    JdbcApi.openConnection("c-kw")
+    try {
+      // upper-case table name, a dozen keywords and a string literal that
+      // spells a table name: only the catalog's names are looked up
+      val (id, sig) = JdbcApi.prepareStatement(spark, dir, "c-kw",
+        """SELECT DISTINCT o_orderkey, o_orderstatus FROM ORDERS
+           WHERE NOT (o_orderpriority IS NULL) AND o_custkey > ?
+             AND o_orderstatus = ? AND o_orderpriority <> 'nation'
+             AND o_orderdate < ? AND o_totalprice BETWEEN ? AND ?
+             AND o_orderpriority NOT LIKE ?
+           ORDER BY o_orderkey DESC NULLS LAST
+           LIMIT ? OFFSET ?""")
+      assert(sig.parameterTypes == Seq("BIGINT", "VARCHAR", "TIMESTAMP",
+        "DOUBLE", "DOUBLE", "VARCHAR", "BIGINT", "BIGINT"),
+        sig.parameterTypes.toString)
+      assert(sig.columns.map(_.name) == Seq("o_orderkey", "o_orderstatus"))
+      JdbcApi.closeStatement("c-kw", id)
+    } finally JdbcApi.closeConnection("c-kw")
+  }
+
   test("execute binds typed parameters and is re-executable") {
     JdbcApi.openConnection("c-exec")
     try {
