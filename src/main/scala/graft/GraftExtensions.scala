@@ -1,28 +1,25 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.functions.JaroWinklerSimilarity
+import graft.functions.{EngineFunction, JaroWinklerSimilarity}
+import graft.functions.EngineFunction.{aggregator, scalar}
 import graft.functions.sketches.{BloomFilterAgg, BloomMightContain, HllEstimateWithBounds, HllSketchAgg, HllToString, HllUnion, KllDistQuery, KllQuery, KllSketchAgg, KllSummary, KmvEstimate, KmvEstimateWithBounds, KmvSetEstimate, KmvSetSketch, KmvSketchAgg, TDigestQuery, TDigestSketchAgg, TupleEstimate, TupleMetricSum, TupleMetricsSumEstimate, TupleSetSketch, TupleSketchAgg}
 
-/** The engine's Catalyst-level SQL function surface — sketch aggregates and
-  * post-aggregators, EARLIEST/LATEST, the reference's APPROX_* names — plus
-  * [[ApproxCountDistinctRewrite]], the reference's SQL-layer default of
-  * answering COUNT(DISTINCT x) with an HLL estimate
-  * (`useApproximateCountDistinct`, see
+/** The sketch family's table of SQL functions, one [[EngineFunction]] per
+  * name — sketch aggregates and post-aggregators, EARLIEST/LATEST, the
+  * reference's APPROX_* names — plus [[ApproxCountDistinctRewrite]], the
+  * reference's SQL-layer default of answering COUNT(DISTINCT x) with an
+  * HLL estimate (`useApproximateCountDistinct`, see
   * `sql/.../BuiltinApproxCountDistinctSqlAggregator.java:62`), as an
-  * opt-in optimizer rule gated on a runtime conf. Both are armed on a
-  * session by [[GraftSession.attach]], the one place that registers
-  * functions, rules and strategies.
+  * opt-in optimizer rule gated on a runtime conf. The table is part of
+  * [[GraftSession.functions]]; [[GraftSession.attach]], the one place that
+  * registers functions, rules and strategies, arms both.
   */
 object GraftExtensions {
   import org.apache.spark.sql.catalyst.expressions.Expression
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", name)
 
   /** Resolve EARLIEST/LATEST arguments per the reference
     * (`sql/.../aggregation/builtin/EarliestLatestAnySqlAggregator.java`):
@@ -52,53 +49,60 @@ object GraftExtensions {
     }
   }
 
-  val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("hll_estimate_agg", info("hll_estimate_agg", "HLL distinct estimate"),
-      (args: Seq[Expression]) => HllSketchAgg(args.head).toAggregateExpression()),
-    ("hll_sketch_agg", info("hll_sketch_agg", "HLL binary sketch"),
-      (args: Seq[Expression]) =>
+  val functions: Seq[EngineFunction] = Seq(
+    aggregator("hll_estimate_agg",
+      "_FUNC_(expr) - HLL distinct estimate")(args =>
+        HllSketchAgg(args.head).toAggregateExpression()),
+    aggregator("hll_sketch_agg",
+      "_FUNC_(expr) - HLL binary sketch")(args =>
         HllSketchAgg(args.head, emitSketch = true).toAggregateExpression()),
-    ("hll_merge_agg", info("hll_merge_agg", "fold stored HLL sketches"),
-      (args: Seq[Expression]) =>
+    aggregator("hll_merge_agg",
+      "_FUNC_(sketch) - fold stored HLL sketches")(args =>
         HllSketchAgg(args.head, mergeSketches = true).toAggregateExpression()),
-    ("kmv_sketch_agg", info("kmv_sketch_agg", "KMV distinct sketch"),
-      (args: Seq[Expression]) => KmvSketchAgg(args.head).toAggregateExpression()),
-    ("kmv_estimate", info("kmv_estimate", "estimate of a KMV sketch"),
-      (args: Seq[Expression]) => KmvEstimate(args.head)),
-    ("kmv_intersect_estimate", info("kmv_intersect_estimate", "theta intersect"),
-      (args: Seq[Expression]) => KmvSetEstimate(args(0), args(1), "intersect")),
-    ("kmv_union_estimate", info("kmv_union_estimate", "theta union"),
-      (args: Seq[Expression]) => KmvSetEstimate(args(0), args(1), "union")),
-    ("kmv_not_estimate", info("kmv_not_estimate", "theta A-NOT-B"),
-      (args: Seq[Expression]) => KmvSetEstimate(args(0), args(1), "not")),
-    ("bloom_build_agg", info("bloom_build_agg", "bloom filter of a column"),
-      (args: Seq[Expression]) => BloomFilterAgg(args.head).toAggregateExpression()),
-    ("bloom_might_contain", info("bloom_might_contain", "bloom membership"),
-      (args: Seq[Expression]) => BloomMightContain(args(0), args(1))),
-    ("jaro_winkler_similarity", info("jaro_winkler_similarity", "fuzzy match"),
-      (args: Seq[Expression]) => JaroWinklerSimilarity(args(0), args(1))),
-    ("tuple_sketch_agg", info("tuple_sketch_agg",
-      "tuple (arrayOfDoubles) sketch of (key, ARRAY<DOUBLE>)"),
-      (args: Seq[Expression]) =>
+    aggregator("kmv_sketch_agg",
+      "_FUNC_(expr) - KMV distinct sketch")(args =>
+        KmvSketchAgg(args.head).toAggregateExpression()),
+    scalar("kmv_estimate",
+      "_FUNC_(sketch) - estimate of a KMV sketch")(args => KmvEstimate(args.head)),
+    scalar("kmv_intersect_estimate",
+      "_FUNC_(sketchA, sketchB) - theta intersect")(args =>
+        KmvSetEstimate(args(0), args(1), "intersect")),
+    scalar("kmv_union_estimate",
+      "_FUNC_(sketchA, sketchB) - theta union")(args =>
+        KmvSetEstimate(args(0), args(1), "union")),
+    scalar("kmv_not_estimate",
+      "_FUNC_(sketchA, sketchB) - theta A-NOT-B")(args =>
+        KmvSetEstimate(args(0), args(1), "not")),
+    aggregator("bloom_build_agg",
+      "_FUNC_(expr) - bloom filter of a column")(args =>
+        BloomFilterAgg(args.head).toAggregateExpression()),
+    scalar("bloom_might_contain",
+      "_FUNC_(filter, value) - bloom membership")(args =>
+        BloomMightContain(args(0), args(1))),
+    scalar("jaro_winkler_similarity",
+      "_FUNC_(a, b) - fuzzy match")(args => JaroWinklerSimilarity(args(0), args(1))),
+    aggregator("tuple_sketch_agg",
+      "_FUNC_(key, ARRAY<DOUBLE>) - tuple (arrayOfDoubles) sketch")(args =>
         TupleSketchAgg(args(0), args(1)).toAggregateExpression()),
-    ("tuple_estimate", info("tuple_estimate", "tuple sketch distinct keys"),
-      (args: Seq[Expression]) => TupleEstimate(args.head)),
-    ("tuple_metric_sum", info("tuple_metric_sum",
-      "tuple sketch metric-column sum (sketch, idx)"),
-      (args: Seq[Expression]) =>
+    scalar("tuple_estimate",
+      "_FUNC_(sketch) - tuple sketch distinct keys")(args => TupleEstimate(args.head)),
+    scalar("tuple_metric_sum",
+      "_FUNC_(sketch, idx) - tuple sketch metric-column sum")(args =>
         TupleMetricSum(args(0), args(1).eval().toString.toInt)),
-    ("kll_sketch_agg", info("kll_sketch_agg", "KLL quantiles binary sketch"),
-      (args: Seq[Expression]) =>
+    aggregator("kll_sketch_agg",
+      "_FUNC_(expr) - KLL quantiles binary sketch")(args =>
         KllSketchAgg(args.head).toAggregateExpression()),
-    ("kll_merge_agg", info("kll_merge_agg", "fold stored KLL sketches"),
-      (args: Seq[Expression]) =>
+    aggregator("kll_merge_agg",
+      "_FUNC_(sketch) - fold stored KLL sketches")(args =>
         KllSketchAgg(args.head, mergeSketches = true).toAggregateExpression()),
-    ("kll_quantile", info("kll_quantile", "quantile of a KLL sketch (sketch, q)"),
-      (args: Seq[Expression]) => KllQuery(args(0), args(1), "quantile")),
-    ("kll_rank", info("kll_rank", "rank of a value in a KLL sketch (sketch, v)"),
-      (args: Seq[Expression]) => KllQuery(args(0), args(1), "rank")),
-    ("dot_product", info("dot_product", "codegen'd numeric-array dot product"),
-      (args: Seq[Expression]) =>
+    scalar("kll_quantile",
+      "_FUNC_(sketch, q) - quantile of a KLL sketch")(args =>
+        KllQuery(args(0), args(1), "quantile")),
+    scalar("kll_rank",
+      "_FUNC_(sketch, v) - rank of a value in a KLL sketch")(args =>
+        KllQuery(args(0), args(1), "rank")),
+    scalar("dot_product",
+      "_FUNC_(a, b) - codegen'd numeric-array dot product")(args =>
         graft.functions.DotProduct(args(0), args(1))),
     // SQL EARLIEST/LATEST (reference EarliestLatestAnySqlAggregator.java):
     // value of `expr` at min/max of __time. Argument forms, matching the
@@ -107,16 +111,14 @@ object GraftExtensions {
     // still ordered by __time — the reference never reads arg 2 as a time
     // column); 2-arg with an expression = the EARLIEST_BY/LATEST_BY
     // explicit-ordering form
-    ("earliest", info("earliest",
-      "value at the earliest time (expr[, maxBytes | timeExpr])"),
-      (args: Seq[Expression]) => {
+    aggregator("earliest",
+      "_FUNC_(expr[, maxBytes | timeExpr]) - value at the earliest time")(args => {
         val (v, order) = earliestLatestArgs("earliest", args)
         org.apache.spark.sql.catalyst.expressions.aggregate.MinBy(v, order)
           .toAggregateExpression()
       }),
-    ("latest", info("latest",
-      "value at the latest time (expr[, maxBytes | timeExpr])"),
-      (args: Seq[Expression]) => {
+    aggregator("latest",
+      "_FUNC_(expr[, maxBytes | timeExpr]) - value at the latest time")(args => {
         val (v, order) = earliestLatestArgs("latest", args)
         org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy(v, order)
           .toAggregateExpression()
@@ -124,115 +126,116 @@ object GraftExtensions {
     // Druid SQL sketch names (BuiltinApproxCountDistinctSqlAggregator.java,
     // datasketches SQL operator conversions) aliased onto the same sketch
     // layer, so reference SQL text runs unchanged
-    ("approx_count_distinct_ds_hll",
-      info("approx_count_distinct_ds_hll", "HLL estimate (ignores lgK arg)"),
-      (args: Seq[Expression]) => HllSketchAgg(args.head).toAggregateExpression()),
-    ("approx_count_distinct_ds_theta",
-      info("approx_count_distinct_ds_theta", "theta-sketch estimate"),
-      (args: Seq[Expression]) =>
+    aggregator("approx_count_distinct_ds_hll",
+      "_FUNC_(expr[, lgK]) - HLL estimate (lgK ignored)")(args =>
+        HllSketchAgg(args.head).toAggregateExpression()),
+    aggregator("approx_count_distinct_ds_theta",
+      "_FUNC_(expr[, size]) - theta-sketch estimate")(args =>
         KmvEstimate(KmvSketchAgg(args.head).toAggregateExpression())),
-    ("ds_hll", info("ds_hll", "HLL binary sketch aggregate"),
-      (args: Seq[Expression]) =>
+    aggregator("ds_hll",
+      "_FUNC_(expr[, lgK]) - HLL binary sketch aggregate")(args =>
         HllSketchAgg(args.head, emitSketch = true).toAggregateExpression()),
-    ("ds_theta", info("ds_theta", "theta (KMV) binary sketch aggregate"),
-      (args: Seq[Expression]) => KmvSketchAgg(args.head).toAggregateExpression()),
-    ("hll_sketch_estimate", info("hll_sketch_estimate", "estimate of a stored HLL"),
-      (args: Seq[Expression]) => graft.functions.sketches.HllEstimate(args.head)),
-    ("theta_sketch_estimate", info("theta_sketch_estimate", "estimate of a theta sketch"),
-      (args: Seq[Expression]) => KmvEstimate(args.head)),
-    ("approx_quantile_ds", info("approx_quantile_ds",
-      "KLL-backed quantile aggregate (expr, q[, k ignored])"),
-      (args: Seq[Expression]) =>
+    aggregator("ds_theta",
+      "_FUNC_(expr[, size]) - theta (KMV) binary sketch aggregate")(args =>
+        KmvSketchAgg(args.head).toAggregateExpression()),
+    scalar("hll_sketch_estimate",
+      "_FUNC_(sketch) - estimate of a stored HLL")(args =>
+        graft.functions.sketches.HllEstimate(args.head)),
+    scalar("theta_sketch_estimate",
+      "_FUNC_(sketch) - estimate of a theta sketch")(args => KmvEstimate(args.head)),
+    aggregator("approx_quantile_ds",
+      "_FUNC_(expr, q[, k]) - KLL-backed quantile aggregate (k ignored)")(args =>
         KllQuery(KllSketchAgg(args(0)).toAggregateExpression(), args(1), "quantile")),
-    ("bloom_filter", info("bloom_filter", "bloom filter aggregate (expr[, entries])"),
-      (args: Seq[Expression]) => BloomFilterAgg(args.head).toAggregateExpression()),
-    ("bloom_filter_test", info("bloom_filter_test", "membership (expr, filter)"),
-      (args: Seq[Expression]) => BloomMightContain(args(1), args(0))),
+    aggregator("bloom_filter",
+      "_FUNC_(expr[, entries]) - bloom filter aggregate")(args =>
+        BloomFilterAgg(args.head).toAggregateExpression()),
+    scalar("bloom_filter_test",
+      "_FUNC_(expr, filter) - bloom membership")(args =>
+        BloomMightContain(args(1), args(0))),
     // KLL distribution post-aggs (KllDoublesSketchToCDFPostAggregator /
     // ToHistogramPostAggregator; DS_CDF / DS_HISTOGRAM / DS_GET_QUANTILES
     // SQL operators take the split points / ranks as an array here)
-    ("ds_cdf", info("ds_cdf", "CDF of a KLL sketch at split points (sketch, array)"),
-      (args: Seq[Expression]) => KllDistQuery(args(0), args(1), "cdf")),
-    ("ds_histogram", info("ds_histogram",
-      "estimated bin counts of a KLL sketch (sketch, splitArray)"),
-      (args: Seq[Expression]) => KllDistQuery(args(0), args(1), "pmf")),
-    ("ds_get_quantiles", info("ds_get_quantiles",
-      "quantiles of a KLL sketch (sketch, rankArray)"),
-      (args: Seq[Expression]) => KllDistQuery(args(0), args(1), "quantiles")),
-    ("ds_get_quantile", info("ds_get_quantile",
-      "quantile of a KLL sketch (sketch, rank)"),
-      (args: Seq[Expression]) => KllQuery(args(0), args(1), "quantile")),
-    ("ds_rank", info("ds_rank", "rank of a value in a KLL sketch (sketch, v)"),
-      (args: Seq[Expression]) => KllQuery(args(0), args(1), "rank")),
-    ("ds_kll", info("ds_kll", "KLL quantiles binary sketch aggregate"),
-      (args: Seq[Expression]) => KllSketchAgg(args.head).toAggregateExpression()),
+    scalar("ds_cdf",
+      "_FUNC_(sketch, splitPoints) - CDF of a KLL sketch")(args =>
+        KllDistQuery(args(0), args(1), "cdf")),
+    scalar("ds_histogram",
+      "_FUNC_(sketch, splitPoints) - estimated bin counts of a KLL sketch")(args =>
+        KllDistQuery(args(0), args(1), "pmf")),
+    scalar("ds_get_quantiles",
+      "_FUNC_(sketch, ranks) - quantiles of a KLL sketch")(args =>
+        KllDistQuery(args(0), args(1), "quantiles")),
+    scalar("ds_get_quantile",
+      "_FUNC_(sketch, rank) - quantile of a KLL sketch")(args =>
+        KllQuery(args(0), args(1), "quantile")),
+    scalar("ds_rank",
+      "_FUNC_(sketch, v) - rank of a value in a KLL sketch")(args =>
+        KllQuery(args(0), args(1), "rank")),
+    aggregator("ds_kll",
+      "_FUNC_(expr) - KLL quantiles binary sketch aggregate")(args =>
+        KllSketchAgg(args.head).toAggregateExpression()),
     // t-digest (extensions-contrib/tdigestsketch SQL operators)
-    ("tdigest_generate_sketch", info("tdigest_generate_sketch",
-      "t-digest binary sketch aggregate (expr[, compression])"),
-      (args: Seq[Expression]) => TDigestSketchAgg(args.head,
-        if (args.length > 1) args(1).eval().toString.toDouble
-        else graft.functions.sketches.TDigest.DefaultCompression)
-        .toAggregateExpression()),
-    ("tdigest_merge_agg", info("tdigest_merge_agg", "fold stored t-digests"),
-      (args: Seq[Expression]) =>
+    aggregator("tdigest_generate_sketch",
+      "_FUNC_(expr[, compression]) - t-digest binary sketch aggregate")(args =>
+        TDigestSketchAgg(args.head,
+          if (args.length > 1) args(1).eval().toString.toDouble
+          else graft.functions.sketches.TDigest.DefaultCompression)
+          .toAggregateExpression()),
+    aggregator("tdigest_merge_agg",
+      "_FUNC_(sketch) - fold stored t-digests")(args =>
         TDigestSketchAgg(args.head, mergeSketches = true).toAggregateExpression()),
-    ("tdigest_quantile", info("tdigest_quantile",
-      "quantile from a t-digest sketch column (sketch, q)"),
-      (args: Seq[Expression]) => TDigestQuery(args(0), args(1), "quantile")),
-    ("tdigest_cdf", info("tdigest_cdf",
-      "rank in [0,1] of a value in a t-digest (sketch, v)"),
-      (args: Seq[Expression]) => TDigestQuery(args(0), args(1), "cdf")),
-    ("earliest_by", info("earliest_by", "value at min of ordering (expr, orderExpr)"),
-      (args: Seq[Expression]) =>
+    scalar("tdigest_quantile",
+      "_FUNC_(sketch, q) - quantile of a t-digest sketch column")(args =>
+        TDigestQuery(args(0), args(1), "quantile")),
+    scalar("tdigest_cdf",
+      "_FUNC_(sketch, v) - rank in [0,1] of a value in a t-digest")(args =>
+        TDigestQuery(args(0), args(1), "cdf")),
+    aggregator("earliest_by",
+      "_FUNC_(expr, orderExpr) - value at min of ordering")(args =>
         org.apache.spark.sql.catalyst.expressions.aggregate.MinBy(args(0), args(1))
           .toAggregateExpression()),
-    ("latest_by", info("latest_by", "value at max of ordering (expr, orderExpr)"),
-      (args: Seq[Expression]) =>
+    aggregator("latest_by",
+      "_FUNC_(expr, orderExpr) - value at max of ordering")(args =>
         org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy(args(0), args(1))
           .toAggregateExpression()),
     // sketch-returning post-agg surface (scalar, per-row over sketch
     // columns): HLL_SKETCH_* / THETA_SKETCH_* / DS_TUPLE_DOUBLES_* /
     // DS_QUANTILE* reference names run unchanged
-    ("hll_sketch_union", info("hll_sketch_union",
-      "union of HLL sketches ([lgK, tgtHllType], expr…) — leading literal params ignored"),
-      (args: Seq[Expression]) => HllUnion(dropLeadingParams(args))),
-    ("hll_sketch_to_string", info("hll_sketch_to_string", "debug summary of an HLL sketch"),
-      (args: Seq[Expression]) => HllToString(args.head)),
-    ("hll_sketch_estimate_with_error_bounds", info(
-      "hll_sketch_estimate_with_error_bounds",
-      "ARRAY(estimate, lo, hi) of an HLL sketch (sketch[, numStdDev])"),
-      (args: Seq[Expression]) => HllEstimateWithBounds(args.head,
-        if (args.length > 1) args(1)
-        else org.apache.spark.sql.catalyst.expressions.Literal(1))),
-    ("theta_sketch_union", info("theta_sketch_union",
-      "union of theta sketches ([size], expr…) — leading literal size ignored"),
-      (args: Seq[Expression]) =>
+    scalar("hll_sketch_union",
+      "_FUNC_([lgK, tgtHllType,] sketch...) - union of HLL sketches")(args =>
+        HllUnion(dropLeadingParams(args))),
+    scalar("hll_sketch_to_string",
+      "_FUNC_(sketch) - debug summary of an HLL sketch")(args =>
+        HllToString(args.head)),
+    scalar("hll_sketch_estimate_with_error_bounds",
+      "_FUNC_(sketch[, numStdDev]) - ARRAY(estimate, lo, hi) of an HLL sketch")(args =>
+        HllEstimateWithBounds(args.head,
+          if (args.length > 1) args(1)
+          else org.apache.spark.sql.catalyst.expressions.Literal(1))),
+    scalar("theta_sketch_union",
+      "_FUNC_([size,] sketch...) - union of theta sketches")(args =>
         dropLeadingParams(args).reduceLeft(KmvSetSketch(_, _, "union"))),
-    ("theta_sketch_intersect", info("theta_sketch_intersect",
-      "intersection of theta sketches ([size], expr…)"),
-      (args: Seq[Expression]) =>
+    scalar("theta_sketch_intersect",
+      "_FUNC_([size,] sketch...) - intersection of theta sketches")(args =>
         dropLeadingParams(args).reduceLeft(KmvSetSketch(_, _, "intersect"))),
-    ("theta_sketch_not", info("theta_sketch_not",
-      "A-NOT-B of theta sketches ([size], exprA, exprB)"),
-      (args: Seq[Expression]) =>
+    scalar("theta_sketch_not",
+      "_FUNC_([size,] sketchA, sketchB) - A-NOT-B of theta sketches")(args =>
         dropLeadingParams(args).reduceLeft(KmvSetSketch(_, _, "not"))),
-    ("theta_sketch_estimate_with_error_bounds", info(
-      "theta_sketch_estimate_with_error_bounds",
-      "ARRAY(estimate, lo, hi) of a theta sketch (sketch[, errorBoundsStdDev])"),
-      (args: Seq[Expression]) => KmvEstimateWithBounds(args.head,
-        if (args.length > 1) args(1)
-        else org.apache.spark.sql.catalyst.expressions.Literal(1))),
-    ("ds_quantiles_sketch", info("ds_quantiles_sketch",
-      "KLL quantiles binary sketch aggregate (expr[, k ignored])"),
-      (args: Seq[Expression]) => KllSketchAgg(args.head).toAggregateExpression()),
-    ("ds_quantile_summary", info("ds_quantile_summary",
-      "string summary of a KLL quantiles sketch"),
-      (args: Seq[Expression]) => KllSummary(args.head)),
+    scalar("theta_sketch_estimate_with_error_bounds",
+      "_FUNC_(sketch[, stdDev]) - ARRAY(estimate, lo, hi) of a theta sketch")(args =>
+        KmvEstimateWithBounds(args.head,
+          if (args.length > 1) args(1)
+          else org.apache.spark.sql.catalyst.expressions.Literal(1))),
+    aggregator("ds_quantiles_sketch",
+      "_FUNC_(expr[, k]) - KLL quantiles binary sketch aggregate (k ignored)")(args =>
+        KllSketchAgg(args.head).toAggregateExpression()),
+    scalar("ds_quantile_summary",
+      "_FUNC_(sketch) - string summary of a KLL quantiles sketch")(args =>
+        KllSummary(args.head)),
     // DS_TUPLE_DOUBLES(key, metric…[, nominalEntries]): aggregate form; the
     // set ops and metrics-sum estimate are scalar post-aggs
-    ("ds_tuple_doubles", info("ds_tuple_doubles",
-      "tuple sketch aggregate (key, metric…[, nominalEntries ignored])"),
-      (args: Seq[Expression]) => {
+    aggregator("ds_tuple_doubles",
+      "_FUNC_(key, metric...[, nominalEntries]) - tuple sketch aggregate")(args =>
+        {
         import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray}
         import org.apache.spark.sql.types.DoubleType
         val metrics = dropTrailingParam(args.tail)
@@ -240,36 +243,30 @@ object GraftExtensions {
         TupleSketchAgg(args.head,
           CreateArray(metrics.map(Cast(_, DoubleType)))).toAggregateExpression()
       }),
-    ("ds_tuple_doubles_union", info("ds_tuple_doubles_union",
-      "union of tuple sketches (expr…[, nominalEntries ignored]) — summaries summed"),
-      (args: Seq[Expression]) =>
+    scalar("ds_tuple_doubles_union",
+      "_FUNC_(sketch...[, nominalEntries]) - union of tuple sketches")(args =>
         dropTrailingParam(args).reduceLeft(TupleSetSketch(_, _, "union"))),
-    ("ds_tuple_doubles_intersect", info("ds_tuple_doubles_intersect",
-      "intersection of tuple sketches (expr…[, nominalEntries ignored])"),
-      (args: Seq[Expression]) =>
+    scalar("ds_tuple_doubles_intersect",
+      "_FUNC_(sketch...[, nominalEntries]) - intersection of tuple sketches")(args =>
         dropTrailingParam(args).reduceLeft(TupleSetSketch(_, _, "intersect"))),
-    ("ds_tuple_doubles_not", info("ds_tuple_doubles_not",
-      "A-NOT-B of tuple sketches (exprA, exprB[, nominalEntries ignored])"),
-      (args: Seq[Expression]) =>
+    scalar("ds_tuple_doubles_not",
+      "_FUNC_(sketchA, sketchB[, nominalEntries]) - A-NOT-B of tuple sketches")(args =>
         dropTrailingParam(args).reduceLeft(TupleSetSketch(_, _, "not"))),
-    ("ds_tuple_doubles_metrics_sum_estimate", info(
-      "ds_tuple_doubles_metrics_sum_estimate",
-      "ARRAY of population-scaled per-metric sums of a tuple sketch"),
-      (args: Seq[Expression]) => TupleMetricsSumEstimate(args.head)),
+    scalar("ds_tuple_doubles_metrics_sum_estimate",
+      "_FUNC_(sketch) - per-metric sum estimates of a tuple sketch")(args =>
+        TupleMetricsSumEstimate(args.head)),
     // reference APPROX_* SQL aggregators over Spark's own implementations
-    ("approx_count_distinct_builtin", info("approx_count_distinct_builtin",
-      "Spark HyperLogLog++ distinct estimate"),
-      (args: Seq[Expression]) =>
+    aggregator("approx_count_distinct_builtin",
+      "_FUNC_(expr) - Spark HyperLogLog++ distinct estimate")(args =>
         org.apache.spark.sql.catalyst.expressions.aggregate
           .HyperLogLogPlusPlus(args.head).toAggregateExpression()),
-    ("approx_quantile", info("approx_quantile",
-      "approximate quantile (expr, probability[, resolution ignored])"),
-      (args: Seq[Expression]) =>
+    aggregator("approx_quantile",
+      "_FUNC_(expr, probability[, resolution]) - approximate quantile")(args =>
         new org.apache.spark.sql.catalyst.expressions.aggregate
           .ApproximatePercentile(args(0), args(1)).toAggregateExpression()),
-    ("approx_quantile_fixed_buckets", info("approx_quantile_fixed_buckets",
-      "fixed-buckets histogram quantile (expr, prob, numBuckets, lower, upper[, mode])"),
-      (args: Seq[Expression]) => {
+    aggregator("approx_quantile_fixed_buckets",
+      "_FUNC_(expr, prob, numBuckets, lower, upper[, mode]) - histogram quantile")(args =>
+        {
         require(args.length >= 5, "approx_quantile_fixed_buckets(expr, prob, " +
           "numBuckets, lowerLimit, upperLimit[, outlierHandlingMode])")
         graft.functions.sketches.FixedBucketsQuantileAgg(args(0),

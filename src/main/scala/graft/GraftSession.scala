@@ -1,22 +1,30 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.functions.{DruidFunctions, LookupRegistry, TypedAggregators}
+import graft.functions.{DruidFunctions, EngineFunction, LookupRegistry, TypedAggregators}
 import graft.plans.{AggregatePullUpLookupRule, ApproxTopNStrategy, DeterministicWindowOrder, HybridDecimalSumRule, RejectInvertedFrames, ReverseLookupRule, SortDistinctArrayAgg, SpreadExpensiveFilter}
 
 /** Session factory and the one place a session is armed with the engine:
-  * reference-named SQL functions, the sketch/Catalyst function surface
-  * ([[GraftExtensions.functions]]), typed UDAFs, the `LOOKUP` function, the
-  * optimizer rules and the approximate-topN planner strategy. The entry
-  * point a user migrating from the reference starts from.
+  * the SQL functions of [[functions]], the optimizer rules and the
+  * approximate-topN planner strategy. The entry point a user migrating
+  * from the reference starts from.
   */
 object GraftSession {
 
   /** Set on a session once [[attach]] has armed it. */
   private val AttachedFlag = "spark.graft.internal.attached"
+
+  /** Every SQL function of the engine, one entry per name: the
+    * reference-named scalar, array and SQL-defined functions, the sketch
+    * and EARLIEST/LATEST surface, `LOOKUP` and `GEOMETRIC_MEAN`.
+    */
+  val functions: Seq[EngineFunction] =
+    DruidFunctions.functions ++ GraftExtensions.functions ++
+      Seq(LookupRegistry.function, TypedAggregators.function)
 
   /** The engine's optimizer rules, in the order they run. All of them run
     * in Spark's "User Provided Optimizers" fixed-point batch — the one batch
@@ -51,19 +59,17 @@ object GraftSession {
   }
 
   /** Arm `spark` with every function, rule and strategy of the engine.
-    * Idempotent: a repeat call costs one conf read, so every public entry
-    * point that is handed a session calls it. Clones of an armed session
-    * (`cloneSession`) inherit the flag, the functions and the rules.
+    * Registration runs no SQL: each entry of [[functions]] goes into the
+    * session's function registry with its usage and group. Idempotent: a
+    * repeat call costs one conf read, so every public entry point that is
+    * handed a session calls it. Clones of an armed session (`cloneSession`)
+    * inherit the flag, the functions and the rules.
     */
   def attach(spark: SparkSession): Unit =
     if (!spark.conf.getOption(AttachedFlag).contains("true")) spark.synchronized {
-      DruidFunctions.register(spark)
-      TypedAggregators.register(spark)
-      LookupRegistry.registerSql(spark)
-      GraftExtensions.functions.foreach { case (name, _, builder) =>
-        spark.sessionState.functionRegistry
-          .createOrReplaceTempFunction(name, builder, "built-in")
-      }
+      val registry = spark.sessionState.functionRegistry
+      functions.foreach(f =>
+        registry.registerFunction(FunctionIdentifier(f.name), f.info, f.builder))
       // replace rather than append: a session whose conf was RESET keeps
       // its rules, and must not get a second copy
       val x = spark.experimental

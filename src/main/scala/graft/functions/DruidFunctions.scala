@@ -1,17 +1,23 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.graftbridge.Bridge.{toCol, toExpr}
+import org.apache.spark.sql.types.{ArrayType, StringType, TimestampType}
 
-/** Reference-named scalar functions re-expressed over Spark built-ins.
+import EngineFunction.{aggregator, scalar}
+
+/** Reference-named functions re-expressed over Spark built-ins: one table,
+  * [[functions]], of Catalyst builders, with the Column-API spellings
+  * calling the same builders.
   *
   * The reference exposes ~100 expression-language functions
   * (`math/expr/Function.java`) plus SQL operator conversions
-  * (`sql/.../expression/builtin/`). Nearly all map 1:1 onto
-  * `org.apache.spark.sql.functions` (codegen'd, vectorized); we only add thin
-  * wrappers so user code can keep the reference names, and keep everything
-  * inside whole-stage codegen (no UDFs anywhere in this file).
+  * (`sql/.../expression/builtin/`). Nearly all map onto Catalyst built-in
+  * expressions (codegen'd, vectorized); the builders add the reference's
+  * names and edge semantics and keep everything inside whole-stage codegen
+  * (no UDFs anywhere in this file).
   */
 object DruidFunctions {
 
@@ -67,29 +73,6 @@ object DruidFunctions {
       case _ => throw new IllegalArgumentException(s"unsupported period: $period")
     }
   }
-
-  /** TIME_FLOOR(ts, period[, origin]): floor `ts` to an ISO-8601 period bucket.
-    * Matches PeriodGranularity semantics: bucket boundaries are origin + k*period.
-    */
-  def timeFloor(ts: Column, period: String, originEpochMicros: Long = 0L): Column =
-    CalendarPeriods.get(period) match {
-      case Some(unit) if originEpochMicros == 0L => date_trunc(unit, ts)
-      case None if originEpochMicros == 0L && monthsOf(period).isDefined =>
-        // calendar multiple: floor the months-since-epoch to the bucket size
-        val n = monthsOf(period).get
-        val m = (year(ts) - lit(1970)) * lit(12) + month(ts) - lit(1)
-        val b = m - pmod(m, lit(n))
-        val yr = lit(1970) + ((b - pmod(b, lit(12))) / lit(12)).cast("int")
-        make_date(yr, pmod(b, lit(12)) + lit(1), lit(1)).cast("timestamp")
-      case _ =>
-        val p = periodMicros(period)
-        require(p > 0, s"period must be positive: $period")
-        // exact integer floor via pmod (a double division would lose
-        // precision on 1.7e18-scale epoch-micros and misplace bucket edges);
-        // pmod is non-negative, so this floors correctly pre-origin too
-        val rel = unix_micros(ts) - lit(originEpochMicros)
-        timestamp_micros(rel - pmod(rel, lit(p)) + lit(originEpochMicros))
-    }
 
   /** Lenient ISO-8601 instant parse for TIME_FLOOR origin literals
     * (reference accepts '1970-01-01T00:30:00', with or without zone/'T',
@@ -634,27 +617,33 @@ object DruidFunctions {
     e.flatMap(x => literalString(x, s"$fn timezone"))
       .filterNot(z => z == "UTC" || z == "Etc/UTC" || z == "+00:00")
 
-  /** TIME_CEIL — smallest bucket boundary >= ts. */
-  def timeCeil(ts: Column, period: String): Column = {
-    val floored = timeFloor(ts, period)
-    when(floored === ts, ts).otherwise(timeShift(floored, period, 1))
-  }
+  // ------------------------------------------------------ Column API ----
+  // The DataFrame spellings of table functions: each is one call of the
+  // builder the SQL name runs, so a native query and SQL answer alike.
 
-  /** TIME_SHIFT(ts, period, n) — shift by n periods. Calendar shifts use
-    * year-month intervals so the time-of-day is preserved (add_months would
-    * truncate to midnight, which the reference does not do).
+  /** TIME_FLOOR(ts, period[, origin]): floor `ts` to an ISO-8601 period
+    * bucket, boundaries at origin + k*period (0 = no origin: calendar
+    * periods align on their calendar unit, like the 2-argument SQL form).
+    */
+  def timeFloor(ts: Column, period: String, originEpochMicros: Long = 0L): Column =
+    call("time_floor", ts, period,
+      if (originEpochMicros == 0L) null
+      else Literal(originEpochMicros, TimestampType))
+
+  /** TIME_CEIL — smallest bucket boundary >= ts. */
+  def timeCeil(ts: Column, period: String): Column =
+    call("time_ceil", ts, period)
+
+  /** TIME_SHIFT(ts, period, n) — shift by n periods, calendar periods
+    * keeping the time of day.
     */
   def timeShift(ts: Column, period: String, n: Int): Column =
-    CalendarPeriods.get(period) match {
-      case Some("year")    => ts + make_ym_interval(lit(n), lit(0))
-      case Some("quarter") => ts + make_ym_interval(lit(0), lit(3 * n))
-      case Some("month")   => ts + make_ym_interval(lit(0), lit(n))
-      case None if monthsOf(period).isDefined =>
-        ts + make_ym_interval(lit(0), lit(monthsOf(period).get * n))
-      case _ => timestamp_micros(unix_micros(ts) + lit(periodMicros(period) * n))
-    }
+    call("time_shift", ts, period, n)
 
-  /** TIME_EXTRACT(ts, unit) — reference units map onto Spark built-ins. */
+  /** TIME_EXTRACT(ts, unit) as INT for the units that fit one. The SQL
+    * builder answers BIGINT, as the reference does, so this one keeps its
+    * own expressions.
+    */
   def timeExtract(ts: Column, unit: String): Column = unit.toUpperCase match {
     case "EPOCH"   => unix_timestamp(ts)
     case "MILLIS"  => (unix_micros(ts) / 1000L).cast("long")
@@ -675,36 +664,28 @@ object DruidFunctions {
 
   /** TIME_FORMAT(ts, jodaPattern). */
   def timeFormat(ts: Column, pattern: String): Column =
-    date_format(ts, jodaToJavaPattern(pattern))
+    call("time_format", ts, pattern)
 
-  /** MILLIS_TO_TIMESTAMP / TIMESTAMP_TO_MILLIS. */
-  def millisToTimestamp(c: Column): Column = timestamp_millis(c)
-  def timestampToMillis(c: Column): Column = (unix_micros(c) / 1000L).cast("long")
-
-  // --------------------------------------------------------------- number ----
   /** SAFE_DIVIDE — null (not error / Inf) on zero denominator
     * (reference `Function.java:1220`).
     */
-  def safeDivide(x: Column, y: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge.{toCol, toExpr}
-    toCol(graft.functions.SafeDivide(toExpr(x), toExpr(y)))
-  }
+  def safeDivide(x: Column, y: Column): Column = call("safe_divide", x, y)
 
-  // ------------------------------------------------------- multi-value str ----
   // Reference MVDs (multi-value string dimensions) are modelled as
-  // ArrayType(StringType) (SURVEY.md §1.2). The mv_* surface maps to array fns.
-  def mvToArray(c: Column): Column = c
-  def mvLength(c: Column): Column = size(c)
+  // ArrayType(StringType) (SURVEY.md §1.2).
+  def mvLength(c: Column): Column = call("mv_length", c)
+  def mvOverlap(a: Column, b: Column): Column = call("mv_overlap", a, b)
+  // These two keep their own expressions, which the q_mv_ops gate pins:
+  // through MV_CONTAINS its has_spark column turns nullable (a NULL array
+  // answers FALSE there, NULL here), and through MV_FILTER_PREFIX a
+  // document with no match counts NULL tokens (an empty match is NULL
+  // there, `[]` here).
   def mvContains(c: Column, v: String): Column = array_contains(c, v)
-  def mvOverlap(a: Column, b: Column): Column = arrays_overlap(a, b)
   def mvFilterPrefix(c: Column, prefix: String): Column =
     filter(c, x => x.startsWith(prefix))
   def mvFilterRegex(c: Column, pattern: String): Column =
-    filter(c, x => x.rlike(pattern))
-  def mvToString(c: Column, sep: String): Column = array_join(c, sep)
-  def stringToMv(c: Column, sepRegex: String): Column = split(c, sepRegex)
-  /** ARRAY_TO_MV is an identity under the array representation. */
-  def arrayToMv(c: Column): Column = c
+    call("mv_filter_regex", c, pattern)
+  def mvToString(c: Column, sep: String): Column = call("mv_to_string", c, sep)
   /** MV_HARMONIZE_NULLS (Function.java harmonizeMultiValue:4769): null, [],
     * and [null] all coerce to the SINGLE-NULL array `[null]` — the shape
     * `ExpressionSelectors` homogenize produces — NOT an empty array, so
@@ -716,63 +697,46 @@ object DruidFunctions {
       array(lit(null).cast(StringType))).otherwise(cast)
   }
 
-  // ------------------------------------------------------------------ json ----
   /** JSON_VALUE(col, '$.path') — string-typed extraction like the reference. */
-  def jsonValue(c: Column, path: String): Column = get_json_object(c, path)
+  def jsonValue(c: Column, path: String): Column = call("json_value", c, path)
 
-  // ---------------------------------------------------------------- lookup ----
-  /** LOOKUP(expr, map[, replaceMissingWith]) — the reference's LookupDataSource
-    * /LookupExprMacro is a bounded key→value map broadcast to every node; a
-    * Catalyst map literal gives exactly that (serialized once into the plan,
-    * shipped with the broadcasted task binary — no shuffle, no join).
+  /** LOOKUP(expr, map[, replaceMissingWith]) over a literal map, the
+    * probe the SQL `LOOKUP` builds for a named lookup.
     */
   def lookup(c: Column, mapping: Map[String, String],
-             replaceMissing: Option[String] = None): Column = {
-    val m = typedlit(mapping)
-    val hit = element_at(m, c)
-    replaceMissing.fold(hit)(d => coalesce(hit, lit(d)))
-  }
+             replaceMissing: Option[String] = None): Column =
+    toCol(LookupRegistry.lookupOf(toExpr(c), mapping, replaceMissing.map(Literal(_))))
 
-  // ------------------------------------------------------------------- ip ----
-  /** IPV4_PARSE — dotted quad → long (pure expression composition, codegen'd). */
-  def ipv4Parse(c: Column): Column = {
-    val p = split(c, "\\.")
-    (element_at(p, 1).cast("long") * 16777216L +
-      element_at(p, 2).cast("long") * 65536L +
-      element_at(p, 3).cast("long") * 256L +
-      element_at(p, 4).cast("long"))
-  }
+  /** IPV4_PARSE — dotted quad → long, NULL unless a valid address. */
+  def ipv4Parse(c: Column): Column = call("ipv4_parse", c)
 
   /** IPV4_STRINGIFY — long → dotted quad. */
-  def ipv4Stringify(c: Column): Column =
-    concat_ws(".",
-      (c / 16777216L).cast("long") % 256L,
-      (c / 65536L).cast("long") % 256L,
-      (c / 256L).cast("long") % 256L,
-      c.cast("long") % 256L)
+  def ipv4Stringify(c: Column): Column = call("ipv4_stringify", c)
 
-  /** IPV4_MATCH(ip, 'a.b.c.d/n') — subnet containment via bit math. */
-  def ipv4Match(ip: Column, subnet: String): Column = {
-    val Array(base, bits) = subnet.split("/")
-    val baseLong = base.split("\\.").map(_.toLong)
-      .reduceLeft((acc, o) => acc * 256 + o)
-    val mask = if (bits.toInt == 0) 0L else (0xFFFFFFFFL << (32 - bits.toInt)) & 0xFFFFFFFFL
-    ((ipv4Parse(ip).bitwiseAND(lit(mask))) === lit(baseLong & mask))
-  }
+  /** IPV4_MATCH(ip, 'a.b.c.d/n') — subnet containment. */
+  def ipv4Match(ip: Column, subnet: String): Column =
+    call("ipv4_match", ip, subnet)
 
-  // -------------------------------------------------------------- register ----
-  /** Functions whose reference forms are variadic or arity-overloaded — a SQL
-    * macro has fixed arity, so these go straight into the Catalyst function
-    * registry as expression builders (still pure built-in expressions, fully
-    * codegen'd):
-    *  - STRING_FORMAT(pattern, args…) — reference `Function.java` string
-    *    format, printf-style;
-    *  - PARSE_LONG(s[, radix]) — null (not error) on garbage; radix form via
-    *    base conversion.
+  private lazy val byName: Map[String, EngineFunction] =
+    functions.map(f => f.name -> f).toMap
+
+  /** One table builder applied to Columns, expressions and literal values. */
+  private def call(name: String, args: Any*): Column =
+    toCol(byName(name).builder(args.map {
+      case c: Column => toExpr(c)
+      case e: org.apache.spark.sql.catalyst.expressions.Expression => e
+      case v => Literal(v)
+    }))
+
+  // --------------------------------------------------------------- table ----
+  /** Every reference-named function of this family, one entry each: the
+    * variadic and arity-overloaded forms (STRING_FORMAT, PARSE_LONG, the
+    * TIME_* family…), the polymorphic ARRAY_/MV_ surface
+    * ([[arrayBuilders]]) and the fixed-arity functions the reference
+    * defines in SQL ([[sqlMacros]]). All are pure built-in expressions,
+    * fully codegen'd.
     */
-  val catalystBuilders: Seq[(String,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = {
+  val functions: Seq[EngineFunction] = {
     import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, BitwiseNot, BitwiseOr, BitwiseXor, Cast, Conv, EvalMode, Expression, FormatString, Greatest, If, IsNull, Least, LessThan, Literal, Or, ShiftLeft, ShiftRight, StringRepeat}
     import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
     // Java's Formatter can't print Spark Decimal through %f — SQL fractional
@@ -850,12 +814,12 @@ object DruidFunctions {
     Seq(
       // nonStrictFormat: an illegal pattern degrades to "pattern; arg; …"
       // instead of erroring (StringUtils.nonStrictFormat:381)
-      "string_format" -> ((args: Seq[Expression]) =>
+      scalar("string_format", "_FUNC_(pattern, arg...)")(args =>
         NonStrictFormat(args.head +: args.tail.map(fmtArg))),
       // native-expression cast(x, 'TYPE') (Function.java CastFunc:1986) —
       // NativeJsonQuery.rewriteNativeExpr reroutes `cast(` here; the SQL
       // layer's CAST … AS keeps Spark's builtin
-      "druid_cast" -> ((args: Seq[Expression]) => {
+      scalar("druid_cast", "_FUNC_(expr, 'TYPE')")(args => {
         require(args.size == 2, s"cast takes 2 arguments, got ${args.size}")
         val tname = args(1) match {
           case Literal(u: org.apache.spark.unsafe.types.UTF8String,
@@ -870,7 +834,7 @@ object DruidFunctions {
       // a named_struct (type-preserving JSON: numbers stay numbers,
       // booleans stay booleans); non-literal keys fall back to a map
       // (values then share one coerced type, like Spark's map())
-      "json_object" -> ((args: Seq[Expression]) => {
+      scalar("json_object", "_FUNC_(key, value[, key, value...])")(args => {
         import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
         import org.apache.spark.sql.catalyst.expressions.{Cast, CreateMap, CreateNamedStruct, StructsToJson}
         import org.apache.spark.sql.types.{NullType, StringType}
@@ -934,7 +898,7 @@ object DruidFunctions {
       // Spark's Conv is UNSIGNED and parses garbage to 0, so validate with
       // the radix's digit class first and route the sign around Conv. The
       // radix must be a literal (the reference vectorizes only that form).
-      "parse_long" -> ((args: Seq[Expression]) => args match {
+      scalar("parse_long", "_FUNC_(str[, radix])")(args => args match {
         case Seq(s) => Cast(s, LongType, None, EvalMode.TRY)
         case Seq(s, radixE) =>
           import org.apache.spark.sql.catalyst.expressions.{RLike, StartsWith, Substring, UnaryMinus}
@@ -989,7 +953,7 @@ object DruidFunctions {
       // Spark's legacy TWO-arg ltrim/rtrim take (trimStr, srcStr) REVERSED,
       // so ltrim('xxabcxx','x') would silently trim 'x' by 'xxabcxx' → ''.
       // Shadow with the reference's argument order.
-      "ltrim" -> ((args: Seq[Expression]) => {
+      scalar("ltrim", "_FUNC_(str[, chars])")(args => {
         require(args.size == 1 || args.size == 2,
           s"ltrim takes 1 or 2 arguments, got ${args.size}")
         if (args.size == 1)
@@ -997,7 +961,7 @@ object DruidFunctions {
         else org.apache.spark.sql.catalyst.expressions.StringTrimLeft(
           args(0), Some(args(1)))
       }),
-      "rtrim" -> ((args: Seq[Expression]) => {
+      scalar("rtrim", "_FUNC_(str[, chars])")(args => {
         require(args.size == 1 || args.size == 2,
           s"rtrim takes 1 or 2 arguments, got ${args.size}")
         if (args.size == 1)
@@ -1005,7 +969,7 @@ object DruidFunctions {
         else org.apache.spark.sql.catalyst.expressions.StringTrimRight(
           args(0), Some(args(1)))
       }),
-      "regexp_extract" -> ((args: Seq[Expression]) => {
+      scalar("regexp_extract", "_FUNC_(str, pattern[, group])")(args => {
         import org.apache.spark.sql.catalyst.expressions.{If, RLike, RegExpExtract}
         import org.apache.spark.sql.types.StringType
         require(args.size == 2 || args.size == 3,
@@ -1022,7 +986,7 @@ object DruidFunctions {
       // Ulp:1747, CopySign:1789, Remainder:1831 = Math.IEEEremainder,
       // NextAfter:1906): StaticInvoke of the same java.lang.Math methods,
       // so subnormal/NaN/±0 edges are bit-identical to the reference
-      "getexponent" -> ((args: Seq[Expression]) => {
+      scalar("getexponent", "_FUNC_(x)")(args => {
         require(args.size == 1, s"getExponent takes 1 argument, got ${args.size}")
         Cast(org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           classOf[java.lang.Math], org.apache.spark.sql.types.IntegerType,
@@ -1030,7 +994,7 @@ object DruidFunctions {
           Seq(Cast(args(0), org.apache.spark.sql.types.DoubleType)),
           Seq(org.apache.spark.sql.types.DoubleType)), LongType)
       }),
-      "nextup" -> ((args: Seq[Expression]) => {
+      scalar("nextup", "_FUNC_(x)")(args => {
         require(args.size == 1, s"nextUp takes 1 argument, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           classOf[java.lang.Math], org.apache.spark.sql.types.DoubleType,
@@ -1038,7 +1002,7 @@ object DruidFunctions {
           Seq(Cast(args(0), org.apache.spark.sql.types.DoubleType)),
           Seq(org.apache.spark.sql.types.DoubleType))
       }),
-      "ulp" -> ((args: Seq[Expression]) => {
+      scalar("ulp", "_FUNC_(x)")(args => {
         require(args.size == 1, s"ulp takes 1 argument, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           classOf[java.lang.Math], org.apache.spark.sql.types.DoubleType,
@@ -1046,7 +1010,7 @@ object DruidFunctions {
           Seq(Cast(args(0), org.apache.spark.sql.types.DoubleType)),
           Seq(org.apache.spark.sql.types.DoubleType))
       }),
-      "copysign" -> ((args: Seq[Expression]) => {
+      scalar("copysign", "_FUNC_(magnitude, sign)")(args => {
         require(args.size == 2, s"copySign takes 2 arguments, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           classOf[java.lang.Math], org.apache.spark.sql.types.DoubleType,
@@ -1055,7 +1019,7 @@ object DruidFunctions {
           Seq(org.apache.spark.sql.types.DoubleType,
             org.apache.spark.sql.types.DoubleType))
       }),
-      "nextafter" -> ((args: Seq[Expression]) => {
+      scalar("nextafter", "_FUNC_(start, direction)")(args => {
         require(args.size == 2, s"nextAfter takes 2 arguments, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           classOf[java.lang.Math], org.apache.spark.sql.types.DoubleType,
@@ -1064,7 +1028,7 @@ object DruidFunctions {
           Seq(org.apache.spark.sql.types.DoubleType,
             org.apache.spark.sql.types.DoubleType))
       }),
-      "remainder" -> ((args: Seq[Expression]) => {
+      scalar("remainder", "_FUNC_(x, y)")(args => {
         require(args.size == 2, s"remainder takes 2 arguments, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           classOf[java.lang.Math], org.apache.spark.sql.types.DoubleType,
@@ -1083,8 +1047,8 @@ object DruidFunctions {
       // Math.max/min(double,double), which PROPAGATES NaN — Spark's
       // Least/Greatest rank NaN greatest in their total ordering, so
       // min(NaN, 3.0) would wrongly return 3.0 there. Null propagates.
-      "druid_max" -> ((args: Seq[Expression]) => druidMinMax(args, "max")),
-      "druid_min" -> ((args: Seq[Expression]) => druidMinMax(args, "min")),
+      scalar("druid_max", "_FUNC_(x, y)")(args => druidMinMax(args, "max")),
+      scalar("druid_min", "_FUNC_(x, y)")(args => druidMinMax(args, "min")),
       // Native camelCase bitwise family (Function.java BitwiseAnd:1008 ..
       // BitwiseXor:1092, BitwiseComplement:914, BitwiseConvert*:944,976).
       // BivariateBitwiseMathFunction evals x.asLong() op y.asLong() — a
@@ -1092,43 +1056,43 @@ object DruidFunctions {
       // never rounded or rejected — so each operand rides a LEGACY-mode
       // Cast to LONG (Java (long) semantics regardless of session ANSI
       // mode). Shift distance follows Java's << low-6-bit rule (long→int
-      // keeps them). The SQL-layer BITWISE_* names (typed macros above)
+      // keeps them). The SQL-layer BITWISE_* names ([[sqlMacros]] below)
       // stay; these are the NATIVE expression spellings.
-      "bitwiseand" -> ((args: Seq[Expression]) => {
+      scalar("bitwiseand", "_FUNC_(x, y)")(args => {
         require(args.size == 2, s"bitwiseAnd takes 2 arguments, got ${args.size}")
         BitwiseAnd(Cast(args(0), LongType, None, EvalMode.LEGACY),
           Cast(args(1), LongType, None, EvalMode.LEGACY))
       }),
-      "bitwiseor" -> ((args: Seq[Expression]) => {
+      scalar("bitwiseor", "_FUNC_(x, y)")(args => {
         require(args.size == 2, s"bitwiseOr takes 2 arguments, got ${args.size}")
         BitwiseOr(Cast(args(0), LongType, None, EvalMode.LEGACY),
           Cast(args(1), LongType, None, EvalMode.LEGACY))
       }),
-      "bitwisexor" -> ((args: Seq[Expression]) => {
+      scalar("bitwisexor", "_FUNC_(x, y)")(args => {
         require(args.size == 2, s"bitwiseXor takes 2 arguments, got ${args.size}")
         BitwiseXor(Cast(args(0), LongType, None, EvalMode.LEGACY),
           Cast(args(1), LongType, None, EvalMode.LEGACY))
       }),
-      "bitwisecomplement" -> ((args: Seq[Expression]) => {
+      scalar("bitwisecomplement", "_FUNC_(x)")(args => {
         require(args.size == 1,
           s"bitwiseComplement takes 1 argument, got ${args.size}")
         BitwiseNot(Cast(args(0), LongType, None, EvalMode.LEGACY))
       }),
-      "bitwiseshiftleft" -> ((args: Seq[Expression]) => {
+      scalar("bitwiseshiftleft", "_FUNC_(x, n)")(args => {
         require(args.size == 2,
           s"bitwiseShiftLeft takes 2 arguments, got ${args.size}")
         ShiftLeft(Cast(args(0), LongType, None, EvalMode.LEGACY),
           Cast(Cast(args(1), LongType, None, EvalMode.LEGACY),
             org.apache.spark.sql.types.IntegerType))
       }),
-      "bitwiseshiftright" -> ((args: Seq[Expression]) => {
+      scalar("bitwiseshiftright", "_FUNC_(x, n)")(args => {
         require(args.size == 2,
           s"bitwiseShiftRight takes 2 arguments, got ${args.size}")
         ShiftRight(Cast(args(0), LongType, None, EvalMode.LEGACY),
           Cast(Cast(args(1), LongType, None, EvalMode.LEGACY),
             org.apache.spark.sql.types.IntegerType))
       }),
-      "bitwiseconvertdoubletolongbits" -> ((args: Seq[Expression]) => {
+      scalar("bitwiseconvertdoubletolongbits", "_FUNC_(x)")(args => {
         require(args.size == 1,
           s"bitwiseConvertDoubleToLongBits takes 1 argument, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
@@ -1136,7 +1100,7 @@ object DruidFunctions {
           Seq(Cast(args(0), org.apache.spark.sql.types.DoubleType)),
           Seq(org.apache.spark.sql.types.DoubleType))
       }),
-      "bitwiseconvertlongbitstodouble" -> ((args: Seq[Expression]) => {
+      scalar("bitwiseconvertlongbitstodouble", "_FUNC_(x)")(args => {
         require(args.size == 1,
           s"bitwiseConvertLongBitsToDouble takes 1 argument, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
@@ -1145,7 +1109,7 @@ object DruidFunctions {
           Seq(Cast(args(0), LongType, None, EvalMode.LEGACY)),
           Seq(LongType))
       }),
-      "scalb" -> ((args: Seq[Expression]) => {
+      scalar("scalb", "_FUNC_(d, scale)")(args => {
         require(args.size == 2, s"scalb takes 2 arguments, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           classOf[java.lang.Math], org.apache.spark.sql.types.DoubleType,
@@ -1160,7 +1124,7 @@ object DruidFunctions {
       // mixed arrays recurse per index, scalar/NULL input → ['$']) — the
       // tree walk lives in JsonPathsUtil.paths, pinned to the reference's
       // StructuredDataProcessor traversal
-      "json_paths" -> ((args: Seq[Expression]) => {
+      scalar("json_paths", "_FUNC_(json)")(args => {
         require(args.size == 1, s"json_paths takes 1 argument, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           JsonPathsUtil.getClass,
@@ -1179,20 +1143,21 @@ object DruidFunctions {
       // coercion, loud slice/union-path rejection — see JsonWalk scaladoc).
       // Optional third json_value arg = native type name (JsonValueCastExpr,
       // NestedDataExpressions.java:493-530): TRY-cast of the walked value.
-      "json_value" -> jsonValueBuilder("value"),
+      scalar("json_value", "_FUNC_(json, path[, 'TYPE'])")(jsonValueBuilder("value")),
       // native expression path (NativeJsonQuery.rewriteNativeExpr reroutes
       // json_value here): the macro resolves NEGATIVE indexes from the end
       // (NestedPathArrayElement), unlike the SQL layer's virtual-column
       // planning which nulls them
-      "json_value_native" -> jsonValueBuilder("valueNative"),
-      "json_query" -> ((args: Seq[Expression]) => {
+      scalar("json_value_native",
+        "_FUNC_(json, path[, 'TYPE'])")(jsonValueBuilder("valueNative")),
+      scalar("json_query", "_FUNC_(json, path)")(args => {
         require(args.size == 2, s"json_query takes 2 arguments, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           JsonWalk.getClass, StringType, "query",
           Seq(JsonInputText(args(0)), Cast(args(1), StringType)),
           Seq(StringType, StringType), propagateNull = false)
       }),
-      "json_keys" -> ((args: Seq[Expression]) => {
+      scalar("json_keys", "_FUNC_(json, path)")(args => {
         require(args.size == 2, s"json_keys takes 2 arguments, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
           JsonWalk.getClass,
@@ -1203,7 +1168,7 @@ object DruidFunctions {
       // JsonMergeExprMacro (NestedDataExpressions.java:105-170): variadic
       // recursive object merge, later args win, any NULL arg → NULL; folds
       // pairwise (later-wins merging is associative), codegen'd StaticInvoke
-      "json_merge" -> ((args: Seq[Expression]) => {
+      scalar("json_merge", "_FUNC_(json, json...)")(args => {
         require(args.size >= 2,
           s"json_merge must have at least two arguments, got ${args.size}")
         args.map(a => Cast(a, StringType): Expression).reduceLeft { (l, r) =>
@@ -1216,7 +1181,7 @@ object DruidFunctions {
       // walker grammar as json_query (quoted fields, negative indexes, loud
       // slice/union rejection); array → elements, scalar/object → 1-element
       // wrap (ExprEval.asArray), missing → NULL
-      "json_query_array" -> ((args: Seq[Expression]) => {
+      scalar("json_query_array", "_FUNC_(json, path)")(args => {
         require(args.size == 2,
           s"json_query_array takes 2 arguments, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
@@ -1231,7 +1196,7 @@ object DruidFunctions {
       // SubstringDimExtractionFn, not SQL SUBSTRING"); the SQL layer's
       // 1-based SUBSTRING keeps Spark's builtin, so the native facade
       // rewrites to this name (NativeJsonQuery.rewriteNativeExpr)
-      "druid_substring" -> ((args: Seq[Expression]) => {
+      scalar("druid_substring", "_FUNC_(str, index, length)")(args => {
         require(args.size == 3,
           s"substring takes 3 arguments, got ${args.size}")
         import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
@@ -1259,7 +1224,7 @@ object DruidFunctions {
       // 0-based, -1 when absent, optional fromIndex (Java clamps negatives
       // to 0, and an empty needle past the string end answers the string
       // LENGTH, not the fromIndex — hence the Least)
-      "druid_strpos" -> ((args: Seq[Expression]) => {
+      scalar("druid_strpos", "_FUNC_(haystack, needle[, fromIndex])")(args => {
         require(args.size == 2 || args.size == 3,
           s"strpos takes 2 or 3 arguments, got ${args.size}")
         import org.apache.spark.sql.catalyst.expressions.{EqualTo, Greatest, If, Least, Length, StringInstr, Subtract, Substring}
@@ -1284,13 +1249,13 @@ object DruidFunctions {
       // TruncateOperatorConversion) — Spark's own `trunc` is DATE
       // truncation, so both names are overridden here: truncate toward
       // zero at d digits
-      "truncate" -> ((args: Seq[Expression]) => truncateToward0(args)),
-      "trunc" -> ((args: Seq[Expression]) => truncateToward0(args)),
+      scalar("truncate", "_FUNC_(x[, digits])")(truncateToward0),
+      scalar("trunc", "_FUNC_(x[, digits])")(truncateToward0),
       // Function.java Cot:1208 computes Math.cos(x)/Math.sin(x); Spark's
       // builtin is 1/tan(x) — same poles, ulp-level different values, so
       // override with the reference's exact formula (raw IEEE division:
       // cot(0) = Infinity, not an ANSI divide-by-zero error)
-      "cot" -> ((args: Seq[Expression]) => {
+      scalar("cot", "_FUNC_(x)")(args => {
         require(args.size == 1, s"cot takes 1 argument, got ${args.size}")
         import org.apache.spark.sql.catalyst.expressions.{Cos, Sin}
         val x = Cast(args(0), org.apache.spark.sql.types.DoubleType)
@@ -1299,7 +1264,7 @@ object DruidFunctions {
       // Function.java LeftFunc/RightFunc:2934,2960 — a NEGATIVE length is a
       // loud validation error (Spark's builtins return ''), n past the
       // string length returns the whole string
-      "left" -> ((args: Seq[Expression]) => {
+      scalar("left", "_FUNC_(str, n)")(args => {
         require(args.size == 2, s"left takes 2 arguments, got ${args.size}")
         import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
         import org.apache.spark.sql.catalyst.expressions.Substring
@@ -1313,7 +1278,7 @@ object DruidFunctions {
             StringType)), isDistinct = false),
           Substring(s, Literal(1), n))
       }),
-      "right" -> ((args: Seq[Expression]) => {
+      scalar("right", "_FUNC_(str, n)")(args => {
         require(args.size == 2, s"right takes 2 arguments, got ${args.size}")
         import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
         import org.apache.spark.sql.catalyst.expressions.{CaseWhen, EqualTo, Substring, UnaryMinus}
@@ -1333,14 +1298,14 @@ object DruidFunctions {
       // Function.java Round:1489 + safeGetFromDouble:1563: NaN rounds to
       // 0.0 and ±Infinity clamps to ±Double.MaxValue BEFORE rounding —
       // Spark's builtin propagates non-finite values, so override by name
-      "round" -> ((args: Seq[Expression]) => {
+      scalar("round", "_FUNC_(x[, scale])")(args => {
         require(args.size == 1 || args.size == 2,
           s"round takes 1 or 2 arguments, got ${args.size}")
         val scale = if (args.size > 1) args(1) else Literal(0)
         DruidRound(args(0), scale)
       }),
       // Function.java RepeatFunc:3110: count < 1 → NULL (Spark: '')
-      "repeat" -> ((args: Seq[Expression]) => {
+      scalar("repeat", "_FUNC_(str, n)")(args => {
         require(args.size == 2, s"repeat takes 2 arguments, got ${args.size}")
         If(
           LessThan(Cast(args(1),
@@ -1357,41 +1322,41 @@ object DruidFunctions {
       // len < 0 → '' (StringUtils.lpad:654), empty pad leaves the base
       // untouched when padding is needed; otherwise pad/truncate to len.
       // Spark's builtins return '' for len == 0, so override by name.
-      "lpad" -> ((args: Seq[Expression]) => {
+      scalar("lpad", "_FUNC_(str, len[, pad])")(args => {
         require(args.size == 2 || args.size == 3,
           s"lpad takes 2 or 3 arguments, got ${args.size}")
         padEdge(args, left = true)
       }),
-      "rpad" -> ((args: Seq[Expression]) => {
+      scalar("rpad", "_FUNC_(str, len[, pad])")(args => {
         require(args.size == 2 || args.size == 3,
           s"rpad takes 2 or 3 arguments, got ${args.size}")
         padEdge(args, left = false)
       }),
       // Function.java SafeDivide:1218 — zero-divisor absorbing division,
       // long path for integral inputs, double path otherwise
-      "safe_divide" -> ((args: Seq[Expression]) => {
+      scalar("safe_divide", "_FUNC_(x, y)")(args => {
         require(args.size == 2, s"safe_divide takes 2 arguments, got ${args.size}")
         SafeDivide(args(0), args(1))
       }),
       // Druid SQL NVL (sql/.../builtin/NvlOperatorConversion): 2-arg coalesce
-      "nvl" -> ((args: Seq[Expression]) => {
+      scalar("nvl", "_FUNC_(expr, ifNull)")(args => {
         require(args.size == 2, s"nvl takes 2 arguments, got ${args.size}")
         org.apache.spark.sql.catalyst.expressions.Coalesce(args)
       }),
       // Function.java SizeFormatFunc:4690 family (precision defaults to 2)
-      "human_readable_binary_byte_format" -> ((args: Seq[Expression]) => {
+      scalar("human_readable_binary_byte_format", "_FUNC_(x[, precision])")(args => {
         require(args.size == 1 || args.size == 2,
           s"human_readable_binary_byte_format takes 1 or 2 args, got ${args.size}")
         HumanReadableFormatExpr(args(0),
           args.lift(1).getOrElse(Literal(2)), HumanReadableFormat.BinaryByte)
       }),
-      "human_readable_decimal_byte_format" -> ((args: Seq[Expression]) => {
+      scalar("human_readable_decimal_byte_format", "_FUNC_(x[, precision])")(args => {
         require(args.size == 1 || args.size == 2,
           s"human_readable_decimal_byte_format takes 1 or 2 args, got ${args.size}")
         HumanReadableFormatExpr(args(0),
           args.lift(1).getOrElse(Literal(2)), HumanReadableFormat.DecimalByte)
       }),
-      "human_readable_decimal_format" -> ((args: Seq[Expression]) => {
+      scalar("human_readable_decimal_format", "_FUNC_(x[, precision])")(args => {
         require(args.size == 1 || args.size == 2,
           s"human_readable_decimal_format takes 1 or 2 args, got ${args.size}")
         HumanReadableFormatExpr(args(0),
@@ -1399,13 +1364,13 @@ object DruidFunctions {
       }),
       // Function.java Div:1250 — long path divides as longs; double path
       // divides FIRST, then truncates the quotient: (long)(x / y)
-      "div" -> ((args: Seq[Expression]) => {
+      scalar("div", "_FUNC_(x, y)")(args => {
         require(args.size == 2, s"div takes 2 arguments, got ${args.size}")
         DruidDiv(args(0), args(1))
       }),
       // reference native-expression case forms (math/expr/Function.java
       // CaseSearchedFunc / CaseSimpleFunc): variadic, so Catalyst builders
-      "case_searched" -> ((args: Seq[Expression]) => {
+      scalar("case_searched", "_FUNC_(cond, value[, cond, value...][, else])")(args => {
         require(args.size >= 2, "case_searched(cond, v[, cond2, v2…][, else])")
         val (pairs, other) =
           if (args.size % 2 == 0) (args, None)
@@ -1418,7 +1383,8 @@ object DruidFunctions {
               Seq(DruidTruth(c), Literal(false))): Expression, v)
           }.toSeq, other)
       }),
-      "case_simple" -> ((args: Seq[Expression]) => {
+      scalar("case_simple",
+        "_FUNC_(expr, match, value[, match, value...][, else])")(args => {
         require(args.size >= 3, "case_simple(expr, match, v[, …][, else])")
         val scrut = args.head
         val rest = args.tail
@@ -1430,7 +1396,7 @@ object DruidFunctions {
             (org.apache.spark.sql.catalyst.expressions.EqualTo(scrut, m), v)
           }.toSeq, other)
       }),
-      "notnull" -> ((args: Seq[Expression]) => {
+      scalar("notnull", "_FUNC_(expr)")(args => {
         require(args.size == 1, "notnull(expr)")
         org.apache.spark.sql.catalyst.expressions.IsNotNull(args.head)
       }),
@@ -1439,25 +1405,25 @@ object DruidFunctions {
       // IsNotFalseFunc:2435): never-null predicates over the native
       // truthiness rule (Evals.asBoolean — numerics true iff > 0, strings
       // via parseBoolean); a NULL value is not-true and not-false
-      "istrue" -> ((args: Seq[Expression]) => {
+      scalar("istrue", "_FUNC_(expr)")(args => {
         require(args.size == 1, "istrue(expr)")
         import org.apache.spark.sql.catalyst.expressions.{And, Coalesce, IsNotNull}
         And(IsNotNull(args.head),
           Coalesce(Seq(DruidTruth(args.head), Literal(false))))
       }),
-      "isfalse" -> ((args: Seq[Expression]) => {
+      scalar("isfalse", "_FUNC_(expr)")(args => {
         require(args.size == 1, "isfalse(expr)")
         import org.apache.spark.sql.catalyst.expressions.{And, Coalesce, IsNotNull, Not}
         And(IsNotNull(args.head),
           Not(Coalesce(Seq(DruidTruth(args.head), Literal(false)))))
       }),
-      "nottrue" -> ((args: Seq[Expression]) => {
+      scalar("nottrue", "_FUNC_(expr)")(args => {
         require(args.size == 1, "nottrue(expr)")
         import org.apache.spark.sql.catalyst.expressions.{And, Coalesce, IsNotNull, Not}
         Not(And(IsNotNull(args.head),
           Coalesce(Seq(DruidTruth(args.head), Literal(false)))))
       }),
-      "notfalse" -> ((args: Seq[Expression]) => {
+      scalar("notfalse", "_FUNC_(expr)")(args => {
         require(args.size == 1, "notfalse(expr)")
         import org.apache.spark.sql.catalyst.expressions.{And, Coalesce, IsNotNull, Not}
         Not(And(IsNotNull(args.head),
@@ -1466,11 +1432,11 @@ object DruidFunctions {
       // reference IS [NOT] DISTINCT FROM (Function.java
       // IsNotDistinctFromFunc:2348 / IsDistinctFromFunc:2416): null-safe
       // equality that treats NULL as a value — never returns null
-      "notdistinctfrom" -> ((args: Seq[Expression]) => {
+      scalar("notdistinctfrom", "_FUNC_(x, y)")(args => {
         require(args.size == 2, "notdistinctfrom(x, y)")
         org.apache.spark.sql.catalyst.expressions.EqualNullSafe(args(0), args(1))
       }),
-      "isdistinctfrom" -> ((args: Seq[Expression]) => {
+      scalar("isdistinctfrom", "_FUNC_(x, y)")(args => {
         require(args.size == 2, "isdistinctfrom(x, y)")
         org.apache.spark.sql.catalyst.expressions.Not(
           org.apache.spark.sql.catalyst.expressions.EqualNullSafe(args(0), args(1)))
@@ -1480,7 +1446,7 @@ object DruidFunctions {
       // or non-positive numeric condition selects the ELSE branch. The
       // native rewriter reroutes `if(` here so Spark's own IF (nonzero =
       // true) keeps its SQL semantics elsewhere.
-      "druid_if" -> ((args: Seq[Expression]) => {
+      scalar("druid_if", "_FUNC_(cond, then, else)")(args => {
         require(args.size == 3, s"if(cond, then, else), got ${args.size} args")
         import org.apache.spark.sql.catalyst.expressions.{Coalesce, If}
         If(Coalesce(Seq(DruidTruth(args(0)), Literal(false))),
@@ -1490,7 +1456,7 @@ object DruidFunctions {
       // epoch MILLIS as LONG (math/expr/Function.java
       // TimestampFromEpochFunc:3189 — ISO parse without a format; errors on
       // unparseable input, unlike TIME_PARSE's NULL contract)
-      "timestamp" -> ((args: Seq[Expression]) => {
+      scalar("timestamp", "_FUNC_(str[, format])")(args => {
         import org.apache.spark.sql.catalyst.expressions.{GetTimestamp, IntegralDivide, UnixMicros}
         import org.apache.spark.sql.types.TimestampType
         import org.apache.spark.unsafe.types.UTF8String
@@ -1513,7 +1479,7 @@ object DruidFunctions {
       // division). The native rewriter reroutes here so Spark's own
       // unix_timestamp (different default format, NULL on parse failure)
       // keeps its SQL semantics elsewhere.
-      "druid_unix_timestamp" -> ((args: Seq[Expression]) => {
+      scalar("druid_unix_timestamp", "_FUNC_(str[, format])")(args => {
         import org.apache.spark.sql.catalyst.expressions.{GetTimestamp, IntegralDivide}
         import org.apache.spark.sql.types.TimestampType
         import org.apache.spark.unsafe.types.UTF8String
@@ -1535,7 +1501,7 @@ object DruidFunctions {
       // (Function.java SubMonthFunc:3259 / DateTimes.subMonths:176 —
       // monthsBetween truncates toward zero, with clamped month addition:
       // Jan 31 + 1 month lands on Feb's last day)
-      "subtract_months" -> ((args: Seq[Expression]) => {
+      scalar("subtract_months", "_FUNC_(leftMillis, rightMillis[, timezone])")(args => {
         import org.apache.spark.sql.catalyst.expressions.{Add, CaseWhen, FromUTCTimestamp, GreaterThan, GreaterThanOrEqual, LessThan, MakeYMInterval, Month, Multiply, Subtract, TimestampAddYMInterval, UnaryMinus, Year}
         import org.apache.spark.unsafe.types.UTF8String
         require(args.size == 2 || args.size == 3,
@@ -1585,7 +1551,7 @@ object DruidFunctions {
       }),
       // SQL TIME_FLOOR with the full reference arity (period/origin/tz);
       // replaces the old 2-arg SQL macro — same semantics for 2 args
-      "time_floor" -> ((args: Seq[Expression]) => timeFloorBuilder(args)),
+      scalar("time_floor", "_FUNC_(ts, period[, origin[, timezone]])")(timeFloorBuilder),
       // DateTruncOperatorConversion: DATE_TRUNC(unit, ts) compiles to
       // timestamp_floor over TRUNC_PERIOD_MAP — decade/century/millennium
       // are P10Y/P100Y/P1000Y with the DEFAULT 1970 origin (so
@@ -1593,7 +1559,7 @@ object DruidFunctions {
       // micro/milliseconds both truncate to millis; Spark's builtin NULLs
       // the units it doesn't know, so shadow the extended ones and pass the
       // rest through
-      "date_trunc" -> ((args: Seq[Expression]) => {
+      scalar("date_trunc", "_FUNC_(unit, ts)")(args => {
         require(args.size == 2,
           s"date_trunc takes 2 arguments, got ${args.size}")
         val unit = args.head match {
@@ -1616,15 +1582,17 @@ object DruidFunctions {
               args.head, args(1))
         }
       }),
-      "timestamp_floor" -> ((args: Seq[Expression]) => timeFloorBuilder(args)),
-      "time_ceil" -> ((args: Seq[Expression]) => timeCeilBuilder(args)),
-      "timestamp_ceil" -> ((args: Seq[Expression]) => timeCeilBuilder(args)),
+      scalar("timestamp_floor",
+        "_FUNC_(ts, period[, origin[, timezone]])")(timeFloorBuilder),
+      scalar("time_ceil", "_FUNC_(ts, period[, origin[, timezone]])")(timeCeilBuilder),
+      scalar("timestamp_ceil",
+        "_FUNC_(ts, period[, origin[, timezone]])")(timeCeilBuilder),
       // TimeInIntervalConvertletFactory: [start, end) membership where the
       // LITERAL interval may be 'start/end', 'start/period', or
       // 'period/end' (Joda Interval.parse) — the period-relative endpoint
       // resolves at build time (calendar months via UTC plusMonths, fixed
       // periods via exact micros)
-      "time_in_interval" -> ((args: Seq[Expression]) => {
+      scalar("time_in_interval", "_FUNC_(ts, 'start/end')")(args => {
         require(args.size == 2,
           s"TIME_IN_INTERVAL(t, interval), got ${args.size} args")
         import org.apache.spark.sql.types.TimestampType
@@ -1658,19 +1626,19 @@ object DruidFunctions {
           org.apache.spark.sql.catalyst.expressions.LessThan(t,
             Literal(endUs, TimestampType)))
       }),
-      "time_shift" -> ((args: Seq[Expression]) => timeShiftBuilder(args)),
-      "timestamp_shift" -> ((args: Seq[Expression]) => timeShiftBuilder(args)),
-      "time_extract" -> ((args: Seq[Expression]) => timeExtractBuilder(args)),
-      "timestamp_extract" -> ((args: Seq[Expression]) => timeExtractBuilder(args)),
-      "time_format" -> ((args: Seq[Expression]) => timeFormatBuilder(args)),
-      "time_parse" -> ((args: Seq[Expression]) => timeParseBuilder(args)),
+      scalar("time_shift", "_FUNC_(ts, period, n[, timezone])")(timeShiftBuilder),
+      scalar("timestamp_shift", "_FUNC_(ts, period, n[, timezone])")(timeShiftBuilder),
+      scalar("time_extract", "_FUNC_(ts, unit[, timezone])")(timeExtractBuilder),
+      scalar("timestamp_extract", "_FUNC_(ts, unit[, timezone])")(timeExtractBuilder),
+      scalar("time_format", "_FUNC_(ts[, pattern[, timezone]])")(timeFormatBuilder),
+      scalar("time_parse", "_FUNC_(str[, pattern[, timezone]])")(timeParseBuilder),
       // reference IPv6AddressMatchExprMacro — subnet must be a CIDR literal
-      "ipv6_match" -> ((args: Seq[Expression]) => args match {
+      scalar("ipv6_match", "_FUNC_(ip, 'prefix/length')")(args => args match {
         case Seq(ip, Literal(s: org.apache.spark.unsafe.types.UTF8String, _)) =>
           graft.functions.Ipv6Match(ip, s.toString)
         case _ => throw new IllegalArgumentException(
           "IPV6_MATCH(ip, 'subnet/prefix') needs a literal subnet")
-      })) ++ arrayBuilders
+      })) ++ arrayBuilders ++ sqlMacros.map(_.function)
   }
 
   /** Polymorphic ARRAY_* surface (reference `math/expr/Function.java` array
@@ -1689,9 +1657,7 @@ object DruidFunctions {
     * prints null elements as `'null'`; APPEND/PREPEND/CONCAT coerce to the
     * wider element type (`array_append(a_str, 9)` → `[..., '9']`).
     */
-  private def arrayBuilders: Seq[(String,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = {
+  private def arrayBuilders: Seq[EngineFunction] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType}
@@ -1787,19 +1753,19 @@ object DruidFunctions {
       // size() returns -1 under the legacy conf when ANSI is off)
       // MvInput: a scalar is a 1-element array (ArrayLengthFunction rides
       // asArray(), so array_length('x') = 1 and array_length(NULL) = NULL)
-      "array_length" -> ((a: Seq[Expression]) =>
+      scalar("array_length", "_FUNC_(arr)")(a =>
         Cast(Size(graft.functions.MvInput(a.head), legacySizeOfNull = false),
           IntegerType)),
-      "mv_length" -> ((a: Seq[Expression]) =>
+      scalar("mv_length", "_FUNC_(mv)")(a =>
         Cast(Size(graft.functions.MvInput(a.head), legacySizeOfNull = false),
           IntegerType)),
       // ARRAY_* functions take the same scalar-is-a-1-element-MV coercion
       // as the MV_* family (Function.java asArray over a VARCHAR scalar;
       // qaUnnest mv_sql_array_funcs: array_offset(c, 0) over the unnested
       // scalar c returns c itself) — MvInput passes real arrays through
-      "array_offset" -> ((a: Seq[Expression]) =>
+      scalar("array_offset", "_FUNC_(arr, offset)")(a =>
         fn("get", graft.functions.MvInput(a.head), Cast(a(1), IntegerType))),
-      "array_ordinal" -> ((a: Seq[Expression]) =>
+      scalar("array_ordinal", "_FUNC_(arr, ordinal)")(a =>
         fn("get", graft.functions.MvInput(a.head),
           Subtract(Cast(a(1), IntegerType), Literal(1)))),
       // Objects.equals scan (Function.java:3733) — a NULL needle FINDS a
@@ -1807,13 +1773,13 @@ object DruidFunctions {
       // never matches a STRING or DOUBLE element; DruidTypedEquals), so
       // probe over a boolean transform instead of array_position's
       // null-blind, type-coercing contract; not-found stays NULL
-      "array_offset_of" -> ((a: Seq[Expression]) =>
+      scalar("array_offset_of", "_FUNC_(arr, value)")(a =>
         Cast(Subtract(fn("nullif",
           fn("array_position", fn("transform", graft.functions.MvInput(a.head),
             lam(x => graft.functions.DruidTypedEquals(x, a(1)))),
             Literal(true)),
           Literal(0L)), Literal(1L)), IntegerType)),
-      "array_ordinal_of" -> ((a: Seq[Expression]) =>
+      scalar("array_ordinal_of", "_FUNC_(arr, value)")(a =>
         Cast(fn("nullif",
           fn("array_position", fn("transform", graft.functions.MvInput(a.head),
             lam(x => graft.functions.DruidTypedEquals(x, a(1)))),
@@ -1823,25 +1789,25 @@ object DruidFunctions {
       // UNCAST so strict typing applies (the old `v STRING` SQL macros
       // silently stringified numeric needles: mv_offset_of(a_mixed, 1)
       // must be NULL, not 1 — ops_funcs_mv_funcs A1_B8_C19_D1)
-      "mv_offset_of" -> ((a: Seq[Expression]) =>
+      scalar("mv_offset_of", "_FUNC_(mv, value)")(a =>
         fn("array_offset_of", graft.functions.MvInput(a.head), a(1))),
-      "mv_ordinal_of" -> ((a: Seq[Expression]) =>
+      scalar("mv_ordinal_of", "_FUNC_(mv, value)")(a =>
         fn("array_ordinal_of", graft.functions.MvInput(a.head), a(1))),
       // MV_* functions render VARCHAR regardless of the MV's element type
       // (MultiValueStringOperatorConversions Offset/Ordinal return
       // VARCHAR; over a typed ARRAY<BIGINT> MV, mv_offset(a, 0) is '1'
       // not 1 — q_qa_mv_typed_arrays) — TimeAsMillis keeps the
       // datetime-as-epoch-millis convention of the expr layer
-      "mv_offset" -> ((a: Seq[Expression]) =>
+      scalar("mv_offset", "_FUNC_(mv, offset)")(a =>
         Cast(graft.functions.TimeAsMillis(
           fn("get", graft.functions.MvInput(a.head), Cast(a(1), IntegerType))),
           StringType)),
-      "mv_ordinal" -> ((a: Seq[Expression]) =>
+      scalar("mv_ordinal", "_FUNC_(mv, ordinal)")(a =>
         Cast(graft.functions.TimeAsMillis(
           fn("get", graft.functions.MvInput(a.head),
             Subtract(Cast(a(1), IntegerType), Literal(1)))),
           StringType)),
-      "mv_concat" -> ((a: Seq[Expression]) =>
+      scalar("mv_concat", "_FUNC_(mv, mv)")(a =>
         fn("concat", graft.functions.MvInput(a.head),
           graft.functions.MvInput(a(1)))),
       // same Function.java ArrayContains as ARRAY_CONTAINS (lhs-typed
@@ -1852,11 +1818,11 @@ object DruidFunctions {
       // …and a NULL MV ARRAY is FALSE, not the ARRAY_CONTAINS NULL
       // (ops_funcs_mv_funcs A1_B6_C23: mv_contains over a NULL
       // RETURNING-array = false while the direct select of it is NULL)
-      "mv_contains" -> ((a: Seq[Expression]) =>
+      scalar("mv_contains", "_FUNC_(mv, value)")(a =>
         fn("coalesce", graft.functions.GraftArrayContains(
           graft.functions.MvInput(a.head, nullAsSingleNull = true), a(1)),
           Literal(false))),
-      "mv_overlap" -> ((a: Seq[Expression]) =>
+      scalar("mv_overlap", "_FUNC_(mv, mv)")(a =>
         graft.functions.GraftArrayOverlap(
           graft.functions.MvInput(a.head, nullAsSingleNull = true),
           graft.functions.MvInput(a(1), nullAsSingleNull = true),
@@ -1864,47 +1830,47 @@ object DruidFunctions {
       // MvInput on BOTH slots: over scalars, a bare concat would resolve
       // as STRING concatenation ('' || '' = '' where the reference returns
       // the 2-element MV ['','']; qaUnnest mv_sql_array_funcs A1_B11)
-      "array_concat" -> ((a: Seq[Expression]) =>
+      scalar("array_concat", "_FUNC_(arr, arr)")(a =>
         fn("concat", graft.functions.MvInput(a.head),
           graft.functions.MvInput(a(1)))),
       // ArraySetAddFunction:3988 — TreeSet with the nullable comparator:
       // distinct, SORTED with nulls FIRST (sort_array asc is exactly
       // nulls-first); a NULL element genuinely joins the set
-      "array_set_add" -> ((a: Seq[Expression]) =>
+      scalar("array_set_add", "_FUNC_(arr, value)")(a =>
         fn("sort_array", fn("array_distinct",
           graft.functions.GraftArrayAppend(a.head, a(1), prepend = false)),
           Literal(true))),
       // ArraySetAddAllFunction:4006 via ArraysMergeFunction:595 — lhs NULL
       // → NULL, rhs NULL → the LHS VERBATIM (not set-ified, the reference
       // returns lhsExpr untouched), else sorted nulls-first distinct union
-      "array_set_add_all" -> ((a: Seq[Expression]) =>
+      scalar("array_set_add_all", "_FUNC_(arr, arr)")(a =>
         If(IsNull(a(1)), a.head,
           fn("sort_array", fn("array_distinct", fn("concat", a.head, a(1))),
             Literal(true)))),
-      "array_append" -> ((a: Seq[Expression]) =>
+      scalar("array_append", "_FUNC_(arr, value)")(a =>
         graft.functions.GraftArrayAppend(a.head, a(1), prepend = false)),
       // reference arg order: ARRAY_PREPEND(expr, arr)
-      "array_prepend" -> ((a: Seq[Expression]) =>
+      scalar("array_prepend", "_FUNC_(value, arr)")(a =>
         graft.functions.GraftArrayAppend(a(1), a.head, prepend = true)),
       // MV_* add-element forms: the same lhs-typed append (Function.java
       // ArrayAddElementFunction:542 via MultiValueStringOperatorConversions)
       // rendered as a VARCHAR MV — qaArray ops_funcs_mv_funcs:
       // mv_append(ARRAY<LONG>, 'A') → ["1","0",null,null]
-      "mv_append" -> ((a: Seq[Expression]) =>
+      scalar("mv_append", "_FUNC_(mv, value)")(a =>
         Cast(graft.functions.GraftArrayAppend(
           graft.functions.MvInput(a.head), a(1), prepend = false),
           org.apache.spark.sql.types.ArrayType(StringType))),
-      "mv_prepend" -> ((a: Seq[Expression]) =>
+      scalar("mv_prepend", "_FUNC_(value, mv)")(a =>
         Cast(graft.functions.GraftArrayAppend(
           graft.functions.MvInput(a(1)), a.head, prepend = true),
           org.apache.spark.sql.types.ArrayType(StringType))),
-      "mv_to_array" -> ((a: Seq[Expression]) =>
+      scalar("mv_to_array", "_FUNC_(mv)")(a =>
         graft.functions.MvInput(a.head)),
-      "array_to_mv" -> ((a: Seq[Expression]) => a.head),
+      scalar("array_to_mv", "_FUNC_(arr)")(a => a.head),
       // UNNEST input: a null MVD row unnests to a null-element row (the
       // MVD selector convention); TRUE arrays pass through — the facade's
       // unnest rewrite wraps every operand with this
-      "mv_unnest_input" -> ((a: Seq[Expression]) =>
+      scalar("mv_unnest_input", "_FUNC_(mv)")(a =>
         graft.functions.MvUnnestInput(a.head)),
       // MV_FILTER_ONLY/NONE ride the scalar-MV coercion too (the qaUnnest
       // corpus filters the unnested scalar c); the VARCHAR-MV space is the
@@ -1916,7 +1882,7 @@ object DruidFunctions {
       // has no empty MV (ListFilteredVirtualColumn yields the null row
       // value; CalciteJoinQueryTest joins ON MV_FILTER_ONLY(…) match only
       // where something survived, never []-to-[])
-      "mv_filter_only" -> ((a: Seq[Expression]) => {
+      scalar("mv_filter_only", "_FUNC_(mv, values)")(a => {
         val res = fn("filter",
           Cast(graft.functions.MvInput(a.head), ArrayType(StringType)),
           lam(x => fn("array_contains",
@@ -1924,7 +1890,7 @@ object DruidFunctions {
         If(EqualTo(Size(res), Literal(0)),
           Literal.create(null, ArrayType(StringType)), res)
       }),
-      "mv_filter_none" -> ((a: Seq[Expression]) => {
+      scalar("mv_filter_none", "_FUNC_(mv, values)")(a => {
         val res = fn("filter",
           Cast(graft.functions.MvInput(a.head), ArrayType(StringType)),
           lam(x => org.apache.spark.sql.catalyst.expressions.Not(
@@ -1938,7 +1904,7 @@ object DruidFunctions {
       // the null row value, never [] (CalciteMultiValueStringQueryTest
       // testMultiValueRegexFilter groups merge the no-match rows with the
       // null rows)
-      "mv_filter_prefix" -> ((a: Seq[Expression]) => {
+      scalar("mv_filter_prefix", "_FUNC_(mv, prefix)")(a => {
         val res = fn("filter",
           Cast(graft.functions.MvInput(a.head), ArrayType(StringType)),
           lam(x => fn("coalesce",
@@ -1946,7 +1912,7 @@ object DruidFunctions {
         If(EqualTo(Size(res), Literal(0)),
           Literal.create(null, ArrayType(StringType)), res)
       }),
-      "mv_filter_regex" -> ((a: Seq[Expression]) => {
+      scalar("mv_filter_regex", "_FUNC_(mv, pattern)")(a => {
         val res = fn("filter",
           Cast(graft.functions.MvInput(a.head), ArrayType(StringType)),
           lam(x => fn("coalesce",
@@ -1961,7 +1927,7 @@ object DruidFunctions {
       // bound rides through 0*size(arr) so a NULL array nulls the whole
       // result instead of yielding [null, null]; the NullType literal in
       // the guard branch coerces to the array type at analysis.
-      "array_slice" -> ((a: Seq[Expression]) => {
+      scalar("array_slice", "_FUNC_(arr, start[, end])")(a => {
         require(a.size == 2 || a.size == 3,
           s"array_slice takes 2 or 3 arguments, got ${a.size}")
         val arr = graft.functions.MvInput(a.head)
@@ -1988,22 +1954,22 @@ object DruidFunctions {
       // reference (null-padding past the end, [null, null] from an empty
       // array; ops_funcs_mv_funcs A1_B13_C16) — a plain slice() macro
       // would drop the padding
-      "mv_slice" -> ((a: Seq[Expression]) => {
+      scalar("mv_slice", "_FUNC_(mv, start[, end])")(a => {
         require(a.size == 2 || a.size == 3,
           s"mv_slice takes 2 or 3 arguments, got ${a.size}")
         fn("array_slice",
           (graft.functions.MvInput(a.head) +: a.tail): _*)
       }),
-      "array_to_string" -> ((a: Seq[Expression]) =>
+      scalar("array_to_string", "_FUNC_(arr, separator)")(a =>
         arrayToString(graft.functions.MvInput(a.head) +: a.tail)),
-      "mv_to_string" -> ((a: Seq[Expression]) =>
+      scalar("mv_to_string", "_FUNC_(mv, separator)")(a =>
         arrayToString(graft.functions.MvInput(a.head) +: a.tail)),
       // APPROX_COUNT_DISTINCT over a MULTI-VALUE dimension counts
       // distinct ELEMENTS with nulls skipped (the reference's cardinality
       // aggregator — CalciteQueryTest testApproxCountDistinct:
       // ACD(SUBSTRING(dim2,1,1)) = 1); scalar/true-array args keep
       // Spark's native HyperLogLogPlusPlus
-      "approx_count_distinct" -> ((a: Seq[Expression]) => {
+      aggregator("approx_count_distinct", "_FUNC_(expr)")(a => {
         val mv = a.head.dataType.isInstanceOf[
           org.apache.spark.sql.types.ArrayType] &&
           graft.functions.CompatCompare.treeHasMvTag(a.head)
@@ -2016,21 +1982,21 @@ object DruidFunctions {
       }),
       // Java String.split limit-0 (drops trailing empties) — a SQL macro on
       // Spark's split keeps them; see StringSplitUtil
-      "string_to_array" -> ((a: Seq[Expression]) => javaSplitExpr(a)),
-      "string_to_mv" -> ((a: Seq[Expression]) => javaSplitExpr(a)),
+      scalar("string_to_array", "_FUNC_(str, delimiter)")(javaSplitExpr),
+      scalar("string_to_mv", "_FUNC_(str, delimiter)")(javaSplitExpr),
       // lhs-typed rhs cast + null-rhs-is-false + null elements as set
       // members (Function.java ArrayOverlapFunction:4182)
-      "array_overlap" -> ((a: Seq[Expression]) =>
+      scalar("array_overlap", "_FUNC_(arr, arr)")(a =>
         graft.functions.GraftArrayOverlap(a.head, a(1),
           threeValued = false)),
-      "array_contains" -> ((a: Seq[Expression]) =>
+      scalar("array_contains", "_FUNC_(arr, value)")(a =>
         graft.functions.GraftArrayContains(a.head, a(1))),
       // SCALAR_IN_ARRAY(x, arr): an MVD first argument reads as its
       // SCALAR (1-element unwrap, multi → NULL — the reference's scalar
       // slot convention), and membership is three-valued: a NULL probe
       // is NULL, so NOT SCALAR_IN_ARRAY drops null-MVD rows
       // (CalciteArraysQueryTest testNotScalarInArrayFilter)
-      "scalar_in_array" -> ((a: Seq[Expression]) => {
+      scalar("scalar_in_array", "_FUNC_(expr, arr)")(a => {
         val probe = graft.functions.MvScalarRead(a.head)
         If(IsNull(probe),
           Literal.create(null, org.apache.spark.sql.types.BooleanType),
@@ -2040,7 +2006,8 @@ object DruidFunctions {
       // reference's extra args are a buffer cap (validated, unenforced —
       // same contract as ARRAY_AGG's) and an MV-aggregation toggle;
       // Spark's AnyValue carries the value semantics
-      "any_value" -> ((a: Seq[Expression]) => {
+      aggregator("any_value",
+        "_FUNC_(expr[, maxBytes[, aggregateMultipleValues]])")(a => {
         require(a.size >= 1 && a.size <= 3,
           s"any_value takes 1 to 3 arguments, got ${a.size}")
         a.lift(1).foreach(requirePositiveSizeLiteral("any_value", _))
@@ -2066,8 +2033,8 @@ object DruidFunctions {
       // reference (multi-value-dimensions docs; CalciteJoinQueryTest
       // substring(dim2, 1, 1) over the MV dim2) — scalar inputs keep
       // Spark's builtin
-      "substring" -> ((a: Seq[Expression]) => mvElementwiseSubstring(a)),
-      "substr" -> ((a: Seq[Expression]) => mvElementwiseSubstring(a)),
+      scalar("substring", "_FUNC_(str, start[, length])")(mvElementwiseSubstring),
+      scalar("substr", "_FUNC_(str, start[, length])")(mvElementwiseSubstring),
       // Calcite's GREATEST/LEAST coerce every operand to the LEAST
       // RESTRICTIVE type — a VARCHAR among the args makes the whole
       // comparison a string comparison (qaUnnest
@@ -2075,16 +2042,16 @@ object DruidFunctions {
       // Spark's coercion for Least/Greatest refuses string↔numeric mixes.
       // Same-type and pure-numeric argument lists fall through untouched
       // (Spark's own widening + null-skipping already match the reference).
-      "least" -> ((a: Seq[Expression]) => {
-        val ts = a.map(_.dataType)
+      scalar("least", "_FUNC_(expr, ...)")(a => {
+        lazy val ts = a.map(_.dataType)
         if (a.forall(_.resolved) && ts.distinct.size > 1 &&
             ts.contains(StringType))
           Least(a.map(e =>
             if (e.dataType == StringType) e else Cast(e, StringType)))
         else Least(a)
       }),
-      "greatest" -> ((a: Seq[Expression]) => {
-        val ts = a.map(_.dataType)
+      scalar("greatest", "_FUNC_(expr, ...)")(a => {
+        lazy val ts = a.map(_.dataType)
         if (a.forall(_.resolved) && ts.distinct.size > 1 &&
             ts.contains(StringType))
           Greatest(a.map(e =>
@@ -2098,7 +2065,7 @@ object DruidFunctions {
       // accepted with the cap unenforced — a capacity rejection, never a
       // result-semantics difference. Returning the bare AggregateFunction
       // lets the analyzer apply DISTINCT and ORDER BY … WITHIN the call.
-      "array_agg" -> ((a: Seq[Expression]) => {
+      aggregator("array_agg", "_FUNC_(expr[, maxBytes])")(a => {
         require(a.size == 1 || a.size == 2,
           s"array_agg takes 1 or 2 arguments, got ${a.size}")
         a.lift(1).foreach(requirePositiveSizeLiteral("array_agg", _))
@@ -2107,14 +2074,14 @@ object DruidFunctions {
       // ARRAY_AGG over an MVD argument (renamed by the facade's dialect —
       // the flatten changes the result type, so the decision is made
       // before analysis): elements fold flattened, null rows → null
-      "array_agg_mv" -> ((a: Seq[Expression]) => {
+      aggregator("array_agg_mv", "_FUNC_(mv[, maxBytes])")(a => {
         require(a.size == 1 || a.size == 2,
           s"array_agg takes 1 or 2 arguments, got ${a.size}")
         a.lift(1).foreach(requirePositiveSizeLiteral("array_agg", _))
         graft.functions.DruidArrayAgg(graft.functions.FloatWiden(a.head),
           mvFlatten = true)
       }),
-      "string_agg" -> ((a: Seq[Expression]) => {
+      aggregator("string_agg", "_FUNC_(expr, separator[, maxBytes])")(a => {
         require(a.size == 2 || a.size == 3,
           s"string_agg takes 2 or 3 arguments, got ${a.size}")
         a.lift(2).foreach(requirePositiveSizeLiteral("string_agg", _))
@@ -2131,7 +2098,7 @@ object DruidFunctions {
       // TreeSet, so the output is the SORTED distinct set (CalciteQueryTest
       // testStringAgg); the facade routes the DISTINCT spelling here and
       // the aggregate dedups + sorts internally
-      "string_agg_sorted" -> ((a: Seq[Expression]) => {
+      aggregator("string_agg_sorted", "_FUNC_(expr, separator[, maxBytes])")(a => {
         require(a.size == 2 || a.size == 3,
           s"string_agg takes 2 or 3 arguments, got ${a.size}")
         a.lift(2).foreach(requirePositiveSizeLiteral("string_agg", _))
@@ -2155,16 +2122,16 @@ object DruidFunctions {
       // initialValue=0 quirk (BitwiseSqlAggregator.java:147 — 0 & x = 0
       // for every non-empty group); the engine keeps REAL bitwise-and
       // semantics, documented as a deliberate divergence in COVERAGE.md.
-      "bit_and" -> ((a: Seq[Expression]) =>
+      aggregator("bit_and", "_FUNC_(expr)")(a =>
         new org.apache.spark.sql.catalyst.expressions.aggregate.BitAndAgg(
           Cast(a.head, LongType, None, EvalMode.TRY))),
-      "bit_or" -> ((a: Seq[Expression]) =>
+      aggregator("bit_or", "_FUNC_(expr)")(a =>
         new org.apache.spark.sql.catalyst.expressions.aggregate.BitOrAgg(
           Cast(a.head, LongType, None, EvalMode.TRY))),
-      "bit_xor" -> ((a: Seq[Expression]) =>
+      aggregator("bit_xor", "_FUNC_(expr)")(a =>
         new org.apache.spark.sql.catalyst.expressions.aggregate.BitXorAgg(
           Cast(a.head, LongType, None, EvalMode.TRY))),
-      "array_concat_agg" -> ((a: Seq[Expression]) => {
+      aggregator("array_concat_agg", "_FUNC_(arr[, maxBytes])")(a => {
         require(a.size == 1 || a.size == 2,
           s"array_concat_agg takes 1 or 2 arguments, got ${a.size}")
         a.lift(1).foreach(requirePositiveSizeLiteral("array_concat_agg", _))
@@ -2178,7 +2145,7 @@ object DruidFunctions {
       // reference folds through array_set_add_all's TreeSet — distinct
       // ELEMENTS, sorted ascending with nulls first — and keeps the
       // NULL-for-all-NULL-groups rule
-      "array_concat_agg_distinct" -> ((a: Seq[Expression]) => {
+      aggregator("array_concat_agg_distinct", "_FUNC_(arr)")(a => {
         val cl = new org.apache.spark.sql.catalyst.expressions.aggregate
           .CollectList(a.head).toAggregateExpression()
         If(EqualTo(Size(cl), Literal(0)),
@@ -2199,19 +2166,19 @@ object DruidFunctions {
       // builtin would implicitly cast the numeric to string. Shadowed with
       // a resolved-type guard; string/unresolved inputs delegate to the
       // builtin ParseJson expression unchanged.
-      "parse_json" -> ((a: Seq[Expression]) => {
+      scalar("parse_json", "_FUNC_(str)")(a => {
         require(a.size == 1, s"parse_json takes 1 argument, got ${a.size}")
         rejectNonString("PARSE_JSON", a.head)
         new org.apache.spark.sql.catalyst.expressions.variant
           .ParseJson(a.head, true)
       }),
-      "try_parse_json" -> ((a: Seq[Expression]) => {
+      scalar("try_parse_json", "_FUNC_(str)")(a => {
         require(a.size == 1, s"try_parse_json takes 1 argument, got ${a.size}")
         rejectNonString("TRY_PARSE_JSON", a.head)
         new org.apache.spark.sql.catalyst.expressions.variant
           .ParseJson(a.head, false)
       }),
-      "to_json_string" -> ((a: Seq[Expression]) => {
+      scalar("to_json_string", "_FUNC_(expr)")(a => {
         require(a.size == 1, s"to_json_string takes 1 argument, got ${a.size}")
         a.head match {
           case Literal(null, StringType) => Literal.create(null, StringType)
@@ -2244,9 +2211,9 @@ object DruidFunctions {
       // All route through the same JsonWalk value() as the untyped form
       // (JsonValueCastExpr = find → bestEffort → castTo), so booleans cast
       // 1/0 to numerics and array targets see the walked compact text.
-      "json_value_bigint" -> ((a: Seq[Expression]) =>
+      scalar("json_value_bigint", "_FUNC_(json, path)")(a =>
         Cast(fn("json_value", a.head, a(1)), LongType, None, EvalMode.TRY)),
-      "json_value_double" -> ((a: Seq[Expression]) =>
+      scalar("json_value_double", "_FUNC_(json, path)")(a =>
         Cast(fn("json_value", a.head, a(1)),
           org.apache.spark.sql.types.DoubleType, None, EvalMode.TRY)),
       // RETURNING BOOLEAN plans as LONG + Calcite's truthiness cast in the
@@ -2254,7 +2221,7 @@ object DruidFunctions {
       // Evals.asBoolean is `> 0`), so a numeric target coerces — '2' is
       // TRUE, not a failed boolean parse
       // (testGroupByRootSingleTypeArrayLongElementFilteredBoolean)
-      "json_value_boolean" -> ((a: Seq[Expression]) => {
+      scalar("json_value_boolean", "_FUNC_(json, path)")(a => {
         val v = fn("json_value", a.head, a(1))
         Coalesce(Seq(
           Cast(v, BooleanType, None, EvalMode.TRY),
@@ -2268,16 +2235,16 @@ object DruidFunctions {
       // facade's bestEffort 1/0 (qaArray ingest_dynamic_rollup_false.02
       // E00 pins `a_mixed = json_value(… '$[6]' RETURNING varchar array)`
       // matching every row)
-      "json_value_varchar_array" -> ((a: Seq[Expression]) =>
+      scalar("json_value_varchar_array", "_FUNC_(json, path)")(a =>
         graft.functions.JsonWalkDispatch(a.head, a(1),
           "valueStrArrayTyped", "valueStrArray",
           org.apache.spark.sql.types.ArrayType(StringType))),
-      "json_value_bigint_array" -> ((a: Seq[Expression]) =>
+      scalar("json_value_bigint_array", "_FUNC_(json, path)")(a =>
         fn("from_json",
           graft.functions.JsonWalkDispatch(a.head, a(1),
             "valueArrayJson", "value", StringType),
           Literal("array<bigint>"))),
-      "json_value_double_array" -> ((a: Seq[Expression]) =>
+      scalar("json_value_double_array", "_FUNC_(json, path)")(a =>
         fn("from_json",
           graft.functions.JsonWalkDispatch(a.head, a(1),
             "valueArrayJson", "value", StringType),
@@ -2287,206 +2254,165 @@ object DruidFunctions {
       // BOOLEAN_TYPES to the LONG element type) and Calcite casts back —
       // long truthiness is `> 0` (Evals.asBoolean). Same walker as the
       // other typed variants (quoted fields, loud slice/union rejection).
-      "json_value_boolean_array" -> ((a: Seq[Expression]) =>
+      scalar("json_value_boolean_array", "_FUNC_(json, path)")(a =>
         fn("from_json", fn("json_value", a.head, a(1)),
           Literal("array<bigint>"))))
   }
 
-  /** Register reference-named functions for `spark.sql` text queries. SQL
-    * temporary macros expand inline at parse time, so they stay fully inside
-    * Catalyst optimization + whole-stage codegen (no UDF boundary).
-    *
-    * Each CREATE FUNCTION is a driver-side parse+analyze round; call
-    * through [[graft.GraftSession.attach]], whose per-session flag keeps
-    * the repeat cost at one conf read.
+  /** The fixed-arity functions the reference defines in SQL, each kept as
+    * the text of its typed parameters, return type and body — the text a
+    * `CREATE TEMPORARY FUNCTION name(params) RETURNS returns RETURN body`
+    * takes — and built by [[SqlMacro]] without running it.
     */
-  private[graft] def register(spark: SparkSession): Unit = {
-    catalystBuilders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+  private[graft] lazy val sqlMacros: Seq[SqlMacro] = Seq(
+    // reference StrlenOperatorConversion: alias of CHAR_LENGTH
+    SqlMacro("strlen", "s STRING", "INT", "length(s)"),
+    // reference SQL TEXTCAT (DruidOperatorTable) — two-string concat,
+    // NULL-propagating like ||
+    SqlMacro("textcat", "a STRING, b STRING", "STRING", "concat(a, b)"),
+    // reference BitwiseConvert{DoubleToLongBits,LongBitsToDouble}: IEEE-754
+    // reinterpretation over the native camelCase builders above
+    SqlMacro("bitwise_convert_double_to_long_bits", "d DOUBLE", "BIGINT",
+      "bitwiseconvertdoubletolongbits(d)"),
+    SqlMacro("bitwise_convert_long_bits_to_double", "b BIGINT", "DOUBLE",
+      "bitwiseconvertlongbitstodouble(b)"),
+    SqlMacro("timestamp_to_millis", "t TIMESTAMP", "BIGINT",
+      "CAST(unix_micros(t) / 1000 AS BIGINT)"),
+    SqlMacro("millis_to_timestamp", "m BIGINT", "TIMESTAMP", "timestamp_millis(m)"),
+    // RETURNING VARCHAR target: same walker as the untyped JSON_VALUE;
+    // JSON_VALUE_ANY is the untyped best-effort variant (the reference
+    // plans it as JSON_VALUE with no RETURNING —
+    // NestedDataOperatorConversions JsonValueAnyOperatorConversion)
+    SqlMacro("json_value_str", "j STRING, p STRING", "STRING", "json_value(j, p)"),
+    SqlMacro("json_value_any", "j STRING, p STRING", "STRING", "json_value(j, p)"),
+    // reference BuiltInExprMacros.StringDecodeBase64UTFExprMacro:149 —
+    // base64 → UTF-8 text, null-propagating
+    SqlMacro("decode_base64_utf8", "s STRING", "STRING",
+      "decode(unbase64(s), 'UTF-8')"),
+    SqlMacro("contains_string", "s STRING, n STRING", "BOOLEAN", "contains(s, n)"),
+    SqlMacro("icontains_string", "s STRING, n STRING", "BOOLEAN",
+      "contains(lower(s), lower(n))"),
+    // integer division like the reference's div: Java long division
+    // (truncate toward zero). x DIV y is Spark's integral divide — a
+    // double-division floor() would lose precision past 2^53 and round
+    // negatives the wrong way
+    SqlMacro("safe_div", "x BIGINT, y BIGINT", "BIGINT",
+      "CASE WHEN y = 0 OR y IS NULL THEN NULL ELSE x DIV y END"),
+    SqlMacro("strpos", "h STRING, n STRING", "INT", "instr(h, n)"),
+    SqlMacro("bitwise_and", "x BIGINT, y BIGINT", "BIGINT", "x & y"),
+    SqlMacro("bitwise_or", "x BIGINT, y BIGINT", "BIGINT", "x | y"),
+    SqlMacro("bitwise_xor", "x BIGINT, y BIGINT", "BIGINT", "x ^ y"),
+    SqlMacro("bitwise_complement", "x BIGINT", "BIGINT", "~x"),
+    SqlMacro("bitwise_shift_left", "x BIGINT, n INT", "BIGINT", "shiftleft(x, n)"),
+    SqlMacro("bitwise_shift_right", "x BIGINT, n INT", "BIGINT", "shiftright(x, n)"),
+    // linear-interpolation quantile over a double array, nulls skipped
+    SqlMacro("array_quantile", "arr ARRAY<DOUBLE>, q DOUBLE", "DOUBLE", """
+      CASE WHEN size(filter(arr, x -> x IS NOT NULL)) = 0 THEN NULL
+      ELSE element_at(array_sort(filter(arr, x -> x IS NOT NULL)),
+             CAST(floor(q * (size(filter(arr, x -> x IS NOT NULL)) - 1)) AS INT) + 1)
+           * (1.0 - (q * (size(filter(arr, x -> x IS NOT NULL)) - 1)
+                     - floor(q * (size(filter(arr, x -> x IS NOT NULL)) - 1))))
+         + element_at(array_sort(filter(arr, x -> x IS NOT NULL)),
+             CAST(least(floor(q * (size(filter(arr, x -> x IS NOT NULL)) - 1)) + 1,
+                        CAST(size(filter(arr, x -> x IS NOT NULL)) - 1 AS DOUBLE)) AS INT) + 1)
+           * (q * (size(filter(arr, x -> x IS NOT NULL)) - 1)
+              - floor(q * (size(filter(arr, x -> x IS NOT NULL)) - 1)))
+      END"""),
+    // the native expression language (math/expr/Function.java) names these
+    // timestamp_* where SQL says TIME_*, so JSON-facade expressions run
+    // verbatim
+    SqlMacro("timestamp_format", "t TIMESTAMP, p STRING", "STRING", "date_format(t, p)"),
+    SqlMacro("timestamp_parse", "s STRING, p STRING", "TIMESTAMP", "to_timestamp(s, p)"),
+    // invalid input → NULL (IPv4AddressParseExprMacro.java:43 via
+    // IPv4AddressExprUtils.isValidIPv4Address — strict dotted quad, no
+    // extra/missing octets, each 0-255; '300.1.1.1' and '1.2.3.4.5' are
+    // rejected, not silently bit-mangled)
+    SqlMacro("ipv4_parse", "s STRING", "BIGINT", """
+      CASE WHEN s RLIKE '^\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}$'
+             AND CAST(split_part(s, '.', 1) AS BIGINT) <= 255
+             AND CAST(split_part(s, '.', 2) AS BIGINT) <= 255
+             AND CAST(split_part(s, '.', 3) AS BIGINT) <= 255
+             AND CAST(split_part(s, '.', 4) AS BIGINT) <= 255
+      THEN CAST(split_part(s, '.', 1) AS BIGINT) * 16777216
+         + CAST(split_part(s, '.', 2) AS BIGINT) * 65536
+         + CAST(split_part(s, '.', 3) AS BIGINT) * 256
+         + CAST(split_part(s, '.', 4) AS BIGINT)
+      ELSE NULL END"""),
+    SqlMacro("ipv4_stringify", "x BIGINT", "STRING", """
+      concat_ws('.', CAST(x DIV 16777216 % 256 AS STRING),
+                     CAST(x DIV 65536 % 256 AS STRING),
+                     CAST(x DIV 256 % 256 AS STRING),
+                     CAST(x % 256 AS STRING))"""),
+    // IPV4_MATCH(ip, 'a.b.c.d/n') — reference IPv4AddressMatchExprMacro.
+    // A bare address (no /n) matches as /32
+    SqlMacro("ipv4_match", "ip STRING, subnet STRING", "BOOLEAN", """
+      (IPV4_PARSE(ip) & (4294967295 ^
+         (CAST(pow(2, 32 - coalesce(try_cast(split_part(subnet, '/', 2) AS BIGINT), 32)) AS BIGINT) - 1)))
+      = (IPV4_PARSE(split_part(subnet, '/', 1)) & (4294967295 ^
+         (CAST(pow(2, 32 - coalesce(try_cast(split_part(subnet, '/', 2) AS BIGINT), 32)) AS BIGINT) - 1)))"""),
+    // reference ComplexDecodeBase64OperatorConversion: decode a base64
+    // complex (sketch) column value; the sketch aggregators refold raw
+    // binary, so the type tag only documents intent.
+    // DECODE_BASE64_COMPLEX is the newer docs' alias
+    SqlMacro("complex_decode_base64", "t STRING, s STRING", "BINARY", "unbase64(s)"),
+    SqlMacro("decode_base64_complex", "t STRING, s STRING", "BINARY", "unbase64(s)"))
+
+  /** A function the reference defines in SQL, built without a SQL round
+    * trip. Its text parses once per JVM. A call casts each argument to its
+    * parameter type, resolves the body's calls on the spot (this table's
+    * builders first, so IPV4_MATCH calls IPV4_PARSE's, then Spark's
+    * built-ins) and casts the body to the return type. All of it is built
+    * in ANSI mode whatever the calling session says, as a SQL function
+    * keeps the mode of the session that created it: a malformed argument
+    * raises even inside the SQL facade's non-ANSI scope.
+    */
+  private[graft] final case class SqlMacro(name: String, params: String,
+      returns: String, body: String) {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute, UnresolvedFunction}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+    import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+
+    private lazy val (schema, returnType, tree) = ansi {
+      (CatalystSqlParser.parseTableSchema(params),
+        CatalystSqlParser.parseDataType(returns),
+        CatalystSqlParser.parseExpression(body))
     }
-    val fns = Seq(
-      // (SAFE_DIVIDE lives in catalystBuilders above: exact Function.java
-      // SafeDivide semantics — long path, 0/0 = 0, NaN divisor)
-      // reference StrlenOperatorConversion: alias of CHAR_LENGTH
-      "STRLEN(s STRING) RETURNS INT RETURN length(s)",
-      // reference SQL TEXTCAT (DruidOperatorTable) — two-string concat,
-      // NULL-propagating like ||
-      "TEXTCAT(a STRING, b STRING) RETURNS STRING RETURN concat(a, b)",
-      // (MV_FILTER_PREFIX / MV_FILTER_REGEX live in catalystBuilders with
-      // the ListFilteredVirtualColumn empty-result-is-NULL convention)
-      // (JSON_VALUE / JSON_QUERY / JSON_KEYS live in catalystBuilders: the
-      // JsonWalk transcription of NestedPathFinder — primitive-array
-      // pass-through, negative-index and '$.'-root rules, loud slice/union
-      // path rejection. The RETURNING clause is rewritten by SqlApi to the
-      // typed JSON_VALUE_* variants.)
-      // reference BitwiseConvert{DoubleToLongBits,LongBitsToDouble}: IEEE-754
-      // reinterpretation — delegates to the codegen'd StaticInvoke builders
-      // (the native camelCase family above), no UDF boundary
-      "BITWISE_CONVERT_DOUBLE_TO_LONG_BITS(d DOUBLE) RETURNS BIGINT RETURN " +
-        "bitwiseconvertdoubletolongbits(d)",
-      "BITWISE_CONVERT_LONG_BITS_TO_DOUBLE(b BIGINT) RETURNS DOUBLE RETURN " +
-        "bitwiseconvertlongbitstodouble(b)",
-      "TIMESTAMP_TO_MILLIS(t TIMESTAMP) RETURNS BIGINT RETURN " +
-        "CAST(unix_micros(t) / 1000 AS BIGINT)",
-      "MILLIS_TO_TIMESTAMP(m BIGINT) RETURNS TIMESTAMP RETURN timestamp_millis(m)",
-      // (TIME_FORMAT / TIME_PARSE / TIME_EXTRACT live in catalystBuilders:
-      // optional pattern + timezone arities)
-      // (MV_LENGTH lives in arrayBuilders: conf-proof size-of-null)
-      // (MV_CONTAINS lives in arrayBuilders: lhs-typed GraftArrayContains)
-      // (MV_TO_STRING / STRING_TO_MV / STRING_TO_ARRAY live in
-      //  arrayBuilders: [null]→NULL + null-prints-'null' join semantics and
-      //  Java split limit-0 trailing-empty dropping, neither expressible as
-      //  a split()/array_join() macro)
-      // RETURNING VARCHAR target: same walker as the untyped JSON_VALUE
-      "JSON_VALUE_STR(j STRING, p STRING) RETURNS STRING RETURN json_value(j, p)",
-      // JSON_VALUE_ANY = the untyped best-effort variant (the reference
-      // plans it as JSON_VALUE with no RETURNING —
-      // NestedDataOperatorConversions JsonValueAnyOperatorConversion)
-      "JSON_VALUE_ANY(j STRING, p STRING) RETURNS STRING RETURN json_value(j, p)",
-      // reference BuiltInExprMacros.StringDecodeBase64UTFExprMacro:149 —
-      // base64 → UTF-8 text, null-propagating
-      "DECODE_BASE64_UTF8(s STRING) RETURNS STRING RETURN " +
-        "decode(unbase64(s), 'UTF-8')",
-      "CONTAINS_STRING(s STRING, n STRING) RETURNS BOOLEAN RETURN contains(s, n)",
-      "ICONTAINS_STRING(s STRING, n STRING) RETURNS BOOLEAN RETURN " +
-        "contains(lower(s), lower(n))",
-      // (PARSE_LONG and SUBTRACT_MONTHS live in catalystBuilders above:
-      // optional-radix / dual-arity forms)
-      // integer division like the reference's div: Java long division
-      // (truncate toward zero). x DIV y is Spark's integral divide — a
-      // double-division floor() would lose precision past 2^53 and round
-      // negatives the wrong way
-      "SAFE_DIV(x BIGINT, y BIGINT) RETURNS BIGINT RETURN " +
-        "CASE WHEN y = 0 OR y IS NULL THEN NULL ELSE x DIV y END",
-      // (HUMAN_READABLE_{BINARY_BYTE,DECIMAL_BYTE,DECIMAL}_FORMAT live in
-      // catalystBuilders above: exact HumanReadableBytes.format semantics —
-      // full unit range, optional precision arg, Long.MIN_VALUE special case)
-      // (TIME_FLOOR lives in catalystBuilders above: full period/origin/
-      // timezone arity, arbitrary fixed periods via exact micros arithmetic)
-      // (TIME_SHIFT lives in catalystBuilders above: any fixed period,
-      // expression n, optional timezone frame)
-      // (TIME_CEIL lives in catalystBuilders above: floor(t-1us)+period in
-      // the same origin/timezone frame)
-      // (TIME_IN_INTERVAL lives in catalystBuilders: the reference accepts
-      // all three ISO-8601 interval spellings — start/end, start/period,
-      // period/end — resolved at conversion time from a literal)
-      // ------------------------------------------------------------ string ----
-      "STRPOS(h STRING, n STRING) RETURNS INT RETURN instr(h, n)",
-      // (TRUNCATE/TRUNC live in catalystBuilders: optional-digits arity and
-      // the reference's TRUNC alias, which Spark's builtin date-trunc would
-      // otherwise shadow)
-      // --------------------------------------------------------- bitwise ----
-      "BITWISE_AND(x BIGINT, y BIGINT) RETURNS BIGINT RETURN x & y",
-      "BITWISE_OR(x BIGINT, y BIGINT) RETURNS BIGINT RETURN x | y",
-      "BITWISE_XOR(x BIGINT, y BIGINT) RETURNS BIGINT RETURN x ^ y",
-      "BITWISE_COMPLEMENT(x BIGINT) RETURNS BIGINT RETURN ~x",
-      "BITWISE_SHIFT_LEFT(x BIGINT, n INT) RETURNS BIGINT RETURN shiftleft(x, n)",
-      "BITWISE_SHIFT_RIGHT(x BIGINT, n INT) RETURNS BIGINT RETURN shiftright(x, n)",
-      // ------------------------------------------------------------- MV ----
-      // multi-value string fns (MultiValueStringOperatorConversions.java);
-      // offsets are 0-based, ordinals 1-based, both null out of bounds
-      // (MV_OVERLAP lives in arrayBuilders: null-element-aware overlap)
-      // (MV_TO_ARRAY / ARRAY_TO_MV identities live in arrayBuilders: a SQL
-      // UDF can't appear under Generate, i.e. inside UNNEST/explode)
-      // (MV_OFFSET / MV_ORDINAL / MV_OFFSET_OF / MV_ORDINAL_OF / MV_CONCAT
-      //  live in arrayBuilders: the array slot takes MvInput scalar-MV
-      //  coercion and the *_OF needle must stay UNCAST for the reference's
-      //  strictly-typed Objects.equals probe — `v STRING` signatures here
-      //  would stringify numeric needles)
-      // (MV_APPEND / MV_PREPEND live in arrayBuilders: the reference routes
-      //  them through the polymorphic array_append — the ARRAY's element
-      //  type wins, so appending 'A' to a BIGINT array yields a null
-      //  element — then renders as a VARCHAR MV; a typed SQL macro would
-      //  silently retype the array to strings first and keep 'A')
-      // (MV_FILTER_ONLY / MV_FILTER_NONE live in arrayBuilders: the array
-      //  slot takes MvInput scalar-MV coercion — a SQL macro's
-      //  ARRAY<STRING> parameter rejects the unnested scalar c)
-      // ---------------------------------------------------------- arrays ----
-      // (polymorphic ARRAY_LENGTH/OFFSET/ORDINAL/OFFSET_OF/ORDINAL_OF/
-      //  CONCAT/APPEND/PREPEND/SLICE/TO_STRING/OVERLAP/CONTAINS/
-      //  SCALAR_IN_ARRAY/AGG/CONCAT_AGG live in arrayBuilders above — a SQL
-      //  macro's ARRAY<STRING> parameter would silently retype BIGINT arrays)
-      // (ARRAY_SET_ADD / ARRAY_SET_ADD_ALL are polymorphic Catalyst
-      //  builders in arrayBuilders — TreeSet semantics with nulls FIRST)
-      // linear-interpolation quantile over a double array (array_quantile)
-      """ARRAY_QUANTILE(arr ARRAY<DOUBLE>, q DOUBLE) RETURNS DOUBLE RETURN
-         CASE WHEN size(filter(arr, x -> x IS NOT NULL)) = 0 THEN NULL
-         ELSE element_at(array_sort(filter(arr, x -> x IS NOT NULL)),
-                CAST(floor(q * (size(filter(arr, x -> x IS NOT NULL)) - 1)) AS INT) + 1)
-              * (1.0 - (q * (size(filter(arr, x -> x IS NOT NULL)) - 1)
-                        - floor(q * (size(filter(arr, x -> x IS NOT NULL)) - 1))))
-            + element_at(array_sort(filter(arr, x -> x IS NOT NULL)),
-                CAST(least(floor(q * (size(filter(arr, x -> x IS NOT NULL)) - 1)) + 1,
-                           CAST(size(filter(arr, x -> x IS NOT NULL)) - 1 AS DOUBLE)) AS INT) + 1)
-              * (q * (size(filter(arr, x -> x IS NOT NULL)) - 1)
-                 - floor(q * (size(filter(arr, x -> x IS NOT NULL)) - 1)))
-         END""",
-      // ------------------------------------------------------------ JSON ----
-      // (JSON_QUERY / JSON_KEYS live in catalystBuilders: JsonWalk —
-      // subtree serialization keeps scalar-string quotes, negative indexes
-      // address from the end, keys are field names / index strings)
-      // (JSON_PATHS lives in catalystBuilders: recursive leaf enumeration)
-      // (JSON_OBJECT lives in catalystBuilders above: variadic KV arity)
-      // (JSON_QUERY_ARRAY lives in catalystBuilders: JsonWalk.queryArray —
-      //  same grammar as json_query, scalar/object 1-element wrap)
-      // TO_JSON_STRING: canonical re-serialization (parse_json → variant →
-      // to_json), so semantically-equal JSON prints identically.
-      // PARSE_JSON / TRY_PARSE_JSON themselves are Spark built-ins with the
-      // reference's exact names and semantics (variant result; TRY_ → null
-      // on malformed input) — nothing to register.
-      // (TO_JSON_STRING lives in arrayBuilders: literal-aware — a VARCHAR
-      //  LITERAL always serializes as a JSON string like the reference
-      //  ('1234' → "1234", '"x"' → "\"x\""); non-literal input keeps the
-      //  facade rule parseable → document / unparseable → quoted string,
-      //  since a JSON column and a string value are the same STRING type
-      //  here. A non-literal string VALUE that itself spells valid JSON
-      //  takes the document path; irreducible without a nested type.)
-      // ------------------------------------- native expression language ----
-      // the reference's native expression language (math/expr/Function.java,
-      // query/expression/Timestamp*ExprMacro.java) names time functions
-      // timestamp_* where SQL says TIME_* — alias so JSON-facade expression
-      // virtual columns / filters run verbatim
-      // (TIMESTAMP_FLOOR aliases the TIME_FLOOR catalyst builder above — a
-      // SQL-macro delegation would pass its parameter as a non-literal
-      // period, which the builder rejects at macro-definition analysis)
-      "TIMESTAMP_FORMAT(t TIMESTAMP, p STRING) RETURNS STRING RETURN date_format(t, p)",
-      "TIMESTAMP_PARSE(s STRING, p STRING) RETURNS TIMESTAMP RETURN to_timestamp(s, p)",
-      // -------------------------------------------------------------- IP ----
-      // invalid input → NULL (IPv4AddressParseExprMacro.java:43 via
-      // IPv4AddressExprUtils.isValidIPv4Address — strict dotted quad, no
-      // extra/missing octets, each 0-255; '300.1.1.1' and '1.2.3.4.5' are
-      // rejected, not silently bit-mangled)
-      """IPV4_PARSE(s STRING) RETURNS BIGINT RETURN
-         CASE WHEN s RLIKE '^\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}$'
-                AND CAST(split_part(s, '.', 1) AS BIGINT) <= 255
-                AND CAST(split_part(s, '.', 2) AS BIGINT) <= 255
-                AND CAST(split_part(s, '.', 3) AS BIGINT) <= 255
-                AND CAST(split_part(s, '.', 4) AS BIGINT) <= 255
-         THEN CAST(split_part(s, '.', 1) AS BIGINT) * 16777216
-            + CAST(split_part(s, '.', 2) AS BIGINT) * 65536
-            + CAST(split_part(s, '.', 3) AS BIGINT) * 256
-            + CAST(split_part(s, '.', 4) AS BIGINT)
-         ELSE NULL END""",
-      """IPV4_STRINGIFY(x BIGINT) RETURNS STRING RETURN
-         concat_ws('.', CAST(x DIV 16777216 % 256 AS STRING),
-                        CAST(x DIV 65536 % 256 AS STRING),
-                        CAST(x DIV 256 % 256 AS STRING),
-                        CAST(x % 256 AS STRING))""",
-      // IPV4_MATCH(ip, 'a.b.c.d/n') — reference IPv4AddressMatchExprMacro.
-      // A bare address (no /n) matches as /32; the macro body reuses the
-      // IPV4_PARSE macro created just above (order matters at CREATE time)
-      """IPV4_MATCH(ip STRING, subnet STRING) RETURNS BOOLEAN RETURN
-         (IPV4_PARSE(ip) & (4294967295 ^
-            (CAST(pow(2, 32 - coalesce(try_cast(split_part(subnet, '/', 2) AS BIGINT), 32)) AS BIGINT) - 1)))
-         = (IPV4_PARSE(split_part(subnet, '/', 1)) & (4294967295 ^
-            (CAST(pow(2, 32 - coalesce(try_cast(split_part(subnet, '/', 2) AS BIGINT), 32)) AS BIGINT) - 1)))""",
-      // reference ComplexDecodeBase64OperatorConversion: decode a base64
-      // complex (sketch) column value; our sketch aggregators refold raw
-      // binary, so the type tag only documents intent
-      "COMPLEX_DECODE_BASE64(t STRING, s STRING) RETURNS BINARY RETURN unbase64(s)",
-      // newer-docs alias of COMPLEX_DECODE_BASE64
-      "DECODE_BASE64_COMPLEX(t STRING, s STRING) RETURNS BINARY RETURN unbase64(s)")
-    fns.foreach(f => spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $f"))
+
+    def builder(args: Seq[Expression]): Expression = ansi {
+      require(args.size == schema.size,
+        s"$name takes ${schema.size} arguments, got ${args.size}")
+      val bound = schema.fieldNames.map(_.toLowerCase)
+        .zip(args.zip(schema.fields).map { case (a, f) => Cast(a, f.dataType) })
+        .toMap
+      Cast(tree.transformUp {
+        case a: UnresolvedAttribute if bound.contains(a.name.toLowerCase) =>
+          bound(a.name.toLowerCase)
+        case f: UnresolvedFunction =>
+          val fn = f.nameParts.last
+          byName.get(fn.toLowerCase).fold(
+            // a built-in whose builder needs resolved arguments stays for
+            // the analyzer: only ARRAY_QUANTILE's FLOOR over a lambda's
+            // result, which reads no ANSI mode
+            scala.util.Try(FunctionRegistry.builtin.lookupFunction(
+              FunctionIdentifier(fn), f.arguments)).getOrElse(f: Expression))(
+            _.builder(f.arguments))
+      }, returnType)
+    }
+
+    def function: EngineFunction =
+      scalar(name, s"_FUNC_($params) RETURNS $returns")(builder)
   }
+
+  private lazy val ansiConf = {
+    val c = new org.apache.spark.sql.internal.SQLConf
+    c.setConf(org.apache.spark.sql.internal.SQLConf.ANSI_ENABLED, true)
+    c
+  }
+
+  /** Evaluate `body` — expression construction, whose casts, arithmetic
+    * and built-ins read their ANSI mode from the active conf — in ANSI mode.
+    */
+  private def ansi[T](body: => T): T =
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(ansiConf)(body)
 }

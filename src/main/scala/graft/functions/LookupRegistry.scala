@@ -167,11 +167,17 @@ object LookupRegistry {
     }
     val mapping = get(name).getOrElse(
       throw new IllegalArgumentException(s"unknown lookup: $name"))
-    // raw Catalyst nodes (a Column-node wrapper would not survive codegen
-    // when spliced into a parsed SQL tree)
-    val mapLit = Literal.create(mapping, MapType(StringType, StringType))
-    LookupApply(args.head, mapLit, args.lift(2))
+    lookupOf(args.head, mapping, args.lift(2))
   }
+
+  /** The probe of `key` in `mapping`, as a map literal (raw Catalyst nodes:
+    * a Column-node wrapper would not survive codegen when spliced into a
+    * parsed SQL tree).
+    */
+  def lookupOf(key: Expression, mapping: Map[String, String],
+               replaceMissing: Option[Expression]): Expression =
+    LookupApply(key, Literal.create(mapping, MapType(StringType, StringType)),
+      replaceMissing)
 
   /** LOOKUP over a MULTI-VALUE key maps per element — the reference's
     * lookup extractionFn applies to each value of an MVD expression
@@ -211,10 +217,7 @@ object LookupRegistry {
         replace = if (c.size > 2) Some(c(2)) else None)
   }
 
-  /** Register the SQL function on a session (via
-    * [[graft.GraftSession.attach]]).
-    */
-  private[graft] def registerSql(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("lookup", lookupBuilder, "built-in")
+  /** SQL `LOOKUP`, resolved against the registry at plan time. */
+  val function: EngineFunction = EngineFunction.scalar("lookup",
+    "_FUNC_(expr, lookupName[, replaceMissingWith])")(lookupBuilder)
 }

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** User-defined typed aggregators — the engine's analog of the reference's
   * `AggregatorFactory` plugin surface (`query/aggregation/AggregatorFactory
@@ -30,10 +31,10 @@ object TypedAggregators {
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** Register SQL-callable UDAFs on a session (via
-    * [[graft.GraftSession.attach]]).
+  /** SQL GEOMETRIC_MEAN(expr), the builder `spark.udf.register` would
+    * install for [[GeometricMean]].
     */
-  private[graft] def register(spark: SparkSession): Unit = {
-    spark.udf.register("geometric_mean", udaf(GeometricMean))
-  }
+  val function: EngineFunction = EngineFunction.aggregator("geometric_mean",
+    "_FUNC_(expr) - geometric mean of the positive values")(
+    Bridge.typedAggregator(udaf(GeometricMean).withName("geometric_mean")))
 }

@@ -188,37 +188,22 @@ object Metadata {
 
   /** INFORMATION_SCHEMA.ROUTINES (reference InformationSchema ROUTINES
     * table): one row per known SQL function. Aggregates are flagged
-    * IS_AGGREGATOR = YES like the reference; the signature column carries
-    * the registry's usage string when one exists. Built from the session
-    * function registry on the driver — O(functions), no data scan.
+    * IS_AGGREGATOR = YES like the reference: the registry's `agg_funcs`
+    * group, which Spark's built-ins and the engine's table entries both
+    * carry. The signature column is the registry's usage string. Built from
+    * the session function registry on the driver — O(functions), no data
+    * scan.
     */
   def informationSchemaRoutines(spark: SparkSession): DataFrame = {
     import spark.implicits._
     graft.GraftSession.attach(spark)
-    // Aggregate-ness comes from the function registry's ExpressionInfo group
-    // for built-ins, plus an exact-name list for graft-registered aggregates
-    // (their injected ExpressionInfo carries no group). Substring hints
-    // misfire (minute ⊃ "min", last_day ⊃ "last", bit_length ⊃ "bit_").
-    val graftAggs = Set(
-      "hll_estimate_agg", "hll_sketch_agg", "hll_merge_agg", "kmv_sketch_agg",
-      "bloom_build_agg", "tuple_sketch_agg", "kll_sketch_agg", "kll_merge_agg",
-      "earliest", "latest", "earliest_by", "latest_by",
-      "approx_count_distinct_ds_hll", "approx_count_distinct_ds_theta",
-      "ds_hll", "ds_theta", "ds_kll", "ds_quantiles_sketch",
-      "ds_tuple_doubles", "approx_quantile_ds", "bloom_filter",
-      "tdigest_generate_sketch", "tdigest_merge_agg",
-      "approx_count_distinct_builtin", "approx_quantile",
-      "approx_quantile_fixed_buckets", "array_concat_agg", "geometric_mean")
-    def builtinGroup(name: String): Option[String] =
+    def group(name: String): Option[String] =
       try Option(spark.sessionState.catalog.lookupFunctionInfo(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name)).getGroup)
       catch { case _: Exception => None }
     spark.catalog.listFunctions().collect().toSeq.map { f =>
-      val name = f.name
-      val isAgg = graftAggs.contains(name.toLowerCase) ||
-        builtinGroup(name).contains("agg_funcs")
-      (Catalog, "INFORMATION_SCHEMA", name, "FUNCTION",
-        if (isAgg) "YES" else "NO",
+      (Catalog, "INFORMATION_SCHEMA", f.name, "FUNCTION",
+        if (group(f.name).contains("agg_funcs")) "YES" else "NO",
         Option(f.description).getOrElse(""))
     }.toDF("routine_catalog", "routine_schema", "routine_name",
       "routine_type", "is_aggregator", "signatures")

@@ -14,6 +14,16 @@ object Bridge {
   def toCol(e: Expression): Column = ExpressionUtils.column(e)
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The builder `spark.udf.register` installs for a typed aggregator
+    * (`ScalaAggregator` is private[sql]).
+    */
+  def typedAggregator(f: org.apache.spark.sql.expressions.UserDefinedFunction)
+      : Seq[Expression] => Expression = {
+    val uda = f.asInstanceOf[
+      org.apache.spark.sql.expressions.UserDefinedAggregator[Any, Any, Any]]
+    children => org.apache.spark.sql.execution.aggregate.ScalaAggregator(uda, children)
+  }
+
   /** DataFrame from a raw logical plan (classic `Dataset.ofRows` is
     * private[sql]) — needed to splice custom LogicalPlan nodes into the
     * public API.

@@ -1427,4 +1427,127 @@ class FunctionsSpec extends AnyFunSuite {
       .collect().head
     assert(r.getInt(0) == 2)
   }
+
+  test("attach runs no SQL statement") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val statements = new AtomicInteger
+    @volatile var markerDone = false
+    val marker = "graft-attach-marker"
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => statements.incrementAndGet()
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.job.description") == marker)
+          markerDone = true
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      GraftSession.attach(spark.newSession())
+      // events reach a listener in the order they were posted: once the
+      // marker job is seen, every statement attach ran has been counted
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerDone && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerDone)
+      assert(statements.get == 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("listFunctions adds exactly the engine's function names") {
+    val plain = spark.newSession().catalog.listFunctions().collect()
+      .map(_.name).toSet
+    val armed = spark.newSession()
+    GraftSession.attach(armed)
+    val names = armed.catalog.listFunctions().collect().map(_.name).toSet
+    val table = GraftSession.functions.map(_.name).toSet
+    assert(names == plain ++ table)
+    // the 189 names no built-in spells, as many as the 27 SQL statements
+    // and the registration calls armed before the table: the 722 names
+    // of an armed session are the same set
+    assert((names -- plain).size == 189 && names.size == 722, names -- plain)
+  }
+
+  // Arguments for each SQL-defined function: a valid call, a NULL, and
+  // malformed input that a parameter cast rejects
+  private val sqlMacroArgs: Map[String, Seq[String]] = Map(
+    "strlen" -> Seq("'abc'", "NULL", "12345"),
+    "textcat" -> Seq("'a', 'b'", "NULL, 'b'", "1, 2"),
+    "bitwise_convert_double_to_long_bits" -> Seq("1.5", "NULL", "'x'"),
+    "bitwise_convert_long_bits_to_double" ->
+      Seq("4609434218613702656", "NULL", "'x'"),
+    "timestamp_to_millis" -> Seq("TIMESTAMP'2024-01-01 00:00:01.5'",
+      "TIMESTAMP'1969-12-31 23:59:59.9985'", "NULL", "'garbage'", "'2024-01-01'"),
+    "millis_to_timestamp" -> Seq("1700000000000", "NULL", "'x'"),
+    "json_value_str" -> Seq("'{\"a\":1}', '$.a'", "NULL, '$.a'",
+      "'not json', '$.a'"),
+    "json_value_any" -> Seq("'{\"a\":[1]}', '$.a'", "NULL, '$.a'",
+      "'not json', '$.a'"),
+    "decode_base64_utf8" -> Seq("'aGVsbG8='", "NULL", "'!!'"),
+    "contains_string" -> Seq("'Apache Spark', 'Spark'", "NULL, 'a'", "12, 1"),
+    "icontains_string" -> Seq("'Apache Spark', 'spark'", "'a', NULL", "12, 1"),
+    "safe_div" -> Seq("7, 2", "-7, 2", "1, 0", "NULL, 1", "'x', 1",
+      "-9223372036854775808, -1"),
+    "strpos" -> Seq("'hello', 'l'", "NULL, 'a'", "'abc', 'z'"),
+    "bitwise_and" -> Seq("12, 10", "NULL, 1", "'x', 3"),
+    "bitwise_or" -> Seq("12, 10", "NULL, 1", "'x', 3"),
+    "bitwise_xor" -> Seq("12, 10", "NULL, 1", "'x', 3"),
+    "bitwise_complement" -> Seq("5", "NULL", "'x'"),
+    "bitwise_shift_left" -> Seq("1, 3", "NULL, 1", "'x', 1", "1, 'y'"),
+    "bitwise_shift_right" -> Seq("64, 3", "NULL, 1", "'x', 1"),
+    "array_quantile" -> Seq("array(1.0, 2.0, 3.0, 4.0), 0.5",
+      "array(3.0, NULL, 1.0), 0.25", "array(CAST(NULL AS DOUBLE)), 0.5",
+      "NULL, 0.5", "array(1.0), 'x'", "array(1.0, 2.0, 3.0), -3"),
+    "timestamp_format" -> Seq("TIMESTAMP'2024-01-02 03:04:05', 'yyyy-MM-dd'",
+      "NULL, 'yyyy'", "'garbage', 'yyyy'"),
+    "timestamp_parse" -> Seq("'2024-01-02', 'yyyy-MM-dd'", "NULL, 'yyyy'",
+      "'garbage', 'yyyy-MM-dd'"),
+    "ipv4_parse" -> Seq("'10.64.3.1'", "'300.1.1.1'", "'1.2.3.4.5'", "NULL",
+      "'abc'"),
+    "ipv4_stringify" -> Seq("167772161", "NULL", "'x'"),
+    "ipv4_match" -> Seq("'10.64.3.1', '10.64.0.0/10'",
+      "'10.1.1.1', '10.64.0.0/10'", "'1.2.3.4', '1.2.3.4'",
+      "NULL, '10.0.0.0/8'", "'300.1.1.1', '10.0.0.0/8'", "'1.2.3.4', '1.2.3.4/x'"),
+    "complex_decode_base64" -> Seq("'hll', 'AAE='", "'hll', NULL", "'hll', '!!'"),
+    "decode_base64_complex" -> Seq("'hll', 'AAE='", "'hll', NULL", "'hll', '!!'"))
+
+  // the reference for each: its SQL text as a session-scoped
+  // CREATE FUNCTION, made in ANSI mode (Spark's default, and the mode it
+  // keeps); a body calling another macro calls that one's reference
+  private lazy val refSession = {
+    val s = spark.newSession()
+    GraftSession.attach(s)
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    for (m <- DruidFunctions.sqlMacros)
+      s.sql(s"CREATE TEMPORARY FUNCTION ref_${m.name}(${m.params}) " +
+        s"RETURNS ${m.returns} RETURN ${m.body.replace("IPV4_PARSE(", "ref_ipv4_parse(")}")
+    s
+  }
+
+  for (m <- DruidFunctions.sqlMacros)
+    test(s"SQL-defined ${m.name} answers as its CREATE FUNCTION text") {
+      val s = refSession
+      def run(fn: String, args: String) = scala.util.Try {
+        val df = s.sql(s"SELECT $fn($args) AS v")
+        (df.schema.head.dataType, df.collect().head.get(0) match {
+          case b: Array[Byte] => b.toSeq
+          case v => v
+        })
+      }
+      val cases = sqlMacroArgs(m.name)
+      assert(cases.size >= 3)
+      for (ansi <- Seq("true", "false"); args <- cases) {
+        s.conf.set("spark.sql.ansi.enabled", ansi)
+        val (ref, got) = (run(s"ref_${m.name}", args), run(m.name, args))
+        assert(ref.isSuccess == got.isSuccess && (ref.isFailure || ref == got),
+          s"${m.name}($args) ansi=$ansi: reference $ref, table $got")
+      }
+      s.conf.set("spark.sql.ansi.enabled", "true")
+    }
 }

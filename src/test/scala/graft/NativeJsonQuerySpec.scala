@@ -413,6 +413,26 @@ class NativeJsonQuerySpec extends AnyFunSuite {
     assert(buckets.forall(b => Set("03", "09", "15", "21")(b.substring(11, 13))))
   }
 
+  test("month and year periods with an origin bucket as SQL TIME_FLOOR") {
+    GraftSession.attach(spark)
+    Tables.registerAll(spark, dir)
+    val origin = "2024-01-15T00:00:00Z"
+    for (period <- Seq("P1M", "P2M", "P1Y")) {
+      val native = NativeJsonQuery.run(spark, dir, s"""
+        {"queryType": "timeseries", "dataSource": "events",
+         "granularity": {"type": "period", "period": "$period",
+                         "origin": "$origin"},
+         "aggregations": [{"type": "count", "name": "n"}]}""")
+        .collect().map(r => r.getTimestamp(0).toString -> r.getLong(1)).toMap
+      val sql = spark.sql(s"""
+        SELECT TIME_FLOOR(ts, '$period', '$origin') AS b, count(*) AS n
+        FROM events GROUP BY 1""")
+        .collect().map(r => r.getTimestamp(0).toString -> r.getLong(1)).toMap
+      // the January events straddle the origin: two buckets each
+      assert(native == sql && native.size == 2, s"$period: $native vs $sql")
+    }
+  }
+
   test("period granularity with a region timeZone buckets in wall clock") {
     // events are Jan 2024: America/New_York is EST (UTC-5) throughout, so
     // every local day bucket must start at 05:00 UTC and zero-fill must
@@ -606,11 +626,13 @@ class NativeJsonQuerySpec extends AnyFunSuite {
          FROM events""").head()
     assert(r.getTimestamp(0).toString.startsWith("2024-01-01"))
     assert(r.getLong(1) > 10)
-    // one builder per name: a name in both lists is shadowed by whichever
-    // attach registers last
-    val names = (graft.functions.DruidFunctions.catalystBuilders.map(_._1) ++
-      GraftExtensions.functions.map(_._1)).map(_.toLowerCase)
+    // one builder per name across the whole table, the SQL-defined
+    // functions, LOOKUP and GEOMETRIC_MEAN included: a repeated name would
+    // be shadowed by whichever entry attach registers last
+    val names = GraftSession.functions.map(_.name.toLowerCase)
     assert(names.distinct.size == names.size, names.diff(names.distinct))
+    assert(Seq("strlen", "ipv4_match", "array_quantile", "lookup",
+      "geometric_mean", "ds_theta").forall(names.contains))
   }
 
   test("union datasource appends tables by name") {
@@ -838,6 +860,24 @@ class NativeJsonQuerySpec extends AnyFunSuite {
     for (scalar <- Seq("minute", "last_day", "bit_length"))
       if (byName.contains(scalar)) assert(byName(scalar) == "NO",
         s"$scalar misflagged as aggregate")
+    // engine aggregates that shadow a built-in, and the typed aggregator
+    for (agg <- Seq("any_value", "approx_count_distinct", "array_agg",
+        "array_agg_mv", "array_concat_agg_distinct", "string_agg",
+        "string_agg_sorted", "bit_and", "bit_or", "bit_xor", "geometric_mean"))
+      assert(byName.get(agg).contains("YES"), s"$agg not flagged as aggregate")
+  }
+
+  test("INFORMATION_SCHEMA.ROUTINES signatures are the usage lines, equal across sessions") {
+    def routines(s: SparkSession) =
+      graft.operators.Metadata.informationSchemaRoutines(s).collect()
+        .map(r => r.getString(2) -> r.getString(5)).toMap
+    val one = routines(spark.newSession())
+    assert(one == routines(spark.newSession()))
+    for (f <- GraftSession.functions) {
+      val sig = one(f.name)
+      assert(sig.nonEmpty && sig != "N/A." && sig.startsWith(f.name + "("),
+        s"${f.name}: '$sig'")
+    }
   }
 
   test("sys_server_segments maps every segment onto each server") {
