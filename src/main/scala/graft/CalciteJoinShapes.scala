@@ -38,8 +38,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CalciteJoinShapes {
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = Seq(
-    ("q_cjq_semi_anti_simul",
+  lazy val gates: Seq[Gate] = Seq(
+    Gate.druid("q_cjq_semi_anti_simul",
       """SELECT n_name, CAST(count(*) AS BIGINT) AS cnt
          FROM nation
          WHERE n_regionkey IN (SELECT r_regionkey FROM region
@@ -55,7 +55,7 @@ object CalciteJoinShapes {
                                    WHERE s_acctbal < 0)
          GROUP BY n_name ORDER BY n_name"""),
 
-    ("q_cjq_semi_anti_explicit",
+    Gate.druid("q_cjq_semi_anti_explicit",
       """SELECT n.n_name
          FROM nation n
          WHERE EXISTS (SELECT 1 FROM region r
@@ -75,7 +75,7 @@ object CalciteJoinShapes {
                              AND s.s_acctbal < 0)
          ORDER BY n.n_name"""),
 
-    ("q_cjq_union_of_joins",
+    Gate.druid("q_cjq_union_of_joins",
       """SELECT src, nm, CAST(cnt AS BIGINT) AS cnt FROM (
            SELECT 'lj' AS src, r_name AS nm, count(*) AS cnt
            FROM nation JOIN region ON n_regionkey = r_regionkey
@@ -103,7 +103,7 @@ object CalciteJoinShapes {
            GROUP BY s_name
          ) u ORDER BY src, nm"""),
 
-    ("q_cjq_join_on_groupby_floor",
+    Gate.druid("q_cjq_join_on_groupby_floor",
       """SELECT o.o_orderpriority,
               CAST(sum(d.n) AS BIGINT) AS day_orders
          FROM orders o
@@ -125,7 +125,7 @@ object CalciteJoinShapes {
          GROUP BY o.o_orderpriority
          ORDER BY o.o_orderpriority"""),
 
-    ("q_cjq_groupby_over_groupby_inline",
+    Gate.druid("q_cjq_groupby_over_groupby_inline",
       """WITH a AS (SELECT * FROM VALUES (1, 'x'), (1, 'y'), (2, 'z')
                     AS t(k, v)),
             b AS (SELECT * FROM VALUES (1, 10), (2, 20), (2, 30)
@@ -145,7 +145,7 @@ object CalciteJoinShapes {
            GROUP BY a.k) g
          GROUP BY cnt ORDER BY cnt"""),
 
-    ("q_cjq_fn_cast_join_condition",
+    Gate.druid("q_cjq_fn_cast_join_condition",
       """SELECT n.n_name, r.r_name
          FROM nation n
          JOIN region r
@@ -159,7 +159,7 @@ object CalciteJoinShapes {
           AND CAST(n.n_regionkey AS BIGINT) = CAST(r.r_regionkey AS BIGINT)
          ORDER BY n.n_name, r.r_name"""),
 
-    ("q_cjq_isnull_pushdown",
+    Gate.druid("q_cjq_isnull_pushdown",
       """SELECT
            (SELECT CAST(count(*) AS BIGINT)
             FROM nation n LEFT JOIN
@@ -189,7 +189,7 @@ object CalciteJoinShapes {
             WHERE r.r_name LIKE '%A%' AND n.n_nationkey >= 0
               AND n.n_regionkey <= 4) AS many_nonempty"""),
 
-    ("q_cjq_subquery_and_filter_extraction",
+    Gate.druid("q_cjq_subquery_and_filter_extraction",
       """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS cnt
          FROM customer
          WHERE c_nationkey IN
@@ -208,12 +208,4 @@ object CalciteJoinShapes {
            AND c_acctbal > 0
          GROUP BY c_mktsegment
          ORDER BY c_mktsegment"""))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => graft.api.SqlApi.runSql(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

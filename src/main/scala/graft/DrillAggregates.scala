@@ -333,16 +333,16 @@ object DrillAggregates {
   }
 
   private def gate(name: String, body: Boolean => String,
-      needsWnulls: Boolean, needsFewRows: Boolean): (String, String, String) = {
+      needsWnulls: Boolean, needsFewRows: Boolean): Gate = {
     def withCtes(duck: Boolean): String = {
       val ctes = (if (needsFewRows) Seq(fewRowsCte(duck)) else Nil) ++
         (if (needsWnulls) Seq(wnullsCte(duck)) else Nil)
       s"WITH ${ctes.mkString(", ")} ${body(duck)}"
     }
-    (name, withCtes(false), withCtes(true))
+    Gate.spark(name, withCtes(false), withCtes(true))
   }
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = Seq(
+  lazy val gates: Seq[Gate] = Seq(
     gate("q_drill_agg_castkeys_matrix", castKeysBody,
       needsWnulls = false, needsFewRows = true),
     gate("q_drill_agg_ownfn", ownFnBody,
@@ -359,15 +359,4 @@ object DrillAggregates {
       needsWnulls = false, needsFewRows = true),
     gate("q_drill_nestedagg_twolevel", nestedTwoLevelBody,
       needsWnulls = true, needsFewRows = true))
-
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame =
-    s.sql(sqlText)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => runSpark(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

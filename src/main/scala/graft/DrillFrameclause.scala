@@ -161,8 +161,8 @@ object DrillFrameclause {
     out.mkString(",\n              ")
   }
 
-  private def matrixGate(name: String, frame: String): (String, String, String) =
-    (name,
+  private def matrixGate(name: String, frame: String): Gate =
+    Gate.spark(name,
       s"""WITH $sparkTAll
           SELECT rid, ${matrixCols(frame, duck = false)}
           FROM t_alltype ORDER BY rid""",
@@ -173,7 +173,7 @@ object DrillFrameclause {
   /** Tie-class RANGE semantics: order by the duplicated c2 with tie-safe
     * aggregates (peer-set results identical for tied rows on both engines).
     */
-  private def tieGate(name: String, frame: String): (String, String, String) = {
+  private def tieGate(name: String, frame: String): Gate = {
     def body(duck: Boolean): String = {
       val ord = if (duck) "c2 NULLS FIRST" else "c2"
       val w = s"(PARTITION BY c8 ORDER BY $ord $frame)"
@@ -187,12 +187,12 @@ object DrillFrameclause {
               CAST(LAST_VALUE(c2) OVER $w AS BIGINT) AS lv_c2
          FROM t_alltype ORDER BY rid"""
     }
-    (name, s"WITH $sparkTAll ${body(false)}", s"WITH $duckTAll ${body(true)}")
+    Gate.spark(name, s"WITH $sparkTAll ${body(false)}", s"WITH $duckTAll ${body(true)}")
   }
 
   // ----------------------------------------------------------- gates ----
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = Seq(
+  lazy val gates: Seq[Gate] = Seq(
     matrixGate("q_drill_fc_rbupacr_matrix",
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"),
     matrixGate("q_drill_fc_rbcracr_matrix",
@@ -238,7 +238,7 @@ object DrillFrameclause {
                           RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
            ORDER BY rid"""
       }
-      ("q_drill_fc_mulwnds",
+      Gate.spark("q_drill_fc_mulwnds",
         s"WITH $sparkTAll ${body(false)}", s"WITH $duckTAll ${body(true)}")
     },
 
@@ -263,7 +263,7 @@ object DrillFrameclause {
            FROM t_alltype WINDOW w AS (PARTITION BY c8 ORDER BY $ord)
            ORDER BY rid"""
       }
-      ("q_drill_fc_rank_noframe",
+      Gate.spark("q_drill_fc_rank_noframe",
         s"WITH $sparkTAll ${body(false)}", s"WITH $duckTAll ${body(true)}")
     },
 
@@ -288,7 +288,7 @@ object DrillFrameclause {
                 RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
            ) subqry
            WHERE subqry.w_cnt > 4 ORDER BY rid"""
-      ("q_drill_fc_mulwind_filter",
+      Gate.spark("q_drill_fc_mulwind_filter",
         s"WITH $sparkTAll ${body(false)}", s"WITH $duckTAll ${body(true)}")
     },
 
@@ -309,18 +309,7 @@ object DrillFrameclause {
            ) subqry
            WHERE subqry.w_sum > 0 ORDER BY rid"""
       }
-      ("q_drill_fc_subqry",
+      Gate.spark("q_drill_fc_subqry",
         s"WITH $sparkTAll ${body(false)}", s"WITH $duckTAll ${body(true)}")
     })
-
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame =
-    s.sql(sqlText)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => runSpark(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

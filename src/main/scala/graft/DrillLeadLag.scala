@@ -112,7 +112,7 @@ object DrillLeadLag {
     * one extra column (lagFn_105-style `LAG(col7) OVER (... ORDER BY
     * col7)` is tie-broken by rid here).
     */
-  private def offsetMatrix(fn: String): (String, String, String) = {
+  private def offsetMatrix(fn: String): Gate = {
     def body(duck: Boolean): String = {
       def w(ord: String) = {
         val o = if (duck) s"$ord NULLS FIRST" else ord
@@ -124,7 +124,7 @@ object DrillLeadLag {
       s"""SELECT rid, ${out.mkString(",\n              ")}
          FROM t_alltyps ORDER BY rid"""
     }
-    (s"q_drill_${fn.toLowerCase}_matrix",
+    Gate.druid(s"q_drill_${fn.toLowerCase}_matrix",
       s"WITH ${fixture(false)} ${body(false)}",
       s"WITH ${fixture(true)} ${body(true)}")
   }
@@ -132,7 +132,7 @@ object DrillLeadLag {
   /** FIRST_VALUE/LAST_VALUE per type over the default frame (first_val /
     * last_val directories — the matrices order by the value column itself).
     */
-  private def firstLastMatrix: (String, String, String) = {
+  private def firstLastMatrix: Gate = {
     def body(duck: Boolean): String = {
       def w(ord: String) = {
         val o = if (duck) s"$ord NULLS FIRST" else ord
@@ -145,7 +145,7 @@ object DrillLeadLag {
       s"""SELECT rid, ${out.mkString(",\n              ")}
          FROM t_alltyps ORDER BY rid"""
     }
-    ("q_drill_firstlast_matrix",
+    Gate.druid("q_drill_firstlast_matrix",
       s"WITH ${fixture(false)} ${body(false)}",
       s"WITH ${fixture(true)} ${body(true)}")
   }
@@ -153,7 +153,7 @@ object DrillLeadLag {
   /** NTILE bucket matrix (ntile_func): NTILE(2/3/5) per partition plus the
     * ntileFn_33 shape — outer ORDER BY a window NTILE.
     */
-  private def ntileMatrix: (String, String, String) = {
+  private def ntileMatrix: Gate = {
     def body(duck: Boolean): String = {
       val ord = if (duck) "col0 NULLS FIRST" else "col0"
       // ntileFn_33's ORDER BY NTILE(...) rides via the subquery (Spark
@@ -169,14 +169,14 @@ object DrillLeadLag {
            FROM t_alltyps) tiled
          ORDER BY tile2, rid"""
     }
-    ("q_drill_ntile_matrix",
+    Gate.druid("q_drill_ntile_matrix",
       s"WITH ${fixture(false)} ${body(false)}",
       s"WITH ${fixture(true)} ${body(true)}")
   }
 
   // ----------------------------------------------------------- gates ----
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = Seq(
+  lazy val gates: Seq[Gate] = Seq(
     offsetMatrix("LAG"),
     offsetMatrix("LEAD"),
     firstLastMatrix,
@@ -198,7 +198,7 @@ object DrillLeadLag {
               LAG(col5) OVER (PARTITION BY col7 ORDER BY ${o("col5")}) AS lag_col5
            FROM t_alltyps ORDER BY rid"""
       }
-      ("q_drill_laglead_offset1",
+      Gate.druid("q_drill_laglead_offset1",
         s"WITH ${fixture(false)} ${body(false)}",
         s"WITH ${fixture(true)} ${body(true)}")
     },
@@ -215,7 +215,7 @@ object DrillLeadLag {
               LAG(col8) OVER (PARTITION BY col7 ORDER BY col8 DESC NULLS FIRST) AS lag_desc_nf,
               LEAD(col1) OVER (PARTITION BY col7 ORDER BY col1 ASC NULLS LAST) AS lead_anl
            FROM t_alltyps ORDER BY rid"""
-      ("q_drill_laglead_nulls_order",
+      Gate.druid("q_drill_laglead_nulls_order",
         s"WITH ${fixture(false)} ${body(false)}",
         s"WITH ${fixture(true)} ${body(true)}")
     },
@@ -239,7 +239,7 @@ object DrillLeadLag {
               OR lag_c0 IS NOT NULL
            ORDER BY rid"""
       }
-      ("q_drill_laglead_subqry",
+      Gate.druid("q_drill_laglead_subqry",
         s"WITH ${fixture(false)} ${body(false)}",
         s"WITH ${fixture(true)} ${body(true)}")
     },
@@ -260,7 +260,7 @@ object DrillLeadLag {
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS s_run
            FROM t_alltyps ORDER BY rid"""
       }
-      ("q_drill_dq_empty_over",
+      Gate.druid("q_drill_dq_empty_over",
         s"WITH ${fixture(false)} ${body(false)}",
         s"WITH ${fixture(true)} ${body(true)}")
     },
@@ -279,7 +279,7 @@ object DrillLeadLag {
               CAST(count(*) OVER (PARTITION BY col7, col8) AS BIGINT) AS c_multi,
               CAST(min(col1) OVER (PARTITION BY col7, col8) AS BIGINT) AS mn_multi
            FROM t_alltyps ORDER BY rid"""
-      ("q_drill_dq_partition_only",
+      Gate.druid("q_drill_dq_partition_only",
         s"WITH ${fixture(false)} ${body(false)}",
         s"WITH ${fixture(true)} ${body(true)}")
     },
@@ -302,7 +302,7 @@ object DrillLeadLag {
                   w2 AS (PARTITION BY col8 ORDER BY ${o("rid")})
            ORDER BY rid"""
       }
-      ("q_drill_dq_same_window",
+      Gate.druid("q_drill_dq_same_window",
         s"WITH ${fixture(false)} ${body(false)}",
         s"WITH ${fixture(true)} ${body(true)}")
     },
@@ -322,21 +322,8 @@ object DrillLeadLag {
            ORDER BY rid
            FETCH FIRST 10 ROWS ONLY"""
       }
-      ("q_drill_laglead_filter_fetch",
+      Gate.druid("q_drill_laglead_filter_fetch",
         s"WITH ${fixture(false)} ${body(false)}",
         s"WITH ${fixture(true)} ${body(true)}")
     })
-
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    // the corpus's FETCH FIRST n ROWS ONLY is Calcite spelling → LIMIT
-    s.sql(graft.api.SqlApi.rewriteSql(sqlText, Seq(graft.api.SqlApi.fetch)))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => runSpark(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

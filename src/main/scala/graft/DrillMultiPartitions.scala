@@ -129,13 +129,13 @@ object DrillMultiPartitions {
 
   // ----------------------------------------------------------- gates ----
 
-  /** (name, sparkSql, duckSql) triples. `o`/`od` spell DuckDB's
+  /** `o`/`od` spell DuckDB's
     * NULL-ordering to match Spark's defaults.
     */
-  private[graft] lazy val gates: Seq[(String, String, String)] = {
+  lazy val gates: Seq[Gate] = {
     def gate(name: String, body: Boolean => String,
-        extraCte: Boolean => String = _ => ""): (String, String, String) =
-      (name,
+        extraCte: Boolean => String = _ => ""): Gate =
+      Gate.druid(name,
         s"WITH ${fixture(false)}${extraCte(false)} ${body(false)}",
         s"WITH ${fixture(true)}${extraCte(true)} ${body(true)}")
     def o(duck: Boolean, k: String) = if (duck) s"$k NULLS FIRST" else k
@@ -355,15 +355,4 @@ object DrillMultiPartitions {
            FROM j1 ORDER BY rid"""
       }))
   }
-
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame =
-    graft.api.SqlApi.runSql(s, sqlText)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => runSpark(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

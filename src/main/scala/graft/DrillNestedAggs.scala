@@ -89,7 +89,7 @@ object DrillNestedAggs {
 
   // ----------------------------------------------------------- gates ----
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = {
+  lazy val gates: Seq[Gate] = {
     def o(duck: Boolean, k: String) = if (duck) s"$k NULLS FIRST" else k
 
     val basicMatrix = {
@@ -108,7 +108,7 @@ object DrillNestedAggs {
            GROUP BY col0, col2, col7, col8, col9
            ORDER BY ${o(duck, "col7")}, col0"""
       }
-      ("q_drill_nstd_basic_matrix",
+      Gate.druid("q_drill_nstd_basic_matrix",
         s"WITH ${atuCte(false)} ${body(false)}",
         s"WITH ${atuCte(true)} ${body(true)}")
     }
@@ -131,7 +131,7 @@ object DrillNestedAggs {
            GROUP BY c2
            ORDER BY ${o(duck, "c2")}"""
       }
-      ("q_drill_nstd_full_grid",
+      Gate.druid("q_drill_nstd_full_grid",
         s"WITH ${wnCte(false)} ${body(false)}",
         s"WITH ${wnCte(true)} ${body(true)}")
     }
@@ -149,7 +149,7 @@ object DrillNestedAggs {
            GROUP BY a, b, c, d
            ORDER BY a, b, c, ${o(duck, "d")}"""
       }
-      ("q_drill_nstd_cte_win",
+      Gate.druid("q_drill_nstd_cte_win",
         s"WITH ${atuCte(false)} ${body(false)}",
         s"WITH ${atuCte(true)} ${body(true)}")
     }
@@ -170,7 +170,7 @@ object DrillNestedAggs {
            GROUP BY col7, col8, col0
            ORDER BY ${o(duck, "col7")}, ${o(duck, "col8")}, col0"""
       }
-      ("q_drill_nstd_multiwin",
+      Gate.druid("q_drill_nstd_multiwin",
         s"WITH ${atuCte(false)} ${body(false)}",
         s"WITH ${atuCte(true)} ${body(true)}")
     }
@@ -185,27 +185,15 @@ object DrillNestedAggs {
            FROM ${if (duck) "atu" else "vw_nstd_on_atu"}
            GROUP BY col2, col0
            ORDER BY ${o(duck, "col2")}, cnt_min"""
-      ("q_drill_nstd_view", body(false), s"WITH ${atuCte(true)} ${body(true)}")
+      Gate("q_drill_nstd_view", (s, _) => {
+        // the view is dropped with the session; DROP here would race the
+        // lazy DataFrame
+        s.sql(s"CREATE OR REPLACE TEMPORARY VIEW vw_nstd_on_atu AS " +
+          s"SELECT * FROM ${atuCte(false).replaceFirst("atu AS ", "")}")
+        api.SqlApi.runSql(s, body(false))
+      }, s"WITH ${atuCte(true)} ${body(true)}", Some(body(false)))
     }
 
     Seq(basicMatrix, fullGrid, cteWin, multiWin, viewGate)
   }
-
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    if (sqlText.contains("vw_nstd_on_atu")) {
-      // view lifecycle: CREATE OR REPLACE VIEW → query → (auto-dropped
-      // with the session; DROP here would race the lazy DataFrame)
-      s.sql(s"CREATE OR REPLACE TEMPORARY VIEW vw_nstd_on_atu AS " +
-        s"SELECT * FROM ${atuCte(false).replaceFirst("atu AS ", "")}")
-      graft.api.SqlApi.runSql(s, sqlText)
-    } else graft.api.SqlApi.runSql(s, sqlText)
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => runSpark(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

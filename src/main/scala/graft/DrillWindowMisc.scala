@@ -24,10 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object DrillWindowMisc {
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = {
+  lazy val gates: Seq[Gate] = {
     def gate(name: String, body: Boolean => String,
-        extraCte: Boolean => String = _ => ""): (String, String, String) =
-      (name,
+        extraCte: Boolean => String = _ => ""): Gate =
+      Gate.druid(name,
         s"WITH ${DrillMultiPartitions.fixture(false)}${extraCte(false)} ${body(false)}",
         s"WITH ${DrillMultiPartitions.fixture(true)}${extraCte(true)} ${body(true)}")
     def o(duck: Boolean, k: String) = if (duck) s"$k NULLS FIRST" else k
@@ -182,15 +182,4 @@ object DrillWindowMisc {
            ORDER BY rn_ord, rid"""
       }))
   }
-
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame =
-    graft.api.SqlApi.runSql(s, sqlText)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => runSpark(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

@@ -64,7 +64,7 @@ object QaSqlBatteries {
           (SELECT count(*) FROM events) AS n_all,
           (SELECT count(DISTINCT $groupKey) FROM events) AS n_keys"""
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = {
+  lazy val gates: Seq[Gate] = {
     val noCast = (x: String) => x
     val duckCast = (x: String) => s"CAST($x AS VARCHAR)"
 
@@ -72,7 +72,7 @@ object QaSqlBatteries {
       def body(likeCast: String => String) = containers(
         tautology("value", "1", likeCast) + "\n AND " +
           tautology("event_id", "1", likeCast), "event_type")
-      ("q_qasql_tautology_numeric",
+      Gate.druid("q_qasql_tautology_numeric",
         s"${body(noCast)}",
         s"${body(duckCast)}")
     }
@@ -101,7 +101,7 @@ object QaSqlBatteries {
                            ts + interval '2' YEAR)
                 AND ts NOT IN (ts - interval '2' YEAR,
                                ts + interval '2' YEAR)))""", "event_type")
-      ("q_qasql_tautology_datetime", body(noCast), body(duckCast))
+      Gate.druid("q_qasql_tautology_datetime", body(noCast), body(duckCast))
     }
 
     def stringGate = {
@@ -128,7 +128,7 @@ object QaSqlBatteries {
                 AND event_type NOT IN (event_type || '_',
                                        '_' || event_type)))""",
         "event_type")
-      ("q_qasql_tautology_string", body, body)
+      Gate.druid("q_qasql_tautology_string", body, body)
     }
 
     def reductionGate = {
@@ -154,7 +154,7 @@ object QaSqlBatteries {
                 AND greatest(NULL, NULL, NULL) IS NULL
                 AND '1'||${cast(l1)} <> '2'||${cast(l1)}))""",
         "event_type")
-      ("q_qasql_reduction",
+      Gate.druid("q_qasql_reduction",
         body(noCast), body(duckCast))
     }
 
@@ -174,7 +174,7 @@ object QaSqlBatteries {
                 AND ('1'||${cast(cse)} <> '0'||${cast(cse)}) IS TRUE
                 AND ('1'||${cast(cse)} = '0'||${cast(cse)}) IS FALSE))""",
         "event_type")
-      ("q_qasql_other_case_concat", body(noCast), body(duckCast))
+      Gate.druid("q_qasql_other_case_concat", body(noCast), body(duckCast))
     }
 
     def aggrGate = {
@@ -209,7 +209,7 @@ object QaSqlBatteries {
               AND ${having("min(value)", "1", likeCast)}
               AND ${having("count(*)+1", "1", likeCast)}
            ORDER BY t"""
-      ("q_qasql_aggr_having_tautology", body(noCast), body(duckCast))
+      Gate.druid("q_qasql_aggr_having_tautology", body(noCast), body(duckCast))
     }
 
     def arrayGate = {
@@ -237,7 +237,7 @@ object QaSqlBatteries {
                 AND $x NOT IN ($lo, $hi)))) AS n_taut,
             (SELECT count(*) FROM part) AS n_all"""
       }
-      ("q_qasql_tautology_array", body(false), body(true))
+      Gate.druid("q_qasql_tautology_array", body(false), body(true))
     }
 
     def mvGate = {
@@ -262,7 +262,7 @@ object QaSqlBatteries {
                 AND ($x <> $lo) IS TRUE AND ($x = $lo) IS FALSE))) AS n_taut,
             (SELECT count(*) FROM part) AS n_all"""
       }
-      ("q_qasql_tautology_mv", body(false), body(true))
+      Gate.druid("q_qasql_tautology_mv", body(false), body(true))
     }
 
     def jsonGate = {
@@ -285,18 +285,10 @@ object QaSqlBatteries {
                 AND $x NOT IN ($lo, $hi)))) AS n_taut,
             (SELECT count(*) FROM events) AS n_all"""
       }
-      ("q_qasql_tautology_json_keys", body(false), body(true))
+      Gate.druid("q_qasql_tautology_json_keys", body(false), body(true))
     }
 
     Seq(numericGate, datetimeGate, stringGate, reductionGate, otherGate,
       aggrGate, arrayGate, mvGate, jsonGate)
   }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => graft.api.SqlApi.runSql(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

@@ -285,12 +285,12 @@ object QaSuites {
 
   // ----------------------------------------------------------------- gates --
 
-  /** name -> (spark prelude, spark body, duck prelude, duck body) flattened
-    * as (name, sparkSql, duckSql).
+  /** A facade gate whose body runs after its fixture prelude on each
+    * engine.
     */
   private def g(name: String, sparkPrelude: String, duckPrelude: String,
-      sparkBody: String, duckBody: String): (String, String, String) =
-    (name, s"WITH $sparkPrelude $sparkBody", s"WITH $duckPrelude $duckBody")
+      sparkBody: String, duckBody: String): Gate =
+    Gate.druid(name, s"WITH $sparkPrelude $sparkBody", s"WITH $duckPrelude $duckBody")
 
   private def ga(name: String, sparkBody: String, duckBody: String) =
     g(name, sparkTestArray, duckTestArray, sparkBody, duckBody)
@@ -334,7 +334,7 @@ object QaSuites {
            CASE json_extract_string($c, '$p') WHEN 'true' THEN '1' ELSE '0' END
          ELSE json_extract_string($c, '$p') END)"""
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = Seq(
+  lazy val gates: Seq[Gate] = Seq(
     // ---------------------------------------------------------- qaArray ----
     // ops_funcs_array_funcs.01 A1_B1_C2/C3/C4/C9: typed ARRAY construction
     // with null elements
@@ -2960,21 +2960,4 @@ object QaSuites {
       """SELECT false AS rhs_null_miss, true AS null_match,
                 NULL::INTEGER AS probe_null
          FROM test_array"""))
-
-  // ------------------------------------------------------------ plumbing ----
-
-  private def runSpark(s: SparkSession, sqlText: String): DataFrame = {
-    // the SAME dialect passes as SqlApi.sql — one shared pipeline, so
-    // gates and the facade can never diverge on FETCH/FLOOR-TO/
-    // negative-frame handling.
-    graft.api.SqlApi.runSql(s, sqlText)
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => runSpark(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SqlQuidemShapes {
 
-  private[graft] lazy val gates: Seq[(String, String, String)] = Seq(
-    ("q_squid_filtered_sum_empty",
+  lazy val gates: Seq[Gate] = Seq(
+    Gate.druid("q_squid_filtered_sum_empty",
       """SELECT CAST(count(1) FILTER (WHERE n_regionkey = -1) AS BIGINT) AS c_eq,
                 CAST(count(1) FILTER (WHERE n_regionkey <> -1) AS BIGINT) AS c_ne,
                 min(n_nationkey) IS NULL AS min_null,
@@ -44,7 +44,7 @@ object SqlQuidemShapes {
                   AS BIGINT) AS sum_filter
          FROM nation WHERE n_regionkey < -1"""),
 
-    ("q_squid_full_outer_constant",
+    Gate.druid("q_squid_full_outer_constant",
       """WITH l AS (SELECT * FROM VALUES ('abc'), ('xyz') AS t(a)),
             r AS (SELECT * FROM VALUES ('abc'), (CAST(NULL AS STRING))
                   AS t(k))
@@ -57,7 +57,7 @@ object SqlQuidemShapes {
          FROM l FULL JOIN (SELECT k, 42 AS tag FROM r) r ON l.a = r.k
          ORDER BY l.a NULLS FIRST, r.tag"""),
 
-    ("q_squid_grouping_sets_pinned",
+    Gate.druid("q_squid_grouping_sets_pinned",
       """SELECT n_regionkey, n_name, CAST(count(*) AS BIGINT) AS cnt
          FROM nation
          WHERE n_name = 'NATION_7'
@@ -69,7 +69,7 @@ object SqlQuidemShapes {
          GROUP BY GROUPING SETS ((n_regionkey, n_name), (n_regionkey))
          ORDER BY n_regionkey, n_name NULLS FIRST"""),
 
-    ("q_squid_notin_values",
+    Gate.druid("q_squid_notin_values",
       """SELECT n_nationkey FROM nation
          WHERE n_nationkey NOT IN
            (SELECT col FROM VALUES (0), (999) AS t(col))
@@ -79,7 +79,7 @@ object SqlQuidemShapes {
            (SELECT col FROM (VALUES (0), (999)) t(col))
          ORDER BY n_nationkey"""),
 
-    ("q_squid_num_merge_union_self",
+    Gate.druid("q_squid_num_merge_union_self",
       """SELECT n_regionkey, CAST(sum(n_nationkey) AS BIGINT) AS s,
                 CAST(count(*) AS BIGINT) AS c
          FROM (SELECT * FROM nation UNION ALL SELECT * FROM nation
@@ -93,7 +93,7 @@ object SqlQuidemShapes {
          WHERE n_regionkey = 1 OR n_regionkey = 2
          GROUP BY n_regionkey ORDER BY n_regionkey"""),
 
-    ("q_squid_union_removed_branch",
+    Gate.druid("q_squid_union_removed_branch",
       """SELECT CAST(c AS BIGINT) AS c, nm FROM (
            SELECT count(*) AS c, n_name AS nm
            FROM nation
@@ -116,7 +116,7 @@ object SqlQuidemShapes {
     // the aggregate — the window must plan above the aggregate and below
     // the limit, and the outer sort on a projected aggregate must survive
     // the CTE boundary (25 nation groups < the LIMIT keeps it exact)
-    ("q_squid_window_scan_sort",
+    Gate.druid("q_squid_window_scan_sort",
       """WITH t AS (
            SELECT rank() OVER (PARTITION BY n_regionkey
                                ORDER BY n_regionkey ASC) AS ranking,
@@ -131,12 +131,4 @@ object SqlQuidemShapes {
            FROM nation
            GROUP BY n_regionkey, n_name LIMIT 30)
          SELECT ranking, trend_score FROM t ORDER BY trend_score"""))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (name, sparkSql, _) =>
-      name -> ((s: SparkSession, _: String) => graft.api.SqlApi.runSql(s, sparkSql))
-    }.toMap
-
-  def oracleSql: Map[String, String] =
-    gates.map { case (name, _, duckSql) => name -> duckSql }.toMap
 }

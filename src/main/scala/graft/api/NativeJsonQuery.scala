@@ -386,13 +386,14 @@ object NativeJsonQuery {
     val agged = base.groupBy(bucket).agg(aggs.head, aggs.tail: _*)
       .withColumnRenamed("__bucket", "timestamp")
     // reference default: skipEmptyBuckets=false → zero-fill empty buckets
-    // inside the query intervals (fixed-length periods; count-like aggs
-    // fill with 0, others with null)
+    // inside the query intervals (fixed-length periods; calendar months and
+    // years, P<n>M and P<n>Y, are not filled; count-like aggs fill with 0,
+    // others with null)
     val skipEmpty = bool(q \ "context" \ "skipEmptyBuckets").getOrElse(false)
     val allIntervals = intervalBounds(q \ "intervals")
     val filled = period match {
       case Some(p) if !skipEmpty && origin == 0L && allIntervals.nonEmpty &&
-          !Set("P1M", "P3M", "P1Y").contains(p) =>
+          DruidFunctions.monthsOf(p).isEmpty =>
         val spark = df.sparkSession
         val micros = DruidFunctions.periodMicros(if (p == "P1W") "P7D" else p)
         // timeFloor(P1W) = date_trunc('week') which is Monday-aligned; the

@@ -393,6 +393,14 @@ object Similarity {
           nullable = false))))
   }
 
+  /** The slice of a full vector that a codebook row's `subspace` covers:
+    * the centroid's length fixes the subvector length, so no job has to
+    * read the vector dimension first. */
+  private def subvector(v: Column): Column = {
+    val sub = size(col("centroid"))
+    slice(v, col("subspace") * sub + lit(1), sub)
+  }
+
   /** Encode the corpus against trained codebooks: per subspace, the id of
     * the nearest centroid — `m` small codes replace the full vector
     * (64 floats → 4 bytes at m=4: the 100-TB memory story of PQ). One
@@ -403,15 +411,12 @@ object Similarity {
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame, m: Int): DataFrame = {
-    val dim = df.select(size(col(vecCol))).head().getInt(0)
-    val sub = dim / m
     val exploded = df.select(col(idCol), unitFull(vecCol).as("__u"))
       .withColumn("subspace", explode(sequence(lit(0), lit(m - 1))))
-      .withColumn("__sub",
-        slice(col("__u"), col("subspace") * lit(sub) + lit(1), lit(sub)))
     val w = Window.partitionBy(col(idCol), col("subspace"))
       .orderBy(col("__sim").desc, col("centroid_id").asc)
     exploded.join(broadcast(codebooks), "subspace")
+      .withColumn("__sub", subvector(col("__u")))
       // same min-L2 assignment as training: max(v·c − ‖c‖²/2)
       .withColumn("__sim", dot(col("__sub"), col("centroid")) -
         dot(col("centroid"), col("centroid")) / 2)
@@ -429,14 +434,11 @@ object Similarity {
     */
   def pqSearch(queries: DataFrame, codes: DataFrame, codebooks: DataFrame,
                idCol: String, vecCol: String, m: Int, k: Int): DataFrame = {
-    val dim = queries.select(size(col(vecCol))).head().getInt(0)
-    val sub = dim / m
     // per-(query, subspace, centroid) partial dot products — the ADC table
     val table = queries.select(col(idCol).as("q_id"), unitFull(vecCol).as("__qv"))
       .crossJoin(broadcast(codebooks))
       .select(col("q_id"), col("subspace"), col("centroid_id"),
-        dot(expr(s"slice(__qv, subspace * $sub + 1, $sub)"),
-          col("centroid")).as("partial"))
+        dot(subvector(col("__qv")), col("centroid")).as("partial"))
     // corpus codes join the table on (subspace, code); summing the m
     // partials reconstructs the approximate dot product
     val approx = codes.join(table,

@@ -506,6 +506,44 @@ class FunctionsSpec extends AnyFunSuite {
     assert(recall >= 0.15, s"recall $recall")
   }
 
+  test("building the PQ encode and search DataFrames runs no job") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val books = Similarity.pqTrain(emb, "vec_id", "embedding", 8, 16)
+    val group = "pq-build"
+    val marker = "pq-build-marker"
+    val built = new AtomicInteger
+    @volatile var markerDone = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null) {
+          if (j.properties.getProperty("spark.jobGroup.id") == group)
+            built.incrementAndGet()
+          if (j.properties.getProperty("spark.job.description") == marker)
+            markerDone = true
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try {
+        val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books, 8)
+        Similarity.pqSearch(emb.filter(col("vec_id") < 10), codes, books,
+          "vec_id", "embedding", 8, 5)
+      } finally spark.sparkContext.clearJobGroup()
+      // events reach a listener in the order they were posted: once the
+      // marker job is seen, every job the build ran has been counted
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerDone && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerDone)
+      assert(built.get == 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("nearest_centroids: codegen and eval agree, ties go to the lowest id") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference

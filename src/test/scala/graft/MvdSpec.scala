@@ -93,7 +93,7 @@ class MvdSpec extends AnyFunSuite {
 
   test("q_mvd_array_agg_flatten emits joined scalar strings") {
     spark.sparkContext.setLogLevel("ERROR")
-    val df = MvdGates.queries("q_mvd_array_agg_flatten")(spark, "")
+    val df = MvdGates.gates.find(_.name == "q_mvd_array_agg_flatten").get.build(spark, "")
     val r = df.collect().head
     assert(r.getString(0) == "x,y,y,null,null")
     assert(r.getString(1) == "null,x,y")

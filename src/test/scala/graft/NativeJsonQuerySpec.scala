@@ -433,6 +433,23 @@ class NativeJsonQuerySpec extends AnyFunSuite {
     }
   }
 
+  test("multi-month periods with intervals bucket as SQL TIME_FLOOR") {
+    GraftSession.attach(spark)
+    Tables.registerAll(spark, dir)
+    val native = NativeJsonQuery.run(spark, dir, """
+      {"queryType": "timeseries", "dataSource": "events",
+       "granularity": {"type": "period", "period": "P2M"},
+       "intervals": ["2024-01-01T00:00:00Z/2024-03-01T00:00:00Z"],
+       "aggregations": [{"type": "count", "name": "n"}]}""")
+      .collect().map(r => r.getTimestamp(0).toString -> r.getLong(1)).toMap
+    val sql = spark.sql("""
+      SELECT TIME_FLOOR(ts, 'P2M') AS b, count(*) AS n FROM events
+      WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-03-01'
+      GROUP BY 1""")
+      .collect().map(r => r.getTimestamp(0).toString -> r.getLong(1)).toMap
+    assert(native == sql && native.nonEmpty, s"$native vs $sql")
+  }
+
   test("period granularity with a region timeZone buckets in wall clock") {
     // events are Jan 2024: America/New_York is EST (UTC-5) throughout, so
     // every local day bucket must start at 05:00 UTC and zero-fill must

@@ -27,6 +27,10 @@ class PlanSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
   }
 
+  /** The SQL text a SQL-text gate runs. */
+  private def gateSql(name: String): String =
+    SparkEntry.gates.find(_.name == name).flatMap(_.sql).get
+
   test("scan pushes predicates and prunes columns at the parquet reader") {
     val p = plan("q_scan")
     assert(p.contains("PushedFilters: ["), p.takeWhile(_ => true).take(800))
@@ -306,7 +310,7 @@ class PlanSpec extends AnyFunSuite {
   test("tpch suite plans: decorrelation, pushdown, no cartesian products") {
     Tables.registerAll(spark, dir)
     def plan(q: String): String =
-      spark.sql(SparkEntry.tpchSql(q)).queryExecution.executedPlan.toString
+      spark.sql(gateSql(s"q_tpch_$q")).queryExecution.executedPlan.toString
     // Q17: the correlated avg subquery decorrelates to an aggregate join —
     // never a per-row re-execution or a cartesian product
     val q17 = plan("q17")
@@ -331,7 +335,7 @@ class PlanSpec extends AnyFunSuite {
   test("tpch full-battery plans: star joins broadcast, subqueries decorrelate to semi/anti joins") {
     Tables.registerAll(spark, dir)
     def plan(q: String): String =
-      spark.sql(SparkEntry.tpchSql(q)).queryExecution.executedPlan.toString
+      spark.sql(gateSql(s"q_tpch_$q")).queryExecution.executedPlan.toString
     // Q05: 6-table star — every dimension (supplier/nation/region/customer)
     // is broadcast-sized; the lineitem fact must never feed a cartesian, and
     // the date range must reach the orders scan as a pushed filter
@@ -381,7 +385,7 @@ class PlanSpec extends AnyFunSuite {
     Tables.registerAll(spark, dir)
     import org.apache.spark.sql.types.DecimalType
     for (q <- Seq("q08", "q14")) {
-      val schema = spark.sql(SparkEntry.tpchSql(q)).schema
+      val schema = spark.sql(gateSql(s"q_tpch_$q")).schema
       val decimals = schema.fields.filter(_.dataType.isInstanceOf[DecimalType])
       assert(decimals.isEmpty,
         s"$q must not expose DECIMAL output columns, found: " +
@@ -391,7 +395,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("SSB star flights broadcast every dimension; fact never shuffles for the join") {
     Tables.registerAll(spark, dir)
-    val p = spark.sql(SparkEntry.drillSql("ssb_q4"))
+    val p = spark.sql(gateSql("q_ssb_q4"))
       .queryExecution.executedPlan.toString
     // 4 dimension joins (orders plays the date role only through the fact
     // key; customer/supplier/part are true dims) — all broadcast, no
@@ -677,7 +681,7 @@ class PlanSpec extends AnyFunSuite {
   test("spread rule inserts the exchange and keeps rows identical") {
     Tables.registerAll(spark, dir)
     GraftSession.attach(spark)
-    val gate = QaSqlBatteries.queries("q_qasql_tautology_json_keys")
+    val gate = SparkEntry.queries("q_qasql_tautology_json_keys")
     def run(enabled: Boolean): (Seq[Row], String) = {
       spark.conf.set("spark.graft.spreadFilter.enabled", enabled.toString)
       try {

@@ -38,27 +38,20 @@ class QuerySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("the registry holds 674 gates, each name once, each with an oracle") {
+    val names = SparkEntry.gates.map(_.name)
+    assert(names.size == 674 && names.distinct.size == 674)
+    assert(SparkEntry.queries.keySet == names.toSet)
+    val blank = SparkEntry.gates.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"gates without an oracle: $blank")
   }
 
-  test("no duplicate gate names in the SparkEntry source") {
-    // a Map literal silently keeps only the LAST binding for a repeated
-    // key, so a re-added gate name would shadow the original and its plan
-    // pins without any compile error — scan the source for duplicates
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val defs = """"(q_[a-z0-9_]+)" -> \(\(s, dir\)""".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    val dups = defs.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dups.isEmpty, s"duplicate gate definitions: $dups")
-    // the oracle map shadows the same way: each gate name may be bound at
-    // most twice in the whole file (once in queries, once in oracleSql)
-    val all = """"(q_[a-z0-9_]+)" ->""".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    val overBound = all.groupBy(identity).filter(_._2.size > 2).keys
-    assert(overBound.isEmpty, s"gate names bound more than twice: $overBound")
+  test("a registry with a repeated gate name throws") {
+    val a = Gate.spark("q_dup", "SELECT 1 AS x")
+    val b = Gate.spark("q_dup", "SELECT 2 AS x")
+    val e = intercept[IllegalArgumentException](
+      Gate.registry(Seq(a), Seq(Gate.spark("q_other", "SELECT 3 AS x"), b)))
+    assert(e.getMessage.contains("q_dup"))
+    assert(Gate.registry(Seq(a), Seq(Gate.spark("q_other", "SELECT 3 AS x"))).size == 2)
   }
 }

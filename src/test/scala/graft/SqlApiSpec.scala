@@ -486,7 +486,7 @@ class SqlApiSpec extends AnyFunSuite {
     // regression would only surface when the driver re-rolls the seed
     graft.Tables.registerAll(spark, dir)
     Seq(1L, 7L, 99L).foreach { seed =>
-      val df = spark.sql(SparkEntry.consistencySql(seed, 12))
+      val df = spark.sql(DrillWindowGates.consistencySql(seed, 12))
       assert(df.columns.toSeq == Seq("qid", "d", "n", "s", "v"), s"seed $seed")
       assert(df.count() > 0, s"seed $seed returned no rows")
     }
@@ -1120,15 +1120,12 @@ class SqlApiSpec extends AnyFunSuite {
   }
 
   test("lex-then-render returns every corpus text byte for byte") {
-    val familySql = Seq(CalciteJoinShapes.gates, DrillAggregates.gates,
-      DrillFrameclause.gates, DrillLeadLag.gates, DrillMultiPartitions.gates,
-      DrillNestedAggs.gates, DrillWindowMisc.gates, QaSqlBatteries.gates,
-      QaSuites.gates, SqlQuidemShapes.gates).flatten.map(_._2)
-    val texts = SparkEntry.oracleSql.values.toSeq ++ familySql ++ Seq(
+    val gateSql = SparkEntry.gates.flatMap(_.sql)
+    val texts = SparkEntry.oracleSql.values.toSeq ++ gateSql ++ Seq(
       "SELECT '?' AS q, \"a?b\" FROM t -- is this ? ignored\nWHERE x = ?",
       "SELECT /* not a param ? */ x FROM t WHERE x = ?",
       "SELECT /*+ REPARTITION(3) */ n_nationkey, n_name FROM nation")
-    assert(SparkEntry.oracleSql.size == 674 && familySql.nonEmpty)
+    assert(SparkEntry.oracleSql.size == 674 && gateSql.nonEmpty)
     val changed = texts.filter(t => SqlTokens.render(SqlTokens.lex(t)) != t)
     assert(changed.isEmpty, changed.take(3))
   }
